@@ -37,7 +37,6 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..text.spark_tokenize import tokenize
 from .logical import (
@@ -232,6 +231,28 @@ def release_docid_cache_of(df: DataFrame) -> bool:
 DOCS_PER_DOC_PARTITION = 24_000
 
 
+def _number_partitions(ranged: DataFrame) -> tuple[DataFrame, int]:
+    """Number the rows of a persisted frame whose ``_pid`` column is its
+    partition index: partition offset (a one-long-per-partition count
+    collect) plus the row position within the partition.  Returns the
+    numbered frame (``_pid`` replaced by ``doc_id``) and the row total."""
+    counts = {
+        r["_pid"]: r["cnt"]
+        for r in ranged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
+    }
+    offsets, acc = [], 0
+    for pid in range(max(counts, default=0) + 1):
+        offsets.append(acc)
+        acc += counts.get(pid, 0)
+    row_in_partition = F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1))
+    partition_offset = F.array(*[F.lit(o).cast("long") for o in offsets])[F.col("_pid")]
+    out = ranged.select(
+        *[c for c in ranged.columns if c != "_pid"],
+        (partition_offset + row_in_partition).alias("doc_id"),
+    )
+    return out, acc
+
+
 def assign_doc_ids(
     df: DataFrame,
     order_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
@@ -242,11 +263,18 @@ def assign_doc_ids(
     single-partition window.
 
     Scale path: range-partition + sort, count rows per partition (tiny
-    driver-side collect of one long per partition), then enumerate each
-    (already sorted) partition in a zero-shuffle Arrow pass:
-    doc_id = partition_offset + running row index.
+    driver-side collect of one long per partition), then number each
+    (already sorted) partition with a JVM projection over the cached
+    partitions: doc_id = partition_offset + row index within the partition.
+    The row index is the low 33 bits of monotonically_increasing_id(), which
+    Spark defines as (partition index << 33) + row position — evaluated
+    directly over the ranged cache, whose partition index is ``_pid``.  No
+    shuffle and no Python stage (an Arrow enumeration kernel cost a Python
+    worker round trip, ~0.6 s of fixed cost per build and per streaming
+    batch).  Downstream filters cannot slip under the numbering: Spark does
+    not push predicates through a nondeterministic projection.
 
-    The counting pass materializes the ranged cache, so the enumeration and
+    The counting pass materializes the ranged cache, so the numbering and
     every downstream consumer read cached partitions; the handle is
     registered for release_docid_caches() (called by build/compact/streaming
     once their outputs are durable).  At 10^12-turn scale the equivalent is
@@ -276,38 +304,9 @@ def assign_doc_ids(
         .persist()
     )
     _DOCID_CACHES.append(ranged)
-    counts = {r["_pid"]: r["cnt"] for r in ranged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-
-    in_cols = [c for c in ranged.columns if c != "_pid"]
-    out_schema = T.StructType(
-        [ranged.schema[c] for c in in_cols] + [T.StructField("doc_id", T.LongType())]
-    )
-
-    def enumerate_partition(iterator):
-        import numpy as np
-
-        # Arrow batches stream in partition row order (the partitions are
-        # sorted by order_cols), so a running counter + the partition's
-        # precomputed offset reproduces the global row_number exactly
-        seen = 0
-        offset = None
-        for pdf in iterator:
-            if len(pdf) == 0:
-                continue
-            if offset is None:
-                offset = offsets[int(pdf["_pid"].iloc[0])]
-            out = pdf[in_cols].copy()
-            out["doc_id"] = np.arange(offset + seen, offset + seen + len(pdf), dtype=np.int64)
-            seen += len(pdf)
-            yield out
-
-    out = ranged.mapInPandas(enumerate_partition, schema=out_schema)
+    out, n_rows = _number_partitions(ranged)
     out._docid_cache = ranged  # scoped-release handle (release_docid_cache_of)
-    out._n_docs = acc  # corpus size, already paid for by the counting pass —
+    out._n_docs = n_rows  # corpus size, already paid for by the counting pass —
     # lets the builder size its shuffles by data before any build action runs
     return out
 
@@ -402,305 +401,236 @@ VOCAB_ENCODE_MAX = 1_500_000
 DOC_STATS_SMALL_SCHEMA = "doc_id long, doc_len long, l2_weight double"
 
 
+def _packed_postings(packed, avgdl: float, weights, id2term, d_bits: int, p_bits: int):
+    """Sorted packed longs (term_id << (d_bits+p_bits) | doc_id << p_bits |
+    position) -> the partition's postings as arrays: (run_starts,
+    run_terms, doc, tf, positions_flat, wdt_bm25, wdt_tfidf_norm), where
+    run_starts are the posting indices where a term begins and run_terms an
+    Arrow string array with each run's term (only the partition's own terms
+    are converted).  Sorting the long IS sorting (term_id, doc_id,
+    position), so a (term, doc) group is a run of equal ``packed >> p_bits``
+    and positions come out already flat and in order.  One weight
+    computation serves both artifacts, so segment block maxima match the
+    postings values bit-for-bit (reference K3/K4, rankedquery.py:22,24)."""
+    import numpy as np
+    import pyarrow as pa
+
+    dl_arr, l2_arr = weights
+    n = len(packed)
+    group = packed >> p_bits
+    change = np.empty(n, dtype=bool)
+    change[0] = True
+    change[1:] = group[1:] != group[:-1]
+    starts = np.flatnonzero(change)
+    tf = np.diff(np.append(starts, n))
+    gkey = group[starts]
+    doc = gkey & ((1 << d_bits) - 1)
+    tid = gkey >> d_bits
+    tf_f = tf.astype(np.float64)
+    w_bm = ((BM25_K1 + 1.0) * tf_f) / (
+        BM25_K1 * ((1.0 - BM25_B) + BM25_B * (dl_arr[doc] / avgdl)) + tf_f
+    )
+    w_ti = (1.0 + np.log(tf_f)) / l2_arr[doc]
+    tchange = np.empty(len(tid), dtype=bool)
+    tchange[0] = True
+    tchange[1:] = tid[1:] != tid[:-1]
+    run_starts = np.flatnonzero(tchange)
+    run_terms = pa.array(id2term[tid[run_starts]], type=pa.string())
+    return run_starts, run_terms, doc, tf, packed & ((1 << p_bits) - 1), w_bm, w_ti
+
+
+POSTINGS_FIELDS = ("term", "doc_id", "tf", "positions", "wdt_bm25", "wdt_tfidf_norm")
+# postings rows per yielded Arrow batch (bounded kernel output memory)
+_POSTINGS_CHUNK = 1 << 18
+
+
+def _postings_batches(run_starts, run_terms, doc, tf, flat_pos, w_bm, w_ti):
+    """Per-posting arrays -> POSTINGS_SCHEMA Arrow batches: the term column
+    is a take() over the run terms, positions a ListArray over offsets into
+    the flat array — no per-posting Python objects."""
+    import numpy as np
+    import pyarrow as pa
+
+    n = len(doc)
+    run_of = np.repeat(
+        np.arange(len(run_starts), dtype=np.int64), np.diff(np.append(run_starts, n))
+    )
+    pos_off = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(tf, out=pos_off[1:])
+    for c0 in range(0, n, _POSTINGS_CHUNK):
+        c1 = min(c0 + _POSTINGS_CHUNK, n)
+        p0, p1 = pos_off[c0], pos_off[c1]
+        positions = pa.ListArray.from_arrays(
+            pa.array((pos_off[c0 : c1 + 1] - p0).astype(np.int32)),
+            pa.array(flat_pos[p0:p1]),
+        )
+        yield pa.RecordBatch.from_arrays(
+            [
+                run_terms.take(pa.array(run_of[c0:c1])),
+                pa.array(doc[c0:c1]),
+                pa.array(tf[c0:c1]),
+                positions,
+                pa.array(w_bm[c0:c1]),
+                pa.array(w_ti[c0:c1]),
+            ],
+            names=list(POSTINGS_FIELDS),
+        )
+
+
+def _whole_partition_packed(batches):
+    """Concatenate a partition's ``packed`` column (block cuts must not
+    depend on Arrow batch boundaries, so segment encoders see the whole
+    sorted partition at once — one planned partition is tens of MB)."""
+    import numpy as np
+
+    chunks = [b.column("packed").to_numpy() for b in batches if b.num_rows]
+    if not chunks:
+        return None
+    return chunks[0] if len(chunks) == 1 else np.concatenate(chunks)
+
+
 def _postings_kernel_packed(avgdl: float, weights_bc, id2term_bc, d_bits: int, p_bits: int):
-    """Packed-long variant of _postings_kernel: input partitions sorted by a
-    single ``packed`` int64 = term_id << (d_bits+p_bits) | doc_id << p_bits
-    | position.  Sorting the long IS sorting (term_id, doc_id, position)
-    (non-negative bit-concatenation in key order), so the external sort
-    compares 8-byte ints and the shuffle rows shrink to one field — the
+    """mapInArrow postings kernel over partitions sorted by a single
+    ``packed`` int64 (see _packed_postings for the key layout).  Sorting one
+    long instead of (term_id, doc_id, position) makes the external sort
+    compare 8-byte ints and shrinks shuffle rows to one field — the
     width-4/8 levels are memory-stall-bound, and sorted bytes convert
-    directly into scaling headroom.  Group detection is one vectorized
-    compare on packed >> p_bits (the (term, doc) prefix)."""
+    directly into scaling headroom.  Batches stream: each emits its complete
+    (term, doc) groups and carries the trailing one, so memory is
+    O(batch + largest group)."""
 
-    def fn(iterator):
+    def fn(batches):
         import numpy as np
-        import pandas as pd
 
-        dl_arr, l2_arr = weights_bc.value
-        id2term = id2term_bc.value
-        pmask = (1 << p_bits) - 1
-        dmask = (1 << d_bits) - 1
-
-        def process(packed):
-            n = len(packed)
-            group = packed >> p_bits
-            change = np.empty(n, dtype=bool)
-            change[0] = True
-            change[1:] = group[1:] != group[:-1]
-            starts = np.flatnonzero(change)
-            tf = np.diff(np.append(starts, n)).astype(np.int64)
-            gkey = group[starts]
-            doc = gkey & dmask
-            tid = gkey >> d_bits
-            pos = packed & pmask
-            dl = dl_arr[doc]
-            l2 = l2_arr[doc]
-            tf_f = tf.astype(np.float64)
-            return pd.DataFrame(
-                {
-                    "term": id2term[tid],
-                    "doc_id": doc,
-                    "tf": tf,
-                    "positions": np.split(pos, starts[1:]),
-                    "wdt_bm25": ((BM25_K1 + 1.0) * tf_f)
-                    / (BM25_K1 * ((1.0 - BM25_B) + BM25_B * (dl / avgdl)) + tf_f),
-                    "wdt_tfidf_norm": (1.0 + np.log(tf_f)) / l2,
-                }
+        def emit(packed):
+            yield from _postings_batches(
+                *_packed_postings(packed, avgdl, weights_bc.value, id2term_bc.value, d_bits, p_bits)
             )
 
         carry = None
-        for pdf in iterator:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            packed = pdf["packed"].to_numpy(dtype=np.int64)
+            packed = batch.column("packed").to_numpy()
             if carry is not None:
                 packed = np.concatenate([carry, packed])
-                carry = None
-            last_group = packed[-1] >> p_bits
-            # rows of the trailing (term, doc) group may continue in the next
-            # batch: hold them back (same streaming-carry contract as
-            # _postings_kernel — O(batch + largest group) memory)
+            # rows of the trailing (term, doc) group may continue in the
+            # next batch: hold them back
             group = packed >> p_bits
-            split_at = int(np.searchsorted(group, last_group, side="left"))
+            split_at = int(np.searchsorted(group, group[-1], side="left"))
             carry = packed[split_at:]
             if split_at:
-                yield process(packed[:split_at])
+                yield from emit(packed[:split_at])
         if carry is not None and len(carry):
-            yield process(carry)
+            yield from emit(carry)
 
     return fn
 
 
 def _segments_kernel_packed(avgdl: float, weights_bc, id2term_bc, d_bits: int, p_bits: int):
-    """Block-max segment encoder over the SAME sorted packed-long partitions
-    the postings kernel consumes (see _postings_kernel_packed for the key
-    layout).  Replacing the old route — persist the wide postings output
-    (term strings + position object arrays, ~40+ bytes/posting through the
-    Arrow boundary) and pandas-groupby it per term — with a second pass over
-    the persisted 8-byte/token packed column: group detection and weights
-    are the same vectorized shift/compare ops, positions are already a flat
-    contiguous array (no np.concatenate of object cells), and only the
-    varbyte encode itself remains per-block Python.  Measured: the segments
-    phase was the worst 1→4-core scaler (2.03x) because of cache/bandwidth
-    pressure from the wide persisted postings; the packed persist is ~5x
-    smaller.
+    """mapInArrow block-max segment encoder over the SAME sorted packed-long
+    partitions the postings kernel consumes (the two-pass shape: Iceberg
+    sinks, resumed builds, non-local masters).  Group detection and weights
+    are _packed_postings' vectorized shift/compare ops, positions are already
+    a flat contiguous array, and every block of the partition is encoded in
+    one codec.encode_blocks pass with block metadata from segmented
+    reductions (segments.block_batch) — no per-block Python.  The whole
+    partition is buffered so block boundaries are deterministic (reference
+    postings.bin layout: engine/indexing/spimi.py:145-187)."""
 
-    The whole partition is buffered before encoding (one planned partition
-    ≈ DOCS_PER_POSTINGS_PARTITION docs of 8-byte tokens, tens of MB) so
-    block boundaries are deterministic — identical to encoding the partition
-    in one pdf batch, matching segments._encode_partition semantics
-    (reference postings.bin layout: engine/indexing/spimi.py:145-187)."""
+    def fn(batches):
+        from searchengine_spark.indexing.segments import block_batch
 
-    def fn(iterator):
-        import numpy as np
-        import pandas as pd
-
-        from searchengine_spark.indexing.codec import encode_block
-        from searchengine_spark.indexing.segments import BLOCK_SIZE
-
-        dl_arr, l2_arr = weights_bc.value
-        id2term = id2term_bc.value
-        pmask = (1 << p_bits) - 1
-        dmask = (1 << d_bits) - 1
-
-        chunks = [pdf["packed"].to_numpy(dtype=np.int64) for pdf in iterator if len(pdf)]
-        if not chunks:
+        packed = _whole_partition_packed(batches)
+        if packed is None:
             return
-        packed = chunks[0] if len(chunks) == 1 else np.concatenate(chunks)
-        del chunks
-        n = len(packed)
-        group = packed >> p_bits
-        change = np.empty(n, dtype=bool)
-        change[0] = True
-        change[1:] = group[1:] != group[:-1]
-        starts = np.flatnonzero(change)
-        tf = np.diff(np.append(starts, n))
-        gkey = group[starts]
-        doc = (gkey & dmask).astype(np.uint64)
-        tid = gkey >> d_bits
-        flat_pos = (packed & pmask).astype(np.uint64)
-        del packed, group, change
-        # per-posting weights — same expressions/order as the postings
-        # kernel, so block maxima match the postings values bit-for-bit
-        dl = dl_arr[doc.astype(np.int64)]
-        l2 = l2_arr[doc.astype(np.int64)]
-        tf_f = tf.astype(np.float64)
-        w_bm = ((BM25_K1 + 1.0) * tf_f) / (
-            BM25_K1 * ((1.0 - BM25_B) + BM25_B * (dl / avgdl)) + tf_f
+        run_starts, run_terms, doc, tf, flat_pos, w_bm, w_ti = _packed_postings(
+            packed, avgdl, weights_bc.value, id2term_bc.value, d_bits, p_bits
         )
-        w_ti = (1.0 + np.log(tf_f)) / l2
-        tfs = tf.astype(np.uint64)
-        pos_off = np.concatenate(([0], np.cumsum(tf))).astype(np.int64)
-        # term runs over the postings arrays
-        tchange = np.empty(len(tid), dtype=bool)
-        tchange[0] = True
-        tchange[1:] = tid[1:] != tid[:-1]
-        tstarts = np.flatnonzero(tchange)
-        tends = np.append(tstarts[1:], len(tid))
-        run_terms = id2term[tid[tstarts]]
-
-        out = {k: [] for k in (
-            "term", "n_postings", "doc_id_min", "doc_id_max",
-            "max_wdt_bm25", "max_wdt_tfidf_norm", "sum_tf", "postings_bin",
-        )}
-        for ti in range(len(tstarts)):
-            s0, e0 = int(tstarts[ti]), int(tends[ti])
-            term = run_terms[ti]
-            for s in range(s0, e0, BLOCK_SIZE):
-                e = min(s + BLOCK_SIZE, e0)
-                out["term"].append(term)
-                out["n_postings"].append(e - s)
-                out["doc_id_min"].append(int(doc[s]))
-                out["doc_id_max"].append(int(doc[e - 1]))
-                out["max_wdt_bm25"].append(float(w_bm[s:e].max()))
-                out["max_wdt_tfidf_norm"].append(float(w_ti[s:e].max()))
-                out["sum_tf"].append(int(tfs[s:e].sum()))
-                out["postings_bin"].append(
-                    encode_block(doc[s:e], tfs[s:e], flat_pos[pos_off[s] : pos_off[e]])
-                )
-        yield pd.DataFrame(out)
+        yield block_batch(run_starts, run_terms, doc, tf, w_bm, w_ti, flat_pos)
 
     return fn
 
 
-_SEGMENT_PA_FIELDS = (
-    ("term", "string"),
-    ("n_postings", "int32"),
-    ("doc_id_min", "int64"),
-    ("doc_id_max", "int64"),
-    ("max_wdt_bm25", "float64"),
-    ("max_wdt_tfidf_norm", "float64"),
-    ("sum_tf", "int64"),
-    ("postings_bin", "binary"),
-)
+# side-written segment tmp files start with "." (Spark's file listing skips
+# hidden names, so a tmp left by a killed task is never read as data) and
+# carry this marker so _finalize_side_segments can sweep them
+_SIDE_TMP = ".tmp-"
 
 
 def _postings_segments_kernel_packed(
     avgdl: float, weights_bc, id2term_bc, d_bits: int, p_bits: int, seg_dir: str
 ):
-    """ONE pass over the sorted packed-long partitions cuts BOTH artifacts:
-    the kernel yields the postings rows (Spark's parquet sink writes them)
-    and side-writes its partition's block-max segment rows as one parquet
-    part file via pyarrow — same rows `_segments_kernel_packed` would emit,
-    written while the group/weight arrays are still hot instead of from a
-    persisted cache in a second job.  Measured alternatives at 900k/width 4:
-    persist + second pass ≈ +13 s; persist + two CONCURRENT consumer jobs
-    ≈ +17 s (DRAM contention on pinned cores).  Task retries are
-    idempotent: the part file is named by partition id and committed with
-    write-to-tmp + atomic rename; the _SUCCESS marker is written only
-    after the whole job returns (_finalize_side_segments)."""
+    """ONE mapInArrow pass over the sorted packed-long partitions cuts BOTH
+    artifacts: the kernel yields the postings batches (Spark's parquet sink
+    writes them) and side-writes its partition's block-max segment rows as
+    one parquet part file via pyarrow — the same batch
+    `_segments_kernel_packed` would emit, written while the group/weight
+    arrays are still hot instead of from a persisted cache in a second job.
+    Measured alternatives at 900k/width 4: persist + second pass ≈ +13 s;
+    persist + two CONCURRENT consumer jobs ≈ +17 s (DRAM contention on
+    pinned cores).  Task retries are idempotent: the part file is named by
+    partition id and committed with a hidden write-to-tmp + atomic rename;
+    the _SUCCESS marker is written only after the whole job returns
+    (_finalize_side_segments)."""
 
-    def fn(iterator):
-        import numpy as np
-        import pandas as pd
+    def fn(batches):
         import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark import TaskContext
 
-        from searchengine_spark.indexing.codec import encode_block
-        from searchengine_spark.indexing.segments import BLOCK_SIZE
+        from searchengine_spark.indexing.segments import block_batch
 
-        dl_arr, l2_arr = weights_bc.value
-        id2term = id2term_bc.value
-        pmask = (1 << p_bits) - 1
-        dmask = (1 << d_bits) - 1
-
-        chunks = [pdf["packed"].to_numpy(dtype=np.int64) for pdf in iterator if len(pdf)]
-        if not chunks:
+        packed = _whole_partition_packed(batches)
+        if packed is None:
             return
-        packed = chunks[0] if len(chunks) == 1 else np.concatenate(chunks)
-        del chunks
-        n = len(packed)
-        group = packed >> p_bits
-        change = np.empty(n, dtype=bool)
-        change[0] = True
-        change[1:] = group[1:] != group[:-1]
-        starts = np.flatnonzero(change)
-        tf = np.diff(np.append(starts, n)).astype(np.int64)
-        gkey = group[starts]
-        doc = (gkey & dmask).astype(np.int64)
-        tid = gkey >> d_bits
-        flat_pos = (packed & pmask).astype(np.int64)
-        del packed, group, change
-        # per-posting weights — one computation serves both artifacts, so
-        # segment block maxima match the postings values bit-for-bit
-        dl = dl_arr[doc]
-        l2 = l2_arr[doc]
-        tf_f = tf.astype(np.float64)
-        w_bm = ((BM25_K1 + 1.0) * tf_f) / (
-            BM25_K1 * ((1.0 - BM25_B) + BM25_B * (dl / avgdl)) + tf_f
+        run_starts, run_terms, doc, tf, flat_pos, w_bm, w_ti = _packed_postings(
+            packed, avgdl, weights_bc.value, id2term_bc.value, d_bits, p_bits
         )
-        w_ti = (1.0 + np.log(tf_f)) / l2
-        pos_off = np.concatenate(([0], np.cumsum(tf))).astype(np.int64)
+        del packed
 
-        # -- segments side file (term runs -> BLOCK_SIZE blocks)
-        tchange = np.empty(len(tid), dtype=bool)
-        tchange[0] = True
-        tchange[1:] = tid[1:] != tid[:-1]
-        tstarts = np.flatnonzero(tchange)
-        tends = np.append(tstarts[1:], len(tid))
-        run_terms = id2term[tid[tstarts]]
-        out = {k: [] for k in (
-            "term", "n_postings", "doc_id_min", "doc_id_max",
-            "max_wdt_bm25", "max_wdt_tfidf_norm", "sum_tf", "postings_bin",
-        )}
-        for ti in range(len(tstarts)):
-            s0, e0 = int(tstarts[ti]), int(tends[ti])
-            term = run_terms[ti]
-            for s in range(s0, e0, BLOCK_SIZE):
-                e = min(s + BLOCK_SIZE, e0)
-                out["term"].append(term)
-                out["n_postings"].append(e - s)
-                out["doc_id_min"].append(int(doc[s]))
-                out["doc_id_max"].append(int(doc[e - 1]))
-                out["max_wdt_bm25"].append(float(w_bm[s:e].max()))
-                out["max_wdt_tfidf_norm"].append(float(w_ti[s:e].max()))
-                out["sum_tf"].append(int(tf[s:e].sum()))
-                out["postings_bin"].append(
-                    encode_block(doc[s:e], tf[s:e], flat_pos[pos_off[s] : pos_off[e]])
-                )
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
-        schema = pa.schema([(nm, getattr(pa, ty)()) for nm, ty in _SEGMENT_PA_FIELDS])
-        table = pa.Table.from_pydict({k: out[k] for k, _ in _SEGMENT_PA_FIELDS}, schema=schema)
-        final = os.path.join(seg_dir, f"part-{pid:05d}-fused.parquet")
-        tmp = final + f".tmp-{os.getpid()}"
-        pq.write_table(table, tmp, compression="snappy")
-        os.replace(tmp, final)
-        del out, table
+        name = f"part-{pid:05d}-fused.parquet"
+        tmp = os.path.join(seg_dir, f".{name}{_SIDE_TMP}{os.getpid()}")
+        seg = block_batch(run_starts, run_terms, doc, tf, w_bm, w_ti, flat_pos)
+        pq.write_table(pa.Table.from_batches([seg]), tmp, compression="snappy")
+        os.replace(tmp, os.path.join(seg_dir, name))
+        del seg
 
-        # -- postings rows, yielded in bounded chunks (positions are
-        # zero-copy views of the flat array; the Arrow serializer slices
-        # each chunk into maxRecordsPerBatch batches)
-        terms_all = id2term[tid]
-        CH = 1 << 18
-        for c0 in range(0, len(starts), CH):
-            c1 = min(c0 + CH, len(starts))
-            sl = flat_pos[pos_off[c0] : pos_off[c1]]
-            local_split = (pos_off[c0 + 1 : c1] - pos_off[c0]).astype(np.int64)
-            yield pd.DataFrame(
-                {
-                    "term": terms_all[c0:c1],
-                    "doc_id": doc[c0:c1],
-                    "tf": tf[c0:c1],
-                    "positions": np.split(sl, local_split),
-                    "wdt_bm25": w_bm[c0:c1],
-                    "wdt_tfidf_norm": w_ti[c0:c1],
-                }
-            )
+        yield from _postings_batches(run_starts, run_terms, doc, tf, flat_pos, w_bm, w_ti)
 
     return fn
 
 
-def _finalize_side_segments(spark: SparkSession, seg_dir: str) -> None:
-    """Commit the side-written segments dir: an empty partition set still
-    needs a schema-carrying parquet file (a bare dir fails schema
-    inference on read-back), and the _SUCCESS marker lands only after the
-    producing job returned — the same completion contract as a Spark
-    sink, so _stage_done/resume semantics are unchanged."""
+def _side_write_ok(spark: SparkSession, path: str) -> bool:
+    """The fused side-write has executors write into ``path`` with plain
+    file I/O, so it is only correct when every executor shares the driver's
+    filesystem: a local master and a scheme-less local path."""
+    return spark.sparkContext.master.startswith("local") and "://" not in path and not path.startswith("file:")
+
+
+def _finalize_side_segments(spark: SparkSession, seg_dir: str, n_postings: int) -> None:
+    """Commit the side-written segments dir after the producing job
+    returned — the same completion contract as a Spark sink, so
+    _stage_done/resume semantics are unchanged.  Tmp files of failed or
+    killed task attempts are swept first.  An empty partition set still
+    needs a schema-carrying parquet file (a bare dir fails schema inference
+    on read-back), but only when there were no postings: postings rows with
+    no visible part files mean the side-write did not land where the driver
+    can see it, and committing an empty segments artifact would be a
+    silently wrong index."""
     from .segments import SEGMENT_SCHEMA
 
-    if not any(f.endswith(".parquet") for f in os.listdir(seg_dir)):
+    for name in os.listdir(seg_dir):
+        if name.startswith(".") and _SIDE_TMP in name:
+            os.remove(os.path.join(seg_dir, name))
+    if not any(f.endswith(".parquet") and not f.startswith((".", "_")) for f in os.listdir(seg_dir)):
+        if n_postings:
+            raise RuntimeError(
+                f"the fused build wrote {n_postings} postings but no segment "
+                f"part files are visible in {seg_dir}"
+            )
         spark.createDataFrame([], SEGMENT_SCHEMA).write.mode("overwrite").parquet(seg_dir)
         return  # Spark's committer wrote _SUCCESS
     with open(os.path.join(seg_dir, "_SUCCESS"), "w"):
@@ -1167,9 +1097,9 @@ class IndexBuilder:
 
         # persisted: docs feeds two consumers (the tokenize type stream and
         # the doc_stats meta projection); when it comes from assign_doc_ids
-        # each recompute would repeat the Arrow enumeration pass over the
-        # ranged cache — measured ~20% slower end-to-end than caching the
-        # enumerated frame once.
+        # each recompute would re-scan the ranged cache (measured ~20%
+        # slower end-to-end than caching the numbered frame once, when the
+        # numbering was still a Python pass).
         docs = docs.persist()  # lazily materialized by the first stage
 
         # tokens including empty terms (doc_length/L_d accounting,
@@ -1357,7 +1287,7 @@ class IndexBuilder:
 
             set_desc("phase:segments — varbyte block encode + write")
             if packed_cache is not None:
-                seg_df = packed_cache.mapInPandas(seg_kernel, schema=SEGMENT_SCHEMA)
+                seg_df = packed_cache.mapInArrow(seg_kernel, schema=SEGMENT_SCHEMA)
             elif postings_cache is not None:
                 seg_df = encode_segments(postings_cache)
             else:
@@ -1732,14 +1662,18 @@ class IndexBuilder:
                     .select("packed")
                     .sortWithinPartitions("packed")
                 )
-                fuse_segments = not self._iceberg_ok and (
-                    not self._stage_done("segments") or not resume
+                seg_dir = self._stage_target("segments")
+                fuse_segments = (
+                    not self._iceberg_ok
+                    and _side_write_ok(spark, seg_dir)
+                    and (not self._stage_done("segments") or not resume)
                 )
                 if fuse_segments:
                     # ONE pass cuts BOTH artifacts: the kernel emits the
                     # postings rows (Spark's parquet sink) AND side-writes
                     # its partition's segment blocks as a parquet part file
-                    # (pyarrow, tmp+rename so a task retry is idempotent).
+                    # (pyarrow, tmp+rename so a task retry is idempotent;
+                    # local masters only, see _side_write_ok).
                     # The alternatives both lose on this memory-bound stage:
                     # a persisted packed cache + second segments pass pays a
                     # cache store and a full decompress re-scan (~13 s/900k
@@ -1751,7 +1685,6 @@ class IndexBuilder:
                     # (segments must go through the snapshot commit).
                     import shutil
 
-                    seg_dir = self._stage_target("segments")
                     shutil.rmtree(seg_dir, ignore_errors=True)
                     os.makedirs(seg_dir, exist_ok=True)
                     set_desc(
@@ -1761,11 +1694,15 @@ class IndexBuilder:
                         avgdl, weights_bc, id2term_bc, d_bits, p_bits, seg_dir
                     )
                     self._write_stage(
-                        sorted_packed.mapInPandas(kernel, schema=POSTINGS_SCHEMA),
+                        sorted_packed.mapInArrow(kernel, schema=POSTINGS_SCHEMA),
                         "postings",
                     )
-                    _finalize_side_segments(spark, seg_dir)
                     self._mark_stage("postings")
+                    _finalize_side_segments(
+                        spark,
+                        seg_dir,
+                        sum(p["rows"] for p in self.manifest["stages"]["postings"]["partitions"]),
+                    )
                     self._mark_stage("segments")
                     fused_segments_done = True
                     lap("postings_segments")
@@ -1775,7 +1712,7 @@ class IndexBuilder:
                         avgdl, weights_bc, id2term_bc, d_bits, p_bits
                     )
                     self._write_stage(
-                        packed_cache.mapInPandas(kernel, schema=POSTINGS_SCHEMA),
+                        packed_cache.mapInArrow(kernel, schema=POSTINGS_SCHEMA),
                         "postings",
                     )
                     seg_kernel = _segments_kernel_packed(

@@ -153,26 +153,33 @@ def _fused_tokenize_stats_kernel(text_col: str, id_col: str):
             doc_len = np.add.reduceat(tf, dstarts)
             w = np.square(1.0 + np.log(tf.astype(np.float64)))
             l2 = np.sqrt(np.add.reduceat(w, dstarts))
-            keep = pdf["type"].to_numpy() != ""
-            out = pd.DataFrame(
+            types = pdf["type"].to_numpy()
+            keep = types != ""
+            # token rows, then the stats rows; each column is built typed
+            # (nullable where the other half is null) — a pd.concat of
+            # all-null frame columns is deprecated dtype inference
+            n_tok, n_doc = int(keep.sum()), len(udoc)
+            tok_null = np.ones(n_tok + n_doc, dtype=bool)
+            tok_null[n_tok:] = False
+            yield pd.DataFrame(
                 {
-                    "doc_id": docs_np[keep],
-                    "position": pdf["position"].to_numpy(dtype=np.int32)[keep],
-                    "type": pdf["type"].to_numpy()[keep],
-                    "doc_len": None,
-                    "l2_weight": None,
+                    "doc_id": np.concatenate([docs_np[keep], udoc]),
+                    "position": np.concatenate(
+                        [
+                            pdf["position"].to_numpy(dtype=np.int32)[keep],
+                            np.full(n_doc, -1, dtype=np.int32),
+                        ]
+                    ),
+                    "type": np.concatenate([types[keep], np.full(n_doc, None, dtype=object)]),
+                    "doc_len": pd.arrays.IntegerArray(
+                        np.concatenate([np.zeros(n_tok, np.int32), doc_len.astype(np.int32)]),
+                        tok_null,
+                    ),
+                    "l2_weight": pd.arrays.FloatingArray(
+                        np.concatenate([np.zeros(n_tok), l2]), tok_null
+                    ),
                 }
             )
-            stats = pd.DataFrame(
-                {
-                    "doc_id": udoc,
-                    "position": np.full(len(udoc), -1, dtype=np.int32),
-                    "type": None,
-                    "doc_len": doc_len.astype(np.int32),
-                    "l2_weight": l2,
-                }
-            )
-            yield pd.concat([out, stats], ignore_index=True)
 
     return fn
 
@@ -253,27 +260,22 @@ def _fused_tokenize_group_kernel(text_col: str, id_col: str):
             keep = gstem != ""
             kept = np.flatnonzero(keep)
             pos_groups = np.split(p_s, starts[1:])
-            out = pd.DataFrame(
+            n_doc = len(udoc)
+            # posting rows, then the stats rows, built column by column (a
+            # pd.concat of all-null frame columns is deprecated dtype
+            # inference)
+            yield pd.DataFrame(
                 {
-                    "doc_id": gdoc[keep],
-                    "term": gstem[keep],
-                    "tf": tf[keep].astype(np.int32),
-                    "positions": [pos_groups[i] for i in kept],
-                    "doc_len": doc_len[gdi[keep]].astype(np.int32),
-                    "w": (1.0 + np.log(tf_f[keep])) / l2[gdi[keep]],
+                    "doc_id": np.concatenate([gdoc[keep], udoc]),
+                    "term": np.concatenate([gstem[keep], np.full(n_doc, None, dtype=object)]),
+                    "tf": np.concatenate(
+                        [tf[keep].astype(np.int32), np.zeros(n_doc, dtype=np.int32)]
+                    ),
+                    "positions": [pos_groups[i] for i in kept] + [None] * n_doc,
+                    "doc_len": np.concatenate([doc_len[gdi[keep]], doc_len]).astype(np.int32),
+                    "w": np.concatenate([(1.0 + np.log(tf_f[keep])) / l2[gdi[keep]], l2]),
                 }
             )
-            stats = pd.DataFrame(
-                {
-                    "doc_id": udoc,
-                    "term": None,
-                    "tf": np.zeros(len(udoc), dtype=np.int32),
-                    "positions": [None] * len(udoc),
-                    "doc_len": doc_len.astype(np.int32),
-                    "w": l2,
-                }
-            )
-            yield pd.concat([out, stats], ignore_index=True)
 
     return fn
 
@@ -337,77 +339,43 @@ def _assign_plan(terms: DataFrame, target: int, width: int):
 
 
 def _segments_kernel_dist(avgdl: float):
-    """Block-max segment encoder over the sorted routed partitions (see
-    _segments_kernel_packed for the layout contract): rows arrive as
-    finished postings sorted (term, doc_id), so the kernel only chunks each
-    term's run into BLOCK_SIZE blocks and varbyte-encodes — no regrouping.
-    BM25 weights recomputed with the same expression shape as the postings
+    """mapInArrow block-max segment encoder over the sorted routed
+    partitions (see build._segments_kernel_packed for the layout contract):
+    rows arrive as finished postings sorted (term, doc_id), so the kernel
+    only cuts each term's run into BLOCK_SIZE blocks and encodes them in one
+    segments.block_batch pass — no regrouping, no per-block Python.  BM25
+    weights recomputed with the same expression shape as the postings
     projection so block maxima match the postings values."""
 
-    def fn(iterator):
+    def fn(batches):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
-        from searchengine_spark.indexing.codec import encode_block
-        from searchengine_spark.indexing.segments import BLOCK_SIZE
+        from searchengine_spark.indexing.segments import block_batch, term_runs
 
-        term_c: list = []
-        doc_c: list = []
-        tf_c: list = []
-        w_c: list = []
-        pos_c: list = []
-
-        for pdf in iterator:
-            if not len(pdf):
-                continue
-            term_c.append(pdf["term"].to_numpy())
-            doc_c.append(pdf["doc_id"].to_numpy(dtype=np.int64))
-            tf_c.append(pdf["tf"].to_numpy(dtype=np.int64))
-            w_c.append(pdf["w"].to_numpy(dtype=np.float64))
-            dl = pdf["doc_len"].to_numpy(dtype=np.float64)
-            tf_f = pdf["tf"].to_numpy(dtype=np.float64)
-            w_c[-1] = np.stack(
-                [
-                    ((BM25_K1 + 1.0) * tf_f)
-                    / (BM25_K1 * ((1.0 - BM25_B) + BM25_B * (dl / avgdl)) + tf_f),
-                    w_c[-1],
-                ]
-            )
-            pos_c.append(pdf["positions"].to_numpy())
-        if not term_c:
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
             return
-        terms = np.concatenate(term_c)
-        gdoc = np.concatenate(doc_c).astype(np.uint64)
-        tfs = np.concatenate(tf_c).astype(np.uint64)
-        w_bm, w_ti = np.concatenate(w_c, axis=1)
-        positions = np.concatenate(pos_c)
-        del term_c, doc_c, tf_c, w_c, pos_c
 
-        tchange = np.empty(len(terms), dtype=bool)
-        tchange[0] = True
-        tchange[1:] = terms[1:] != terms[:-1]
-        tstarts = np.flatnonzero(tchange)
-        tends = np.append(tstarts[1:], len(terms))
+        def col(name):
+            return pa.concat_arrays([b.column(name) for b in batches])
 
-        out = {k: [] for k in (
-            "term", "n_postings", "doc_id_min", "doc_id_max",
-            "max_wdt_bm25", "max_wdt_tfidf_norm", "sum_tf", "postings_bin",
-        )}
-        for ti in range(len(tstarts)):
-            s0, e0 = int(tstarts[ti]), int(tends[ti])
-            term = terms[s0]
-            for s in range(s0, e0, BLOCK_SIZE):
-                e = min(s + BLOCK_SIZE, e0)
-                out["term"].append(term)
-                out["n_postings"].append(e - s)
-                out["doc_id_min"].append(int(gdoc[s]))
-                out["doc_id_max"].append(int(gdoc[e - 1]))
-                out["max_wdt_bm25"].append(float(w_bm[s:e].max()))
-                out["max_wdt_tfidf_norm"].append(float(w_ti[s:e].max()))
-                out["sum_tf"].append(int(tfs[s:e].sum()))
-                flat = np.concatenate(positions[s:e]).astype(np.uint64)
-                out["postings_bin"].append(encode_block(gdoc[s:e], tfs[s:e], flat))
-        yield pd.DataFrame(out)
+        tf = col("tf").to_numpy().astype(np.int64)
+        tf_f = tf.astype(np.float64)
+        dl = col("doc_len").to_numpy().astype(np.float64)
+        w_bm = ((BM25_K1 + 1.0) * tf_f) / (
+            BM25_K1 * ((1.0 - BM25_B) + BM25_B * (dl / avgdl)) + tf_f
+        )
+        run_starts, run_terms = term_runs(col("term"))
+        yield block_batch(
+            run_starts,
+            run_terms,
+            col("doc_id").to_numpy(),
+            tf,
+            w_bm,
+            col("w").to_numpy(),
+            col("positions").flatten().to_numpy(),
+        )
 
     return fn
 

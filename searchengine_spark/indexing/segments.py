@@ -7,10 +7,13 @@ Turns the logical postings table — range-partitioned and sorted by
   max_wdt_bm25, max_wdt_tfidf_norm,           <- block-max WAND metadata
   postings_bin                                 <- delta+varbyte blob (codec.py)
 
-The encode runs as ``mapInPandas`` over the already-sorted partitions: no
+The encode runs as ``mapInArrow`` over the already-sorted partitions: no
 extra shuffle, no per-term groupBy (a hot term's postings are simply cut into
 many blocks, possibly across partitions — block metadata is purely local, so
-skew cannot concentrate work).  This is the Spark-native replacement for the
+skew cannot concentrate work).  :func:`block_batch` is the one block cutter
+every build path shares: block metadata are segmented numpy reductions over
+the block starts and all blobs come from one ``codec.encode_blocks`` pass,
+so no Python runs per block.  This is the Spark-native replacement for the
 reference's per-term binary records (engine/indexing/spimi.py:145-187), with
 varbyte compression the reference lacks (it writes fixed u32).
 
@@ -53,38 +56,78 @@ DECODED_SCHEMA = T.StructType(
 )
 
 
-def _encode_partition(iterator):
+def block_batch(run_starts, run_terms, doc_ids, tfs, w_bm, w_ti, positions_flat):
+    """Sorted postings of one partition -> its segment rows as ONE Arrow
+    record batch (SEGMENT_SCHEMA).  ``run_terms`` is an Arrow string array
+    with one entry per term run; the per-posting numpy arrays are sorted by
+    (term, doc_id).  Block metadata is segmented reductions over the block
+    starts and every blob comes from one codec.encode_blocks pass — no
+    per-block Python."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    from searchengine_spark.indexing.codec import encode_block
+    from searchengine_spark.indexing.codec import encode_blocks
 
-    for pdf in iterator:
-        out = {k: [] for k in (
-            "term", "n_postings", "doc_id_min", "doc_id_max",
-            "max_wdt_bm25", "max_wdt_tfidf_norm", "sum_tf", "postings_bin",
-        )}
-        for term, g in pdf.groupby("term", sort=False):
-            doc_ids = g["doc_id"].to_numpy(dtype=np.uint64)
-            tfs = g["tf"].to_numpy(dtype=np.uint64)
-            w_bm = g["wdt_bm25"].to_numpy(dtype=np.float64)
-            w_tf = g["wdt_tfidf_norm"].to_numpy(dtype=np.float64)
-            pos_arrays = [np.asarray(p, dtype=np.uint64) for p in g["positions"]]
-            flat = np.concatenate(pos_arrays) if pos_arrays else np.empty(0, np.uint64)
-            offsets = np.concatenate(([0], np.cumsum(tfs))).astype(np.int64)
-            n = doc_ids.size
-            for s in range(0, n, BLOCK_SIZE):
-                e = min(s + BLOCK_SIZE, n)
-                blob = encode_block(doc_ids[s:e], tfs[s:e], flat[offsets[s]:offsets[e]])
-                out["term"].append(term)
-                out["n_postings"].append(e - s)
-                out["doc_id_min"].append(int(doc_ids[s]))
-                out["doc_id_max"].append(int(doc_ids[e - 1]))
-                out["max_wdt_bm25"].append(float(w_bm[s:e].max()))
-                out["max_wdt_tfidf_norm"].append(float(w_tf[s:e].max()))
-                out["sum_tf"].append(int(tfs[s:e].sum()))
-                out["postings_bin"].append(blob)
-        yield pd.DataFrame(out)
+    n = len(doc_ids)
+    # cut every term run into BLOCK_SIZE-posting blocks: block_run is each
+    # block's run, starts its first posting
+    run_len = np.diff(np.append(run_starts, n))
+    per_run = -(-run_len // BLOCK_SIZE)
+    block_run = np.repeat(np.arange(len(run_starts), dtype=np.int64), per_run)
+    within = np.arange(block_run.size, dtype=np.int64) - (np.cumsum(per_run) - per_run)[block_run]
+    starts = np.asarray(run_starts, dtype=np.int64)[block_run] + BLOCK_SIZE * within
+    last = np.append(starts[1:], n) - 1
+    data, offsets = encode_blocks(doc_ids, tfs, positions_flat, starts)
+    if data.size >= 2**31:  # Arrow binary offsets are int32
+        raise ValueError(f"{data.size} segment bytes in one batch exceed Arrow binary offsets")
+    blobs = pa.Array.from_buffers(
+        pa.binary(),
+        len(starts),
+        [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)],
+    )
+    doc_ids = np.asarray(doc_ids, dtype=np.int64)
+    return pa.RecordBatch.from_arrays(
+        [
+            run_terms.take(pa.array(block_run)),
+            pa.array(np.diff(np.append(starts, n)).astype(np.int32)),
+            pa.array(doc_ids[starts]),
+            pa.array(doc_ids[last]),
+            pa.array(np.maximum.reduceat(w_bm, starts)),
+            pa.array(np.maximum.reduceat(w_ti, starts)),
+            pa.array(np.add.reduceat(np.asarray(tfs, dtype=np.int64), starts)),
+            blobs,
+        ],
+        names=SEGMENT_SCHEMA.fieldNames(),
+    )
+
+
+def term_runs(terms):
+    """Run starts of a sorted Arrow string column -> (run_starts, run_terms)."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    ree = pc.run_end_encode(terms)
+    ends = ree.run_ends.to_numpy().astype(np.int64)
+    return np.concatenate(([0], ends[:-1])), ree.values
+
+
+def _encode_partition(batches):
+    """Each Arrow batch is cut into blocks on its own: block boundaries
+    restart at batch boundaries, so segments re-encoded by streaming
+    compaction keep the block layout of the segments already written."""
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        run_starts, run_terms = term_runs(batch.column("term"))
+        yield block_batch(
+            run_starts,
+            run_terms,
+            batch.column("doc_id").to_numpy(),
+            batch.column("tf").to_numpy(),
+            batch.column("wdt_bm25").to_numpy(),
+            batch.column("wdt_tfidf_norm").to_numpy(),
+            batch.column("positions").flatten().to_numpy(),
+        )
 
 
 def encode_segments(postings_sorted: DataFrame) -> DataFrame:
@@ -93,7 +136,7 @@ def encode_segments(postings_sorted: DataFrame) -> DataFrame:
     cols = postings_sorted.select(
         "term", "doc_id", "tf", "positions", "wdt_bm25", "wdt_tfidf_norm"
     )
-    return cols.mapInPandas(_encode_partition, schema=SEGMENT_SCHEMA)
+    return cols.mapInArrow(_encode_partition, schema=SEGMENT_SCHEMA)
 
 
 def _decode_partition(iterator):

@@ -330,20 +330,21 @@ def ranked_search_wand(
     #      computable driver-side — if a majority of blocks survive, most
     #      bytes get decoded anyway and the scan wins.
     prune_viable = not (min_ub is not None and theta_eff <= min_ub)
-    if prune_viable and term_meta is not None:
+    # min_blocks_to_prune <= 0 force-disables both cost gates (2 and 3) —
+    # diagnostics and tests that must exercise the pruned plan
+    if prune_viable and term_meta is not None and min_blocks_to_prune > 0:
         total_blocks = sum(m["n_blocks"] for m in term_meta.values())
         term_bytes = [m.get("bytes") for m in term_meta.values()]
-        if min_blocks_to_prune <= 0:
-            pass  # amortization gate force-disabled (diagnostics / tests)
-        elif all(b is not None for b in term_bytes):
+        if all(b is not None for b in term_bytes):
             # dictionary carries per-term compressed footprints: gate on
             # ACTUAL bytes the prune could avoid scanning.  The byte
             # equivalent of the 4096-block proxy (~500k postings at ~3-4
             # compressed bytes/posting) is ~2 MB; scale with the caller's
             # block threshold so a tuned threshold tunes both gates.
-            if sum(term_bytes) < min_blocks_to_prune * 512:
-                prune_viable = False
-        elif total_blocks < min_blocks_to_prune:
+            too_small = sum(term_bytes) < min_blocks_to_prune * 512
+        else:
+            too_small = total_blocks < min_blocks_to_prune
+        if too_small:
             prune_viable = False
         elif all(len(m["tops"]) == m["n_blocks"] for m in term_meta.values()):
             surviving = 0

@@ -45,19 +45,28 @@ def _merge_term_stats(old: DataFrame, delta: DataFrame) -> DataFrame:
     max_wdt_* take the max, block-max top lists concat+resort+slice(32),
     min block maxima take the min, block counts add.  Every combiner is
     associative, so repeated incremental compactions compose exactly."""
-    # a pre-postings_bytes dictionary artifact merges as 0 bytes for the
-    # old tier (the column was introduced with the fused metrics tail)
+    # a pre-postings_bytes dictionary artifact has an UNKNOWN footprint, not
+    # a zero one: it merges as null, so a term it holds keeps a null total
+    # and WAND falls back to its block-count gate for that term (the column
+    # was introduced with the fused metrics tail)
     for col in ("postings_bytes",):
         if col not in old.columns:
-            old = old.withColumn(col, F.lit(0).cast("long"))
+            old = old.withColumn(col, F.lit(None).cast("long"))
         if col not in delta.columns:
-            delta = delta.withColumn(col, F.lit(0).cast("long"))
+            delta = delta.withColumn(col, F.lit(None).cast("long"))
     o = old.select([F.col(c).alias(f"o_{c}") for c in old.columns])
     d = delta.select([F.col(c).alias(f"d_{c}") for c in delta.columns])
     j = o.join(d, o["o_term"] == d["d_term"], "full_outer")
 
     def add(col):
         return (F.coalesce(f"o_{col}", F.lit(0)) + F.coalesce(f"d_{col}", F.lit(0))).alias(col)
+
+    def add_known(col):
+        # a side that lacks the term adds 0; a side that has it with an
+        # unknown (null) value makes the total unknown
+        o_val = F.when(F.col("o_term").isNull(), F.lit(0)).otherwise(F.col(f"o_{col}"))
+        d_val = F.when(F.col("d_term").isNull(), F.lit(0)).otherwise(F.col(f"d_{col}"))
+        return (o_val + d_val).alias(col)
 
     def mx(col):
         return F.greatest(f"o_{col}", f"d_{col}").alias(col)
@@ -87,7 +96,7 @@ def _merge_term_stats(old: DataFrame, delta: DataFrame) -> DataFrame:
         top32("top_block_max_tfidf_norm"),
         mn("min_block_max_tfidf_norm"),
         add("n_blocks"),
-        add("postings_bytes"),
+        add_known("postings_bytes"),
     )
 
 

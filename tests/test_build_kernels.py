@@ -1,0 +1,193 @@
+"""Arrow build kernels: the fused side-write under task failure, the
+two-pass/fused segment parity, kernel warnings, and the WAND and tier-merge
+gates that read the dictionary's postings_bytes."""
+
+import os
+import warnings
+from types import SimpleNamespace
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pytest
+from test_encoded_build import tricky_docs  # noqa: F401  (fixture)
+
+import searchengine_spark.indexing.build as bmod
+
+D_BITS, P_BITS = 12, 8
+
+
+def _packed_batches(rng, n_terms=40, n_docs=300):
+    """Sorted packed-long token batches plus the broadcasts the packed
+    kernels read (term strings, dense doc weights)."""
+    rows = []
+    for t in range(n_terms):
+        for d in np.sort(rng.choice(n_docs, rng.integers(1, 200), replace=False)):
+            for p in np.sort(rng.choice(200, rng.integers(1, 4), replace=False)):
+                rows.append((t << (D_BITS + P_BITS)) | (int(d) << P_BITS) | int(p))
+    packed = np.array(rows, dtype=np.int64)
+    batches = [
+        pa.RecordBatch.from_arrays([pa.array(c)], names=["packed"])
+        for c in np.array_split(packed, 5)
+    ]
+    weights = SimpleNamespace(
+        value=(rng.uniform(1, 50, n_docs + 1), rng.uniform(0.5, 3, n_docs + 1))
+    )
+    id2term = SimpleNamespace(value=np.array([f"t{i:03d}" for i in range(n_terms)], dtype=object))
+    return batches, weights, id2term
+
+
+def test_fused_side_write_survives_a_failed_attempt(spark, tmp_path, monkeypatch):
+    """A task attempt that dies between writing its tmp file and the rename
+    (here: os.replace raising in another worker process) must leave nothing
+    Spark reads as data, so the retried attempt's part file is the only copy
+    of the partition's blocks."""
+    batches, weights, id2term = _packed_batches(np.random.default_rng(3))
+    seg_dir = tmp_path / "segments"
+    seg_dir.mkdir()
+    kernel = bmod._postings_segments_kernel_packed(
+        7.0, weights, id2term, D_BITS, P_BITS, str(seg_dir)
+    )
+    real_replace, real_getpid = os.replace, os.getpid
+
+    def dying_replace(src, dst):
+        raise OSError("worker killed before the rename")
+
+    monkeypatch.setattr(os, "replace", dying_replace)
+    monkeypatch.setattr(os, "getpid", lambda: real_getpid() + 100_000)
+    with pytest.raises(OSError):
+        list(kernel(iter(batches)))
+    assert os.listdir(seg_dir), "the failed attempt left its tmp file"
+    monkeypatch.setattr(os, "replace", real_replace)
+    monkeypatch.setattr(os, "getpid", real_getpid)
+
+    postings = pa.Table.from_batches(list(kernel(iter(batches))))
+    bmod._finalize_side_segments(spark, str(seg_dir), postings.num_rows)
+    assert sorted(os.listdir(seg_dir)) == ["_SUCCESS", "part-00000-fused.parquet"]
+    seg = spark.read.parquet(str(seg_dir))
+    row = seg.selectExpr("count(*) AS blocks", "sum(n_postings) AS n").collect()[0]
+    assert row["n"] == postings.num_rows
+    expect = pa.Table.from_batches(
+        list(bmod._segments_kernel_packed(7.0, weights, id2term, D_BITS, P_BITS)(iter(batches)))
+    )
+    assert row["blocks"] == expect.num_rows
+
+
+def test_finalize_fails_loudly_without_visible_parts(spark, tmp_path):
+    seg_dir = tmp_path / "segments"
+    seg_dir.mkdir()
+    with pytest.raises(RuntimeError, match="no segment part files"):
+        bmod._finalize_side_segments(spark, str(seg_dir), 12)
+    # no postings at all: an empty, schema-carrying artifact is correct
+    bmod._finalize_side_segments(spark, str(seg_dir), 0)
+    assert spark.read.parquet(str(seg_dir)).count() == 0
+
+
+def test_side_write_only_on_local_master_and_path(spark):
+    assert spark.sparkContext.master.startswith("local")
+    assert bmod._side_write_ok(spark, "/data/idx/segments")
+    assert not bmod._side_write_ok(spark, "hdfs://nn/idx/segments")
+    assert not bmod._side_write_ok(spark, "s3a://bucket/idx/segments")
+    assert not bmod._side_write_ok(spark, "file:/data/idx/segments")
+    remote = SimpleNamespace(sparkContext=SimpleNamespace(master="spark://host:7077"))
+    assert not bmod._side_write_ok(remote, "/data/idx/segments")
+
+
+def _segment_rows(spark, path):
+    df = spark.read.parquet(os.path.join(path, "segments"))
+    return sorted(
+        tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v for v in r)
+        for r in df.select(*sorted(df.columns)).collect()
+    )
+
+
+def test_fused_segments_byte_identical_to_two_pass(spark, tricky_docs, tmp_path, monkeypatch):  # noqa: F811
+    fused = str(tmp_path / "fused")
+    m = bmod.IndexBuilder(spark, fused).build(tricky_docs)
+    assert "postings_segments" in m["metrics"]["phase_seconds"]
+    monkeypatch.setattr(bmod, "_side_write_ok", lambda *_a: False)
+    two_pass = str(tmp_path / "two_pass")
+    m = bmod.IndexBuilder(spark, two_pass).build(tricky_docs)
+    assert "segments" in m["metrics"]["phase_seconds"]
+    assert _segment_rows(spark, fused) == _segment_rows(spark, two_pass)
+
+
+def test_tokenize_kernels_emit_no_warnings():
+    from searchengine_spark.indexing.build_dist import (
+        _fused_tokenize_group_kernel,
+        _fused_tokenize_stats_kernel,
+    )
+
+    pdf = pd.DataFrame(
+        {
+            "doc_id": np.arange(4, dtype=np.int64),
+            "text": ["the quick-brown fox", "", "running runs ran", "--- x"],
+        }
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        stats_rows = pd.concat(_fused_tokenize_stats_kernel("text", "doc_id")(iter([pdf])))
+        group_rows = pd.concat(_fused_tokenize_group_kernel("text", "doc_id")(iter([pdf])))
+    pseudo = stats_rows[stats_rows["position"] < 0]
+    assert pseudo["type"].isna().all() and pseudo["doc_len"].notna().all()
+    tokens = stats_rows[stats_rows["position"] >= 0]
+    assert tokens["doc_len"].isna().all() and tokens["l2_weight"].isna().all()
+    assert (group_rows["term"].isna() == group_rows["positions"].isna()).all()
+
+
+def test_wand_byte_gate_falls_through_to_selectivity_gate(spark, tmp_path):
+    """With per-term byte footprints in the dictionary and enough bytes to
+    amortize, the surviving-fraction gate must still run: when most blocks
+    reach theta, pruning decodes them anyway and the exhaustive plan is the
+    right one."""
+    from searchengine_spark.indexing import SparkIndex, build_index
+    from searchengine_spark.querying.ranked import ranked_search
+    from searchengine_spark.querying.wand import ranked_search_wand
+
+    # "filler" in 512 short docs, then 128 long ones: its postings stay in
+    # one partition (the long docs' "zebra" tokens outweigh it), so its
+    # blocks are doc ranges and 4 of its 5 blocks reach the top weight
+    rows = [
+        (i, "filler zebra" if i < 512 else " ".join(["filler"] + ["zebra"] * 40))
+        for i in range(640)
+    ]
+    out = str(tmp_path / "gate_index")
+    build_index(spark, spark.createDataFrame(rows, "doc_id long, text string"), out)
+    index = SparkIndex(spark, out)
+    meta = index.term_stats_for(["filler"])["filler"]
+    tops = meta["top_block_max_bm25"]
+    assert meta["n_blocks"] == len(tops) == 5
+    assert tops.count(tops[0]) == 4 and tops[-1] < tops[0]
+    assert meta["postings_bytes"] >= 512
+
+    st: dict = {}
+    got = ranked_search_wand(index, "filler", k=1, stats=st, min_blocks_to_prune=1).collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in ranked_search(index, "filler", k=1).collect()]
+    assert st["pruned"] is False
+
+
+def test_tier_merge_keeps_unknown_postings_bytes_null(spark):
+    from searchengine_spark.streaming.ingest import _merge_term_stats
+
+    cols = (
+        "term string, df long, cf long, max_wdt_bm25 double, max_wdt_tfidf_norm double, "
+        "top_block_max_bm25 array<double>, min_block_max_bm25 double, "
+        "top_block_max_tfidf_norm array<double>, min_block_max_tfidf_norm double, n_blocks long"
+    )
+    old = spark.createDataFrame(
+        [("apple", 2, 3, 1.0, 1.0, [1.0], 1.0, [1.0], 1.0, 1),
+         ("pear", 1, 1, 0.5, 0.5, [0.5], 0.5, [0.5], 0.5, 1)],
+        cols,
+    )  # a tier written before the postings_bytes column existed
+    delta = spark.createDataFrame(
+        [("apple", 1, 1, 0.7, 0.7, [0.7], 0.7, [0.7], 0.7, 1, 40),
+         ("kiwi", 1, 2, 0.9, 0.9, [0.9], 0.9, [0.9], 0.9, 1, 25)],
+        cols + ", postings_bytes long",
+    )
+    merged = {r["term"]: r for r in _merge_term_stats(old, delta).collect()}
+    assert merged["apple"]["df"] == 3
+    assert merged["apple"]["postings_bytes"] is None  # old tier's bytes unknown
+    assert merged["pear"]["postings_bytes"] is None
+    assert merged["kiwi"]["postings_bytes"] == 25  # only in the new tier
+    both = _merge_term_stats(delta, delta)
+    assert {r["term"]: r["postings_bytes"] for r in both.collect()} == {"apple": 80, "kiwi": 50}
