@@ -34,6 +34,7 @@ import json
 import math
 import os
 import time
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -161,6 +162,22 @@ def _postings_kernel(avgdl: float | None, weights_bc=None, id2term_bc=None):
             yield process(carry)
 
     return fn
+
+
+class PhaseClock:
+    """Wall seconds per named build phase (a manifest's ``phase_seconds``):
+    ``lap(name)`` records the time since the previous lap, or since the
+    clock started at ``t0``."""
+
+    def __init__(self):
+        self.t0 = time.time()
+        self.phases: dict[str, float] = {}
+        self._last = self.t0
+
+    def lap(self, name: str) -> None:
+        now = time.time()
+        self.phases[name] = round(now - self._last, 3)
+        self._last = now
 
 
 @contextlib.contextmanager
@@ -401,7 +418,21 @@ VOCAB_ENCODE_MAX = 1_500_000
 DOC_STATS_SMALL_SCHEMA = "doc_id long, doc_len long, l2_weight double"
 
 
-def _packed_postings(packed, avgdl: float, weights, id2term, d_bits: int, p_bits: int):
+def _doc_weights(tf, doc_len, l2, avgdl: float):
+    """Reference K3/K4 document weights (rankedquery.py:22,24) of postings
+    with term frequencies ``tf`` in docs of length ``doc_len`` and L2 norm
+    ``l2``: one vectorized formula for every kernel, so postings weights and
+    segment block maxima match bit-for-bit whichever path computed them."""
+    import numpy as np
+
+    tf_f = np.asarray(tf, dtype=np.float64)
+    w_bm = ((BM25_K1 + 1.0) * tf_f) / (
+        BM25_K1 * ((1.0 - BM25_B) + BM25_B * (doc_len / avgdl)) + tf_f
+    )
+    return w_bm, (1.0 + np.log(tf_f)) / l2
+
+
+def _packed_postings(packed, avgdl: float | None, weights, id2term, d_bits: int, p_bits: int):
     """Sorted packed longs (term_id << (d_bits+p_bits) | doc_id << p_bits |
     position) -> the partition's postings as arrays: (run_starts,
     run_terms, doc, tf, positions_flat, wdt_bm25, wdt_tfidf_norm), where
@@ -409,13 +440,11 @@ def _packed_postings(packed, avgdl: float, weights, id2term, d_bits: int, p_bits
     Arrow string array with each run's term (only the partition's own terms
     are converted).  Sorting the long IS sorting (term_id, doc_id,
     position), so a (term, doc) group is a run of equal ``packed >> p_bits``
-    and positions come out already flat and in order.  One weight
-    computation serves both artifacts, so segment block maxima match the
-    postings values bit-for-bit (reference K3/K4, rankedquery.py:22,24)."""
+    and positions come out already flat and in order.  ``avgdl=None`` is
+    the RAW form (the streaming delta): both weight arrays are None."""
     import numpy as np
     import pyarrow as pa
 
-    dl_arr, l2_arr = weights
     n = len(packed)
     group = packed >> p_bits
     change = np.empty(n, dtype=bool)
@@ -426,11 +455,10 @@ def _packed_postings(packed, avgdl: float, weights, id2term, d_bits: int, p_bits
     gkey = group[starts]
     doc = gkey & ((1 << d_bits) - 1)
     tid = gkey >> d_bits
-    tf_f = tf.astype(np.float64)
-    w_bm = ((BM25_K1 + 1.0) * tf_f) / (
-        BM25_K1 * ((1.0 - BM25_B) + BM25_B * (dl_arr[doc] / avgdl)) + tf_f
-    )
-    w_ti = (1.0 + np.log(tf_f)) / l2_arr[doc]
+    w_bm = w_ti = None
+    if avgdl is not None:
+        dl_arr, l2_arr = weights
+        w_bm, w_ti = _doc_weights(tf, dl_arr[doc], l2_arr[doc], avgdl)
     tchange = np.empty(len(tid), dtype=bool)
     tchange[0] = True
     tchange[1:] = tid[1:] != tid[:-1]
@@ -445,13 +473,15 @@ _POSTINGS_CHUNK = 1 << 18
 
 
 def _postings_batches(run_starts, run_terms, doc, tf, flat_pos, w_bm, w_ti):
-    """Per-posting arrays -> POSTINGS_SCHEMA Arrow batches: the term column
-    is a take() over the run terms, positions a ListArray over offsets into
-    the flat array — no per-posting Python objects."""
+    """Per-posting arrays -> POSTINGS_SCHEMA Arrow batches (RAW_POSTINGS_SCHEMA
+    when the weights are None): the term column is a take() over the run
+    terms, positions a ListArray over offsets into the flat array — no
+    per-posting Python objects."""
     import numpy as np
     import pyarrow as pa
 
     n = len(doc)
+    fields = list(POSTINGS_FIELDS) if w_bm is not None else list(POSTINGS_FIELDS[:4])
     run_of = np.repeat(
         np.arange(len(run_starts), dtype=np.int64), np.diff(np.append(run_starts, n))
     )
@@ -464,17 +494,15 @@ def _postings_batches(run_starts, run_terms, doc, tf, flat_pos, w_bm, w_ti):
             pa.array((pos_off[c0 : c1 + 1] - p0).astype(np.int32)),
             pa.array(flat_pos[p0:p1]),
         )
-        yield pa.RecordBatch.from_arrays(
-            [
-                run_terms.take(pa.array(run_of[c0:c1])),
-                pa.array(doc[c0:c1]),
-                pa.array(tf[c0:c1]),
-                positions,
-                pa.array(w_bm[c0:c1]),
-                pa.array(w_ti[c0:c1]),
-            ],
-            names=list(POSTINGS_FIELDS),
-        )
+        cols = [
+            run_terms.take(pa.array(run_of[c0:c1])),
+            pa.array(doc[c0:c1]),
+            pa.array(tf[c0:c1]),
+            positions,
+        ]
+        if w_bm is not None:
+            cols += [pa.array(w_bm[c0:c1]), pa.array(w_ti[c0:c1])]
+        yield pa.RecordBatch.from_arrays(cols, names=fields)
 
 
 def _whole_partition_packed(batches):
@@ -489,7 +517,9 @@ def _whole_partition_packed(batches):
     return chunks[0] if len(chunks) == 1 else np.concatenate(chunks)
 
 
-def _postings_kernel_packed(avgdl: float, weights_bc, id2term_bc, d_bits: int, p_bits: int):
+def _postings_kernel_packed(
+    avgdl: float | None, weights_bc, id2term_bc, d_bits: int, p_bits: int, doc_base: int = 0
+):
     """mapInArrow postings kernel over partitions sorted by a single
     ``packed`` int64 (see _packed_postings for the key layout).  Sorting one
     long instead of (term_id, doc_id, position) makes the external sort
@@ -497,15 +527,23 @@ def _postings_kernel_packed(avgdl: float, weights_bc, id2term_bc, d_bits: int, p
     width-4/8 levels are memory-stall-bound, and sorted bytes convert
     directly into scaling headroom.  Batches stream: each emits its complete
     (term, doc) groups and carries the trailing one, so memory is
-    O(batch + largest group)."""
+    O(batch + largest group).  ``avgdl=None`` emits RAW_POSTINGS_SCHEMA
+    rows (no weights, ``weights_bc`` unused); ``doc_base`` is added to the
+    packed doc ids, so a streaming epoch packs its own 0-based ids."""
 
     def fn(batches):
         import numpy as np
 
         def emit(packed):
-            yield from _postings_batches(
-                *_packed_postings(packed, avgdl, weights_bc.value, id2term_bc.value, d_bits, p_bits)
+            run_starts, run_terms, doc, *rest = _packed_postings(
+                packed,
+                avgdl,
+                None if weights_bc is None else weights_bc.value,
+                id2term_bc.value,
+                d_bits,
+                p_bits,
             )
+            yield from _postings_batches(run_starts, run_terms, doc + doc_base, *rest)
 
         carry = None
         for batch in batches:
@@ -527,46 +565,25 @@ def _postings_kernel_packed(avgdl: float, weights_bc, id2term_bc, d_bits: int, p
     return fn
 
 
-def _segments_kernel_packed(avgdl: float, weights_bc, id2term_bc, d_bits: int, p_bits: int):
-    """mapInArrow block-max segment encoder over the SAME sorted packed-long
-    partitions the postings kernel consumes (the two-pass shape: Iceberg
-    sinks, resumed builds, non-local masters).  Group detection and weights
-    are _packed_postings' vectorized shift/compare ops, positions are already
-    a flat contiguous array, and every block of the partition is encoded in
-    one codec.encode_blocks pass with block metadata from segmented
-    reductions (segments.block_batch) — no per-block Python.  The whole
-    partition is buffered so block boundaries are deterministic (reference
-    postings.bin layout: engine/indexing/spimi.py:145-187)."""
-
-    def fn(batches):
-        from searchengine_spark.indexing.segments import block_batch
-
-        packed = _whole_partition_packed(batches)
-        if packed is None:
-            return
-        run_starts, run_terms, doc, tf, flat_pos, w_bm, w_ti = _packed_postings(
-            packed, avgdl, weights_bc.value, id2term_bc.value, d_bits, p_bits
-        )
-        yield block_batch(run_starts, run_terms, doc, tf, w_bm, w_ti, flat_pos)
-
-    return fn
-
-
 # side-written segment tmp files start with "." (Spark's file listing skips
 # hidden names, so a tmp left by a killed task is never read as data) and
 # carry this marker so _finalize_side_segments can sweep them
 _SIDE_TMP = ".tmp-"
 
 
-def _postings_segments_kernel_packed(
-    avgdl: float, weights_bc, id2term_bc, d_bits: int, p_bits: int, seg_dir: str
-):
-    """ONE mapInArrow pass over the sorted packed-long partitions cuts BOTH
-    artifacts: the kernel yields the postings batches (Spark's parquet sink
-    writes them) and side-writes its partition's block-max segment rows as
-    one parquet part file via pyarrow — the same batch
-    `_segments_kernel_packed` would emit, written while the group/weight
-    arrays are still hot instead of from a persisted cache in a second job.
+def _partition_kernel(postings_of, seg_dir: str | None = None):
+    """mapInArrow postings kernel over one sorted partition.
+    ``postings_of(batches)`` returns the whole partition's weighted postings
+    as arrays (run_starts, run_terms, doc, tf, positions_flat, wdt_bm25,
+    wdt_tfidf_norm) or None when it is empty; the whole partition is
+    buffered so block boundaries are deterministic (reference postings.bin
+    layout: engine/indexing/spimi.py:145-187).  The kernel yields the
+    postings rows (POSTINGS_SCHEMA).
+
+    With ``seg_dir`` it also side-writes the partition's segment rows there
+    as one parquet part file via pyarrow — the fused sink: ONE pass cuts
+    BOTH artifacts while the group/weight arrays are still hot, instead of
+    from a persisted cache in a second job (_segments_partition_kernel).
     Measured alternatives at 900k/width 4: persist + second pass ≈ +13 s;
     persist + two CONCURRENT consumer jobs ≈ +17 s (DRAM contention on
     pinned cores).  Task retries are idempotent: the part file is named by
@@ -575,32 +592,81 @@ def _postings_segments_kernel_packed(
     (_finalize_side_segments)."""
 
     def fn(batches):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
-
-        from searchengine_spark.indexing.segments import block_batch
-
-        packed = _whole_partition_packed(batches)
-        if packed is None:
+        postings = postings_of(batches)
+        if postings is None:
             return
-        run_starts, run_terms, doc, tf, flat_pos, w_bm, w_ti = _packed_postings(
-            packed, avgdl, weights_bc.value, id2term_bc.value, d_bits, p_bits
-        )
-        del packed
+        if seg_dir is not None:
+            import pyarrow as pa
+            import pyarrow.parquet as pq
+            from pyspark import TaskContext
 
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        name = f"part-{pid:05d}-fused.parquet"
-        tmp = os.path.join(seg_dir, f".{name}{_SIDE_TMP}{os.getpid()}")
-        seg = block_batch(run_starts, run_terms, doc, tf, w_bm, w_ti, flat_pos)
-        pq.write_table(pa.Table.from_batches([seg]), tmp, compression="snappy")
-        os.replace(tmp, os.path.join(seg_dir, name))
-        del seg
+            from searchengine_spark.indexing.segments import block_batch
 
-        yield from _postings_batches(run_starts, run_terms, doc, tf, flat_pos, w_bm, w_ti)
+            run_starts, run_terms, doc, tf, flat_pos, w_bm, w_ti = postings
+            seg = block_batch(run_starts, run_terms, doc, tf, w_bm, w_ti, flat_pos)
+            ctx = TaskContext.get()
+            pid = ctx.partitionId() if ctx is not None else 0
+            name = f"part-{pid:05d}-fused.parquet"
+            tmp = os.path.join(seg_dir, f".{name}{_SIDE_TMP}{os.getpid()}")
+            pq.write_table(pa.Table.from_batches([seg]), tmp, compression="snappy")
+            os.replace(tmp, os.path.join(seg_dir, name))
+            del seg
+        yield from _postings_batches(*postings)
 
     return fn
+
+
+def _segments_partition_kernel(postings_of):
+    """mapInArrow block-max segment kernel (SEGMENT_SCHEMA) over the same
+    sorted partitions and ``postings_of`` source as _partition_kernel — the
+    second pass of the two-pass shape (Iceberg sinks, resumed builds,
+    non-local masters).  Block metadata come from segmented reductions and
+    every blob of the partition from one codec.encode_blocks pass
+    (segments.block_batch) — no per-block Python."""
+
+    def fn(batches):
+        from searchengine_spark.indexing.segments import block_batch
+
+        postings = postings_of(batches)
+        if postings is not None:
+            run_starts, run_terms, doc, tf, flat_pos, w_bm, w_ti = postings
+            yield block_batch(run_starts, run_terms, doc, tf, w_bm, w_ti, flat_pos)
+
+    return fn
+
+
+def _packed_partition(avgdl: float, weights_bc, id2term_bc, d_bits: int, p_bits: int):
+    """_partition_kernel source over sorted packed-long partitions: group
+    detection and weights are _packed_postings' vectorized shift/compare
+    ops, and positions are already a flat contiguous array."""
+
+    def postings_of(batches):
+        packed = _whole_partition_packed(batches)
+        if packed is None:
+            return None
+        return _packed_postings(
+            packed, avgdl, weights_bc.value, id2term_bc.value, d_bits, p_bits
+        )
+
+    return postings_of
+
+
+def _segments_kernel_packed(avgdl: float, weights_bc, id2term_bc, d_bits: int, p_bits: int):
+    """Block-max segment encoder over the sorted packed-long partitions the
+    postings kernel consumes (the two-pass shape)."""
+    return _segments_partition_kernel(
+        _packed_partition(avgdl, weights_bc, id2term_bc, d_bits, p_bits)
+    )
+
+
+def _postings_segments_kernel_packed(
+    avgdl: float, weights_bc, id2term_bc, d_bits: int, p_bits: int, seg_dir: str
+):
+    """The fused sink over sorted packed-long partitions: postings rows out,
+    segment blocks side-written into ``seg_dir``."""
+    return _partition_kernel(
+        _packed_partition(avgdl, weights_bc, id2term_bc, d_bits, p_bits), seg_dir=seg_dir
+    )
 
 
 def _side_write_ok(spark: SparkSession, path: str) -> bool:
@@ -800,11 +866,159 @@ def _encoded_routed_tokens(
     return routed.select(packed.alias("packed"), "_route")
 
 
+class EncodedVocab(NamedTuple):
+    """The driver dictionary of the encoded path: the distinct types, their
+    dense term ids (sorted-term order), the id -> term strings, the empty
+    term's id (None when no type stems to it), and each term's token total
+    (the route planner's input; the empty term's total is zero)."""
+
+    types_list: list
+    tid_for_type: Any
+    id2term: Any
+    empty_tid: int | None
+    term_tokens: Any
+
+
+def _fused_tokenize(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) -> the persisted fused tokenize+stats frame: token rows
+    (position >= 0) plus one stats pseudo-row (position = -1) per non-empty
+    doc.  Doc stats ride the tokenize kernel, so the stats phase costs a
+    cache-projection read instead of a second full Python-kernel scan of the
+    token stream (the old _doc_stats_types_kernel pass: measured 19.6 s of a
+    142 s width-4 900k-turn build).  Weight columns stay null on token rows
+    (they reach the postings kernel by broadcast) — the columnar cache
+    RLE-compresses them away."""
+    from .build_dist import WEIGHTED_TYPES_SCHEMA, _fused_tokenize_stats_kernel
+
+    return (
+        docs.select("doc_id", "text")
+        .mapInPandas(_fused_tokenize_stats_kernel("text", "doc_id"), schema=WEIGHTED_TYPES_SCHEMA)
+        .persist()
+    )
+
+
+def _fused_types(fused: DataFrame) -> DataFrame:
+    return fused.filter(F.col("position") >= 0).select("doc_id", "position", "type")
+
+
+def _collect_vocab(types: DataFrame) -> EncodedVocab | None:
+    """One per-type count collect -> the driver dictionary, or None when
+    the vocabulary exceeds VOCAB_ENCODE_MAX.  The collect is limit-guarded:
+    the aggregation's map side scans every types partition (materializing
+    the fused cache) regardless of the limit, while the limit caps what can
+    reach the driver — an over-cutoff vocabulary is never collected.  (An
+    earlier shape ran approx_count_distinct first as the guard: a full
+    extra pass over the token stream per build, ~8 s/900k turns at width 8,
+    pure fixed cost.)"""
+    import numpy as np
+
+    vocab_pdf = (
+        types.groupBy("type")
+        .agg(F.count("*").alias("c"))
+        .limit(VOCAB_ENCODE_MAX + 1)
+        .toPandas()  # Arrow transfer — Row conversion is slow at 10^6 types
+    )
+    if len(vocab_pdf) > VOCAB_ENCODE_MAX:
+        return None
+    types_list = vocab_pdf["type"].tolist()
+    tid_for_type, id2term, empty_tid = _vocab_id_maps(types_list)
+    # exact per-term token totals (the driver-side partition plan's input)
+    # fall out of the same collect
+    term_tokens = np.zeros(len(id2term), dtype=np.int64)
+    np.add.at(term_tokens, tid_for_type.astype(np.int64), vocab_pdf["c"].to_numpy(dtype=np.int64))
+    if empty_tid is not None:
+        term_tokens[empty_tid] = 0  # excluded from the postings stream
+    return EncodedVocab(types_list, tid_for_type, id2term, empty_tid, term_tokens)
+
+
+def _stats_rows(fused: DataFrame):
+    """The fused pass's stats pseudo-rows as pandas (doc_id, doc_len,
+    l2_weight): ONE cache-projection collect serves corpus stats and the
+    kernel weight arrays.  Docs without tokens have no row."""
+    return (
+        fused.filter(F.col("position") < 0)
+        .select("doc_id", F.col("doc_len").cast("long").alias("doc_len"), "l2_weight")
+        .toPandas()
+    )
+
+
+def _route_plan(term_tokens, width_floor: int):
+    """_plan_term_routes with a per-partition token target that spreads the
+    stream over about ``width_floor`` partitions."""
+    total = int(term_tokens.sum())
+    return _plan_term_routes(term_tokens, max(1, -(-total // width_floor)))
+
+
+def _planned_token_stream(
+    spark: SparkSession, types: DataFrame, vocab: EncodedVocab, plan, n_doc_slots: int, max_dl: int
+):
+    """The encoded path's ONE token shuffle: routed through the driver's
+    partition plan (_route_plan — no range-sampling job) and sorted within
+    partitions.  Doc ids must lie in [0, n_doc_slots).  Returns (stream,
+    pack_bits): a single ``packed`` long column (term_id | doc_id |
+    position, see _packed_postings) with pack_bits = (d_bits, p_bits) when
+    the key fits 63 bits — always under the encode-path cutoffs (21 + 23 +
+    p), guarded anyway — else (term_id, doc_id, position) rows and None."""
+    base_part, ksplit, n_parts = plan
+    t_bits = max(1, len(vocab.id2term).bit_length())
+    d_bits = max(1, int(n_doc_slots).bit_length())
+    p_bits = max(1, int(max_dl + 1).bit_length())
+    pack_bits = (d_bits, p_bits) if t_bits + d_bits + p_bits <= 63 else None
+    enc = _encoded_routed_tokens(
+        spark,
+        types,
+        vocab.types_list,
+        vocab.tid_for_type,
+        vocab.empty_tid,
+        base_part,
+        ksplit,
+        _invert_partition_hash(n_parts),
+        pack_bits=pack_bits,
+    )
+    routed = enc.repartition(n_parts, F.col("_route"))
+    if pack_bits is not None:
+        return routed.select("packed").sortWithinPartitions("packed"), pack_bits
+    key = ("term_id", "doc_id", "position")
+    return routed.select(*key).sortWithinPartitions(*key), None
+
+
+def _doc_stats_frame(spark: SparkSession, docs: DataFrame, stats_pdf, meta_cols) -> DataFrame:
+    """The doc_stats artifact: every doc's metadata joined to its collected
+    stats row (docs without tokens get doc_len 0 and a null l2_weight)."""
+    stats_small_df = spark.createDataFrame(stats_pdf, schema=DOC_STATS_SMALL_SCHEMA)
+    return (
+        docs.select("doc_id", *meta_cols)
+        .join(stats_small_df, "doc_id", "left")
+        .fillna({"doc_len": 0})
+    )
+
+
 BROADCAST_WEIGHTS_MAX_DOCS = 4_000_000  # ~100 MB of (doc_id, doc_len, l2)
 # One postings reduce partition ≈ this many docs (~2M token rows, a
 # ~100-200 MB sorted working set).  The range-shuffle partition count is
 # max(session shuffle partitions, ceil(n_docs / this)) — see _build.
 DOCS_PER_POSTINGS_PARTITION = 60_000
+
+
+def dense_doc_weights(ids, doc_len, l2_weight, lo: int, size: int):
+    """Dense (doc_len, l2_weight) float64 arrays over doc ids [lo, lo +
+    size), slot ``doc_id - lo`` — the kernels' broadcast weight lookup.
+    Slots of absent ids hold (0, 1).  Returns ``None`` when an id falls
+    outside the range: without this guard a negative slot would silently
+    index from the array end and produce wrong BM25/tf-idf weights, so the
+    caller takes the id-agnostic per-row weight join instead."""
+    import numpy as np
+
+    slots = np.asarray(ids, dtype=np.int64) - lo
+    if len(slots) and (slots.min() < 0 or slots.max() >= size):
+        return None
+    dl = np.zeros(size, dtype=np.float64)
+    l2 = np.ones(size, dtype=np.float64)
+    dl[slots] = doc_len
+    # l2_weight is null for empty docs; they emit no tokens, so the slot is
+    # never read — nan_to_num only keeps the array finite for transport
+    l2[slots] = np.nan_to_num(np.asarray(l2_weight, dtype=np.float64), nan=1.0)
+    return dl, l2
 
 
 def doc_weight_arrays(doc_stats: DataFrame, n_docs: int):
@@ -817,22 +1031,17 @@ def doc_weight_arrays(doc_stats: DataFrame, n_docs: int):
     Returns ``None`` when the density contract does not hold (ids outside
     [0, n_docs) — e.g. a filtered/sparse-id corpus fed straight to
     IndexBuilder.build without re-running assign_doc_ids): the caller then
-    falls back to the per-row enrichment join, which is id-agnostic.
-    Without this guard a negative id would silently index from the array
-    end and produce wrong BM25/tf-idf weights."""
+    falls back to the per-row enrichment join, which is id-agnostic."""
     import numpy as np
 
     pdf = doc_stats.select("doc_id", "doc_len", "l2_weight").toPandas()
-    dl = np.zeros(n_docs, dtype=np.float64)
-    l2 = np.ones(n_docs, dtype=np.float64)
-    ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-    if len(ids) and (ids.min() < 0 or ids.max() >= n_docs):
-        return None
-    dl[ids] = pdf["doc_len"].to_numpy(dtype=np.float64)
-    # l2_weight is null for empty docs; they emit no tokens, so the slot is
-    # never read — nan_to_num only keeps the array finite for transport
-    l2[ids] = np.nan_to_num(pdf["l2_weight"].to_numpy(dtype=np.float64), nan=1.0)
-    return dl, l2
+    return dense_doc_weights(
+        pdf["doc_id"].to_numpy(dtype=np.int64),
+        pdf["doc_len"].to_numpy(dtype=np.float64),
+        pdf["l2_weight"].to_numpy(dtype=np.float64),
+        0,
+        n_docs,
+    )
 
 
 def enriched_tokens(
@@ -1074,14 +1283,8 @@ class IndexBuilder:
             self.spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
     def _build(self, docs: DataFrame, resume: bool = False) -> dict:
-        t0 = time.time()
-        phases: dict[str, float] = {}
-        _last = [t0]
-
-        def lap(name: str) -> None:
-            now = time.time()
-            phases[name] = round(now - _last[0], 3)
-            _last[0] = now
+        clock = PhaseClock()
+        lap = clock.lap
 
         if resume:
             self._load_manifest()
@@ -1229,9 +1432,7 @@ class IndexBuilder:
             lap("stats_write_join")
 
         return self._finish(
-            t0=t0,
-            phases=phases,
-            lap=lap,
+            clock=clock,
             docs=docs,
             n_docs=n_docs,
             avgdl=avgdl,
@@ -1246,9 +1447,7 @@ class IndexBuilder:
 
     def _finish(
         self,
-        t0,
-        phases,
-        lap,
+        clock: PhaseClock,
         docs,
         n_docs,
         avgdl,
@@ -1271,6 +1470,7 @@ class IndexBuilder:
         and every cache argument None)."""
         spark = self.spark
         out = self.out_dir
+        lap = clock.lap
         postings_df = self._read_stage("postings")
 
         # S5/B4: compressed block-max segments (delta+varbyte blobs; the
@@ -1371,7 +1571,7 @@ class IndexBuilder:
         # build metrics (north rule: postings/sec, skew ratio, lineage).
         # n_postings comes from the per-partition lineage (parquet footers)
         # recorded at stage completion — no re-scan of the postings table.
-        elapsed = time.time() - t0
+        elapsed = time.time() - clock.t0
         set_desc("phase:metrics — manifest aggregates")
         # pre-lineage manifests (resumed builds recorded before per-partition
         # lineage existed) lack the "partitions" key — fall back to a count
@@ -1412,7 +1612,7 @@ class IndexBuilder:
             term_stats_cache.unpersist()
         lap("metrics")
         self.manifest["metrics"] = {
-            "phase_seconds": phases,
+            "phase_seconds": clock.phases,
             "n_docs": n_docs,
             "total_tokens": total_tokens,
             "n_postings": n_postings,
@@ -1465,14 +1665,8 @@ class IndexBuilder:
 
         import numpy as np
 
-        t0 = time.time()
-        phases: dict[str, float] = {}
-        _last = [t0]
-
-        def lap(name: str) -> None:
-            now = time.time()
-            phases[name] = round(now - _last[0], 3)
-            _last[0] = now
+        clock = PhaseClock()
+        lap = clock.lap
 
         if resume:
             self._load_manifest()
@@ -1483,43 +1677,15 @@ class IndexBuilder:
 
         docs = docs.persist()
         # fused tokenize+stats pass (round-5): doc stats ride the tokenize
-        # kernel as position=-1 pseudo-rows, so the stats phase costs a
-        # cache-projection read instead of a second full Python-kernel scan
-        # of the token stream (the old _doc_stats_types_kernel pass:
-        # measured 19.6 s of a 142 s width-4 900k-turn build).  Weight
-        # columns stay null on token rows (they reach the postings kernel
-        # by broadcast on this path) — the columnar cache RLE-compresses
-        # them away.
-        from .build_dist import WEIGHTED_TYPES_SCHEMA, _fused_tokenize_stats_kernel
-
-        fused = (
-            docs.select("doc_id", "text")
-            .mapInPandas(
-                _fused_tokenize_stats_kernel("text", "doc_id"),
-                schema=WEIGHTED_TYPES_SCHEMA,
-            )
-            .persist()
-        )
-        types = fused.filter(F.col("position") >= 0).select("doc_id", "position", "type")
+        # kernel as position=-1 pseudo-rows (see _fused_tokenize)
+        fused = _fused_tokenize(docs)
+        types = _fused_types(fused)
 
         # -- vocab: one tokenize pass materializes the caches; the distinct
-        # collect then reads them.  The approx guard keeps an adversarial
-        # vocabulary from being collected to the driver before falling back.
+        # collect then reads them (limit-guarded, see _collect_vocab)
         set_desc("phase:vocab — tokenize pass + per-type count collect")
-        # limit-guarded collect: the aggregation's map side scans every
-        # types partition (materializing the caches) regardless of the
-        # limit, while the limit caps what can reach the driver — an
-        # over-cutoff vocabulary falls back without ever being collected.
-        # (An earlier shape ran approx_count_distinct first as the guard:
-        # a full extra pass over the token stream per build, ~8 s/900k
-        # turns at width 8, pure fixed cost.)
-        vocab_pdf = (
-            types.groupBy("type")
-            .agg(F.count("*").alias("c"))
-            .limit(VOCAB_ENCODE_MAX + 1)
-            .toPandas()  # Arrow transfer — Row conversion is slow at 10^6 types
-        )
-        if len(vocab_pdf) > VOCAB_ENCODE_MAX:
+        vocab = _collect_vocab(types)
+        if vocab is None:
             # over-cutoff vocabulary: the dictionary itself is built
             # distributively and the packed-int shuffle survives
             # (build_dist module) instead of reverting to the string plan
@@ -1527,16 +1693,7 @@ class IndexBuilder:
 
             fused.unpersist()
             return build_encoded_dist(self, docs, n_docs, resume=resume)
-        types_list = vocab_pdf["type"].tolist()
-        type_counts = vocab_pdf["c"].to_numpy(dtype=np.int64)
-        tid_for_type, id2term, empty_tid = _vocab_id_maps(types_list)
-        id2term_bc = spark.sparkContext.broadcast(id2term)
-        # exact per-term token totals (the driver-side partition plan's
-        # input) fall out of the same collect
-        term_tokens = np.zeros(len(id2term), dtype=np.int64)
-        np.add.at(term_tokens, tid_for_type.astype(np.int64), type_counts)
-        if empty_tid is not None:
-            term_tokens[empty_tid] = 0  # excluded from the postings stream
+        id2term_bc = spark.sparkContext.broadcast(vocab.id2term)
         lap("vocab_collect")
 
         # -- stats: already computed by the fused tokenize pass (pseudo
@@ -1547,15 +1704,7 @@ class IndexBuilder:
         fresh_stats = not stats_done or not resume
         set_desc("phase:stats — fused-pass pseudo-row collect")
         if fresh_stats:
-            stats_pdf = (
-                fused.filter(F.col("position") < 0)
-                .select(
-                    "doc_id",
-                    F.col("doc_len").cast("long").alias("doc_len"),
-                    "l2_weight",
-                )
-                .toPandas()
-            )
+            stats_pdf = _stats_rows(fused)
         else:
             stats_pdf = (
                 self._read_stage("doc_stats")
@@ -1567,23 +1716,20 @@ class IndexBuilder:
         avgdl = (total_tokens / n_docs) if n_docs else 0.0
 
         ids = stats_pdf["doc_id"].to_numpy(dtype=np.int64)
-        arr_size = n_docs
-        if len(ids):
-            mn, mx = int(ids.min()), int(ids.max())
-            if mn < 0 or mx >= 2 * BROADCAST_WEIGHTS_MAX_DOCS:
-                # ids outside any broadcastable dense range: the per-row
-                # weight join path handles arbitrary ids
-                fused.unpersist()
-                return self._build(docs, resume=resume)
-            arr_size = max(n_docs, mx + 1)
-        dl_arr = np.zeros(arr_size, dtype=np.float64)
-        l2_arr = np.ones(arr_size, dtype=np.float64)
-        if len(ids):
-            dl_arr[ids] = stats_pdf["doc_len"].to_numpy(dtype=np.float64)
-            l2_arr[ids] = np.nan_to_num(
-                stats_pdf["l2_weight"].to_numpy(dtype=np.float64), nan=1.0
-            )
-        weights_bc = spark.sparkContext.broadcast((dl_arr, l2_arr))
+        arr_size = max(n_docs, int(ids.max()) + 1) if len(ids) else n_docs
+        weights = dense_doc_weights(
+            ids,
+            stats_pdf["doc_len"].to_numpy(dtype=np.float64),
+            stats_pdf["l2_weight"].to_numpy(dtype=np.float64),
+            0,
+            min(arr_size, 2 * BROADCAST_WEIGHTS_MAX_DOCS),
+        )
+        if weights is None:
+            # ids outside any broadcastable dense range: the per-row
+            # weight join path handles arbitrary ids
+            fused.unpersist()
+            return self._build(docs, resume=resume)
+        weights_bc = spark.sparkContext.broadcast(weights)
         lap("stats_collect")
 
         writer: threading.Thread | None = None
@@ -1595,15 +1741,9 @@ class IndexBuilder:
                     set_desc("phase:stats-write (background) — doc_stats + corpus_stats parquet")
                     # pandas -> JVM upload happens on THIS thread: it is part
                     # of the overlapped write, not the critical path
-                    stats_small_df = spark.createDataFrame(
-                        stats_pdf, schema=DOC_STATS_SMALL_SCHEMA
+                    self._write_stage(
+                        _doc_stats_frame(spark, docs, stats_pdf, meta_cols), "doc_stats"
                     )
-                    full = (
-                        docs.select("doc_id", *meta_cols)
-                        .join(stats_small_df, "doc_id", "left")
-                        .fillna({"doc_len": 0})
-                    )
-                    self._write_stage(full, "doc_stats")
                     corpus_df = spark.createDataFrame(
                         [(n_docs, total_tokens, float(avgdl))],
                         "n_docs bigint, total_tokens bigint, avgdl double",
@@ -1627,41 +1767,18 @@ class IndexBuilder:
             getattr(self, "_sp_build", self.n_partitions),
             -(-n_docs // DOCS_PER_POSTINGS_PARTITION),
         )
-        total_route_tokens = int(term_tokens.sum())
-        target_tokens = max(1, -(-total_route_tokens // width_floor))
-        base_part, ksplit, postings_partitions = _plan_term_routes(
-            term_tokens, target_tokens
-        )
+        plan = _route_plan(vocab.term_tokens, width_floor)
+        postings_partitions = plan[2]
         postings_cache = None
         packed_cache = None
         seg_kernel = None
         fused_segments_done = False
         if not self._stage_done("postings") or not resume:
             set_desc("phase:postings — planned packed-long shuffle + kernel + parquet write")
-            # bit budget for the single-long key; always fits under the
-            # encode-path cutoffs (21 + 23 + p ≤ 63), guarded anyway
             max_dl = int(stats_pdf["doc_len"].max()) if len(stats_pdf) else 0
-            t_bits = max(1, (len(id2term)).bit_length())
-            d_bits = max(1, int(arr_size).bit_length())
-            p_bits = max(1, int(max_dl + 1).bit_length())
-            pack_bits = (d_bits, p_bits) if t_bits + d_bits + p_bits <= 63 else None
-            enc = _encoded_routed_tokens(
-                spark,
-                types,
-                types_list,
-                tid_for_type,
-                empty_tid,
-                base_part,
-                ksplit,
-                _invert_partition_hash(postings_partitions),
-                pack_bits=pack_bits,
-            )
+            stream, pack_bits = _planned_token_stream(spark, types, vocab, plan, arr_size, max_dl)
             if pack_bits is not None:
-                sorted_packed = (
-                    enc.repartition(postings_partitions, F.col("_route"))
-                    .select("packed")
-                    .sortWithinPartitions("packed")
-                )
+                d_bits, p_bits = pack_bits
                 seg_dir = self._stage_target("segments")
                 fuse_segments = (
                     not self._iceberg_ok
@@ -1694,7 +1811,7 @@ class IndexBuilder:
                         avgdl, weights_bc, id2term_bc, d_bits, p_bits, seg_dir
                     )
                     self._write_stage(
-                        sorted_packed.mapInArrow(kernel, schema=POSTINGS_SCHEMA),
+                        stream.mapInArrow(kernel, schema=POSTINGS_SCHEMA),
                         "postings",
                     )
                     self._mark_stage("postings")
@@ -1707,7 +1824,7 @@ class IndexBuilder:
                     fused_segments_done = True
                     lap("postings_segments")
                 else:
-                    packed_cache = sorted_packed.persist()
+                    packed_cache = stream.persist()
                     kernel = _postings_kernel_packed(
                         avgdl, weights_bc, id2term_bc, d_bits, p_bits
                     )
@@ -1721,13 +1838,8 @@ class IndexBuilder:
                     self._mark_stage("postings")
                     lap("postings")
             else:
-                enriched = (
-                    enc.repartition(postings_partitions, F.col("_route"))
-                    .select("term_id", "doc_id", "position")
-                    .sortWithinPartitions("term_id", "doc_id", "position")
-                )
                 kernel = _postings_kernel(avgdl, weights_bc, id2term_bc)
-                postings_cache = enriched.mapInPandas(kernel, schema=POSTINGS_SCHEMA).persist()
+                postings_cache = stream.mapInPandas(kernel, schema=POSTINGS_SCHEMA).persist()
                 self._write_stage(postings_cache, "postings")
                 self._mark_stage("postings")
                 lap("postings")
@@ -1741,9 +1853,7 @@ class IndexBuilder:
             lap("stats_write_join")
 
         return self._finish(
-            t0=t0,
-            phases=phases,
-            lap=lap,
+            clock=clock,
             docs=docs,
             n_docs=n_docs,
             avgdl=avgdl,

@@ -57,8 +57,6 @@ queries).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -389,14 +387,8 @@ def build_encoded_dist(builder, docs: DataFrame, n_docs: int, resume: bool = Fal
 
     from . import build as B
 
-    t0 = time.time()
-    phases: dict[str, float] = {}
-    _last = [t0]
-
-    def lap(name: str) -> None:
-        now = time.time()
-        phases[name] = round(now - _last[0], 3)
-        _last[0] = now
+    clock = B.PhaseClock()
+    lap = clock.lap
 
     if resume:
         builder._load_manifest()
@@ -561,9 +553,7 @@ def build_encoded_dist(builder, docs: DataFrame, n_docs: int, resume: bool = Fal
         lap("stats_write_join")
 
     return builder._finish(
-        t0=t0,
-        phases=phases,
-        lap=lap,
+        clock=clock,
         docs=docs,
         n_docs=n_docs,
         avgdl=avgdl,

@@ -17,7 +17,7 @@ so no Python runs per block.  This is the Spark-native replacement for the
 reference's per-term binary records (engine/indexing/spimi.py:145-187), with
 varbyte compression the reference lacks (it writes fixed u32).
 
-Decode is the inverse ``mapInPandas`` — used by tests to prove the blob layer
+Decode is the inverse ``mapInArrow`` — used by tests to prove the blob layer
 is lossless, and by the WAND query path to materialize only surviving blocks.
 """
 
@@ -139,31 +139,37 @@ def encode_segments(postings_sorted: DataFrame) -> DataFrame:
     return cols.mapInArrow(_encode_partition, schema=SEGMENT_SCHEMA)
 
 
-def _decode_partition(iterator):
+def _decode_partition(batches):
+    """Segment rows -> their logical postings, one Arrow batch per input
+    batch: each blob decodes to flat (doc_ids, tfs, positions) arrays and
+    the positions column is a ListArray over tf offsets — no per-posting
+    Python objects."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     from searchengine_spark.indexing.codec import decode_block
 
-    for pdf in iterator:
-        terms, doc_ids, tfs, positions = [], [], [], []
-        for term, blob in zip(pdf["term"], pdf["postings_bin"]):
-            d, t, p = decode_block(bytes(blob))
-            off = 0
-            for i in range(d.size):
-                tf = int(t[i])
-                terms.append(term)
-                doc_ids.append(int(d[i]))
-                tfs.append(tf)
-                positions.append([int(x) for x in p[off : off + tf]])
-                off += tf
-        yield pd.DataFrame(
-            {"term": terms, "doc_id": doc_ids, "tf": tfs, "positions": positions}
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        decoded = [decode_block(b) for b in batch.column("postings_bin").to_pylist()]
+        doc_ids, tfs, positions = (np.concatenate(part).astype(np.int64) for part in zip(*decoded))
+        block_of = np.repeat(np.arange(len(decoded)), [d.size for d, _, _ in decoded])
+        offsets = np.zeros(tfs.size + 1, dtype=np.int64)
+        np.cumsum(tfs, out=offsets[1:])
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column("term").take(pa.array(block_of)),
+                pa.array(doc_ids),
+                pa.array(tfs),
+                pa.ListArray.from_arrays(pa.array(offsets), pa.array(positions)),
+            ],
+            names=DECODED_SCHEMA.fieldNames(),
         )
 
 
 def decode_segments(segments: DataFrame) -> DataFrame:
     """Inverse of :func:`encode_segments` (logical postings rows)."""
-    return segments.select("term", "postings_bin").mapInPandas(
+    return segments.select("term", "postings_bin").mapInArrow(
         _decode_partition, schema=DECODED_SCHEMA
     )
