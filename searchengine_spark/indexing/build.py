@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..text.spark_tokenize import tokenize
+from ..worker import engine_kernel
 from .logical import (
     BM25_B,
     BM25_K1,
@@ -139,6 +140,7 @@ def _postings_kernel(avgdl: float | None, weights_bc=None, id2term_bc=None):
             out["wdt_tfidf_norm"] = (1.0 + np.log(tf_f)) / l2_group
         return pd.DataFrame(out)
 
+    @engine_kernel
     def fn(iterator):
         import pandas as pd
 
@@ -531,6 +533,7 @@ def _postings_kernel_packed(
     rows (no weights, ``weights_bc`` unused); ``doc_base`` is added to the
     packed doc ids, so a streaming epoch packs its own 0-based ids."""
 
+    @engine_kernel
     def fn(batches):
         import numpy as np
 
@@ -591,6 +594,7 @@ def _partition_kernel(postings_of, seg_dir: str | None = None):
     the _SUCCESS marker is written only after the whole job returns
     (_finalize_side_segments)."""
 
+    @engine_kernel
     def fn(batches):
         postings = postings_of(batches)
         if postings is None:
@@ -624,6 +628,7 @@ def _segments_partition_kernel(postings_of):
     every blob of the partition from one codec.encode_blocks pass
     (segments.block_batch) — no per-block Python."""
 
+    @engine_kernel
     def fn(batches):
         from searchengine_spark.indexing.segments import block_batch
 

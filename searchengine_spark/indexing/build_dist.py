@@ -60,6 +60,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..worker import engine_kernel
 from .logical import BM25_B, BM25_K1
 
 # token rows carry (doc_id, position, type); stats pseudo-rows use
@@ -109,6 +110,7 @@ def _fused_tokenize_stats_kernel(text_col: str, id_col: str):
 
     inner = _types_kernel(text_col, id_col)
 
+    @engine_kernel
     def fn(iterator):
         import numpy as np
         import pandas as pd
@@ -205,6 +207,7 @@ def _fused_tokenize_group_kernel(text_col: str, id_col: str):
 
     inner = _types_kernel(text_col, id_col)
 
+    @engine_kernel
     def fn(iterator):
         import numpy as np
         import pandas as pd
@@ -288,6 +291,7 @@ def _dict_enum_kernel(tok_offsets: dict, target: int):
     every route partition holds a contiguous term range and parquet min/max
     pruning survives."""
 
+    @engine_kernel
     def fn(iterator):
         import numpy as np
         import pandas as pd
@@ -345,6 +349,7 @@ def _segments_kernel_dist(avgdl: float):
     weights recomputed with the same expression shape as the postings
     projection so block maxima match the postings values."""
 
+    @engine_kernel
     def fn(batches):
         import numpy as np
         import pyarrow as pa

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from ..worker import engine_kernel
+
 BLOCK_SIZE = 128
 
 SEGMENT_SCHEMA = T.StructType(
@@ -111,6 +113,7 @@ def term_runs(terms):
     return np.concatenate(([0], ends[:-1])), ree.values
 
 
+@engine_kernel
 def _encode_partition(batches):
     """Each Arrow batch is cut into blocks on its own: block boundaries
     restart at batch boundaries, so segments re-encoded by streaming
@@ -139,6 +142,7 @@ def encode_segments(postings_sorted: DataFrame) -> DataFrame:
     return cols.mapInArrow(_encode_partition, schema=SEGMENT_SCHEMA)
 
 
+@engine_kernel
 def _decode_partition(batches):
     """Segment rows -> their logical postings, one Arrow batch per input
     batch: each blob decodes to flat (doc_ids, tfs, positions) arrays and

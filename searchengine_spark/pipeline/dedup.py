@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..worker import engine_kernel
+
 
 def _words(text_col):
     return F.filter(F.split(F.lower(text_col), " "), lambda x: F.length(x) > 0)
@@ -70,6 +72,7 @@ def shingle_table(docs: DataFrame) -> DataFrame:
     inner loop is tiny C-string ops, far cheaper than interpreted
     higher-order expressions over arrays."""
 
+    @engine_kernel
     def fn(iterator):
         import pandas as pd
 
@@ -116,6 +119,7 @@ def _minhash_wide(docs: DataFrame, n_hashes: int) -> DataFrame:
     downstream band join is the first exchange); md5 hex strings and the
     lexicographic min are identical to the expression/SQL twin."""
 
+    @engine_kernel
     def fn(iterator):
         import hashlib
 
@@ -255,6 +259,7 @@ def simhash_kernel(docs: DataFrame, bits: int = 32) -> DataFrame:
     if bits > 62:
         raise ValueError("simhash kernel supports at most 62 bits (long signature)")
 
+    @engine_kernel
     def fn(iterator):
         import hashlib
         from collections import Counter
@@ -473,6 +478,7 @@ def near_dup_from_signed(
     pre_cut = threshold - 1e-4
     chunk = 1 << 16
 
+    @engine_kernel
     def bucket_pairs(pdf):
         import numpy as np
         import pandas as pd

@@ -42,6 +42,8 @@ from functools import lru_cache
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..worker import engine_kernel
+
 TOP_K = 32  # trigrams kept per document
 PROFILE_SIZE = 64  # trigrams kept per language profile; also the OOP penalty
 
@@ -163,6 +165,7 @@ def lang_id_ngram(
     profiles = language_profiles(profile_size)
     langs = sorted(profiles)
 
+    @engine_kernel
     def fn(iterator):
         import pandas as pd
 

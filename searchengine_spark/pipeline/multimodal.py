@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..worker import engine_kernel
+
 META_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -93,6 +95,7 @@ def attach_media_payload(docs: DataFrame) -> DataFrame:
     Deterministic in doc_id + text, so the DuckDB twin reproduces the
     expected metadata arithmetically while the Spark side PARSES the bytes."""
 
+    @engine_kernel
     def fn(iterator):
         import pandas as pd
 
@@ -157,6 +160,7 @@ def decode_media(payload: bytes) -> dict | None:
     return None
 
 
+@engine_kernel
 def _extract_partition(iterator):
     import hashlib
 
@@ -196,6 +200,7 @@ def decode_meta(multimodal: DataFrame) -> DataFrame:
     payloads keep the deterministic byte-length fake with format='unknown'.
     One narrow Arrow pass, zero shuffle."""
 
+    @engine_kernel
     def fn(iterator):
         import pandas as pd
 

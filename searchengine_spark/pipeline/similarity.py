@@ -17,6 +17,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..worker import engine_kernel
+
 
 def _spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition up to the session's default parallelism when
@@ -169,6 +171,7 @@ def hyperplane_signatures(
     ]
     pow2 = [2**p for p in range(n_planes)]
 
+    @engine_kernel
     def fn(iterator):
         import numpy as np
         import pandas as pd

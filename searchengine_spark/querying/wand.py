@@ -23,7 +23,7 @@ collects of numeric rows — never postings blobs):
      numbers per block), choose the smallest ub cutoff whose blocks cover
      >= oversample * k postings;
   2. theta: decode blocks with ub >= cutoff distributedly (vectorized numpy
-     kernel in mapInPandas), exact-score those docs with the standard ranked
+     kernel in mapInArrow), exact-score those docs with the standard ranked
      plan restricted by a doc_id semi-join, and collect just the top-k
      (doc_id, score) rows — theta = the k-th score;
   3. prune: keep blocks with ub >= theta (minus one quantization step when
@@ -55,21 +55,26 @@ from pyspark.sql import types as T
 from ..indexing.build import bm25_wqt, tfidf_wqt
 from ..indexing.index import SparkIndex
 from ..text import preprocess_ranked_query
+from ..worker import engine_kernel
 
 _DOCIDS_SCHEMA = T.StructType([T.StructField("doc_id", T.LongType())])
 
 
-def _decode_doc_ids(iterator):
-    import pandas as pd
+@engine_kernel
+def _decode_doc_ids(batches):
+    """postings_bin blobs -> one doc_id batch per input batch."""
+    import numpy as np
+    import pyarrow as pa
 
     from searchengine_spark.indexing.codec import decode_block
 
-    for pdf in iterator:
-        ids: list[int] = []
-        for blob in pdf["postings_bin"]:
-            d, _t, _p = decode_block(bytes(blob))
-            ids.extend(int(x) for x in d)
-        yield pd.DataFrame({"doc_id": ids})
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        ids = [decode_block(blob)[0] for blob in batch.column("postings_bin").to_pylist()]
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(np.concatenate(ids).astype(np.int64))], names=["doc_id"]
+        )
 
 
 def _exact_scores(
@@ -259,7 +264,7 @@ def ranked_search_wand(
         # expression, so the cutoff comparison is exact.
         seed_ids = (
             blocks.filter(F.col("ub") >= cutoff).select("postings_bin")
-            .mapInPandas(_decode_doc_ids, schema=_DOCIDS_SCHEMA)
+            .mapInArrow(_decode_doc_ids, schema=_DOCIDS_SCHEMA)
         )
         seed_top = (
             _exact_scores(index, weights, wdt_col, seed_ids)
@@ -373,7 +378,7 @@ def ranked_search_wand(
 
     # prune on ub, decode survivors, exact-score, top-k (lazy)
     survivors = blocks.filter(F.col("ub") >= theta_eff)
-    surv_ids = survivors.select("postings_bin").mapInPandas(_decode_doc_ids, schema=_DOCIDS_SCHEMA)
+    surv_ids = survivors.select("postings_bin").mapInArrow(_decode_doc_ids, schema=_DOCIDS_SCHEMA)
     scored = _exact_scores(index, weights, wdt_col, surv_ids)
     fill_stats(survivors)
     return finalize(scored)

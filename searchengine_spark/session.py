@@ -92,7 +92,11 @@ def get_spark(
 def ensure_package_on_workers(spark: SparkSession) -> None:
     """Ship this package to Python workers (idempotent per session).  Needed
     whenever the session wasn't created by get_spark (e.g. the driver's
-    harness) — equivalent to spark-submit --py-files."""
+    harness) — equivalent to spark-submit --py-files.  On the worker side,
+    every kernel the engine hands to Spark is wrapped by
+    ``worker.engine_kernel``, which drops the worker's zip import finders
+    when the kernel ends, so the next task does not re-read this archive's
+    (and pyspark's) zip directories."""
     if getattr(spark, "_searchengine_pkg_added", False):
         return
     try:

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 from ..indexing.build import assign_doc_ids
+from ..worker import engine_kernel
 
 _TEI_NS = {"tei": "http://www.tei-c.org/ns/1.0"}
 # XPath title priority list, in reference order (xmldocument.py:33-38)
@@ -63,6 +64,7 @@ def read_xml_corpus(spark: SparkSession, path: str) -> DataFrame:
         F.input_file_name().alias("path"), F.col("value").alias("xml")
     )
 
+    @engine_kernel
     def parse(iterator):
         import xml.etree.ElementTree as ET
 

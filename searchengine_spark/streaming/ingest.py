@@ -191,9 +191,10 @@ class StreamingIndexer:
     # -- micro-batch sink --------------------------------------------------
     def _epoch_width(self, n_docs: int = 0) -> int:
         """Partitions of an epoch's passes: one wave over the cluster's
-        cores (at most n_partitions) — a small epoch's Python stages are
-        dominated by per-task fixed cost, so a second wave of tiny tasks
-        only adds latency — or more once the epoch fills
+        cores (at most n_partitions) — a small epoch gives each task little
+        work, while every task still pays its scheduling, its Arrow round
+        trip through a Python worker and its own shuffle files, so a second
+        wave of tiny tasks only adds latency — or more once the epoch fills
         DOCS_PER_POSTINGS_PARTITION-sized partitions."""
         one_wave = min(self.n_partitions, self.spark.sparkContext.defaultParallelism)
         return max(one_wave, -(-n_docs // B.DOCS_PER_POSTINGS_PARTITION))

@@ -25,6 +25,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
+from ..worker import engine_kernel
+
 PipelineFn = Callable[[DataFrame, str, str], DataFrame]
 
 _PIPELINES: dict[str, PipelineFn] = {}
@@ -72,6 +74,7 @@ def make_lemma_kernel_pipeline(
     per-executor lemma cache (Python cost O(vocab), not O(tokens))."""
 
     def pipeline(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+        @engine_kernel
         def fn(iterator):
             import pandas as pd
 

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
+from ..worker import engine_kernel
 from .porter2 import stem
 
 
@@ -40,6 +41,7 @@ def _clean_expr(col: Column) -> Column:
 
 
 @F.pandas_udf(StringType())
+@engine_kernel
 def _stem_udf(tokens: pd.Series) -> pd.Series:
     return tokens.map(stem)
 
@@ -77,6 +79,7 @@ def _types_kernel(text_col: str, id_col: str):
     grouped); every consumer is order-independent (aggregations, the range
     shuffle, sorted gates)."""
 
+    @engine_kernel
     def fn(iterator):
         import numpy as np
         import pandas as pd
