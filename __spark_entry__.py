@@ -57,8 +57,9 @@ _PINDEX_CACHE: dict = {}
 
 def _persisted_index(spark: SparkSession, sf_dir: str):
     """Full production build path — assign nothing (documents carry doc_id),
-    run build_index (tokenize -> range shuffle -> _postings_kernel ->
-    varbyte segments -> parquet artifacts), then read it back as a
+    run build_index (the encoded path: fused tokenize -> driver dictionary
+    -> planned packed-key shuffle -> postings + varbyte segments kernel ->
+    parquet artifacts), then read it back as a
     SparkIndex.  Gates built on this verify the persisted pipeline against
     the DuckDB oracle, not just the in-session engine.
 
@@ -332,7 +333,7 @@ def q_ranked_bm25_wand(spark, sf_dir):
 
 
 def q_ranked_bm25_persisted(spark, sf_dir):
-    # the production build path (_postings_kernel + parquet read-back)
+    # the production build path (encoded build + parquet read-back)
     # under the same DuckDB oracle as the in-session ranked_bm25 gate
     return ranked_search(_persisted_index(spark, sf_dir), RANKED_Q, mode="bm25", k=10, round_scores=4)
 

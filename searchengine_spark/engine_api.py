@@ -38,7 +38,7 @@ class DocumentsEngine:
         postings_all = (
             self.tokens.repartitionByRange(n_parts, "term", "doc_id")
             .sortWithinPartitions("term", "doc_id", "position")
-            .mapInPandas(_postings_kernel(None), schema=RAW_POSTINGS_SCHEMA)
+            .mapInPandas(_postings_kernel, schema=RAW_POSTINGS_SCHEMA)
         )
         self.doc_stats = doc_stats_table(postings_all).persist()
         row = corpus_stats_table(self.doc_stats).collect()[0]

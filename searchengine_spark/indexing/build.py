@@ -1,13 +1,23 @@
 """Distributed inverted-index build (SURVEY.md §2 B1-B7, §7 Phase 2).
 
 Replaces the reference's SPIMI block/merge machinery
-(reference: engine/indexing/spimi.py:56-298) with Spark's shuffle: the
-repartition-by-range + sort-within-partitions *is* the blocked sort + k-way
-merge, with spill handled by the engine.  Hot-term skew is defused by range
-partitioning on the composite key (term, doc_id) — a stopword's postings
-spread across many partitions instead of hot-spotting one (the same effect as
-salting, chosen because it additionally yields globally term-sorted output
-for parquet min/max pruning).
+(reference: engine/indexing/spimi.py:56-298) with Spark's shuffle: one
+planned route shuffle + sort-within-partitions *is* the blocked sort + k-way
+merge, with spill handled by the engine.  The partition plan comes from
+exact per-term token totals: each partition holds a contiguous term range
+(globally term-sorted output for parquet min/max pruning), and a hot term
+bigger than one partition is striped across several by doc_id % k — a
+stopword's postings spread instead of hot-spotting one partition (the same
+effect as salting).
+
+Two postings producers; IndexBuilder.build picks one:
+  _build_encoded       driver dictionary, broadcast doc weights, and one
+                       packed int64 key per token in the shuffle — a
+                       non-empty corpus of at most BROADCAST_WEIGHTS_MAX_DOCS
+                       docs whose vocabulary, doc ids and packed key fit;
+  build_encoded_dist   (build_dist module) distributed dictionary, doc_len
+                       on each posting row, no doc-id range assumed —
+                       everything else, the empty corpus included.
 
 Artifacts (all parquet, under one index directory):
   postings/      term, doc_id, tf, positions, wdt_bm25, wdt_tfidf_norm
@@ -39,15 +49,8 @@ from typing import Any, NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..text.spark_tokenize import tokenize
 from ..worker import engine_kernel
-from .logical import (
-    BM25_B,
-    BM25_K1,
-    corpus_stats_table,
-    doc_stats_table,
-    term_stats_table,
-)
+from .logical import BM25_B, BM25_K1, term_stats_table
 
 META_COLS = ("conv_id", "turn_idx", "role", "tool")
 
@@ -59,57 +62,23 @@ POSTINGS_SCHEMA = (
 RAW_POSTINGS_SCHEMA = "term string, doc_id long, tf long, positions array<long>"
 
 
-def _postings_kernel(avgdl: float | None, weights_bc=None, id2term_bc=None):
-    """Vectorized grouping kernel: input partitions sorted by
-    (term, doc_id, position); output one row per (term, doc_id) with tf,
-    the position list, and the precomputed K3/K4 document weights
-    (rankedquery.py:22,24 — wdt_bm25 with k1=1.2, b=0.75 so 2.2 = k1+1 and
-    0.25 = 1-b).  All numpy.
+@engine_kernel
+def _postings_kernel(iterator):
+    """mapInPandas raw postings kernel: input partitions sorted by
+    (term, doc_id, position); output one RAW_POSTINGS_SCHEMA row per
+    (term, doc_id) with tf and the position list.  All numpy.  The
+    in-session engine (engine_api.DocumentsEngine) groups its token stream
+    with it.
 
-    ``id2term_bc``: optional ``sc.broadcast`` of a numpy object array mapping
-    dense term_ids to term strings (dictionary-encoded build path).  When
-    set, the input carries ``term_id:int32`` instead of ``term:string`` —
-    the range shuffle + external sort then move fixed 8-byte int slots
-    instead of variable-length strings (and the group-boundary comparison
-    below is a vectorized int compare instead of per-element PyUnicode
-    richcompare).  term_ids are assigned in sorted-term order, so sorting
-    by term_id IS sorting by term and every downstream layout property
-    (parquet min/max pruning, segment block order) is preserved.
-
-    ``weights_bc``: optional ``sc.broadcast`` of dense ``(doc_len, l2)``
-    float64 arrays indexed by doc_id (doc_ids are dense by construction).
-    When set, the kernel looks doc weights up locally instead of reading
-    ``doc_len``/``l2_weight`` columns off its input rows — which means the
-    range shuffle feeding this kernel carries 16 fewer bytes per token
-    occurrence.  That matters because the shuffle+sort is the build's
-    dominant data movement AND is memory-bandwidth-bound at high
-    parallelism (tools/host_capacity_probe.py --bw: this host streams at
-    ~0.43 scaling efficiency 8->32 vs 0.68-0.71 for compute), so shuffled
-    bytes convert directly into scaling headroom.  Only offered below
-    BROADCAST_WEIGHTS_MAX_DOCS; beyond that the per-row carry (pre-join)
-    is the correct plan and ``weights_bc`` stays None.
-
-    ``avgdl=None`` yields the RAW form (term, doc_id, tf, positions) with
-    no weight columns and no doc_len/l2 inputs — the streaming delta shape,
-    where weights are deferred to compaction because avgdl drifts.
-
-    Memory: Arrow batches are processed as they STREAM — each batch emits
+    Memory: pandas batches are processed as they STREAM — each batch emits
     every complete (term, doc_id) group and carries only the trailing
     incomplete group into the next batch, so peak per-partition memory is
-    O(batch + largest single group), not O(partition) (a whole-partition
-    concat would OOM on large or skewed partitions at 10^12-posting
-    scale)."""
-
-    key_col = "term" if id2term_bc is None else "term_id"
+    O(batch + largest single group), not O(partition)."""
+    import numpy as np
+    import pandas as pd
 
     def process(pdf):
-        import numpy as np
-        import pandas as pd
-
-        if id2term_bc is None:
-            term = pdf["term"].to_numpy()
-        else:
-            term = pdf["term_id"].to_numpy(dtype=np.int32)
+        term = pdf["term"].to_numpy()
         doc = pdf["doc_id"].to_numpy(dtype=np.int64)
         pos = pdf["position"].to_numpy(dtype=np.int64)
         n = len(pdf)
@@ -117,53 +86,33 @@ def _postings_kernel(avgdl: float | None, weights_bc=None, id2term_bc=None):
         change[0] = True
         change[1:] = (term[1:] != term[:-1]) | (doc[1:] != doc[:-1])
         starts = np.flatnonzero(change)
-        tf = np.diff(np.append(starts, n)).astype(np.int64)
-        out = {
-            "term": term[starts] if id2term_bc is None else id2term_bc.value[term[starts]],
-            "doc_id": doc[starts],
-            "tf": tf,
-            "positions": np.split(pos, starts[1:]),
-        }
-        if avgdl is not None:
-            if weights_bc is not None:
-                dl_arr, l2_arr = weights_bc.value
-                group_docs = doc[starts]
-                dl = dl_arr[group_docs]
-                l2_group = l2_arr[group_docs]
-            else:
-                dl = pdf["doc_len"].to_numpy(dtype=np.float64)[starts]
-                l2_group = pdf["l2_weight"].to_numpy(dtype=np.float64)[starts]
-            tf_f = tf.astype(np.float64)
-            out["wdt_bm25"] = ((BM25_K1 + 1.0) * tf_f) / (
-                BM25_K1 * ((1.0 - BM25_B) + BM25_B * (dl / avgdl)) + tf_f
-            )
-            out["wdt_tfidf_norm"] = (1.0 + np.log(tf_f)) / l2_group
-        return pd.DataFrame(out)
+        return pd.DataFrame(
+            {
+                "term": term[starts],
+                "doc_id": doc[starts],
+                "tf": np.diff(np.append(starts, n)).astype(np.int64),
+                "positions": np.split(pos, starts[1:]),
+            }
+        )
 
-    @engine_kernel
-    def fn(iterator):
-        import pandas as pd
-
-        carry = None
-        for pdf in iterator:
-            if pdf.empty:
-                continue
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            # the last (term, doc_id) group may continue in the next batch:
-            # hold it back
-            last_term = pdf[key_col].iloc[-1]
-            last_doc = pdf["doc_id"].iloc[-1]
-            tail_mask = (pdf[key_col] == last_term) & (pdf["doc_id"] == last_doc)
-            split_at = len(pdf) - int(tail_mask.iloc[::-1].cummin().sum())
-            carry = pdf.iloc[split_at:].reset_index(drop=True)
-            if split_at:
-                yield process(pdf.iloc[:split_at])
-        if carry is not None and len(carry):
-            yield process(carry)
-
-    return fn
+    carry = None
+    for pdf in iterator:
+        if pdf.empty:
+            continue
+        if carry is not None:
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+            carry = None
+        # the last (term, doc_id) group may continue in the next batch:
+        # hold it back
+        last_term = pdf["term"].iloc[-1]
+        last_doc = pdf["doc_id"].iloc[-1]
+        tail_mask = (pdf["term"] == last_term) & (pdf["doc_id"] == last_doc)
+        split_at = len(pdf) - int(tail_mask.iloc[::-1].cummin().sum())
+        carry = pdf.iloc[split_at:].reset_index(drop=True)
+        if split_at:
+            yield process(pdf.iloc[:split_at])
+    if carry is not None and len(carry):
+        yield process(carry)
 
 
 class PhaseClock:
@@ -397,24 +346,19 @@ def term_stats_with_block_meta(segments_df: DataFrame, postings_df: DataFrame | 
 
 
 # --- dictionary-encoded build path -------------------------------------------
-# The build's dominant data movement is the (term, doc_id, position) range
-# shuffle + external sort, and shuffle-heavy stages on wide executors are
-# DRAM-bandwidth-bound (BENCH.md: this host streams at ~0.43 scaling
-# efficiency 8->32 vs ~0.7 for compute).  Below VOCAB_ENCODE_MAX distinct
-# types, the build therefore collects the type vocabulary ONCE, stems it
-# driver-side (porter2 over the vocab, O(|vocab|) like the UDF path), assigns
-# dense int32 term_ids in SORTED-TERM order, and shuffles
-# (term_id:int, doc_id:long, position:int) rows — fixed 8-byte sort slots
-# instead of variable-length strings, int sort-key comparisons instead of
-# string prefix comparisons, and NO stem-dictionary subquery (distinct +
-# Python UDF + broadcast exchange) re-executed per downstream action.
-# Because ids follow sorted-term order, range-partitioning by term_id is
-# range-partitioning by term: parquet min/max pruning and segment block
-# order are unchanged.  Above the cutoff (or above BROADCAST_WEIGHTS_MAX_DOCS)
-# the string-shuffle path below remains the plan — at 10^12-turn scale the
-# dictionary itself is built distributively (sorted ids via a vocab-sized
-# shuffle) and doc weights arrive by bucketed join, which is exactly what
-# the fallback path expresses.
+# The build's dominant data movement is the token shuffle + external sort,
+# and shuffle-heavy stages on wide executors are DRAM-bandwidth-bound
+# (BENCH.md: this host streams at ~0.43 scaling efficiency 8->32 vs ~0.7 for
+# compute).  Below VOCAB_ENCODE_MAX distinct types, the build therefore
+# collects the type vocabulary ONCE, stems it driver-side (porter2 over the
+# vocab), assigns dense int32 term_ids in SORTED-TERM order, and shuffles one
+# packed int64 (term_id | doc_id | position) per token — a fixed 8-byte sort
+# key instead of variable-length strings, and no stem-dictionary subquery
+# re-executed per downstream action.  Because ids follow sorted-term order,
+# sorting by the packed key is sorting by (term, doc_id, position): parquet
+# min/max pruning and segment block order follow.  Above the cutoff the
+# dictionary itself is built distributively (build_dist module: sorted ids
+# via a vocab-sized shuffle, doc_len riding each posting row).
 VOCAB_ENCODE_MAX = 1_500_000
 
 DOC_STATS_SMALL_SCHEMA = "doc_id long, doc_len long, l2_weight double"
@@ -820,11 +764,11 @@ def _encoded_routed_tokens(
     base_part,
     ksplit,
     vmap,
-    pack_bits: tuple[int, int] | None = None,
+    pack_bits: tuple[int, int],
 ) -> DataFrame:
-    """(doc_id, position, type) -> (term_id, doc_id, position, _route)
-    entirely JVM-side: a broadcast hash join against the (type -> term_id,
-    base, ksplit) dictionary plus a tiny (part -> _route) join — whole-stage
+    """(doc_id, position, type) -> (packed, _route) entirely JVM-side: a
+    broadcast hash join against the (type -> term_id, base, ksplit)
+    dictionary plus a tiny (part -> _route) join — whole-stage
     codegen end to end, no Python on the map side of the build's dominant
     shuffle (an Arrow-kernel variant of this encode measured ~25 s/900k
     turns of extra map-side CPU at width 2: the cache scan left and
@@ -857,8 +801,6 @@ def _encoded_routed_tokens(
         )
         .join(F.broadcast(route_df), "part")
     )
-    if pack_bits is None:
-        return routed.select("term_id", "doc_id", "position", "_route")
     # single-long key: term_id << (d+p) | doc_id << p | position — the
     # shuffle then carries 2 fields and the sort compares one int64
     # (see _postings_kernel_packed)
@@ -954,21 +896,25 @@ def _route_plan(term_tokens, width_floor: int):
     return _plan_term_routes(term_tokens, max(1, -(-total // width_floor)))
 
 
-def _planned_token_stream(
-    spark: SparkSession, types: DataFrame, vocab: EncodedVocab, plan, n_doc_slots: int, max_dl: int
-):
-    """The encoded path's ONE token shuffle: routed through the driver's
-    partition plan (_route_plan — no range-sampling job) and sorted within
-    partitions.  Doc ids must lie in [0, n_doc_slots).  Returns (stream,
-    pack_bits): a single ``packed`` long column (term_id | doc_id |
-    position, see _packed_postings) with pack_bits = (d_bits, p_bits) when
-    the key fits 63 bits — always under the encode-path cutoffs (21 + 23 +
-    p), guarded anyway — else (term_id, doc_id, position) rows and None."""
-    base_part, ksplit, n_parts = plan
-    t_bits = max(1, len(vocab.id2term).bit_length())
+def _pack_bits(n_terms: int, n_doc_slots: int, max_dl: int) -> tuple[int, int] | None:
+    """(d_bits, p_bits) of the packed token key (see _packed_postings) for
+    a dictionary of ``n_terms``, doc ids in [0, n_doc_slots) and positions
+    up to ``max_dl``, or None when term_id | doc_id | position exceeds 63
+    bits.  Under the encode cutoffs the term and doc ids take up to 21 + 23
+    bits, which leaves 19 for positions: a long enough doc does not fit."""
+    t_bits = max(1, int(n_terms).bit_length())
     d_bits = max(1, int(n_doc_slots).bit_length())
     p_bits = max(1, int(max_dl + 1).bit_length())
-    pack_bits = (d_bits, p_bits) if t_bits + d_bits + p_bits <= 63 else None
+    return (d_bits, p_bits) if t_bits + d_bits + p_bits <= 63 else None
+
+
+def _planned_token_stream(
+    spark: SparkSession, types: DataFrame, vocab: EncodedVocab, plan, pack_bits: tuple[int, int]
+) -> DataFrame:
+    """The encoded path's ONE token shuffle: a single ``packed`` long column
+    (_pack_bits layout) routed through the driver's partition plan
+    (_route_plan — no range-sampling job) and sorted within partitions."""
+    base_part, ksplit, n_parts = plan
     enc = _encoded_routed_tokens(
         spark,
         types,
@@ -980,11 +926,7 @@ def _planned_token_stream(
         _invert_partition_hash(n_parts),
         pack_bits=pack_bits,
     )
-    routed = enc.repartition(n_parts, F.col("_route"))
-    if pack_bits is not None:
-        return routed.select("packed").sortWithinPartitions("packed"), pack_bits
-    key = ("term_id", "doc_id", "position")
-    return routed.select(*key).sortWithinPartitions(*key), None
+    return enc.repartition(n_parts, F.col("_route")).select("packed").sortWithinPartitions("packed")
 
 
 def _doc_stats_frame(spark: SparkSession, docs: DataFrame, stats_pdf, meta_cols) -> DataFrame:
@@ -1000,8 +942,9 @@ def _doc_stats_frame(spark: SparkSession, docs: DataFrame, stats_pdf, meta_cols)
 
 BROADCAST_WEIGHTS_MAX_DOCS = 4_000_000  # ~100 MB of (doc_id, doc_len, l2)
 # One postings reduce partition ≈ this many docs (~2M token rows, a
-# ~100-200 MB sorted working set).  The range-shuffle partition count is
-# max(session shuffle partitions, ceil(n_docs / this)) — see _build.
+# ~100-200 MB sorted working set).  Both producers plan their postings
+# shuffle for about max(session shuffle partitions, ceil(n_docs / this))
+# partitions.
 DOCS_PER_POSTINGS_PARTITION = 60_000
 
 
@@ -1011,7 +954,8 @@ def dense_doc_weights(ids, doc_len, l2_weight, lo: int, size: int):
     Slots of absent ids hold (0, 1).  Returns ``None`` when an id falls
     outside the range: without this guard a negative slot would silently
     index from the array end and produce wrong BM25/tf-idf weights, so the
-    caller takes the id-agnostic per-row weight join instead."""
+    caller takes an id-agnostic plan instead (build_encoded_dist for a bulk
+    build, the per-row weight join for a compaction)."""
     import numpy as np
 
     slots = np.asarray(ids, dtype=np.int64) - lo
@@ -1026,76 +970,6 @@ def dense_doc_weights(ids, doc_len, l2_weight, lo: int, size: int):
     return dl, l2
 
 
-def doc_weight_arrays(doc_stats: DataFrame, n_docs: int):
-    """Dense (doc_len, l2_weight) float64 arrays indexed by doc_id, for the
-    kernel-side broadcast lookup (see _postings_kernel weights_bc).  doc_ids
-    are dense 0..n-1 by construction (assign_doc_ids), so plain array
-    indexing replaces the enrichment join.  16 bytes/doc: 64 MB at the
-    4M-doc cutoff, collected once from the already-cached doc_stats.
-
-    Returns ``None`` when the density contract does not hold (ids outside
-    [0, n_docs) — e.g. a filtered/sparse-id corpus fed straight to
-    IndexBuilder.build without re-running assign_doc_ids): the caller then
-    falls back to the per-row enrichment join, which is id-agnostic."""
-    import numpy as np
-
-    pdf = doc_stats.select("doc_id", "doc_len", "l2_weight").toPandas()
-    return dense_doc_weights(
-        pdf["doc_id"].to_numpy(dtype=np.int64),
-        pdf["doc_len"].to_numpy(dtype=np.float64),
-        pdf["l2_weight"].to_numpy(dtype=np.float64),
-        0,
-        n_docs,
-    )
-
-
-def enriched_tokens(
-    tokens: DataFrame,
-    doc_stats: DataFrame,
-    n_docs: int,
-    n_partitions: int,
-    carry_weights: bool | None = None,
-) -> DataFrame:
-    """Token stream range-partitioned and sorted for the postings kernel —
-    the build's dominant data movement.
-
-    Below BROADCAST_WEIGHTS_MAX_DOCS the stream carries ONLY
-    (term, doc_id, position): the per-doc weight inputs reach the kernel
-    via a broadcast array (doc_weight_arrays), so the range shuffle +
-    external sort move 16 fewer bytes per token occurrence and no join
-    appears in the plan at all.  The shuffle/sort is memory-BANDWIDTH-bound
-    at high parallelism (tools/host_capacity_probe.py --bw: this host
-    streams at ~0.43 scaling efficiency 8->32 vs 0.68-0.71 for pure
-    compute), so shuffled bytes — not cycles — are the scaling bottleneck.
-
-    Above the cutoff the weights are joined on per-row: doc_id-bucketed
-    sort-merge is the intended plan at 10^12 scale (the optimizer sizes
-    the FULL doc_stats frame, so no broadcast would apply there anyway)
-    and the kernel reads doc_len/l2_weight off its input columns.
-
-    Next bytes-lever at 10^12 turns (not yet needed at sandbox scale):
-    dictionary-encode ``term`` to an int id before this shuffle (the stem
-    dictionary the build already broadcasts is the natural id space) so the
-    range shuffle moves 16-byte rows instead of repeated strings —
-    shuffle-heavy stages on wide executors are DRAM-bandwidth-bound
-    (BENCH.md), so bytes, not cycles, are the scaling currency.
-
-    ``carry_weights`` overrides the size-based default: True forces the
-    per-row join (used when the broadcast-array path declined — sparse
-    doc_ids), False forces the bare stream."""
-    if carry_weights is None:
-        carry_weights = n_docs > BROADCAST_WEIGHTS_MAX_DOCS
-    stream = tokens.filter(F.col("term") != "")
-    if carry_weights:
-        stream = stream.join(
-            doc_stats.select("doc_id", "doc_len", "l2_weight"), "doc_id"
-        )
-    return (
-        stream.repartitionByRange(n_partitions, "term", "doc_id")
-        .sortWithinPartitions("term", "doc_id", "position")
-    )
-
-
 def prepare_transcripts(df: DataFrame) -> DataFrame:
     """Transcript table (input_hint schema) -> docs: one turn = one document;
     title = conv_id:turn_idx (SURVEY.md §1.3)."""
@@ -1104,10 +978,6 @@ def prepare_transcripts(df: DataFrame) -> DataFrame:
     out._docid_cache = docs._docid_cache
     out._n_docs = docs._n_docs
     return out
-
-
-def _write(df: DataFrame, path: str, sort_partition: bool = False) -> None:
-    df.write.mode("overwrite").parquet(path)
 
 
 def _partition_lineage(path: str) -> list[dict]:
@@ -1258,12 +1128,15 @@ class IndexBuilder:
         as ``_n_docs``; without the hint one narrow count() pays for both
         the shuffle sizing and the encoded-path eligibility decision.
 
-        Path selection: corpora ≤ BROADCAST_WEIGHTS_MAX_DOCS take the
-        dictionary-encoded path (_build_encoded — int term_id shuffle,
-        zero-shuffle doc stats, one fused stats collect); larger corpora or
-        vocabularies beyond VOCAB_ENCODE_MAX take the string-shuffle path
-        (_build) whose per-row weight join and distributed stem dictionary
-        are the right plan at that scale."""
+        Path selection: a non-empty corpus of at most
+        BROADCAST_WEIGHTS_MAX_DOCS docs takes the dictionary-encoded path
+        (_build_encoded — driver dictionary, broadcast doc weights, packed
+        int64 shuffle), which itself hands over to build_encoded_dist when
+        the vocabulary exceeds VOCAB_ENCODE_MAX, a doc id falls outside the
+        dense broadcast range, or the packed key would exceed 63 bits.
+        Everything else — the empty corpus and corpora over the doc cutoff —
+        takes build_encoded_dist (build_dist module), whose distributed
+        dictionary and per-row doc_len assume no size or id range."""
         n_docs_hint = getattr(docs, "_n_docs", None)
         if n_docs_hint is None:
             n_docs_hint = docs.count()
@@ -1277,178 +1150,11 @@ class IndexBuilder:
             with pinned_build_conf(self.spark):
                 if 0 < n_docs_hint <= BROADCAST_WEIGHTS_MAX_DOCS:
                     return self._build_encoded(docs, int(n_docs_hint), resume=resume)
-                if n_docs_hint > BROADCAST_WEIGHTS_MAX_DOCS:
-                    # over-cutoff corpora keep the packed-int shuffle via the
-                    # fully distributed dictionary (build_dist module)
-                    from .build_dist import build_encoded_dist
+                from .build_dist import build_encoded_dist
 
-                    return build_encoded_dist(self, docs, int(n_docs_hint), resume=resume)
-                return self._build(docs, resume=resume)
+                return build_encoded_dist(self, docs, int(n_docs_hint), resume=resume)
         finally:
             self.spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-
-    def _build(self, docs: DataFrame, resume: bool = False) -> dict:
-        clock = PhaseClock()
-        lap = clock.lap
-
-        if resume:
-            self._load_manifest()
-
-        spark = self.spark
-        out = self.out_dir
-        meta_cols = [c for c in ("title", *META_COLS) if c in docs.columns]
-        # phase labels surface in the Spark UI / REST API so per-stage
-        # metrics (tools/stage_profile.py) attribute cleanly; job
-        # descriptions are thread-local, so the background stats writer
-        # labels its own jobs separately
-        set_desc = spark.sparkContext.setJobDescription
-
-        # persisted: docs feeds two consumers (the tokenize type stream and
-        # the doc_stats meta projection); when it comes from assign_doc_ids
-        # each recompute would re-scan the ranged cache (measured ~20%
-        # slower end-to-end than caching the numbered frame once, when the
-        # numbering was still a Python pass).
-        docs = docs.persist()  # lazily materialized by the first stage
-
-        # tokens including empty terms (doc_length/L_d accounting,
-        # spimi.py:74-93).  The post-cleaning type stream is cached
-        # (persist_types): the stem-dictionary subquery, the stats
-        # aggregation, the range partitioner's sampling pass, and the final
-        # postings pass would otherwise each re-run the explode+regex chain.
-        tokens = tokenize(docs, text_col="text", id_col="doc_id", persist_types=True)
-
-        # B1 for stats only: tf per (term, doc) via codegen hash agg — counts
-        # only, so Tungsten's unsafe-row aggregation applies (the
-        # positions-array aggregation deliberately does NOT run through
-        # collect_list: ObjectHashAggregate is object-based, GC-bound, and
-        # falls back to sort-based at 128 keys — measured 3-6x slower than
-        # the sort+kernel path below at 150k turns).
-        tf_table = tokens.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-
-        # B5/B6: per-doc stats (include the empty term, exclude nothing).
-        # The frame is persisted and materialized by the corpus-stats
-        # aggregation (which the build needs anyway for avgdl); the parquet
-        # writes then run in a BACKGROUND thread against the cache while the
-        # main thread proceeds into the postings stage — the writes were a
-        # pure serial barrier between the two data-proportional stages
-        # (Spark job submission is thread-safe; the cache is materialized
-        # before the thread starts, so no partition is computed twice).
-        import threading
-
-        stats_cache = None
-        writer: threading.Thread | None = None
-        writer_err: list[BaseException] = []
-        # resume gate requires BOTH stats artifacts: they are written/marked
-        # together now, but a manifest from a build that crashed between the
-        # two writes could have doc_stats done and corpus_stats missing —
-        # recompute the whole stats phase rather than fail the read-back
-        stats_done = self._stage_done("doc_stats") and self._stage_done("corpus_stats")
-        if not stats_done or not resume:
-            stats_cache = (
-                docs.select("doc_id", *meta_cols)
-                .join(doc_stats_table(tf_table), "doc_id", "left")
-                .fillna({"doc_len": 0})
-                .persist()
-            )
-            doc_stats = stats_cache
-            set_desc("phase:stats — materialize doc/type caches + corpus stats")
-            stats_row = corpus_stats_table(stats_cache).collect()[0]
-            lap("stats_action")
-            # Data-wise the RANGED corpus cache behind assign_doc_ids is
-            # redundant from here on (the corpus-stats action materialized
-            # the enumerated docs + token type caches), but it must NOT be
-            # released mid-build: Dataset.unpersist() makes the CacheManager
-            # re-register every dependent cache entry (docs, types,
-            # stats_cache) and CLEAR their materialized buffers, so the
-            # postings phase silently recomputed all three — measured 27%
-            # slower end-to-end than carrying both text copies (which are
-            # MEMORY_AND_DISK — the second copy costs disk, not heap) to the
-            # single release at the end of the build.
-
-            def write_stats() -> None:
-                try:
-                    set_desc("phase:stats-write (background) — doc_stats + corpus_stats parquet")
-                    self._write_stage(stats_cache, "doc_stats")
-                    self._write_stage(corpus_stats_table(stats_cache), "corpus_stats")
-                except BaseException as e:  # surfaced after join()
-                    writer_err.append(e)
-
-            writer = threading.Thread(target=write_stats, daemon=True)
-            writer.start()
-        else:
-            doc_stats = self._read_stage("doc_stats")
-            stats_row = self._read_stage("corpus_stats").collect()[0]
-
-        avgdl = float(stats_row["avgdl"])
-        n_docs = int(stats_row["n_docs"])
-
-        # B2/B3 + K3/K4: the SPIMI sort-merge as ONE range shuffle.  Token
-        # rows — bare (term, doc_id, position) at sandbox scale, the weight
-        # inputs riding a broadcast array into the kernel; doc_id-bucketed
-        # SMJ enrichment at 10^12 scale — are range-partitioned on
-        # (term, doc_id) — hot terms split across partitions, defusing skew
-        # — sorted by (term, doc_id, position), and a vectorized numpy
-        # kernel forms (tf, positions, wdt_*) per group in one linear pass.
-        # No object aggregation anywhere; spill is the engine's external
-        # sort.  Empty terms are excluded from the index (spimi.py:137)
-        # after stats, matching the reference.
-        # Postings range-shuffle width: the data-aware build width (see
-        # build()), re-maxed against the EXACT n_docs in case the builder
-        # was invoked without the assign_doc_ids hint (file corpora, resume).
-        postings_partitions = max(
-            getattr(self, "_sp_build", self.n_partitions),
-            -(-n_docs // DOCS_PER_POSTINGS_PARTITION),
-        )
-        postings_cache = None
-        weights_bc = None
-        if not self._stage_done("postings") or not resume:
-            if n_docs <= BROADCAST_WEIGHTS_MAX_DOCS:
-                set_desc("phase:postings — collect doc weight arrays")
-                arrays = doc_weight_arrays(doc_stats, n_docs)
-                if arrays is not None:
-                    weights_bc = spark.sparkContext.broadcast(arrays)
-                lap("weights_collect")
-            set_desc("phase:postings — range shuffle + kernel + parquet write")
-            enriched = enriched_tokens(
-                tokens,
-                doc_stats,
-                n_docs,
-                postings_partitions,
-                carry_weights=weights_bc is None,
-            )
-            # persisted so the segments stage encodes from the SAME sorted
-            # partitions — no second range shuffle (at cluster scale the
-            # equivalent is deriving segments from the just-written sorted
-            # files without re-shuffling)
-            postings_cache = enriched.mapInPandas(
-                _postings_kernel(avgdl, weights_bc), schema=POSTINGS_SCHEMA
-            ).persist()
-            self._write_stage(postings_cache, "postings")
-            self._mark_stage("postings")
-            lap("postings")
-
-        if writer is not None:
-            writer.join()
-            if writer_err:
-                raise writer_err[0]
-            self._mark_stage("doc_stats")
-            self._mark_stage("corpus_stats")
-            stats_cache.unpersist()
-            lap("stats_write_join")
-
-        return self._finish(
-            clock=clock,
-            docs=docs,
-            n_docs=n_docs,
-            avgdl=avgdl,
-            total_tokens=int(stats_row["total_tokens"]),
-            postings_cache=postings_cache,
-            weights_bc=weights_bc,
-            postings_partitions=postings_partitions,
-            set_desc=set_desc,
-            resume=resume,
-            types_cache=getattr(tokens, "_types_cache", None),
-        )
 
     def _finish(
         self,
@@ -1457,7 +1163,6 @@ class IndexBuilder:
         n_docs,
         avgdl,
         total_tokens,
-        postings_cache,
         weights_bc,
         postings_partitions,
         set_desc,
@@ -1467,22 +1172,20 @@ class IndexBuilder:
         seg_kernel=None,
         segments_done=False,
     ) -> dict:
-        """Shared build tail: segments, dictionary, metrics, cache release —
-        identical for the string-shuffle and dictionary-encoded paths (both
-        hand over a sorted-by-(term, doc_id) postings cache/artifact; the
-        packed path hands the compact packed-long cache instead — or, on
-        the fused-sink path, arrives with BOTH artifacts already written
-        and every cache argument None)."""
-        spark = self.spark
-        out = self.out_dir
+        """Shared build tail of both postings producers: segments,
+        dictionary, metrics, cache release.  The producer hands over its
+        sorted postings source as ``packed_cache`` with the ``seg_kernel``
+        that cuts segment blocks from it, or arrives with segments already
+        written (``segments_done``, the fused sink).  A resumed build with
+        neither re-sorts the postings artifact and encodes that."""
         lap = clock.lap
         postings_df = self._read_stage("postings")
 
         # S5/B4: compressed block-max segments (delta+varbyte blobs; the
         # reference's postings.bin, spimi.py:145-187, plus the varbyte the
-        # north rule adds) — encoded from the cached sorted packed longs
-        # (encoded path) or postings rows when the stage runs in the same
-        # build, else from a re-sorted read-back.
+        # north rule adds) — encoded from the producer's cached sorted
+        # source when the postings stage ran in this build, else from a
+        # re-sorted read-back.
         # segments_done: the fused-sink postings pass already side-wrote and
         # marked this build's segments — fresh builds ignore stage markers
         # (they only gate resume), so the flag is the signal that the
@@ -1493,8 +1196,6 @@ class IndexBuilder:
             set_desc("phase:segments — varbyte block encode + write")
             if packed_cache is not None:
                 seg_df = packed_cache.mapInArrow(seg_kernel, schema=SEGMENT_SCHEMA)
-            elif postings_cache is not None:
-                seg_df = encode_segments(postings_cache)
             else:
                 seg_df = encode_segments(
                     postings_df.repartitionByRange(
@@ -1504,8 +1205,6 @@ class IndexBuilder:
             self._write_stage(seg_df, "segments")
             self._mark_stage("segments")
             lap("segments")
-        if postings_cache is not None:
-            postings_cache.unpersist()
         if packed_cache is not None:
             packed_cache.unpersist()
         if weights_bc is not None:
@@ -1649,26 +1348,24 @@ class IndexBuilder:
 
 
     def _build_encoded(self, docs: DataFrame, n_docs: int, resume: bool = False) -> dict:
-        """Dictionary-encoded build (see VOCAB_ENCODE_MAX comment): the same
-        artifacts as _build, produced with
+        """Dictionary-encoded build (see VOCAB_ENCODE_MAX comment):
+          * ONE fused tokenize+stats pass and ONE driver-side vocab collect
+            — no stem-dictionary subquery re-executed under every action;
+          * ONE stats pseudo-row collect serving corpus stats AND the
+            broadcast doc weight arrays — zero-shuffle doc stats;
+          * ONE driver-planned shuffle of packed int64 keys, then one pass
+            that cuts postings and segments (the fused sink) or a persisted
+            packed cache feeding two passes (Iceberg sinks, non-local
+            masters, resumed builds).
 
-          * ONE driver-side vocab collect instead of a stem-dictionary
-            subquery (distinct + Python UDF + broadcast exchange) re-executed
-            under every downstream action;
-          * ZERO-shuffle doc stats (_doc_stats_types_kernel) instead of the
-            full-token-stream groupBy(term, doc_id) aggregation;
-          * ONE fused stats collect serving corpus stats AND the kernel
-            weight arrays (two driver actions in _build);
-          * a range shuffle of (term_id:int32, doc_id, position) rows —
-            fixed-width int sort keys instead of strings, directly attacking
-            the DRAM-bandwidth wall that bounds wide-executor scaling
-            (BENCH.md: streaming bw scales at 0.43 8→32 on this host).
-
-        Falls back to _build when the vocabulary exceeds VOCAB_ENCODE_MAX or
-        doc_ids are outside a broadcastable range."""
+        Hands over to build_encoded_dist when the vocabulary exceeds
+        VOCAB_ENCODE_MAX, a doc id lies outside the dense broadcast range,
+        or the packed key exceeds 63 bits (_pack_bits)."""
         import threading
 
         import numpy as np
+
+        from .build_dist import build_encoded_dist
 
         clock = PhaseClock()
         lap = clock.lap
@@ -1676,7 +1373,6 @@ class IndexBuilder:
         if resume:
             self._load_manifest()
         spark = self.spark
-        out = self.out_dir
         meta_cols = [c for c in ("title", *META_COLS) if c in docs.columns]
         set_desc = spark.sparkContext.setJobDescription
 
@@ -1691,20 +1387,14 @@ class IndexBuilder:
         set_desc("phase:vocab — tokenize pass + per-type count collect")
         vocab = _collect_vocab(types)
         if vocab is None:
-            # over-cutoff vocabulary: the dictionary itself is built
-            # distributively and the packed-int shuffle survives
-            # (build_dist module) instead of reverting to the string plan
-            from .build_dist import build_encoded_dist
-
             fused.unpersist()
             return build_encoded_dist(self, docs, n_docs, resume=resume)
-        id2term_bc = spark.sparkContext.broadcast(vocab.id2term)
         lap("vocab_collect")
 
         # -- stats: already computed by the fused tokenize pass (pseudo
         # rows) — ONE cache-projection collect serves corpus stats AND the
         # kernel weight arrays; parquet writes overlap the postings phase
-        # in a background thread exactly like _build.
+        # in a background thread.
         stats_done = self._stage_done("doc_stats") and self._stage_done("corpus_stats")
         fresh_stats = not stats_done or not resume
         set_desc("phase:stats — fused-pass pseudo-row collect")
@@ -1729,11 +1419,13 @@ class IndexBuilder:
             0,
             min(arr_size, 2 * BROADCAST_WEIGHTS_MAX_DOCS),
         )
-        if weights is None:
-            # ids outside any broadcastable dense range: the per-row
-            # weight join path handles arbitrary ids
+        max_dl = int(stats_pdf["doc_len"].max()) if len(stats_pdf) else 0
+        pack_bits = _pack_bits(len(vocab.id2term), arr_size, max_dl)
+        if weights is None or pack_bits is None:
             fused.unpersist()
-            return self._build(docs, resume=resume)
+            return build_encoded_dist(self, docs, n_docs, resume=resume)
+        d_bits, p_bits = pack_bits
+        id2term_bc = spark.sparkContext.broadcast(vocab.id2term)
         weights_bc = spark.sparkContext.broadcast(weights)
         lap("stats_collect")
 
@@ -1761,8 +1453,8 @@ class IndexBuilder:
             writer.start()
 
         # -- postings: driver-planned shuffle + kernel.  Weights + term
-        # strings ride broadcasts into the kernel; the shuffle carries three
-        # fixed-width columns; the partition ASSIGNMENT is computed on the
+        # strings ride broadcasts into the kernel; the shuffle carries one
+        # packed long per token; the partition ASSIGNMENT is computed on the
         # driver from the exact per-term token totals (greedy contiguous
         # packing, hot terms striped by doc_id % k) and routed through
         # murmur3-representative values — no range-sampling pass over the
@@ -1774,78 +1466,58 @@ class IndexBuilder:
         )
         plan = _route_plan(vocab.term_tokens, width_floor)
         postings_partitions = plan[2]
-        postings_cache = None
         packed_cache = None
         seg_kernel = None
         fused_segments_done = False
         if not self._stage_done("postings") or not resume:
-            set_desc("phase:postings — planned packed-long shuffle + kernel + parquet write")
-            max_dl = int(stats_pdf["doc_len"].max()) if len(stats_pdf) else 0
-            stream, pack_bits = _planned_token_stream(spark, types, vocab, plan, arr_size, max_dl)
-            if pack_bits is not None:
-                d_bits, p_bits = pack_bits
-                seg_dir = self._stage_target("segments")
-                fuse_segments = (
-                    not self._iceberg_ok
-                    and _side_write_ok(spark, seg_dir)
-                    and (not self._stage_done("segments") or not resume)
-                )
-                if fuse_segments:
-                    # ONE pass cuts BOTH artifacts: the kernel emits the
-                    # postings rows (Spark's parquet sink) AND side-writes
-                    # its partition's segment blocks as a parquet part file
-                    # (pyarrow, tmp+rename so a task retry is idempotent;
-                    # local masters only, see _side_write_ok).
-                    # The alternatives both lose on this memory-bound stage:
-                    # a persisted packed cache + second segments pass pays a
-                    # cache store and a full decompress re-scan (~13 s/900k
-                    # at width 4), and overlapping two cache consumers as
-                    # concurrent jobs measured WORSE (145 s vs 120 s walls —
-                    # two streaming kernels thrash the pinned cores' DRAM
-                    # bandwidth).  One sorted stream, touched once, nothing
-                    # persisted.  Iceberg sinks keep the two-pass shape
-                    # (segments must go through the snapshot commit).
-                    import shutil
+            stream = _planned_token_stream(spark, types, vocab, plan, pack_bits)
+            seg_dir = self._stage_target("segments")
+            fuse_segments = (
+                not self._iceberg_ok
+                and _side_write_ok(spark, seg_dir)
+                and (not self._stage_done("segments") or not resume)
+            )
+            if fuse_segments:
+                # ONE pass cuts BOTH artifacts: the kernel emits the
+                # postings rows (Spark's parquet sink) AND side-writes its
+                # partition's segment blocks as a parquet part file
+                # (pyarrow, tmp+rename so a task retry is idempotent; local
+                # masters only, see _side_write_ok).
+                # The alternatives both lose on this memory-bound stage: a
+                # persisted packed cache + second segments pass pays a cache
+                # store and a full decompress re-scan (~13 s/900k at width
+                # 4), and overlapping two cache consumers as concurrent jobs
+                # measured WORSE (145 s vs 120 s walls — two streaming
+                # kernels thrash the pinned cores' DRAM bandwidth).  One
+                # sorted stream, touched once, nothing persisted.  Iceberg
+                # sinks keep the two-pass shape (segments must go through
+                # the snapshot commit).
+                import shutil
 
-                    shutil.rmtree(seg_dir, ignore_errors=True)
-                    os.makedirs(seg_dir, exist_ok=True)
-                    set_desc(
-                        "phase:postings+segments — one packed pass, fused sinks"
-                    )
-                    kernel = _postings_segments_kernel_packed(
-                        avgdl, weights_bc, id2term_bc, d_bits, p_bits, seg_dir
-                    )
-                    self._write_stage(
-                        stream.mapInArrow(kernel, schema=POSTINGS_SCHEMA),
-                        "postings",
-                    )
-                    self._mark_stage("postings")
-                    _finalize_side_segments(
-                        spark,
-                        seg_dir,
-                        sum(p["rows"] for p in self.manifest["stages"]["postings"]["partitions"]),
-                    )
-                    self._mark_stage("segments")
-                    fused_segments_done = True
-                    lap("postings_segments")
-                else:
-                    packed_cache = stream.persist()
-                    kernel = _postings_kernel_packed(
-                        avgdl, weights_bc, id2term_bc, d_bits, p_bits
-                    )
-                    self._write_stage(
-                        packed_cache.mapInArrow(kernel, schema=POSTINGS_SCHEMA),
-                        "postings",
-                    )
-                    seg_kernel = _segments_kernel_packed(
-                        avgdl, weights_bc, id2term_bc, d_bits, p_bits
-                    )
-                    self._mark_stage("postings")
-                    lap("postings")
+                shutil.rmtree(seg_dir, ignore_errors=True)
+                os.makedirs(seg_dir, exist_ok=True)
+                set_desc("phase:postings+segments — one packed pass, fused sinks")
+                kernel = _postings_segments_kernel_packed(
+                    avgdl, weights_bc, id2term_bc, d_bits, p_bits, seg_dir
+                )
+                self._write_stage(stream.mapInArrow(kernel, schema=POSTINGS_SCHEMA), "postings")
+                self._mark_stage("postings")
+                _finalize_side_segments(
+                    spark,
+                    seg_dir,
+                    sum(p["rows"] for p in self.manifest["stages"]["postings"]["partitions"]),
+                )
+                self._mark_stage("segments")
+                fused_segments_done = True
+                lap("postings_segments")
             else:
-                kernel = _postings_kernel(avgdl, weights_bc, id2term_bc)
-                postings_cache = stream.mapInPandas(kernel, schema=POSTINGS_SCHEMA).persist()
-                self._write_stage(postings_cache, "postings")
+                set_desc("phase:postings — planned packed-long shuffle + kernel + parquet write")
+                packed_cache = stream.persist()
+                kernel = _postings_kernel_packed(avgdl, weights_bc, id2term_bc, d_bits, p_bits)
+                self._write_stage(
+                    packed_cache.mapInArrow(kernel, schema=POSTINGS_SCHEMA), "postings"
+                )
+                seg_kernel = _segments_kernel_packed(avgdl, weights_bc, id2term_bc, d_bits, p_bits)
                 self._mark_stage("postings")
                 lap("postings")
 
@@ -1863,7 +1535,6 @@ class IndexBuilder:
             n_docs=n_docs,
             avgdl=avgdl,
             total_tokens=total_tokens,
-            postings_cache=postings_cache,
             weights_bc=weights_bc,
             postings_partitions=postings_partitions,
             set_desc=set_desc,

@@ -563,7 +563,6 @@ def build_encoded_dist(builder, docs: DataFrame, n_docs: int, resume: bool = Fal
         n_docs=n_docs,
         avgdl=avgdl,
         total_tokens=total_tokens,
-        postings_cache=None,
         weights_bc=None,
         postings_partitions=postings_partitions,
         set_desc=set_desc,

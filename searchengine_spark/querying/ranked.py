@@ -21,7 +21,7 @@ Ties break by ascending doc_id (deterministic; oracle matches).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..indexing.build import bm25_wqt, tfidf_wqt
@@ -75,28 +75,53 @@ def ranked_search(
         return index.spark.createDataFrame([], "doc_id long, score double")
 
     wdt_col = "wdt_bm25" if mode == "bm25" else "wdt_tfidf_norm"
+    return top_k(score_docs(index, weights, stats, wdt_col, doc_filter), k, round_scores)
+
+
+def term_case(values: dict[str, float]) -> Column:
+    """CASE term WHEN t THEN v ... as a literal map — stays in whole-stage
+    codegen."""
+    expr = None
+    for t, v in values.items():
+        clause = F.col("term") == t
+        expr = F.when(clause, F.lit(v)) if expr is None else expr.when(clause, F.lit(v))
+    return expr
+
+
+def score_docs(
+    index: SparkIndex,
+    weights: dict[str, float],
+    stats: dict,
+    wdt_col: str,
+    doc_filter: DataFrame | None = None,
+) -> DataFrame:
+    """The ranked scoring plan (K1-K5): DataFrame(doc_id, score = sum of
+    wqt * wdt) over the postings of the weighted terms.  ``stats`` is the
+    query's term_stats_for lookup.  ``doc_filter`` restricts scoring to
+    its doc_ids by a semi-join (no forced broadcast: AQE picks broadcast
+    when the set is actually small; left_semi dedupes by construction, so
+    no .distinct() shuffle).  Unfiltered queries whose total df is at most
+    SINGLE_STAGE_MAX_POSTINGS run as one stage."""
     postings = index.get_postings(list(weights)).select("term", "doc_id", wdt_col)
     if doc_filter is not None:
         postings = postings.join(doc_filter.select("doc_id"), "doc_id", "left_semi")
-
-    # wqt as a literal CASE map — stays in whole-stage codegen
-    wqt_expr = None
-    for t, w in weights.items():
-        clause = F.when(F.col("term") == t, F.lit(w))
-        wqt_expr = clause if wqt_expr is None else wqt_expr.when(F.col("term") == t, F.lit(w))
-    scored = postings.withColumn("wqt", wqt_expr)
+    scored = postings.withColumn("wqt", term_case(weights))
     total_df = sum(stats[t]["df"] for t in weights)
     if doc_filter is None and total_df <= SINGLE_STAGE_MAX_POSTINGS:
         scored = scored.coalesce(1)
+    return scored.groupBy("doc_id").agg(F.sum(F.col("wqt") * F.col(wdt_col)).alias("score"))
 
-    agg = scored.groupBy("doc_id").agg(F.sum(F.col("wqt") * F.col(wdt_col)).alias("score"))
+
+def top_k(scored: DataFrame, k: int, round_scores: int | None = None) -> DataFrame:
+    """Top k of (doc_id, score) by score desc, doc_id asc; with
+    ``round_scores``, (doc_id, score_r) ordered by the rounded score."""
     if round_scores is not None:
         return (
-            agg.select("doc_id", F.round("score", round_scores).alias("score_r"))
+            scored.select("doc_id", F.round("score", round_scores).alias("score_r"))
             .orderBy(F.desc("score_r"), F.asc("doc_id"))
             .limit(k)
         )
-    return agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def role_tool_filter(index: SparkIndex, role: str | None = None, tool: str | None = None) -> DataFrame:

@@ -56,6 +56,7 @@ from ..indexing.build import bm25_wqt, tfidf_wqt
 from ..indexing.index import SparkIndex
 from ..text import preprocess_ranked_query
 from ..worker import engine_kernel
+from .ranked import score_docs, term_case, top_k
 
 _DOCIDS_SCHEMA = T.StructType([T.StructField("doc_id", T.LongType())])
 
@@ -75,32 +76,6 @@ def _decode_doc_ids(batches):
         yield pa.RecordBatch.from_arrays(
             [pa.array(np.concatenate(ids).astype(np.int64))], names=["doc_id"]
         )
-
-
-def _exact_scores(
-    index: SparkIndex, weights: dict[str, float], wdt_col: str, candidates: DataFrame
-) -> DataFrame:
-    """Standard ranked plan (K1-K5) restricted to candidate doc_ids via a
-    semi-join (no forced broadcast: candidate sets are unbounded, AQE picks
-    broadcast when the decoded set is actually small)."""
-    postings = (
-        index.get_postings(list(weights))
-        .select("term", "doc_id", wdt_col)
-        # left_semi dedupes by construction — no .distinct() (it would add a
-        # full extra shuffle of the candidate ids before the join)
-        .join(candidates.select("doc_id"), "doc_id", "left_semi")
-    )
-    wqt_expr = None
-    for t, w in weights.items():
-        clause = (
-            F.when(F.col("term") == t, F.lit(w))
-            if wqt_expr is None
-            else wqt_expr.when(F.col("term") == t, F.lit(w))
-        )
-        wqt_expr = clause
-    return postings.withColumn("wqt", wqt_expr).groupBy("doc_id").agg(
-        F.sum(F.col("wqt") * F.col(wdt_col)).alias("score")
-    )
 
 
 def ranked_search_wand(
@@ -158,19 +133,8 @@ def ranked_search_wand(
     # per-block upper bound: own term uses the block max, others their global
     # max — ub = wqt_t*max_wdt(B) + (gmax_total - gmax_t)
     blocks = index.segments.filter(F.col("term").isin(list(weights)))
-    wqt_expr, rest_expr = None, None
-    for t, w in weights.items():
-        wqt_expr = (
-            F.when(F.col("term") == t, F.lit(w))
-            if wqt_expr is None
-            else wqt_expr.when(F.col("term") == t, F.lit(w))
-        )
-        rest_expr = (
-            F.when(F.col("term") == t, F.lit(gmax_total - gmax[t]))
-            if rest_expr is None
-            else rest_expr.when(F.col("term") == t, F.lit(gmax_total - gmax[t]))
-        )
-    blocks = blocks.withColumn("ub", wqt_expr * F.col(max_col) + rest_expr)
+    rest = {t: gmax_total - gmax[t] for t in weights}
+    blocks = blocks.withColumn("ub", term_case(weights) * F.col(max_col) + term_case(rest))
 
     cutoff = None
     min_ub = None
@@ -266,27 +230,13 @@ def ranked_search_wand(
             blocks.filter(F.col("ub") >= cutoff).select("postings_bin")
             .mapInArrow(_decode_doc_ids, schema=_DOCIDS_SCHEMA)
         )
-        seed_top = (
-            _exact_scores(index, weights, wdt_col, seed_ids)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-            .collect()
-        )
+        seed_top = top_k(score_docs(index, weights, stats_rows, wdt_col, seed_ids), k).collect()
         theta = float(seed_top[-1]["score"]) if len(seed_top) >= k else float("-inf")
 
     # When ranking by round(score, n), a doc with exact score in
     # [theta - 10^-n, theta) can still round into a tie with the k-th rounded
     # score and win the doc_id tie-break — widen the cut by one grid step.
     theta_eff = theta - 10.0 ** (-round_scores) if round_scores is not None else theta
-
-    def finalize(scored: DataFrame) -> DataFrame:
-        if round_scores is not None:
-            return (
-                scored.select("doc_id", F.round("score", round_scores).alias("score_r"))
-                .orderBy(F.desc("score_r"), F.asc("doc_id"))
-                .limit(k)
-            )
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def fill_stats(survivors: DataFrame | None) -> None:
         if stats is None:
@@ -359,26 +309,16 @@ def ranked_search_wand(
             if total_blocks and surviving / total_blocks > 0.5:
                 prune_viable = False
 
-    # Exhaustive fall-through: identical result, zero extra distributed
-    # work beyond the dictionary lookup already paid.
+    # Exhaustive fall-through: ranked_search's plan for the same query —
+    # identical result, zero extra distributed work beyond the dictionary
+    # lookup already paid.
     if not prune_viable:
         fill_stats(None)
-        postings = index.get_postings(list(weights)).select("term", "doc_id", wdt_col)
-        wqt_case = None
-        for t, w in weights.items():
-            wqt_case = (
-                F.when(F.col("term") == t, F.lit(w))
-                if wqt_case is None
-                else wqt_case.when(F.col("term") == t, F.lit(w))
-            )
-        scored = postings.withColumn("wqt", wqt_case).groupBy("doc_id").agg(
-            F.sum(F.col("wqt") * F.col(wdt_col)).alias("score")
-        )
-        return finalize(scored)
+        return top_k(score_docs(index, weights, stats_rows, wdt_col), k, round_scores)
 
     # prune on ub, decode survivors, exact-score, top-k (lazy)
     survivors = blocks.filter(F.col("ub") >= theta_eff)
     surv_ids = survivors.select("postings_bin").mapInArrow(_decode_doc_ids, schema=_DOCIDS_SCHEMA)
-    scored = _exact_scores(index, weights, wdt_col, surv_ids)
+    scored = score_docs(index, weights, stats_rows, wdt_col, surv_ids)
     fill_stats(survivors)
-    return finalize(scored)
+    return top_k(scored, k, round_scores)

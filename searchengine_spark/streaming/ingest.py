@@ -239,9 +239,10 @@ class StreamingIndexer:
             stats_pdf = B._stats_rows(fused)
             clock.lap("stats_collect")
             max_dl = int(stats_pdf["doc_len"].max()) if len(stats_pdf) else 0
-            plan = B._route_plan(vocab.term_tokens, self._epoch_width(n_new))
-            stream, pack_bits = B._planned_token_stream(spark, types, vocab, plan, n_new, max_dl)
+            pack_bits = B._pack_bits(len(vocab.id2term), n_new, max_dl)
             if pack_bits is not None:
+                plan = B._route_plan(vocab.term_tokens, self._epoch_width(n_new))
+                stream = B._planned_token_stream(spark, types, vocab, plan, pack_bits)
                 id2term_bc = spark.sparkContext.broadcast(vocab.id2term)
                 kernel = B._postings_kernel_packed(None, None, id2term_bc, *pack_bits, doc_base=base)
                 raw = stream.mapInArrow(kernel, schema=B.RAW_POSTINGS_SCHEMA)

@@ -154,8 +154,6 @@ def tokenize(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_stems: bool = True,
-    persist_types: bool = False,
     use_kernel: bool = True,
 ) -> DataFrame:
     """(doc_id, text) -> (doc_id, position, term) including empty terms.
@@ -166,12 +164,6 @@ def tokenize(
     tests).  The stem dictionary is a distinct-aggregate of *types*
     (post-cleaning), typically tiny relative to the corpus, broadcast back
     onto the token stream.
-
-    persist_types=True caches the post-cleaning (doc_id, position, type)
-    stream: the stem-dictionary subquery and every downstream consumer then
-    reuse one execution of the tokenize pass instead of re-running it
-    per action (the returned DataFrame carries the cache handle as
-    ``._types_cache`` for unpersisting).
     """
     # T1: split on single space, strip each, drop empties (no position burn).
     # Newlines also separate: the reference tokenizes line by line with a
@@ -208,17 +200,10 @@ def tokenize(
             (F.col("pos0") + 1).alias("position"),
             F.explode(variants).alias("variant"),
         ).select(id_col, "position", _clean_expr(F.col("variant")).alias("type"))
-    if persist_types:
-        types = types.persist()
 
     # T4: stem over the distinct-type dictionary, join back
     stem_map = types.select("type").distinct().withColumn("term", _stem_udf(F.col("type")))
-    if broadcast_stems:
-        stem_map = F.broadcast(stem_map)
-    out = types.join(stem_map, "type").select(id_col, "position", "term")
-    if persist_types:
-        out._types_cache = types
-    return out
+    return types.join(F.broadcast(stem_map), "type").select(id_col, "position", "term")
 
 
 def tokenize_query_expr(text_col: Column) -> Column:

@@ -87,11 +87,26 @@ def test_dist_over_doc_cutoff_matches_encoded(spark, tricky_docs, encoded_index,
 def test_dist_vocab_overflow_matches_encoded(spark, tricky_docs, encoded_index, tmp_path):  # noqa: F811
     """Forced over VOCAB_ENCODE_MAX (docs under the doc cutoff): the
     encoded path's limit-guarded collect overflows and falls back to the
-    DISTRIBUTED dictionary, not the string plan."""
+    DISTRIBUTED dictionary."""
     import searchengine_spark.indexing.build as bmod
 
     out = str(tmp_path / "dist_vocab")
     m = _build_with(spark, tricky_docs, out, [(bmod, "VOCAB_ENCODE_MAX", 3)])
+    assert "dict_assign" in m["metrics"]["phase_seconds"], "dist path not taken"
+    _assert_same_index(spark, encoded_index, out)
+
+
+def test_dist_packed_key_overflow_matches_encoded(
+    spark, tricky_docs, encoded_index, tmp_path, monkeypatch  # noqa: F811
+):
+    """A packed key over 63 bits (_pack_bits returns None — 21 term bits +
+    23 doc bits leave 19 for positions) hands the encoded path over to the
+    DISTRIBUTED dictionary, which needs no packed key."""
+    import searchengine_spark.indexing.build as bmod
+
+    monkeypatch.setattr(bmod, "_pack_bits", lambda n_terms, n_doc_slots, max_dl: None)
+    out = str(tmp_path / "dist_pack")
+    m = bmod.IndexBuilder(spark, out).build(tricky_docs)
     assert "dict_assign" in m["metrics"]["phase_seconds"], "dist path not taken"
     _assert_same_index(spark, encoded_index, out)
 

@@ -1,6 +1,8 @@
-"""Dictionary-encoded build path (round 4): the int-term_id shuffle must be
-artifact-identical to the string-shuffle fallback on a corpus exercising
-hyphen variants, stem collisions, unicode, empties, and hot terms."""
+"""Dictionary-encoded build path (round 4): sorted postings, the driver
+route planner and its murmur3 router.  ``tricky_docs`` (hyphen variants,
+stem collisions, unicode, empties, hot terms) and ``_artifacts`` also serve
+tests/test_dist_build.py, which pins the encoded path's index content
+against the independent build_dist producer."""
 
 import os
 
@@ -31,8 +33,8 @@ def _artifacts(spark, path):
         if name == "term_stats":
             # block-max metadata (top_block_max_*, min_block_max_*, n_blocks)
             # is LAYOUT-dependent: block boundaries follow partition runs,
-            # and the planned router cuts partitions differently from the
-            # sampling range partitioner.  WAND is rank-identical under any
+            # and the driver route plan cuts partitions differently from
+            # build_dist's distributed plan.  WAND is rank-identical under any
             # block layout (test_segments_wand); parity here is semantic.
             pdf = pdf[["term", "df", "cf", "max_wdt_bm25", "max_wdt_tfidf_norm"]]
         cols = sorted(pdf.columns)
@@ -46,32 +48,6 @@ def _artifacts(spark, path):
             .reset_index(drop=True)
         )
     return out
-
-
-def test_encoded_matches_fallback_artifacts(spark, tricky_docs, tmp_path):
-    import pandas as pd
-
-    from searchengine_spark.indexing.build import IndexBuilder
-
-    out_enc = str(tmp_path / "enc")
-    out_str = str(tmp_path / "str")
-
-    b1 = IndexBuilder(spark, out_enc)
-    m1 = b1.build(tricky_docs)  # n_docs=140 <= cutoff -> encoded path
-    assert "vocab_collect" in m1["metrics"]["phase_seconds"], "encoded path not taken"
-
-    b2 = IndexBuilder(spark, out_str)
-    # the string path is no longer reachable via the vocab cutoff (that
-    # fallback now routes to the DISTRIBUTED dictionary, test_dist_build) —
-    # drive it directly to keep string-vs-encoded parity pinned
-    m2 = b2._build(tricky_docs)
-    assert "vocab_collect" not in m2["metrics"]["phase_seconds"], "fallback not taken"
-
-    a1, a2 = _artifacts(spark, out_enc), _artifacts(spark, out_str)
-    for name in a1:
-        pd.testing.assert_frame_equal(a1[name], a2[name], check_dtype=False), name
-    assert m1["metrics"]["n_postings"] == m2["metrics"]["n_postings"]
-    assert m1["metrics"]["total_tokens"] == m2["metrics"]["total_tokens"]
 
 
 def test_encoded_postings_sorted_by_term(spark, tricky_docs, tmp_path):

@@ -224,51 +224,27 @@ def test_hot_term_postings_split_across_partitions(spark, tmp_path):
     assert max(p["rows"] for p in parts) / total < 0.6
 
 
-def test_enriched_tokens_shuffles_bare_stream_below_cutoff(spark):
-    """Below the cutoff the range shuffle must carry ONLY
-    (term, doc_id, position): weight inputs ride a broadcast array into the
-    kernel, so the plan has no join at all and the shuffle moves 16 fewer
-    bytes per token occurrence (the shuffle+sort is memory-bandwidth-bound
-    at high parallelism — host --bw probe).  Above the cutoff the per-row
-    enrichment join is the intended plan (sort-merge at 10^12 scale) and
-    the weight columns are carried."""
-    from searchengine_spark.indexing.build import (
-        BROADCAST_WEIGHTS_MAX_DOCS,
-        enriched_tokens,
-    )
+def test_empty_corpus_builds_and_answers_queries(spark, tmp_path):
+    """An empty (doc_id, text) frame builds every artifact (corpus_stats
+    with n_docs 0) and the index opens and answers ranked, WAND and Boolean
+    queries with no rows — fresh, then resumed over the finished build."""
+    import os
 
-    tokens = spark.createDataFrame(
-        [("alpha", 0, 1), ("beta", 0, 2), ("alpha", 1, 1)],
-        "term string, doc_id long, position long",
-    )
-    doc_stats = spark.createDataFrame(
-        [(0, "t0", 2, 1.1), (1, "t1", 1, 1.0)],
-        "doc_id long, title string, doc_len long, l2_weight double",
-    )
-    small = enriched_tokens(tokens, doc_stats, n_docs=2, n_partitions=4)
-    plan_small = small._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan_small, plan_small
-    assert set(small.columns) == {"term", "doc_id", "position"}
+    from searchengine_spark.indexing import SparkIndex, build_index
+    from searchengine_spark.querying.boolean import boolean_search
+    from searchengine_spark.querying.ranked import ranked_search
+    from searchengine_spark.querying.wand import ranked_search_wand
 
-    big = enriched_tokens(
-        tokens, doc_stats, n_docs=BROADCAST_WEIGHTS_MAX_DOCS + 1, n_partitions=4
-    )
-    plan_big = big._jdf.queryExecution().executedPlan().toString()
-    assert "Join" in plan_big, plan_big
-    assert {"doc_len", "l2_weight"} <= set(big.columns)
-
-
-def test_doc_weight_arrays_dense_lookup(spark):
-    """The broadcast weight arrays must agree with the per-row carry: same
-    doc_len/l2 per doc_id, null l2 (empty docs) tolerated."""
-    import numpy as np
-
-    from searchengine_spark.indexing.build import doc_weight_arrays
-
-    doc_stats = spark.createDataFrame(
-        [(0, 2, 1.25), (1, 1, 1.0), (2, 0, None)],
-        "doc_id long, doc_len long, l2_weight double",
-    )
-    dl, l2 = doc_weight_arrays(doc_stats, n_docs=3)
-    assert np.array_equal(dl, np.array([2.0, 1.0, 0.0]))
-    assert l2[0] == 1.25 and l2[1] == 1.0 and np.isfinite(l2[2])
+    docs = spark.createDataFrame([], "doc_id long, text string")
+    out = str(tmp_path / "empty_index")
+    for resume in (False, True):
+        m = build_index(spark, docs, out, resume=resume)
+        assert m["metrics"]["n_docs"] == 0 and m["metrics"]["n_postings"] == 0
+        for name in ("postings", "doc_stats", "term_stats", "corpus_stats", "segments"):
+            assert os.path.exists(os.path.join(out, name, "_SUCCESS")), (resume, name)
+        corpus = spark.read.parquet(os.path.join(out, "corpus_stats")).collect()
+        assert len(corpus) == 1 and corpus[0]["n_docs"] == 0
+        idx = SparkIndex(spark, out)
+        assert ranked_search(idx, "alpha beta").collect() == []
+        assert ranked_search_wand(idx, "alpha beta").collect() == []
+        assert boolean_search(idx, "alpha AND beta").collect() == []

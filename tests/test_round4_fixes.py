@@ -1,5 +1,5 @@
-"""Round-4 ADVICE regression tests: sparse-docid weight fallback, resume
-gate on both stats artifacts, RIFF-lookalike payloads in the bulk decode."""
+"""Round-4 ADVICE regression tests: sparse-docid weights, resume gate on
+both stats artifacts, RIFF-lookalike payloads in the bulk decode."""
 
 import json
 import os
@@ -7,38 +7,13 @@ import os
 import pytest
 
 
-def test_doc_weight_arrays_rejects_sparse_ids(spark):
-    """Density-contract guard: ids outside [0, n_docs) -> None (the caller
-    then takes the enrichment-join path instead of mis-indexing)."""
-    from searchengine_spark.indexing.build import doc_weight_arrays
-
-    sparse = spark.createDataFrame(
-        [(5, 3, 1.0), (900, 4, 2.0)], "doc_id long, doc_len long, l2_weight double"
-    )
-    assert doc_weight_arrays(sparse, n_docs=10) is None
-    dense = spark.createDataFrame(
-        [(0, 3, 1.0), (1, 4, 2.0)], "doc_id long, doc_len long, l2_weight double"
-    )
-    assert doc_weight_arrays(dense, n_docs=2) is not None
-
-
 def test_build_over_sparse_doc_ids_correct_weights(spark, tmp_path):
     """A filtered corpus (sparse surviving doc_ids) fed straight to
     build_index must produce the same BM25 weights as the same docs re-idded
-    densely — the broadcast-array fast path must decline, not mis-index."""
+    densely.  Ids inside the dense broadcast range keep the encoded path;
+    ids far outside it hand over to the dist path, which assumes no id
+    range — the broadcast-array fast path must decline, not mis-index."""
     from searchengine_spark.indexing.build import build_index
-
-    texts = [(i, f"alpha beta tok{i % 5} gamma delta") for i in range(0, 300, 7)]
-    sparse = spark.createDataFrame(texts, "doc_id long, text string")
-    out_sparse = str(tmp_path / "sparse")
-    build_index(spark, sparse, out_sparse)
-
-    remap = {doc_id: new for new, (doc_id, _) in enumerate(texts)}
-    dense = spark.createDataFrame(
-        [(remap[d], t) for d, t in texts], "doc_id long, text string"
-    )
-    out_dense = str(tmp_path / "dense")
-    build_index(spark, dense, out_dense)
 
     def weights(path, idmap=None):
         rows = spark.read.parquet(os.path.join(path, "postings")).collect()
@@ -47,7 +22,23 @@ def test_build_over_sparse_doc_ids_correct_weights(spark, tmp_path):
             for r in rows
         }
 
-    assert weights(out_sparse, remap) == weights(out_dense)
+    texts = [(7 * i, f"alpha beta tok{i % 5} gamma delta") for i in range(43)]
+    remap = {doc_id: new for new, (doc_id, _) in enumerate(texts)}
+    dense = spark.createDataFrame(
+        [(remap[d], t) for d, t in texts], "doc_id long, text string"
+    )
+    out_dense = str(tmp_path / "dense")
+    build_index(spark, dense, out_dense)
+    want = weights(out_dense)
+
+    for offset, dist in ((0, False), (10**10, True)):
+        rows = [(offset + d, t) for d, t in texts]
+        sparse = spark.createDataFrame(rows, "doc_id long, text string")
+        out_sparse = str(tmp_path / f"sparse{offset}")
+        m = build_index(spark, sparse, out_sparse)
+        assert ("dict_assign" in m["metrics"]["phase_seconds"]) == dist, offset
+        idmap = {offset + d: new for d, new in remap.items()}
+        assert weights(out_sparse, idmap) == want, offset
 
 
 def test_resume_recomputes_when_corpus_stats_missing(spark, tmp_path):

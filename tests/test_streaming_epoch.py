@@ -55,7 +55,7 @@ def _reference_delta(spark, df, base, n_partitions):
         .select("term", "doc_id", "position")
         .repartitionByRange(n_partitions, "term", "doc_id")
         .sortWithinPartitions("term", "doc_id", "position")
-        .mapInPandas(bmod._postings_kernel(None), schema=bmod.RAW_POSTINGS_SCHEMA)
+        .mapInPandas(bmod._postings_kernel, schema=bmod.RAW_POSTINGS_SCHEMA)
     )
     stats = (
         tokens.groupBy("term", "doc_id")
