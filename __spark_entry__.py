@@ -3,20 +3,26 @@
 ``queries()`` exposes the engine's operators (SURVEY.md §2) over the
 testdata ``documents`` / ``embeddings`` tables; ``oracle_sql()`` provides
 exact ANSI-SQL twins (searchengine_spark/duck_oracle.py) for the DuckDB gate.
-The full transcript-schema engine (index build, resume, rank-identity vs the
-single-node oracle) is exercised by tests/ — this file is the
-SQL-checkable surface.
+Every index gate (postings, stats, Boolean, ranked, vocabulary, spelling)
+queries the production build: one index per corpus, written by build_index
+and read back from parquet (``_persisted_index``), plus the dist-built twin
+behind the ``*_dist`` gates.  The full transcript-schema engine (resume,
+streaming, rank-identity vs the single-node oracle) is exercised by
+tests/ — this file is the SQL-checkable surface.
 """
 
 from __future__ import annotations
 
+import atexit
+import hashlib
+import os
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from searchengine_spark import duck_oracle as dk
-from searchengine_spark.engine_api import documents_engine
 from searchengine_spark.pipeline import (
     cosine_topk,
     dedup_exact,
@@ -35,6 +41,7 @@ from searchengine_spark.querying.boolean import boolean_search
 from searchengine_spark.querying.ranked import ranked_search
 from searchengine_spark.querying.wand import ranked_search_wand
 from searchengine_spark.session import ensure_package_on_workers
+from searchengine_spark.text.spark_tokenize import tokenize
 from searchengine_spark.text.spelling import spell_suggestions
 
 SPELL_WORDS = ["serch", "qery", "documant"]
@@ -47,48 +54,80 @@ BOOL_MIXED_Q = 'merge + "table scan" -hash'
 RANKED_Q = "hash join spark"
 
 
-def _engine(spark: SparkSession, sf_dir: str):
+# (kind, applicationId, absolute sf_dir) -> (built index, its directory)
+_GATE_INDEXES: dict[tuple[str, str, str], tuple[object, str]] = {}
+_GATE_SCRATCH = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scratch")
+
+
+def _drop_gate_index(key) -> None:
+    _, out = _GATE_INDEXES.pop(key)
+    shutil.rmtree(out, ignore_errors=True)
+
+
+@atexit.register
+def _drop_gate_indexes() -> None:
+    for key in list(_GATE_INDEXES):
+        _drop_gate_index(key)
+
+
+def _gate_index(spark: SparkSession, sf_dir: str, kind: str, build):
+    """Build once per (session, corpus): ``build(spark, sf_dir, out)``
+    writes an index under ``.scratch/gate_<kind>_<pid>_<basename>_<hash>``
+    and returns its query handle.  The key is the session's applicationId
+    (a freed id(spark) can be reused by a new session); the directory name
+    hashes the absolute sf_dir, so two corpora sharing a basename never
+    overwrite each other.  Entries of other applications are evicted with
+    their directories (their session is gone), and the rest are removed
+    when the interpreter exits."""
     ensure_package_on_workers(spark)
-    return documents_engine(spark, sf_dir)
+    sf_abs = os.path.abspath(sf_dir)
+    app_id = spark.sparkContext.applicationId
+    key = (kind, app_id, sf_abs)
+    if key not in _GATE_INDEXES:
+        for stale in [k for k in _GATE_INDEXES if k[1] != app_id]:
+            _drop_gate_index(stale)
+        tag = os.path.basename(os.path.normpath(sf_abs))
+        path_hash = hashlib.md5(sf_abs.encode()).hexdigest()[:8]
+        out = os.path.join(_GATE_SCRATCH, f"gate_{kind}_{os.getpid()}_{tag}_{path_hash}")
+        shutil.rmtree(out, ignore_errors=True)
+        _GATE_INDEXES[key] = (build(spark, sf_dir, out), out)
+    return _GATE_INDEXES[key][0]
 
 
-_PINDEX_CACHE: dict = {}
+def _build_index(spark: SparkSession, sf_dir: str, out: str):
+    from searchengine_spark.indexing.build import build_index
+    from searchengine_spark.indexing.index import SparkIndex
+
+    build_index(spark, spark.read.parquet(f"{sf_dir}/documents.parquet"), out)
+    return SparkIndex(spark, out)
+
+
+def _build_index_dist(spark: SparkSession, sf_dir: str, out: str):
+    from searchengine_spark.indexing import build as bmod
+
+    orig = bmod.BROADCAST_WEIGHTS_MAX_DOCS
+    bmod.BROADCAST_WEIGHTS_MAX_DOCS = 1  # force the dist dispatch
+    try:
+        return _build_index(spark, sf_dir, out)
+    finally:
+        bmod.BROADCAST_WEIGHTS_MAX_DOCS = orig
+
+
+def _build_embedding_index(spark: SparkSession, sf_dir: str, out: str):
+    from searchengine_spark.pipeline.embedding_index import build_embedding_index
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return build_embedding_index(spark, emb, out, n_planes=4, n_tables=8, seed=42)
 
 
 def _persisted_index(spark: SparkSession, sf_dir: str):
-    """Full production build path — assign nothing (documents carry doc_id),
-    run build_index (the encoded path: fused tokenize -> driver dictionary
-    -> planned packed-key shuffle -> postings + varbyte segments kernel ->
-    parquet artifacts), then read it back as a
-    SparkIndex.  Gates built on this verify the persisted pipeline against
-    the DuckDB oracle, not just the in-session engine.
-
-    Cache key = (applicationId, absolute sf_dir); the on-disk path embeds a
-    hash of the absolute sf_dir so two dirs sharing a basename cannot
-    overwrite each other's artifacts, and stale gate_index dirs from earlier
-    runs of this process are removed before the rebuild."""
-    import hashlib
-    import os
-    import shutil
-
-    ensure_package_on_workers(spark)
-    sf_abs = os.path.abspath(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_abs)
-    if key not in _PINDEX_CACHE:
-        from searchengine_spark.indexing.build import build_index
-        from searchengine_spark.indexing.index import SparkIndex
-
-        tag = os.path.basename(os.path.normpath(sf_abs))
-        path_hash = hashlib.md5(sf_abs.encode()).hexdigest()[:8]
-        scratch = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scratch")
-        out = os.path.join(scratch, f"gate_index_{os.getpid()}_{tag}_{path_hash}")
-        shutil.rmtree(out, ignore_errors=True)
-        build_index(spark, spark.read.parquet(f"{sf_dir}/documents.parquet"), out)
-        _PINDEX_CACHE[key] = SparkIndex(spark, out)
-    return _PINDEX_CACHE[key]
-
-
-_DINDEX_CACHE: dict = {}
+    """The index every index gate queries: the production build path with
+    no doc ids assigned (documents carry doc_id) — build_index's encoded
+    path (fused tokenize -> driver dictionary -> planned packed-key shuffle
+    -> postings + varbyte segments kernel -> parquet artifacts), read back
+    as a SparkIndex.  So the gates check the pipeline a build runs, against
+    the DuckDB oracle."""
+    return _gate_index(spark, sf_dir, "index", _build_index)
 
 
 def _persisted_index_dist(spark: SparkSession, sf_dir: str):
@@ -98,36 +137,8 @@ def _persisted_index_dist(spark: SparkSession, sf_dir: str):
     engages above BROADCAST_WEIGHTS_MAX_DOCS (4M docs); the gate corpora are
     tiny, so the cutoff is lowered around the build — the same forcing the
     parity tests use (tests/test_dist_build.py) — making the over-cutoff
-    plan's artifacts oracle-checked by the driver, not just pytest-checked.
-    Cache/path discipline identical to _persisted_index above."""
-    import hashlib
-    import os
-    import shutil
-
-    ensure_package_on_workers(spark)
-    sf_abs = os.path.abspath(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_abs)
-    if key not in _DINDEX_CACHE:
-        from searchengine_spark.indexing import build as bmod
-        from searchengine_spark.indexing.build import build_index
-        from searchengine_spark.indexing.index import SparkIndex
-
-        tag = os.path.basename(os.path.normpath(sf_abs))
-        path_hash = hashlib.md5(sf_abs.encode()).hexdigest()[:8]
-        scratch = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scratch")
-        out = os.path.join(scratch, f"gate_dindex_{os.getpid()}_{tag}_{path_hash}")
-        shutil.rmtree(out, ignore_errors=True)
-        orig = bmod.BROADCAST_WEIGHTS_MAX_DOCS
-        bmod.BROADCAST_WEIGHTS_MAX_DOCS = 1  # force the dist dispatch
-        try:
-            build_index(spark, spark.read.parquet(f"{sf_dir}/documents.parquet"), out)
-        finally:
-            bmod.BROADCAST_WEIGHTS_MAX_DOCS = orig
-        _DINDEX_CACHE[key] = SparkIndex(spark, out)
-    return _DINDEX_CACHE[key]
-
-
-_EINDEX_CACHE: dict = {}
+    plan's artifacts oracle-checked by the driver, not just pytest-checked."""
+    return _gate_index(spark, sf_dir, "dindex", _build_index_dist)
 
 
 def _persisted_embedding_index(spark: SparkSession, sf_dir: str):
@@ -135,28 +146,8 @@ def _persisted_embedding_index(spark: SparkSession, sf_dir: str):
     signature pass runs at build time and is written as a parquet artifact
     (bucket columns materialized at ingest); gates built on this verify the
     persisted candidate-generation path against the same DuckDB oracle as
-    the in-session queries.  Same cache/path discipline as
-    _persisted_index above."""
-    import hashlib
-    import os
-    import shutil
-
-    ensure_package_on_workers(spark)
-    sf_abs = os.path.abspath(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_abs)
-    if key not in _EINDEX_CACHE:
-        from searchengine_spark.pipeline.embedding_index import build_embedding_index
-
-        tag = os.path.basename(os.path.normpath(sf_abs))
-        path_hash = hashlib.md5(sf_abs.encode()).hexdigest()[:8]
-        scratch = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scratch")
-        out = os.path.join(scratch, f"gate_eindex_{os.getpid()}_{tag}_{path_hash}")
-        shutil.rmtree(out, ignore_errors=True)
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        _EINDEX_CACHE[key] = build_embedding_index(
-            spark, emb, out, n_planes=4, n_tables=8, seed=42
-        )
-    return _EINDEX_CACHE[key]
+    the in-session queries."""
+    return _gate_index(spark, sf_dir, "eindex", _build_embedding_index)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -171,14 +162,13 @@ def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- core engine queries ----------------------------------------------------
 def q_tokenize(spark, sf_dir):
-    return _engine(spark, sf_dir).tokens.select(
+    return tokenize(_docs(spark, sf_dir).select("doc_id", "text")).select(
         "doc_id", F.col("position").cast("long").alias("position"), "term"
     )
 
 
 def q_postings(spark, sf_dir):
-    e = _engine(spark, sf_dir)
-    return e.postings.select(
+    return _persisted_index(spark, sf_dir).postings.select(
         "term",
         "doc_id",
         "tf",
@@ -188,38 +178,41 @@ def q_postings(spark, sf_dir):
 
 
 def q_term_stats(spark, sf_dir):
-    return _engine(spark, sf_dir).term_stats.select("term", "df", "cf")
+    return _persisted_index(spark, sf_dir).term_stats.select("term", "df", "cf")
 
 
 def q_doc_stats(spark, sf_dir):
-    return _engine(spark, sf_dir).doc_stats.select(
+    return _persisted_index(spark, sf_dir).doc_stats.select(
         "doc_id", "doc_len", F.round("l2_weight", 4).alias("l2_r")
     )
 
 
 def q_corpus_stats(spark, sf_dir):
-    from searchengine_spark.indexing.logical import corpus_stats_table
-
-    e = _engine(spark, sf_dir)
-    return corpus_stats_table(e.doc_stats).select(
+    return _persisted_index(spark, sf_dir).corpus_stats.select(
         "n_docs", "total_tokens", F.round("avgdl", 4).alias("avgdl_r")
     )
 
 
 def _bool(query):
     def run(spark, sf_dir):
-        return boolean_search(_engine(spark, sf_dir), query)
+        return boolean_search(_persisted_index(spark, sf_dir), query)
 
     return run
 
 
 def _ranked(query, mode, lang_filter=None):
     def run(spark, sf_dir):
-        e = _engine(spark, sf_dir)
         doc_filter = None
         if lang_filter is not None:
-            doc_filter = e.docs.filter(F.col("lang") == lang_filter).select("doc_id")
-        return ranked_search(e, query, mode=mode, k=10, doc_filter=doc_filter, round_scores=4)
+            doc_filter = _docs(spark, sf_dir).filter(F.col("lang") == lang_filter).select("doc_id")
+        return ranked_search(
+            _persisted_index(spark, sf_dir),
+            query,
+            mode=mode,
+            k=10,
+            doc_filter=doc_filter,
+            round_scores=4,
+        )
 
     return run
 
@@ -316,12 +309,12 @@ def q_multimodal_decode(spark, sf_dir):
 
 
 def q_spell_correct(spark, sf_dir):
-    e = _engine(spark, sf_dir)
-    return spell_suggestions(e.term_stats.select("term"), SPELL_WORDS, top_n=5)
+    terms = _persisted_index(spark, sf_dir).term_stats.select("term")
+    return spell_suggestions(terms, SPELL_WORDS, top_n=5)
 
 
 def q_vocabulary(spark, sf_dir):
-    return _engine(spark, sf_dir).term_stats.select("term").distinct().orderBy("term")
+    return _persisted_index(spark, sf_dir).term_stats.select("term").distinct().orderBy("term")
 
 
 def q_ranked_bm25_wand(spark, sf_dir):
@@ -333,15 +326,15 @@ def q_ranked_bm25_wand(spark, sf_dir):
 
 
 def q_ranked_bm25_persisted(spark, sf_dir):
-    # the production build path (encoded build + parquet read-back)
-    # under the same DuckDB oracle as the in-session ranked_bm25 gate
+    # the production build path (encoded build + parquet read-back); kept
+    # as its own gate key, though ranked_bm25 now queries the same index
     return ranked_search(_persisted_index(spark, sf_dir), RANKED_Q, mode="bm25", k=10, round_scores=4)
 
 
 def q_postings_dist(spark, sf_dir):
     # B1-B4 through the DISTRIBUTED dictionary build (build_dist.py): the
     # over-cutoff plan's postings artifact must hash-match the same DuckDB
-    # oracle as the in-session engine's postings
+    # oracle as the encoded build's postings
     return _persisted_index_dist(spark, sf_dir).postings.select(
         "term",
         "doc_id",
@@ -367,7 +360,7 @@ def q_matches_mixed(spark, sf_dir):
     # Q7 scan-side predicate evaluation (phrase approximated as AND)
     from searchengine_spark.querying.boolean import matches_search
 
-    return matches_search(_engine(spark, sf_dir), BOOL_MIXED_Q)
+    return matches_search(_persisted_index(spark, sf_dir), BOOL_MIXED_Q)
 
 
 def q_ann_cosine_topk(spark, sf_dir):

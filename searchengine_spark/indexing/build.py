@@ -62,59 +62,6 @@ POSTINGS_SCHEMA = (
 RAW_POSTINGS_SCHEMA = "term string, doc_id long, tf long, positions array<long>"
 
 
-@engine_kernel
-def _postings_kernel(iterator):
-    """mapInPandas raw postings kernel: input partitions sorted by
-    (term, doc_id, position); output one RAW_POSTINGS_SCHEMA row per
-    (term, doc_id) with tf and the position list.  All numpy.  The
-    in-session engine (engine_api.DocumentsEngine) groups its token stream
-    with it.
-
-    Memory: pandas batches are processed as they STREAM — each batch emits
-    every complete (term, doc_id) group and carries only the trailing
-    incomplete group into the next batch, so peak per-partition memory is
-    O(batch + largest single group), not O(partition)."""
-    import numpy as np
-    import pandas as pd
-
-    def process(pdf):
-        term = pdf["term"].to_numpy()
-        doc = pdf["doc_id"].to_numpy(dtype=np.int64)
-        pos = pdf["position"].to_numpy(dtype=np.int64)
-        n = len(pdf)
-        change = np.empty(n, dtype=bool)
-        change[0] = True
-        change[1:] = (term[1:] != term[:-1]) | (doc[1:] != doc[:-1])
-        starts = np.flatnonzero(change)
-        return pd.DataFrame(
-            {
-                "term": term[starts],
-                "doc_id": doc[starts],
-                "tf": np.diff(np.append(starts, n)).astype(np.int64),
-                "positions": np.split(pos, starts[1:]),
-            }
-        )
-
-    carry = None
-    for pdf in iterator:
-        if pdf.empty:
-            continue
-        if carry is not None:
-            pdf = pd.concat([carry, pdf], ignore_index=True)
-            carry = None
-        # the last (term, doc_id) group may continue in the next batch:
-        # hold it back
-        last_term = pdf["term"].iloc[-1]
-        last_doc = pdf["doc_id"].iloc[-1]
-        tail_mask = (pdf["term"] == last_term) & (pdf["doc_id"] == last_doc)
-        split_at = len(pdf) - int(tail_mask.iloc[::-1].cummin().sum())
-        carry = pdf.iloc[split_at:].reset_index(drop=True)
-        if split_at:
-            yield process(pdf.iloc[:split_at])
-    if carry is not None and len(carry):
-        yield process(carry)
-
-
 class PhaseClock:
     """Wall seconds per named build phase (a manifest's ``phase_seconds``):
     ``lap(name)`` records the time since the previous lap, or since the

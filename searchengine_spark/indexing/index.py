@@ -33,7 +33,8 @@ class SparkIndex:
         self.postings = self._open_artifact("postings")
         self.doc_stats = self._open_artifact("doc_stats")
         self.term_stats = self._open_artifact("term_stats")
-        row = self._open_artifact("corpus_stats").collect()[0]
+        self.corpus_stats = self._open_artifact("corpus_stats")
+        row = self.corpus_stats.collect()[0]
         self.n_docs = int(row["n_docs"])
         self.total_tokens = int(row["total_tokens"])
         self.avgdl = float(row["avgdl"])

@@ -1,8 +1,10 @@
-"""Logical-plan building blocks shared by the persisted index build
-(build.py) and the index-free engine (engine_api.py).
+"""Logical-plan building blocks: the BM25 constants, the build's term_stats
+aggregate (build.py) and ``postings_all_table``, the
+pure-DataFrame postings plan the tests use as an independent reference for
+the build's kernels.
 
-Everything here is a pure DataFrame -> DataFrame function; Catalyst sees one
-composed plan either way.  Semantics cites are in build.py / SURVEY.md §2.
+Everything here is a pure DataFrame -> DataFrame function.  Semantics cites
+are in build.py / SURVEY.md §2.
 """
 
 from __future__ import annotations
@@ -20,42 +22,6 @@ def postings_all_table(tokens: DataFrame) -> DataFrame:
     return tokens.groupBy("term", "doc_id").agg(
         F.count("*").alias("tf"),
         F.sort_array(F.collect_list("position")).alias("positions"),
-    )
-
-
-def doc_stats_table(postings_all: DataFrame) -> DataFrame:
-    """B5/B6: doc_len counts emitted terms *including* empty ones; L_d
-    includes the empty term's tf (spimi.py:74-123)."""
-    return postings_all.groupBy("doc_id").agg(
-        F.sum("tf").alias("doc_len"),
-        F.sqrt(F.sum(F.pow(F.lit(1.0) + F.log("tf"), 2))).alias("l2_weight"),
-    )
-
-
-def corpus_stats_table(doc_stats: DataFrame) -> DataFrame:
-    return doc_stats.agg(
-        F.count("*").alias("n_docs"),
-        F.sum("doc_len").alias("total_tokens"),
-    ).withColumn("avgdl", F.col("total_tokens") / F.col("n_docs"))
-
-
-def weighted_postings_table(postings_all: DataFrame, doc_stats: DataFrame, avgdl: float) -> DataFrame:
-    """K3/K4 precomputation; the empty term is excluded from the index
-    (spimi.py:137)."""
-    return (
-        postings_all.filter(F.col("term") != "")
-        .join(doc_stats.select("doc_id", "doc_len", "l2_weight"), "doc_id")
-        .withColumn(
-            "wdt_bm25",
-            (F.lit(BM25_K1 + 1.0) * F.col("tf"))
-            / (
-                F.lit(BM25_K1)
-                * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * (F.col("doc_len") / F.lit(avgdl)))
-                + F.col("tf")
-            ),
-        )
-        .withColumn("wdt_tfidf_norm", (F.lit(1.0) + F.log("tf")) / F.col("l2_weight"))
-        .drop("doc_len", "l2_weight")
     )
 
 

@@ -3,9 +3,12 @@ queries()/oracle_sql() key sets agree.  The full Spark-vs-DuckDB value gate is
 tools/check_gate.py (run at sf0.001 and sf0.01 before each commit touching
 the entry surface)."""
 
+import os
+import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def test_keys_match():
@@ -41,20 +44,54 @@ def test_gate_sample(spark):
         assert srows == drows, f"{name} mismatch"
 
 
-def test_engine_cache_keys_on_application_id(spark):
-    # a cache entry from another (stopped) session must be evicted, and a
-    # recycled id(spark) can never alias a stale engine: the key is the
-    # sessions's applicationId, not the interpreter id
-    from searchengine_spark import engine_api
-    from searchengine_spark.engine_api import _ENGINE_CACHE, documents_engine
+def test_engine_cache_keys_on_application_id(spark, tmp_path, monkeypatch):
+    # an entry from another (stopped) session is evicted together with its
+    # index directory, and a recycled id(spark) can never alias a stale
+    # index: the key is the session's applicationId, not the interpreter id
+    import __spark_entry__ as m
 
-    sf_dir = "/root/testdata/sf0.001"
-    stale = object()  # stands in for an engine whose session is gone
-    _ENGINE_CACHE.clear()
-    _ENGINE_CACHE[("app-from-a-dead-session", sf_dir)] = stale
+    monkeypatch.setattr(m, "_GATE_INDEXES", {})
+    monkeypatch.setattr(m, "_GATE_SCRATCH", str(tmp_path))
+    sf_dir = "/data/sf0.001"  # never read: the build below is a stand-in
+    stale_dir = tmp_path / "gate_index_1_sf0.001_dead"
+    stale_dir.mkdir()
+    # stands in for an index whose session is gone
+    m._GATE_INDEXES[("index", "app-from-a-dead-session", sf_dir)] = (object(), str(stale_dir))
 
-    eng = documents_engine(spark, sf_dir)
+    built = []
+
+    def build(spark_, sf_dir_, out):
+        os.makedirs(out)
+        built.append(out)
+        return object()
+
+    idx = m._gate_index(spark, sf_dir, "index", build)
     app_id = spark.sparkContext.applicationId
-    assert (app_id, sf_dir) in _ENGINE_CACHE
-    assert all(k[0] == app_id for k in _ENGINE_CACHE), "stale entry not evicted"
-    assert documents_engine(spark, sf_dir) is eng  # same session -> cached
+    assert list(m._GATE_INDEXES) == [("index", app_id, sf_dir)], "stale entry not evicted"
+    assert not stale_dir.exists(), "evicted index dir left behind"
+    assert m._gate_index(spark, sf_dir, "index", build) is idx  # same session -> cached
+    assert len(built) == 1 and os.path.dirname(built[0]) == str(tmp_path)
+    # each kind (encoded, dist, embedding) has its own entry and directory
+    m._gate_index(spark, sf_dir, "eindex", build)
+    assert len(built) == 2 and built[0] != built[1]
+
+
+def test_gate_index_dirs_removed_at_exit(tmp_path):
+    """A process that built gate indexes leaves no directory behind."""
+    script = f"""
+import os, sys, types
+sys.path.insert(0, {REPO!r})
+import __spark_entry__ as m
+m._GATE_SCRATCH = {str(tmp_path)!r}
+spark = types.SimpleNamespace(
+    _searchengine_pkg_added=True,
+    sparkContext=types.SimpleNamespace(applicationId="app-1"),
+)
+def build(spark, sf_dir, out):
+    os.makedirs(out)
+    return out
+for kind in ("index", "dindex", "eindex"):
+    assert os.path.isdir(m._gate_index(spark, "/data/sf0.001", kind, build))
+"""
+    subprocess.run([sys.executable, "-c", script], check=True, timeout=300)
+    assert os.listdir(tmp_path) == []

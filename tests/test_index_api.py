@@ -111,9 +111,12 @@ def test_build_leaves_no_persisted_rdds(spark, tmp_path):
 def test_postings_kernel_streams_across_arrow_batches(spark, tmp_path):
     """With a tiny Arrow batch size, (term, doc_id) groups split across
     batches; the kernel's carry logic must reassemble them — identical
-    output to the in-session logical plan."""
-    from searchengine_spark.engine_api import DocumentsEngine
+    output to the pure-DataFrame postings plan."""
+    from pyspark.sql import functions as F
+
     from searchengine_spark.indexing import SparkIndex, build_index
+    from searchengine_spark.indexing.logical import postings_all_table
+    from searchengine_spark.text.spark_tokenize import tokenize
 
     rows = [(i, " ".join(["alpha"] * 10 + [f"tok{i % 5}"] * 5 + ["omega"])) for i in range(30)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
@@ -129,12 +132,10 @@ def test_postings_kernel_streams_across_arrow_batches(spark, tmp_path):
         (r["term"], r["doc_id"]): (r["tf"], list(r["positions"]))
         for r in idx.postings.collect()
     }
-    eng = DocumentsEngine(spark, docs)
+    ref = postings_all_table(tokenize(docs)).filter(F.col("term") != "")
     want = {
-        (r["term"], r["doc_id"]): (r["tf"], sorted(r["positions"]))
-        for r in eng.postings.collect()
+        (r["term"], r["doc_id"]): (r["tf"], sorted(r["positions"])) for r in ref.collect()
     }
-    eng.unpersist()
     assert got == want
     # the segments kernel concatenates the tiny batches before cutting
     # blocks: decoded blobs must still equal the postings exactly

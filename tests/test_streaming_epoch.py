@@ -39,10 +39,11 @@ def _turns(spark, conv_start, n_convs):
 
 
 def _reference_delta(spark, df, base, n_partitions):
-    """The token-stream plan: tokenize() + the raw pandas postings kernel,
-    doc stats from two groupBys over the token stream."""
+    """The token-stream plan: tokenize() + the pure-DataFrame postings
+    plan, doc stats from two groupBys over the token stream."""
     from pyspark.sql import functions as F
 
+    from searchengine_spark.indexing.logical import postings_all_table
     from searchengine_spark.text.spark_tokenize import tokenize
 
     assigned = bmod.assign_doc_ids(df, n_partitions=n_partitions)
@@ -50,12 +51,8 @@ def _reference_delta(spark, df, base, n_partitions):
         "title", F.concat_ws(":", "conv_id", "turn_idx")
     )
     tokens = tokenize(docs, text_col="text", id_col="doc_id")
-    raw = (
-        tokens.filter(F.col("term") != "")
-        .select("term", "doc_id", "position")
-        .repartitionByRange(n_partitions, "term", "doc_id")
-        .sortWithinPartitions("term", "doc_id", "position")
-        .mapInPandas(bmod._postings_kernel, schema=bmod.RAW_POSTINGS_SCHEMA)
+    raw = spark.createDataFrame(
+        postings_all_table(tokens.filter(F.col("term") != "")).rdd, bmod.RAW_POSTINGS_SCHEMA
     )
     stats = (
         tokens.groupBy("term", "doc_id")
