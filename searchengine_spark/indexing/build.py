@@ -27,8 +27,13 @@ Artifacts (all parquet, under one index directory):
                  (the reference recomputes wdt per posting per query,
                  rankedquery.py:18-25 — its slow path)
   doc_stats/     doc_id, title, doc_len, l2_weight (+ carried metadata cols)
-  term_stats/    term, df, cf, max_wdt_bm25 (broadcast at query time; plays
-                 the SQLite dictionary's role, spimi.py:25-29)
+  term_stats/    term, df, cf, weight maxima and per-term block-max meta
+                 (broadcast at query time; plays the SQLite dictionary's
+                 role, spimi.py:25-29) — merged on the driver from the
+                 fused sink's per-partition block summaries, as the
+                 reference records its dictionary in the pass that writes
+                 postings.bin (spimi.py:238-266); the two-pass shapes
+                 aggregate the segments in Spark instead
   corpus_stats/  n_docs, total_tokens, avgdl (1 row)
   manifest.json  per-stage lineage + build metrics (postings/sec, skew ratio)
 
@@ -51,6 +56,7 @@ from pyspark.sql import functions as F
 
 from ..worker import engine_kernel
 from .logical import BM25_B, BM25_K1, term_stats_table
+from .segments import _merge_term_stats_tables
 
 META_COLS = ("conv_id", "turn_idx", "role", "tool")
 
@@ -239,6 +245,13 @@ def term_stats_with_block_meta(segments_df: DataFrame, postings_df: DataFrame | 
     re-scanned and joined.  Blocks partition a term's postings exactly (a
     term split across range partitions still groups correctly), so the sums
     and maxima are identical by construction; the term_stats gate pins it.
+
+    A build or compaction whose fused sink ran merges the same dictionary
+    on the driver from per-partition block summaries instead
+    (segments.block_summary, _merge_term_stats_tables) — no job.  This
+    aggregation serves every other shape: the two-pass sinks (Iceberg,
+    non-local masters), resumed builds, build_encoded_dist, dictionaries
+    over VOCAB_ENCODE_MAX, and the streaming tier merge.
 
     ``postings_df`` is only consulted for LEGACY segment artifacts written
     before the per-block sum_tf column existed (a resumed pre-change build
@@ -463,6 +476,20 @@ def _postings_kernel_packed(
 # hidden names, so a tmp left by a killed task is never read as data) and
 # carry this marker so _finalize_side_segments can sweep them
 _SIDE_TMP = ".tmp-"
+# the fused kernel's per-partition term summaries sit beside the segment
+# parts under this "_" prefix (also skipped by Spark's listing) until
+# _finalize_side_segments reads and removes them
+_SIDE_SUMMARY = "_summary-"
+
+
+def _side_write(table, seg_dir: str, name: str) -> None:
+    """One side-written file: a hidden tmp name, then an atomic rename, so a
+    retried task attempt overwrites its own output."""
+    import pyarrow.parquet as pq
+
+    tmp = os.path.join(seg_dir, f".{name}{_SIDE_TMP}{os.getpid()}")
+    pq.write_table(table, tmp, compression="snappy")
+    os.replace(tmp, os.path.join(seg_dir, name))
 
 
 def _partition_kernel(postings_of, seg_dir: str | None = None):
@@ -483,7 +510,14 @@ def _partition_kernel(postings_of, seg_dir: str | None = None):
     pinned cores).  Task retries are idempotent: the part file is named by
     partition id and committed with a hidden write-to-tmp + atomic rename;
     the _SUCCESS marker is written only after the whole job returns
-    (_finalize_side_segments)."""
+    (_finalize_side_segments).
+
+    Beside its part file the fused kernel side-writes the partition's term
+    summary (segments.block_summary: the term_stats rows of its term runs,
+    reduced from the block rows it just cut), under the same tmp+rename
+    scheme and a hidden ``_summary-`` name.  The driver merges the
+    summaries into the dictionary, so the build's term_stats and metrics
+    phases run no Spark job."""
 
     @engine_kernel
     def fn(batches):
@@ -492,19 +526,16 @@ def _partition_kernel(postings_of, seg_dir: str | None = None):
             return
         if seg_dir is not None:
             import pyarrow as pa
-            import pyarrow.parquet as pq
             from pyspark import TaskContext
 
-            from searchengine_spark.indexing.segments import block_batch
+            from searchengine_spark.indexing.segments import block_batch, block_summary
 
             run_starts, run_terms, doc, tf, flat_pos, w_bm, w_ti = postings
             seg = block_batch(run_starts, run_terms, doc, tf, w_bm, w_ti, flat_pos)
             ctx = TaskContext.get()
             pid = ctx.partitionId() if ctx is not None else 0
-            name = f"part-{pid:05d}-fused.parquet"
-            tmp = os.path.join(seg_dir, f".{name}{_SIDE_TMP}{os.getpid()}")
-            pq.write_table(pa.Table.from_batches([seg]), tmp, compression="snappy")
-            os.replace(tmp, os.path.join(seg_dir, name))
+            _side_write(pa.Table.from_batches([seg]), seg_dir, f"part-{pid:05d}-fused.parquet")
+            _side_write(block_summary(seg), seg_dir, f"{_SIDE_SUMMARY}{pid:05d}.parquet")
             del seg
         yield from _postings_batches(*postings)
 
@@ -572,7 +603,9 @@ def _side_write_ok(spark: SparkSession, path: str) -> bool:
     return spark.sparkContext.master.startswith("local") and "://" not in path and not path.startswith("file:")
 
 
-def _finalize_side_segments(spark: SparkSession, seg_dir: str, n_postings: int) -> None:
+def _finalize_side_segments(
+    spark: SparkSession, seg_dir: str, n_postings: int, max_terms: int | None = None
+):
     """Commit the side-written segments dir after the producing job
     returned — the same completion contract as a Spark sink, so
     _stage_done/resume semantics are unchanged.  Tmp files of failed or
@@ -581,12 +614,30 @@ def _finalize_side_segments(spark: SparkSession, seg_dir: str, n_postings: int) 
     on read-back), but only when there were no postings: postings rows with
     no visible part files mean the side-write did not land where the driver
     can see it, and committing an empty segments artifact would be a
-    silently wrong index."""
+    silently wrong index.
+
+    Returns the kernels' term summaries as Arrow tables, read with pyarrow
+    before their files are removed (no summary file outlives this call, so
+    none reaches an artifact) — or None when their footers hold more than
+    ``max_terms`` rows (default VOCAB_ENCODE_MAX, the driver dictionary's
+    cutoff): the caller then aggregates the dictionary in Spark."""
+    import pyarrow.parquet as pq
+
     from .segments import SEGMENT_SCHEMA
 
+    if max_terms is None:
+        max_terms = VOCAB_ENCODE_MAX
     for name in os.listdir(seg_dir):
         if name.startswith(".") and _SIDE_TMP in name:
             os.remove(os.path.join(seg_dir, name))
+    paths = sorted(
+        os.path.join(seg_dir, f) for f in os.listdir(seg_dir) if f.startswith(_SIDE_SUMMARY)
+    )
+    summaries = None
+    if sum(pq.read_metadata(p).num_rows for p in paths) <= max_terms:
+        summaries = [pq.read_table(p) for p in paths]
+    for p in paths:
+        os.remove(p)
     if not any(f.endswith(".parquet") and not f.startswith((".", "_")) for f in os.listdir(seg_dir)):
         if n_postings:
             raise RuntimeError(
@@ -594,8 +645,23 @@ def _finalize_side_segments(spark: SparkSession, seg_dir: str, n_postings: int) 
                 f"part files are visible in {seg_dir}"
             )
         spark.createDataFrame([], SEGMENT_SCHEMA).write.mode("overwrite").parquet(seg_dir)
-        return  # Spark's committer wrote _SUCCESS
+        return summaries  # Spark's committer wrote _SUCCESS
     with open(os.path.join(seg_dir, "_SUCCESS"), "w"):
+        pass
+    return summaries
+
+
+def _write_term_stats(table, path: str) -> None:
+    """The dictionary artifact written on the driver: one term-sorted
+    parquet file plus _SUCCESS, replacing whatever ``path`` held."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    pq.write_table(table, os.path.join(path, "part-00000.parquet"), compression="snappy")
+    with open(os.path.join(path, "_SUCCESS"), "w"):
         pass
 
 
@@ -1118,13 +1184,22 @@ class IndexBuilder:
         packed_cache=None,
         seg_kernel=None,
         segments_done=False,
+        summaries=None,
     ) -> dict:
         """Shared build tail of both postings producers: segments,
         dictionary, metrics, cache release.  The producer hands over its
         sorted postings source as ``packed_cache`` with the ``seg_kernel``
         that cuts segment blocks from it, or arrives with segments already
         written (``segments_done``, the fused sink).  A resumed build with
-        neither re-sorts the postings artifact and encodes that."""
+        neither re-sorts the postings artifact and encodes that.
+
+        The fused sink also hands over its per-partition term summaries
+        (``summaries``, None when they exceed VOCAB_ENCODE_MAX rows): the
+        dictionary and the metrics' df and block totals then come from one
+        driver-side merge (_merge_term_stats_tables) and run no job.  Every
+        other shape — the two-pass sinks, resumed builds,
+        build_encoded_dist — aggregates the segments in Spark
+        (term_stats_with_block_meta)."""
         lap = clock.lap
         postings_df = self._read_stage("postings")
 
@@ -1167,7 +1242,14 @@ class IndexBuilder:
         # dictionary collect it already pays — zero extra jobs at query time
         # (wand.py metadata mode).
         term_stats_cache = None
-        if not self._stage_done("term_stats") or not resume:
+        term_stats = None  # the driver-merged dictionary (Arrow)
+        if summaries is not None:
+            set_desc("phase:term_stats — driver merge of the fused sink's block summaries")
+            term_stats = _merge_term_stats_tables(summaries)
+            _write_term_stats(term_stats, os.path.join(self.out_dir, "term_stats"))
+            self._mark_stage("term_stats")
+            lap("term_stats")
+        elif not self._stage_done("term_stats") or not resume:
             set_desc("phase:term_stats — dictionary + block-max meta")
             # persisted: the metrics phase below aggregates the SAME
             # vocab-sized frame (max/avg df, Σ n_blocks, Σ postings_bytes)
@@ -1230,33 +1312,42 @@ class IndexBuilder:
         n_postings = (
             sum(p["rows"] for p in lineage) if lineage else postings_df.count()
         )
-        stats_src = (
-            term_stats_cache
-            if term_stats_cache is not None
-            else self._read_stage("term_stats")
-        )
-        if "postings_bytes" in stats_src.columns:
-            meta_row = stats_src.agg(
-                F.max("df").alias("max_df"),
-                F.avg("df").alias("avg_df"),
-                F.sum("n_blocks").alias("n_blocks"),
-                F.sum("postings_bytes").alias("bytes_compressed"),
-            ).collect()[0]
+        if term_stats is not None:
+            df = term_stats.column("df").to_numpy()
+            meta_row = {
+                "max_df": int(df.max()) if len(df) else None,
+                "avg_df": float(df.sum()) / len(df) if len(df) else None,
+                "n_blocks": int(term_stats.column("n_blocks").to_numpy().sum()),
+                "bytes_compressed": int(term_stats.column("postings_bytes").to_numpy().sum()),
+            }
         else:
-            # legacy dictionary artifact (resumed build predating the
-            # postings_bytes column): fall back to the segments scan
-            df_row = stats_src.agg(
-                F.max("df").alias("max_df"), F.avg("df").alias("avg_df")
-            ).collect()[0]
-            seg_row = (
-                self._read_stage("segments")
-                .agg(
-                    F.count("*").alias("n_blocks"),
-                    F.sum(F.octet_length("postings_bin")).alias("bytes_compressed"),
-                )
-                .collect()[0]
+            stats_src = (
+                term_stats_cache
+                if term_stats_cache is not None
+                else self._read_stage("term_stats")
             )
-            meta_row = {**df_row.asDict(), **seg_row.asDict()}
+            if "postings_bytes" in stats_src.columns:
+                meta_row = stats_src.agg(
+                    F.max("df").alias("max_df"),
+                    F.avg("df").alias("avg_df"),
+                    F.sum("n_blocks").alias("n_blocks"),
+                    F.sum("postings_bytes").alias("bytes_compressed"),
+                ).collect()[0]
+            else:
+                # legacy dictionary artifact (resumed build predating the
+                # postings_bytes column): fall back to the segments scan
+                df_row = stats_src.agg(
+                    F.max("df").alias("max_df"), F.avg("df").alias("avg_df")
+                ).collect()[0]
+                seg_row = (
+                    self._read_stage("segments")
+                    .agg(
+                        F.count("*").alias("n_blocks"),
+                        F.sum(F.octet_length("postings_bin")).alias("bytes_compressed"),
+                    )
+                    .collect()[0]
+                )
+                meta_row = {**df_row.asDict(), **seg_row.asDict()}
         df_stats = meta_row
         seg_stats = meta_row
         if term_stats_cache is not None:
@@ -1416,6 +1507,7 @@ class IndexBuilder:
         packed_cache = None
         seg_kernel = None
         fused_segments_done = False
+        summaries = None
         if not self._stage_done("postings") or not resume:
             stream = _planned_token_stream(spark, types, vocab, plan, pack_bits)
             seg_dir = self._stage_target("segments")
@@ -1449,7 +1541,7 @@ class IndexBuilder:
                 )
                 self._write_stage(stream.mapInArrow(kernel, schema=POSTINGS_SCHEMA), "postings")
                 self._mark_stage("postings")
-                _finalize_side_segments(
+                summaries = _finalize_side_segments(
                     spark,
                     seg_dir,
                     sum(p["rows"] for p in self.manifest["stages"]["postings"]["partitions"]),
@@ -1490,6 +1582,7 @@ class IndexBuilder:
             packed_cache=packed_cache,
             seg_kernel=seg_kernel,
             segments_done=fused_segments_done,
+            summaries=summaries,
         )
 
 

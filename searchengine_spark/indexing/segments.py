@@ -38,11 +38,11 @@ SEGMENT_SCHEMA = T.StructType(
         T.StructField("doc_id_max", T.LongType()),
         T.StructField("max_wdt_bm25", T.DoubleType()),
         T.StructField("max_wdt_tfidf_norm", T.DoubleType()),
-        # per-block Σtf: lets the dictionary (df, cf, block-max meta) be
-        # aggregated from these ~n_postings/BLOCK_SIZE block rows instead of
-        # re-scanning the full postings table — a width-independent driver
-        # barrier at build time (term_stats phase) that the scaling fit
-        # charged at ~5-7 s/build regardless of corpus or core count
+        # per-block Σtf: the dictionary's cf.  The fused sink reduces these
+        # block rows to per-term summaries in the kernel (block_summary) and
+        # the driver merges them; the two-pass shapes aggregate the same
+        # ~n_postings/BLOCK_SIZE rows in Spark (term_stats_with_block_meta)
+        # — neither re-scans the full postings table
         T.StructField("sum_tf", T.LongType()),
         T.StructField("postings_bin", T.BinaryType()),
     ]
@@ -111,6 +111,157 @@ def term_runs(terms):
     ree = pc.run_end_encode(terms)
     ends = ree.run_ends.to_numpy().astype(np.int64)
     return np.concatenate(([0], ends[:-1])), ree.values
+
+
+# --- the dictionary from block rows ------------------------------------------
+# term_stats columns (the order term_stats_with_block_meta writes them) and
+# the length of the per-term block-max top lists WAND reads
+TERM_STATS_FIELDS = (
+    "term",
+    "df",
+    "cf",
+    "max_wdt_bm25",
+    "max_wdt_tfidf_norm",
+    "top_block_max_bm25",
+    "min_block_max_bm25",
+    "top_block_max_tfidf_norm",
+    "min_block_max_tfidf_norm",
+    "n_blocks",
+    "postings_bytes",
+)
+TOP_BLOCK_MAX = 32
+
+
+def _term_stats_schema():
+    import pyarrow as pa
+
+    f64, i64 = pa.float64(), pa.int64()
+    types = (pa.string(), i64, i64, f64, f64, pa.list_(f64), f64, pa.list_(f64), f64, i64, i64)
+    return pa.schema(list(zip(TERM_STATS_FIELDS, types)))
+
+
+def _top_lists(values, group, n_groups: int):
+    """Per-group top-TOP_BLOCK_MAX values, descending, as a ListArray —
+    ``group`` is each value's group index, non-decreasing."""
+    import numpy as np
+    import pyarrow as pa
+
+    counts = np.bincount(group, minlength=n_groups)
+    first = np.cumsum(counts) - counts
+    # group ascending, value descending: a group's values stay in its slots
+    order = np.lexsort((-values, group))
+    keep = np.arange(len(values)) - first[group] < TOP_BLOCK_MAX
+    offsets = np.zeros(n_groups + 1, dtype=np.int32)
+    np.cumsum(np.minimum(counts, TOP_BLOCK_MAX), out=offsets[1:])
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(values[order][keep]))
+
+
+def _reduce_term_groups(t):
+    """Rows of a term_stats-shaped table whose equal terms are adjacent ->
+    one row per term, with the combiners of the Spark dictionary merge
+    (streaming.ingest._merge_term_stats): df, cf and n_blocks add (null as
+    0), weight maxima take the max and block-max minima the min, the top
+    lists concatenate and keep the largest TOP_BLOCK_MAX, and
+    postings_bytes adds unless a row's is null (an unknown footprint), which
+    makes the term's total null."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if not t.num_rows:
+        return t
+    starts, terms = term_runs(t.column("term").combine_chunks())
+    n_groups = len(starts)
+
+    def col(name):
+        return t.column(name).combine_chunks()
+
+    def add(name):
+        return pa.array(np.add.reduceat(pc.fill_null(col(name), 0).to_numpy(), starts))
+
+    def extreme(ufunc, name):
+        return pa.array(ufunc.reduceat(col(name).to_numpy(), starts))
+
+    def top(name):
+        lists = col(name)
+        lens = pc.fill_null(pc.list_value_length(lists), 0).to_numpy()
+        row_group = np.repeat(np.arange(n_groups), np.diff(np.append(starts, t.num_rows)))
+        values = pc.list_flatten(lists).to_numpy()
+        return _top_lists(values, np.repeat(row_group, lens), n_groups)
+
+    known = pc.is_valid(col("postings_bytes")).to_numpy(zero_copy_only=False)
+    postings_bytes = pa.array(
+        np.add.reduceat(pc.fill_null(col("postings_bytes"), 0).to_numpy(), starts),
+        mask=~np.logical_and.reduceat(known, starts),
+    )
+    return pa.table(
+        [
+            terms,
+            add("df"),
+            add("cf"),
+            extreme(np.maximum, "max_wdt_bm25"),
+            extreme(np.maximum, "max_wdt_tfidf_norm"),
+            top("top_block_max_bm25"),
+            extreme(np.minimum, "min_block_max_bm25"),
+            top("top_block_max_tfidf_norm"),
+            extreme(np.minimum, "min_block_max_tfidf_norm"),
+            add("n_blocks"),
+            postings_bytes,
+        ],
+        schema=_term_stats_schema(),
+    )
+
+
+def block_summary(seg):
+    """One partition's segment rows (block_batch output) -> its term_stats
+    rows, one per term run: each block is a one-block dictionary row (df =
+    n_postings, cf = sum_tf, its maxima as the top and min block maxima,
+    postings_bytes = its blob length), reduced per term.  A term striped
+    over several partitions has a row in each partition's summary; the
+    driver merges them (_merge_term_stats_tables)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = seg.num_rows
+    one_each = pa.array(np.arange(n + 1, dtype=np.int32))
+    bm, ti = seg.column("max_wdt_bm25"), seg.column("max_wdt_tfidf_norm")
+    rows = pa.table(
+        [
+            seg.column("term"),
+            seg.column("n_postings").cast(pa.int64()),
+            seg.column("sum_tf"),
+            bm,
+            ti,
+            pa.ListArray.from_arrays(one_each, bm),
+            bm,
+            pa.ListArray.from_arrays(one_each, ti),
+            ti,
+            pa.array(np.ones(n, dtype=np.int64)),
+            pc.binary_length(seg.column("postings_bin")).cast(pa.int64()),
+        ],
+        schema=_term_stats_schema(),
+    )
+    return _reduce_term_groups(rows)
+
+
+def _merge_term_stats_tables(tables):
+    """Merge term_stats-shaped Arrow tables — per-partition block summaries,
+    and an existing dictionary with the summaries of a delta — into one
+    term-sorted dictionary (a term may have a row in every input).  A table
+    read from a dictionary written before the postings_bytes column existed
+    merges as an unknown (null) footprint."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    schema = _term_stats_schema()
+    parts = []
+    for t in tables:
+        if "postings_bytes" not in t.column_names:
+            t = t.append_column("postings_bytes", pa.nulls(t.num_rows, pa.int64()))
+        parts.append(t.select(list(TERM_STATS_FIELDS)).cast(schema))
+    t = pa.concat_tables(parts) if parts else schema.empty_table()
+    return _reduce_term_groups(t.take(pc.sort_indices(t, [("term", "ascending")])))
 
 
 @engine_kernel

@@ -108,7 +108,8 @@ def read_directory_corpus(spark: SparkSession, path: str) -> DataFrame:
             # versions); message substrings are only the legacy fallback for
             # errors raised without a class
             error_class = None
-            get_cls = getattr(e, "getErrorClass", None)
+            # getCondition replaces the deprecated getErrorClass (pyspark 4)
+            get_cls = getattr(e, "getCondition", None) or getattr(e, "getErrorClass", None)
             if callable(get_cls):
                 try:
                     error_class = get_cls()

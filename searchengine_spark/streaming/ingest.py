@@ -17,7 +17,8 @@ supports Lucene-style *segment deltas*:
       first: merge every delta (one range shuffle) and cut weighted
       postings + block-max segments in one pass -> a standard SparkIndex
       later: weight and cut ONLY the new deltas (no shuffle — they are
-      already sorted) and append them; merge the dictionary
+      already sorted) and append them; merge the dictionary (on the
+      driver, from the cut's per-partition term summaries)
 
 Deltas deliberately carry RAW tf/positions, not scoring weights: wdt depends
 on avgdl, a corpus-global statistic that drifts as turns arrive — weights are
@@ -49,6 +50,7 @@ from pyspark.sql import functions as F
 from ..data.transcripts import spark_schema
 from ..indexing import build as B
 from ..indexing.build import IndexBuilder, assign_doc_ids
+from ..indexing.segments import _merge_term_stats_tables
 
 
 def _swap_dir(new: str, final: str, prev: str) -> None:
@@ -101,7 +103,12 @@ def _merge_term_stats(old: DataFrame, delta: DataFrame) -> DataFrame:
     full-outer join, NOT a re-aggregation over the postings: df/cf add,
     max_wdt_* take the max, block-max top lists concat+resort+slice(32),
     min block maxima take the min, block counts add.  Every combiner is
-    associative, so repeated incremental compactions compose exactly."""
+    associative, so repeated incremental compactions compose exactly.
+
+    An incremental compaction whose fused side-write ran merges on the
+    driver instead (segments._merge_term_stats_tables, the same combiners);
+    this Spark merge serves the two-pass shape and dictionaries over
+    VOCAB_ENCODE_MAX."""
     # a pre-postings_bytes dictionary artifact has an UNKNOWN footprint, not
     # a zero one: it merges as null, so a term it holds keeps a null total
     # and WAND falls back to its block-count gate for that term (the column
@@ -615,11 +622,15 @@ class StreamingIndexer:
             .sortWithinPartitions("term", "doc_id")
         )
 
-    def _cut_postings_segments(self, sorted_raw: DataFrame, avgdl: float, weights_bc, lo: int, out: str) -> int:
+    def _cut_postings_segments(
+        self, sorted_raw: DataFrame, avgdl: float, weights_bc, lo: int, out: str, max_terms: int
+    ):
         """Weight sorted raw postings and write out/postings and
         out/segments from them — the fused side-write when _side_write_ok
         holds, else two passes over a persisted input.  Returns the number
-        of postings written (from the parquet footers, no count job)."""
+        of postings written (from the parquet footers, no count job) and
+        the fused kernels' term summaries — None after two passes, or when
+        they hold more than ``max_terms`` rows (_finalize_side_segments)."""
         from ..indexing.segments import SEGMENT_SCHEMA
 
         spark = self.spark
@@ -633,8 +644,7 @@ class StreamingIndexer:
                 B._partition_kernel(source, seg_dir=seg_dir), schema=B.POSTINGS_SCHEMA
             ).write.mode("overwrite").parquet(post_dir)
             n_postings = sum(p["rows"] for p in B._partition_lineage(post_dir))
-            B._finalize_side_segments(spark, seg_dir, n_postings)
-            return n_postings
+            return n_postings, B._finalize_side_segments(spark, seg_dir, n_postings, max_terms)
         spark.sparkContext.setJobDescription("phase:postings+segments — two passes")
         cached = sorted_raw.persist()
         cached.mapInArrow(B._partition_kernel(source), schema=B.POSTINGS_SCHEMA).write.mode(
@@ -644,7 +654,7 @@ class StreamingIndexer:
             B._segments_partition_kernel(source), schema=SEGMENT_SCHEMA
         ).write.mode("overwrite").parquet(seg_dir)
         cached.unpersist()
-        return sum(p["rows"] for p in B._partition_lineage(post_dir))
+        return sum(p["rows"] for p in B._partition_lineage(post_dir)), None
 
     def _write_corpus_stats(self, n_docs: int, total_tokens: int, avgdl: float) -> None:
         """The one-row corpus_stats artifact, written with pyarrow on the
@@ -714,18 +724,30 @@ class StreamingIndexer:
         else:
             weights_bc = spark.sparkContext.broadcast(weights)
             raw = raw.sortWithinPartitions("term", "doc_id")
-        n_postings_delta = self._cut_postings_segments(raw, avgdl_used, weights_bc, lo, stage)
+        ts_dir = os.path.join(self.index_dir, "term_stats")
+        old_terms = sum(p["rows"] for p in B._partition_lineage(ts_dir))
+        n_postings_delta, summaries = self._cut_postings_segments(
+            raw, avgdl_used, weights_bc, lo, stage, B.VOCAB_ENCODE_MAX - old_terms
+        )
         if weights_bc is not None:
             weights_bc.unpersist()
         clock.lap("postings_segments")
 
-        # vocab-sized merge of the dictionary (not an O(index) re-aggregation)
+        # vocab-sized merge of the dictionary (not an O(index)
+        # re-aggregation): on the driver, the old dictionary with the fused
+        # kernels' delta summaries; otherwise in Spark
         set_desc("phase:term_stats — delta dictionary merge")
-        old_ts = spark.read.parquet(os.path.join(self.index_dir, "term_stats"))
-        delta_ts = B.term_stats_with_block_meta(spark.read.parquet(os.path.join(stage, "segments")))
-        _merge_term_stats(old_ts, delta_ts).write.mode("overwrite").parquet(
-            os.path.join(stage, "term_stats")
-        )
+        staged_ts = os.path.join(stage, "term_stats")
+        if summaries is not None:
+            import pyarrow.parquet as pq
+
+            B._write_term_stats(
+                _merge_term_stats_tables([pq.read_table(ts_dir), *summaries]), staged_ts
+            )
+        else:
+            old_ts = spark.read.parquet(ts_dir)
+            delta_ts = B.term_stats_with_block_meta(spark.read.parquet(os.path.join(stage, "segments")))
+            _merge_term_stats(old_ts, delta_ts).write.mode("overwrite").parquet(staged_ts)
         clock.lap("term_stats")
 
         # publish: tagged appends, then the dictionary and corpus stats
@@ -820,12 +842,18 @@ class StreamingIndexer:
         # weighted and cut in one pass
         raw = spark.read.parquet(*[os.path.join(self._epoch_dir(e), "postings_raw") for e in eids])
         merged = self._joined_ranged(raw, spark.read.parquet(doc_stats_dir), n_docs)
-        n_postings = self._cut_postings_segments(merged, avgdl, None, 0, self.index_dir)
+        n_postings, summaries = self._cut_postings_segments(
+            merged, avgdl, None, 0, self.index_dir, B.VOCAB_ENCODE_MAX
+        )
         clock.lap("postings_segments")
         set_desc("phase:term_stats — dictionary + block-max meta")
-        B.term_stats_with_block_meta(
-            spark.read.parquet(os.path.join(self.index_dir, "segments"))
-        ).write.mode("overwrite").parquet(os.path.join(self.index_dir, "term_stats"))
+        ts_dir = os.path.join(self.index_dir, "term_stats")
+        if summaries is not None:
+            B._write_term_stats(_merge_term_stats_tables(summaries), ts_dir)
+        else:
+            B.term_stats_with_block_meta(
+                spark.read.parquet(os.path.join(self.index_dir, "segments"))
+            ).write.mode("overwrite").parquet(ts_dir)
         clock.lap("term_stats")
         # the files a full compact leaves behind ARE the main tier: later
         # incremental appends beyond them form the mergeable delta tier

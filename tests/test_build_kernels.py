@@ -13,6 +13,7 @@ import pytest
 from test_encoded_build import tricky_docs  # noqa: F401  (fixture)
 
 import searchengine_spark.indexing.build as bmod
+from searchengine_spark.indexing.segments import TERM_STATS_FIELDS, TOP_BLOCK_MAX
 
 D_BITS, P_BITS = 12, 8
 
@@ -112,6 +113,29 @@ def test_fused_segments_byte_identical_to_two_pass(spark, tricky_docs, tmp_path,
     assert _segment_rows(spark, fused) == _segment_rows(spark, two_pass)
 
 
+# Spark jobs of one build_index over a small corpus on the test session
+# (local[4], 8 shuffle partitions), as measured: 17 (the term_stats and
+# metrics phases of the fused sink run none)
+BUILD_JOBS_MAX = 17
+
+
+def test_build_job_count_stays_bounded(spark, tmp_path):
+    from test_streaming import _mk_turns
+
+    from searchengine_spark.indexing import prepare_transcripts
+
+    df = _mk_turns(spark, 0, 30)
+    sc = spark.sparkContext
+    sc.setJobGroup("one-build", "build_index")
+    try:
+        bmod.build_index(spark, prepare_transcripts(df), str(tmp_path / "index"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("one-build")
+    assert 0 < len(jobs) <= BUILD_JOBS_MAX, len(jobs)
+
+
 def test_tokenize_kernels_emit_no_warnings():
     from searchengine_spark.indexing.build_dist import (
         _fused_tokenize_group_kernel,
@@ -167,6 +191,7 @@ def test_wand_byte_gate_falls_through_to_selectivity_gate(spark, tmp_path):
 
 
 def test_tier_merge_keeps_unknown_postings_bytes_null(spark):
+    from searchengine_spark.indexing.segments import _merge_term_stats_tables
     from searchengine_spark.streaming.ingest import _merge_term_stats
 
     cols = (
@@ -191,3 +216,60 @@ def test_tier_merge_keeps_unknown_postings_bytes_null(spark):
     assert merged["kiwi"]["postings_bytes"] == 25  # only in the new tier
     both = _merge_term_stats(delta, delta)
     assert {r["term"]: r["postings_bytes"] for r in both.collect()} == {"apple": 80, "kiwi": 50}
+
+    # the driver merge of the fused sink takes the same inputs and must give
+    # the same rows, so the two combiners cannot drift apart
+    for a, b in ((old, delta), (delta, delta), (delta, old)):
+        driver = _merge_term_stats_tables([a.toArrow(), b.toArrow()])
+        assert driver.column_names == _merge_term_stats(a, b).columns
+        assert [tuple(r.values()) for r in driver.to_pylist()] == sorted(
+            tuple(r) for r in _merge_term_stats(a, b).collect()
+        )
+
+
+def test_driver_dictionary_equals_spark_aggregation(spark, tmp_path, monkeypatch):
+    """The fused sink's dictionary (per-partition block summaries merged on
+    the driver) equals the Spark aggregation over the same segments in all
+    eleven columns.  "alpha" has more than TOP_BLOCK_MAX blocks and the
+    route plan stripes it over two partitions, so its top lists come from
+    the cross-partition merge.  Summaries holding more rows than
+    VOCAB_ENCODE_MAX (a striped term has a row per partition) take the
+    Spark aggregation and commit the same dictionary."""
+    from pyspark.sql import functions as F
+
+    rows = [(i, f"alpha beta{i % 50} gamma{i % 7} " + "delta " * (i % 5)) for i in range(5000)]
+    out = str(tmp_path / "index")
+    m = bmod.build_index(spark, spark.createDataFrame(rows, "doc_id long, text string"), out)
+    assert "term_stats" in m["metrics"]["phase_seconds"]
+    seg_dir = os.path.join(out, "segments")
+    assert not [f for f in os.listdir(seg_dir) if f.startswith(bmod._SIDE_SUMMARY)]
+    assert all(p["file"].startswith("part-") for p in m["stages"]["segments"]["partitions"])
+    segments = spark.read.parquet(seg_dir)
+    alpha = segments.filter(F.col("term") == "alpha")
+    assert alpha.count() > TOP_BLOCK_MAX
+    assert alpha.select(F.input_file_name()).distinct().count() >= 2
+
+    got = spark.read.parquet(os.path.join(out, "term_stats"))
+    want = bmod.term_stats_with_block_meta(segments)
+    assert got.columns == want.columns == list(TERM_STATS_FIELDS)
+    assert sorted(tuple(r) for r in got.collect()) == sorted(tuple(r) for r in want.collect())
+    totals = want.agg(
+        F.max("df"), F.avg("df"), F.sum("n_blocks"), F.sum("postings_bytes")
+    ).first()
+    metrics = m["metrics"]
+    assert metrics["skew_ratio_max_df_over_avg_df"] == totals[0] / totals[1]
+    assert (metrics["n_segment_blocks"], metrics["segment_bytes_compressed"]) == tuple(totals[2:])
+
+    n_terms = got.count()
+    monkeypatch.setattr(bmod, "VOCAB_ENCODE_MAX", n_terms)
+    over = str(tmp_path / "over_cutoff")
+    m_over = bmod.build_index(spark, spark.createDataFrame(rows, "doc_id long, text string"), over)
+    assert not [f for f in os.listdir(os.path.join(over, "segments")) if f.startswith(bmod._SIDE_SUMMARY)]
+    fallback = spark.read.parquet(os.path.join(over, "term_stats"))
+    # the fused sink ran, and Spark wrote the dictionary (the driver writes
+    # one part-00000.parquet)
+    assert "postings_segments" in m_over["metrics"]["phase_seconds"]
+    assert [p["file"] for p in m_over["stages"]["term_stats"]["partitions"]] != ["part-00000.parquet"]
+    assert sorted(tuple(r) for r in fallback.collect()) == sorted(tuple(r) for r in got.collect())
+    for key in ("n_segment_blocks", "segment_bytes_compressed", "skew_ratio_max_df_over_avg_df"):
+        assert m_over["metrics"][key] == metrics[key], key

@@ -8,9 +8,11 @@ Usage: python tools/check_gate.py [sf_dir] [--only name1,name2]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# this checkout's root, so a gate run from any copy checks that copy's code
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings".split()
