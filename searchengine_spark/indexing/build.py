@@ -45,6 +45,7 @@ artifact + manifest entry already exist.
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import math
 import os
@@ -1201,7 +1202,9 @@ class IndexBuilder:
         build_encoded_dist — aggregates the segments in Spark
         (term_stats_with_block_meta)."""
         lap = clock.lap
-        postings_df = self._read_stage("postings")
+        # read where a shape needs it: opening the artifact infers its
+        # schema with a Spark job, which the fused tail does not need
+        postings_df = functools.partial(self._read_stage, "postings")
 
         # S5/B4: compressed block-max segments (delta+varbyte blobs; the
         # reference's postings.bin, spimi.py:145-187, plus the varbyte the
@@ -1220,7 +1223,7 @@ class IndexBuilder:
                 seg_df = packed_cache.mapInArrow(seg_kernel, schema=SEGMENT_SCHEMA)
             else:
                 seg_df = encode_segments(
-                    postings_df.repartitionByRange(
+                    postings_df().repartitionByRange(
                         postings_partitions, "term", "doc_id"
                     ).sortWithinPartitions("term", "doc_id")
                 )
@@ -1257,7 +1260,7 @@ class IndexBuilder:
             # passes the unfused tail paid (term_stats derive, term_stats
             # read-back for df stats, segments re-scan for byte totals)
             term_stats_cache = term_stats_with_block_meta(
-                self._read_stage("segments"), postings_df
+                self._read_stage("segments"), postings_df()
             ).persist()
             self._write_stage(
                 term_stats_cache.repartitionByRange(
@@ -1286,7 +1289,7 @@ class IndexBuilder:
                 self._read_stage("doc_stats")
                 .select("doc_id")
                 .join(
-                    postings_df.groupBy("doc_id").agg(
+                    postings_df().groupBy("doc_id").agg(
                         F.collect_set("term").alias("_terms")
                     ),
                     "doc_id",
@@ -1310,7 +1313,7 @@ class IndexBuilder:
         # lineage existed) lack the "partitions" key — fall back to a count
         lineage = self.manifest["stages"]["postings"].get("partitions")
         n_postings = (
-            sum(p["rows"] for p in lineage) if lineage else postings_df.count()
+            sum(p["rows"] for p in lineage) if lineage else postings_df().count()
         )
         if term_stats is not None:
             df = term_stats.column("df").to_numpy()
