@@ -635,8 +635,13 @@ def _finalize_side_segments(
         os.path.join(seg_dir, f) for f in os.listdir(seg_dir) if f.startswith(_SIDE_SUMMARY)
     )
     summaries = None
-    if sum(pq.read_metadata(p).num_rows for p in paths) <= max_terms:
-        summaries = [pq.read_table(p) for p in paths]
+    files = [pq.ParquetFile(p) for p in paths]
+    try:
+        if sum(f.metadata.num_rows for f in files) <= max_terms:
+            summaries = [f.read() for f in files]
+    finally:
+        for f in files:
+            f.close()
     for p in paths:
         os.remove(p)
     if not any(f.endswith(".parquet") and not f.startswith((".", "_")) for f in os.listdir(seg_dir)):
