@@ -143,14 +143,28 @@ def release_docid_cache_of(df: DataFrame) -> bool:
     return True
 
 
-# One doc-side (ranged/docs/types cache) partition ≈ this many docs.  The
+# One doc-side (ranged/docs/terms cache) partition ≈ this many docs.  The
 # ranged layout feeds EVERY doc-side pass of the build — tokenize+cache
 # write, the zero-shuffle stats kernel, the postings map side — so
 # width-sized partitions (8 at widths 1-8) ran those phases in 2 coarse
 # waves at width 4 with a straggler tail: measured 2.8-3.0x phase speedups
 # 1→4 where the token-balanced 16-partition segments phase hit 3.5x.
-# Data-sizing is round 3's reduce-side fix applied to the map side.
+# Data-sizing is round 3's reduce-side fix applied to the map side; below
+# it the floor is one wave (pass_width), not the session's shuffle width.
 DOCS_PER_DOC_PARTITION = 24_000
+
+
+def pass_width(spark: SparkSession, n_partitions: int, n_docs: int, docs_per_partition: int) -> int:
+    """Partitions of one build or epoch pass: one wave over the cluster's
+    cores (at most ``n_partitions``), or more once ``n_docs`` fills
+    ``docs_per_partition``-sized partitions.  A small corpus gives each
+    task little work, while every task still pays its scheduling, its
+    Arrow round trip through a Python worker and its own shuffle files, so
+    a second wave of tiny tasks only adds latency (on 4 cores a session
+    width of 8 ran every doc-side stage of a 2k-turn build as 9 tasks and
+    its postings reduce as 10)."""
+    one_wave = min(n_partitions, spark.sparkContext.defaultParallelism)
+    return max(1, one_wave, -(-int(n_docs) // docs_per_partition))
 
 
 def _number_partitions(ranged: DataFrame) -> tuple[DataFrame, int]:
@@ -182,7 +196,10 @@ def assign_doc_ids(
 ) -> DataFrame:
     """Dense 0-based doc_id over ORDER BY order_cols — the reference's
     sequential docID contract (directorycorpus.py:64-79) — without a global
-    single-partition window.
+    single-partition window.  Without ``n_partitions`` the ranged layout
+    has pass_width partitions: one wave over the cores for a small corpus
+    (not the session's shuffle width), data-sized by
+    DOCS_PER_DOC_PARTITION beyond that.
 
     Scale path: range-partition + sort, count rows per partition (tiny
     driver-side collect of one long per partition), then number each
@@ -211,13 +228,15 @@ def assign_doc_ids(
     """
     spark = df.sparkSession
     if n_partitions is None:
-        # data-sized with the session width as floor (see
-        # DOCS_PER_DOC_PARTITION).  The count is one cheap metadata-leaning
-        # job over the source; its total is reused as the _n_docs hint.
-        n_rows = df.count()
-        n_partitions = max(
+        # data-sized with one wave (at most the session width) as floor
+        # (pass_width, DOCS_PER_DOC_PARTITION).  The count is one cheap
+        # metadata-leaning job over the source; its total is reused as the
+        # _n_docs hint.
+        n_partitions = pass_width(
+            spark,
             int(spark.conf.get("spark.sql.shuffle.partitions")),
-            -(-n_rows // DOCS_PER_DOC_PARTITION) if n_rows else 1,
+            df.count(),
+            DOCS_PER_DOC_PARTITION,
         )
     ranged = (
         df.repartitionByRange(n_partitions, *order_cols)
@@ -310,11 +329,11 @@ def term_stats_with_block_meta(segments_df: DataFrame, postings_df: DataFrame | 
 # The build's dominant data movement is the token shuffle + external sort,
 # and shuffle-heavy stages on wide executors are DRAM-bandwidth-bound
 # (BENCH.md: this host streams at ~0.43 scaling efficiency 8->32 vs ~0.7 for
-# compute).  Below VOCAB_ENCODE_MAX distinct types, the build therefore
-# collects the type vocabulary ONCE, stems it driver-side (porter2 over the
-# vocab), assigns dense int32 term_ids in SORTED-TERM order, and shuffles one
-# packed int64 (term_id | doc_id | position) per token — a fixed 8-byte sort
-# key instead of variable-length strings, and no stem-dictionary subquery
+# compute).  Below VOCAB_ENCODE_MAX distinct terms, the build therefore
+# collects the term vocabulary ONCE (the tokenize kernel already stemmed
+# each partition's distinct types), assigns dense int32 term_ids in
+# SORTED-TERM order on the driver, and shuffles one packed int64
+# (term_id | doc_id | position) per token — a fixed 8-byte sort key instead of variable-length strings, and no stem-dictionary subquery
 # re-executed per downstream action.  Because ids follow sorted-term order,
 # sorting by the packed key is sorting by (term, doc_id, position): parquet
 # min/max pruning and segment block order follow.  Above the cutoff the
@@ -734,9 +753,6 @@ def _plan_term_routes(term_tokens, target_tokens: int):
     load = 0
     for t in range(V):
         c = int(term_tokens[t])
-        if c == 0:
-            base[t] = part
-            continue
         if c > target_tokens:
             if load:  # close the partially-filled partition
                 part += 1
@@ -755,66 +771,44 @@ def _plan_term_routes(term_tokens, target_tokens: int):
     return base, ksplit, max(1, n_partitions)
 
 
-def _vocab_id_maps(types_list: list[str]):
-    """Driver-side stem + dense-id assignment over the distinct-type
-    vocabulary.  Returns (tid_for_type int32 array parallel to types_list,
-    id2term object array indexed by term_id, empty_tid or None).  term_ids
-    follow sorted-term order so ordering by term_id == ordering by term."""
-    import numpy as np
-
-    from ..text.porter2 import stem as _stem
-
-    stems = [_stem(t) for t in types_list]
-    terms_sorted = sorted(set(stems))
-    term_to_id = {t: i for i, t in enumerate(terms_sorted)}
-    tid_for_type = np.fromiter(
-        (term_to_id[s] for s in stems), dtype=np.int32, count=len(stems)
-    )
-    id2term = np.array(terms_sorted, dtype=object)
-    return tid_for_type, id2term, term_to_id.get("")
-
-
 def _encoded_routed_tokens(
     spark: SparkSession,
-    types: DataFrame,
-    types_list: list[str],
-    tid_for_type,
-    empty_tid: int | None,
+    terms: DataFrame,
+    id2term,
     base_part,
     ksplit,
     vmap,
     pack_bits: tuple[int, int],
 ) -> DataFrame:
-    """(doc_id, position, type) -> (packed, _route) entirely JVM-side: a
-    broadcast hash join against the (type -> term_id, base, ksplit)
+    """(doc_id, position, term) -> (packed, _route) entirely JVM-side: a
+    broadcast hash join against the (term -> term_id, base, ksplit)
     dictionary plus a tiny (part -> _route) join — whole-stage
     codegen end to end, no Python on the map side of the build's dominant
     shuffle (an Arrow-kernel variant of this encode measured ~25 s/900k
     turns of extra map-side CPU at width 2: the cache scan left and
     re-entered Python for a lookup the JVM join does in the same pass).
-    The empty term drops out via the inner join (its row is omitted from
-    the dictionary — spimi.py:137); hot terms stripe across their planned
-    partitions by doc_id % ksplit; ``_route`` carries the
-    murmur3-representative value so ``repartition(P, "_route")`` places
-    every row on its exact planned partition."""
+    Hot terms stripe across their planned partitions by doc_id % ksplit;
+    ``_route`` carries the murmur3-representative value so
+    ``repartition(P, "_route")`` places every row on its exact planned
+    partition."""
+    import numpy as np
     import pandas as pd
 
-    keep = [i for i, _t in enumerate(types_list) if empty_tid is None or tid_for_type[i] != empty_tid]
     map_pdf = pd.DataFrame(
         {
-            "type": [types_list[i] for i in keep],
-            "term_id": tid_for_type[keep].astype("int32"),
-            "base": base_part[tid_for_type[keep]].astype("int32"),
-            "ksplit": ksplit[tid_for_type[keep]].astype("int32"),
+            "term": id2term,
+            "term_id": np.arange(len(id2term), dtype=np.int32),
+            "base": base_part.astype("int32"),
+            "ksplit": ksplit.astype("int32"),
         }
     )
-    map_df = spark.createDataFrame(map_pdf, "type string, term_id int, base int, ksplit int")
+    map_df = spark.createDataFrame(map_pdf, "term string, term_id int, base int, ksplit int")
     route_pdf = pd.DataFrame(
         {"part": range(len(vmap)), "_route": vmap.astype("int32")}
     )
     route_df = spark.createDataFrame(route_pdf, "part int, _route int")
     routed = (
-        types.join(F.broadcast(map_df), "type")
+        terms.join(F.broadcast(map_df), "term")
         .withColumn(
             "part", (F.col("base") + F.pmod(F.col("doc_id"), F.col("ksplit"))).cast("int")
         )
@@ -833,68 +827,62 @@ def _encoded_routed_tokens(
 
 
 class EncodedVocab(NamedTuple):
-    """The driver dictionary of the encoded path: the distinct types, their
-    dense term ids (sorted-term order), the id -> term strings, the empty
-    term's id (None when no type stems to it), and each term's token total
-    (the route planner's input; the empty term's total is zero)."""
+    """The driver dictionary of the encoded path: the terms in sorted
+    order (a term's index is its dense term id) and each term's token total
+    (the route planner's input)."""
 
-    types_list: list
-    tid_for_type: Any
     id2term: Any
-    empty_tid: int | None
     term_tokens: Any
 
 
 def _fused_tokenize(docs: DataFrame) -> DataFrame:
-    """(doc_id, text) -> the persisted fused tokenize+stats frame: token rows
+    """(doc_id, text) -> the persisted fused tokenize+stats frame: term rows
     (position >= 0) plus one stats pseudo-row (position = -1) per non-empty
     doc.  Doc stats ride the tokenize kernel, so the stats phase costs a
     cache-projection read instead of a second full Python-kernel scan of the
     token stream (the old _doc_stats_types_kernel pass: measured 19.6 s of a
-    142 s width-4 900k-turn build).  Weight columns stay null on token rows
+    142 s width-4 900k-turn build).  Weight columns stay null on term rows
     (they reach the postings kernel by broadcast) — the columnar cache
     RLE-compresses them away."""
-    from .build_dist import WEIGHTED_TYPES_SCHEMA, _fused_tokenize_stats_kernel
+    from .build_dist import WEIGHTED_TERMS_SCHEMA, _fused_tokenize_stats_kernel
 
     return (
         docs.select("doc_id", "text")
-        .mapInPandas(_fused_tokenize_stats_kernel("text", "doc_id"), schema=WEIGHTED_TYPES_SCHEMA)
+        .mapInPandas(_fused_tokenize_stats_kernel("text", "doc_id"), schema=WEIGHTED_TERMS_SCHEMA)
         .persist()
     )
 
 
-def _fused_types(fused: DataFrame) -> DataFrame:
-    return fused.filter(F.col("position") >= 0).select("doc_id", "position", "type")
+def _fused_terms(fused: DataFrame) -> DataFrame:
+    return fused.filter(F.col("position") >= 0).select("doc_id", "position", "term")
 
 
-def _collect_vocab(types: DataFrame) -> EncodedVocab | None:
-    """One per-type count collect -> the driver dictionary, or None when
-    the vocabulary exceeds VOCAB_ENCODE_MAX.  The collect is limit-guarded:
-    the aggregation's map side scans every types partition (materializing
-    the fused cache) regardless of the limit, while the limit caps what can
-    reach the driver — an over-cutoff vocabulary is never collected.  (An
-    earlier shape ran approx_count_distinct first as the guard: a full
-    extra pass over the token stream per build, ~8 s/900k turns at width 8,
-    pure fixed cost.)"""
+def _collect_vocab(terms: DataFrame) -> EncodedVocab | None:
+    """One per-term count collect -> the driver dictionary, or None when
+    the vocabulary exceeds VOCAB_ENCODE_MAX terms.  The tokenize kernel
+    already stemmed each partition's distinct types, so the driver only
+    sorts the collected terms: their sorted order assigns the term ids.
+    The collect is limit-guarded: the aggregation's map side scans every
+    terms partition (materializing the fused cache) regardless of the
+    limit, while the limit caps what can reach the driver — an over-cutoff
+    vocabulary is never collected.  (An earlier shape ran
+    approx_count_distinct first as the guard: a full extra pass over the
+    token stream per build, ~8 s/900k turns at width 8, pure fixed cost.)"""
     import numpy as np
 
     vocab_pdf = (
-        types.groupBy("type")
+        terms.groupBy("term")
         .agg(F.count("*").alias("c"))
         .limit(VOCAB_ENCODE_MAX + 1)
-        .toPandas()  # Arrow transfer — Row conversion is slow at 10^6 types
+        .toPandas()  # Arrow transfer — Row conversion is slow at 10^6 terms
     )
     if len(vocab_pdf) > VOCAB_ENCODE_MAX:
         return None
-    types_list = vocab_pdf["type"].tolist()
-    tid_for_type, id2term, empty_tid = _vocab_id_maps(types_list)
+    id2term = vocab_pdf["term"].to_numpy(dtype=object)
+    order = np.argsort(id2term, kind="stable")
     # exact per-term token totals (the driver-side partition plan's input)
     # fall out of the same collect
-    term_tokens = np.zeros(len(id2term), dtype=np.int64)
-    np.add.at(term_tokens, tid_for_type.astype(np.int64), vocab_pdf["c"].to_numpy(dtype=np.int64))
-    if empty_tid is not None:
-        term_tokens[empty_tid] = 0  # excluded from the postings stream
-    return EncodedVocab(types_list, tid_for_type, id2term, empty_tid, term_tokens)
+    return EncodedVocab(id2term[order], vocab_pdf["c"].to_numpy(dtype=np.int64)[order])
 
 
 def _stats_rows(fused: DataFrame):
@@ -928,7 +916,7 @@ def _pack_bits(n_terms: int, n_doc_slots: int, max_dl: int) -> tuple[int, int] |
 
 
 def _planned_token_stream(
-    spark: SparkSession, types: DataFrame, vocab: EncodedVocab, plan, pack_bits: tuple[int, int]
+    spark: SparkSession, terms: DataFrame, vocab: EncodedVocab, plan, pack_bits: tuple[int, int]
 ) -> DataFrame:
     """The encoded path's ONE token shuffle: a single ``packed`` long column
     (_pack_bits layout) routed through the driver's partition plan
@@ -936,10 +924,8 @@ def _planned_token_stream(
     base_part, ksplit, n_parts = plan
     enc = _encoded_routed_tokens(
         spark,
-        types,
-        vocab.types_list,
-        vocab.tid_for_type,
-        vocab.empty_tid,
+        terms,
+        vocab.id2term,
         base_part,
         ksplit,
         _invert_partition_hash(n_parts),
@@ -962,8 +948,8 @@ def _doc_stats_frame(spark: SparkSession, docs: DataFrame, stats_pdf, meta_cols)
 BROADCAST_WEIGHTS_MAX_DOCS = 4_000_000  # ~100 MB of (doc_id, doc_len, l2)
 # One postings reduce partition ≈ this many docs (~2M token rows, a
 # ~100-200 MB sorted working set).  Both producers plan their postings
-# shuffle for about max(session shuffle partitions, ceil(n_docs / this))
-# partitions.
+# shuffle for about pass_width(n_partitions, n_docs, this) partitions:
+# one wave for a small corpus, ceil(n_docs / this) for a large one.
 DOCS_PER_POSTINGS_PARTITION = 60_000
 
 
@@ -1135,10 +1121,12 @@ class IndexBuilder:
         (SparkIndex.warm flips AQE coalescing on) still builds at full
         shuffle width.
 
-        EVERY build shuffle — the stats-phase (term, doc_id) aggregation as
-        much as the postings range shuffle — is sized by DATA with the
-        session width as floor: a reduce partition is a sorted/hash-agg
-        working set, and core-count-sized partitions grow with the corpus
+        EVERY build shuffle — the vocabulary aggregation as much as the
+        postings route shuffle — is sized by pass_width: one wave over the
+        cores (at most ``n_partitions``) for a small corpus, where a second
+        wave of near-empty Python tasks is pure fixed cost, and by DATA
+        beyond that: a reduce partition is a sorted/hash-agg working set,
+        and core-count-sized partitions grow with the corpus
         until they outrun the memory hierarchy (measured: 1.8M turns at 8
         tasks built in 675 s with the stats shuffle at 8 partitions vs
         280 s with every shuffle at ~31 — the postings shuffle alone being
@@ -1159,9 +1147,9 @@ class IndexBuilder:
         n_docs_hint = getattr(docs, "_n_docs", None)
         if n_docs_hint is None:
             n_docs_hint = docs.count()
-        sp_build = self.n_partitions
-        if n_docs_hint:
-            sp_build = max(sp_build, -(-int(n_docs_hint) // DOCS_PER_POSTINGS_PARTITION))
+        sp_build = pass_width(
+            self.spark, self.n_partitions, n_docs_hint, DOCS_PER_POSTINGS_PARTITION
+        )
         prev_sp = self.spark.conf.get("spark.sql.shuffle.partitions")
         self.spark.conf.set("spark.sql.shuffle.partitions", str(sp_build))
         self._sp_build = sp_build
@@ -1186,7 +1174,7 @@ class IndexBuilder:
         postings_partitions,
         set_desc,
         resume,
-        types_cache=None,
+        fused_cache=None,
         packed_cache=None,
         seg_kernel=None,
         segments_done=False,
@@ -1376,8 +1364,8 @@ class IndexBuilder:
             "avgdl": avgdl,
         }
         self._save_manifest()
-        if types_cache is not None:
-            types_cache.unpersist()
+        if fused_cache is not None:
+            fused_cache.unpersist()
         docs.unpersist()
         # release the docID cache behind OUR input frame.  The scoped handle
         # is a plain attribute that intermediate transformations drop; when
@@ -1426,12 +1414,12 @@ class IndexBuilder:
         # fused tokenize+stats pass (round-5): doc stats ride the tokenize
         # kernel as position=-1 pseudo-rows (see _fused_tokenize)
         fused = _fused_tokenize(docs)
-        types = _fused_types(fused)
+        terms = _fused_terms(fused)
 
         # -- vocab: one tokenize pass materializes the caches; the distinct
         # collect then reads them (limit-guarded, see _collect_vocab)
-        set_desc("phase:vocab — tokenize pass + per-type count collect")
-        vocab = _collect_vocab(types)
+        set_desc("phase:vocab — tokenize pass + per-term count collect")
+        vocab = _collect_vocab(terms)
         if vocab is None:
             fused.unpersist()
             return build_encoded_dist(self, docs, n_docs, resume=resume)
@@ -1506,18 +1494,14 @@ class IndexBuilder:
         # murmur3-representative values — no range-sampling pass over the
         # token stream, no sampling error in the balance, skew defused
         # deterministically.
-        width_floor = max(
-            getattr(self, "_sp_build", self.n_partitions),
-            -(-n_docs // DOCS_PER_POSTINGS_PARTITION),
-        )
-        plan = _route_plan(vocab.term_tokens, width_floor)
+        plan = _route_plan(vocab.term_tokens, self._sp_build)
         postings_partitions = plan[2]
         packed_cache = None
         seg_kernel = None
         fused_segments_done = False
         summaries = None
         if not self._stage_done("postings") or not resume:
-            stream = _planned_token_stream(spark, types, vocab, plan, pack_bits)
+            stream = _planned_token_stream(spark, terms, vocab, plan, pack_bits)
             seg_dir = self._stage_target("segments")
             fuse_segments = (
                 not self._iceberg_ok
@@ -1586,7 +1570,7 @@ class IndexBuilder:
             postings_partitions=postings_partitions,
             set_desc=set_desc,
             resume=resume,
-            types_cache=fused,
+            fused_cache=fused,
             packed_cache=packed_cache,
             seg_kernel=seg_kernel,
             segments_done=fused_segments_done,

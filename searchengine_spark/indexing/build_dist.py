@@ -63,11 +63,11 @@ from pyspark.sql import functions as F
 from ..worker import engine_kernel
 from .logical import BM25_B, BM25_K1
 
-# token rows carry (doc_id, position, type); stats pseudo-rows use
+# term rows carry (doc_id, position, term); stats pseudo-rows use
 # position = -1 (one per doc, filtered apart by consumers).  Used by the
 # ENCODED path (build.py) so its doc stats ride the tokenize pass too.
-WEIGHTED_TYPES_SCHEMA = (
-    "doc_id long, position int, type string, doc_len int, l2_weight double"
+WEIGHTED_TERMS_SCHEMA = (
+    "doc_id long, position int, term string, doc_len int, l2_weight double"
 )
 # the dist path's cache rows: finished postings (term != null) + one stats
 # pseudo-row per doc (term null, tf 0).  ``w`` is w_dt(tfidf) on posting
@@ -86,25 +86,69 @@ HOT_TERMS_K = 65_536
 TERMS_PER_DICT_PARTITION = 2_000_000
 
 
+class _StemMemo:
+    """A partition's Porter2 stemmer over its DISTINCT types, shared across
+    its batches — O(partition vocab) stem calls, not O(tokens).
+    ``sids(types)`` maps a batch's type column to partition-local stem ids
+    (types with equal stems share one id); ``stems[sid]`` is that stem."""
+
+    def __init__(self):
+        self.type2sid: dict = {}
+        self.stem2sid: dict = {}
+        self.stems: list = []
+
+    def sids(self, types):
+        import numpy as np
+        import pandas as pd
+
+        from searchengine_spark.text.porter2 import stem
+
+        codes, uniques = pd.factorize(types, sort=False)
+        sid_for_unique = np.empty(len(uniques), dtype=np.int64)
+        for i, t in enumerate(uniques):
+            sid = self.type2sid.get(t)
+            if sid is None:
+                s = stem(t)
+                sid = self.stem2sid.setdefault(s, len(self.stems))
+                if sid == len(self.stems):
+                    self.stems.append(s)
+                self.type2sid[t] = sid
+            sid_for_unique[i] = sid
+        return sid_for_unique[codes]
+
+
+def _doc_l2(w, gdoc, dstarts):
+    """L_d of each doc from its per-term weights ``w`` = (1+ln tf)², one per
+    (doc, term) group, with the groups' docs ``gdoc`` sorted and each doc's
+    run starting at ``dstarts``.  A doc's weights are summed in ascending
+    order, not in the partition-local stem-id order they arrive in: a doc's
+    L_d must not depend on which docs share its batch (the first-seen stem
+    ids do), or doc_stats and tf-idf weights would change with the
+    partition count."""
+    import numpy as np
+
+    return np.sqrt(np.add.reduceat(w[np.lexsort((w, gdoc))], dstarts))
+
+
 def _fused_tokenize_stats_kernel(text_col: str, id_col: str):
-    """(doc_id, text) batches -> token rows plus one stats pseudo-row
-    (position = -1) per non-empty doc — the ENCODED path's tokenize pass,
-    where weights reach the kernels by broadcast and doc stats ride the
-    tokenize scan for free (they removed a separate stats-kernel pass:
-    measured 19.6 s of a 142 s width-4 900k-turn build).
+    """(doc_id, text) batches -> term rows (doc_id, position, term) plus one
+    stats pseudo-row (position = -1) per non-empty doc — the ENCODED path's
+    tokenize pass, where weights reach the kernels by broadcast and doc
+    stats ride the tokenize scan for free (they removed a separate
+    stats-kernel pass: measured 19.6 s of a 142 s width-4 900k-turn build).
 
     Composes the T1-T3 Arrow kernel (spark_tokenize._types_kernel — exact
     split/hyphen/cleaning semantics, asserted against the expression twin)
     with partition-local doc stats: each doc is one input row, so its full
     type multiset is present in one output batch and doc_len / L_d
     (spimi.py:74-123 — the empty term counts toward both) reduce locally.
-    Stemming for the L_d term-grouping runs over the partition's DISTINCT
-    types via a cross-batch memo — O(partition vocab), not O(tokens), the
-    same dictionary-normalization cost law as the broadcast path.
+    Stemming (T4) runs here, over the partition's DISTINCT types
+    (_StemMemo), and the rows carry the stem, so the driver dictionary only sorts the collected
+    terms and nothing downstream stems again.
 
-    Empty types contribute to the stats and are then DROPPED from the token
-    output (the index excludes them, spimi.py:137) — they never reach the
-    encode map."""
+    Terms that are empty (an empty type, or a type whose stem is empty)
+    contribute to the stats and are then DROPPED from the output (the index
+    excludes them, spimi.py:137) — they never reach the encode map."""
 
     from ..text.spark_tokenize import _types_kernel
 
@@ -115,24 +159,11 @@ def _fused_tokenize_stats_kernel(text_col: str, id_col: str):
         import numpy as np
         import pandas as pd
 
-        from searchengine_spark.text.porter2 import stem
-
-        type2sid: dict = {}  # type -> local stem-id (equal stems share an id)
-        stem_ids: dict = {}
-
+        memo = _StemMemo()
         for pdf in inner(iterator):
             if not len(pdf):
                 continue
-            codes, uniques = pd.factorize(pdf["type"], sort=False)
-            sid_for_unique = np.empty(len(uniques), dtype=np.int64)
-            for i, t in enumerate(uniques):
-                sid = type2sid.get(t)
-                if sid is None:
-                    s = stem(t)
-                    sid = stem_ids.setdefault(s, len(stem_ids))
-                    type2sid[t] = sid
-                sid_for_unique[i] = sid
-            sids = sid_for_unique[codes]
+            sids = memo.sids(pdf["type"])
             docs_np = pdf[id_col].to_numpy(dtype=np.int64)
             # hyphen expansion groups variants, so rows are NOT doc-sorted:
             # lexsort per batch (docs are complete within a batch)
@@ -151,11 +182,10 @@ def _fused_tokenize_stats_kernel(text_col: str, id_col: str):
             dstarts = np.flatnonzero(dchange)
             udoc = gdoc[dstarts]
             doc_len = np.add.reduceat(tf, dstarts)
-            w = np.square(1.0 + np.log(tf.astype(np.float64)))
-            l2 = np.sqrt(np.add.reduceat(w, dstarts))
-            types = pdf["type"].to_numpy()
-            keep = types != ""
-            # token rows, then the stats rows; each column is built typed
+            l2 = _doc_l2(np.square(1.0 + np.log(tf.astype(np.float64))), gdoc, dstarts)
+            terms = np.asarray(memo.stems, dtype=object)[sids]
+            keep = terms != ""
+            # term rows, then the stats rows; each column is built typed
             # (nullable where the other half is null) — a pd.concat of
             # all-null frame columns is deprecated dtype inference
             n_tok, n_doc = int(keep.sum()), len(udoc)
@@ -170,7 +200,7 @@ def _fused_tokenize_stats_kernel(text_col: str, id_col: str):
                             np.full(n_doc, -1, dtype=np.int32),
                         ]
                     ),
-                    "type": np.concatenate([types[keep], np.full(n_doc, None, dtype=object)]),
+                    "term": np.concatenate([terms[keep], np.full(n_doc, None, dtype=object)]),
                     "doc_len": pd.arrays.IntegerArray(
                         np.concatenate([np.zeros(n_tok, np.int32), doc_len.astype(np.int32)]),
                         tok_null,
@@ -193,8 +223,8 @@ def _fused_tokenize_group_kernel(text_col: str, id_col: str):
     so (stem, doc) groups complete inside the batch — tf, positions,
     doc_len, and L_d all reduce locally, and w_dt(tfidf) = (1+ln tf)/L_d
     needs nothing global.  Grouping/stats identical to
-    ``_fused_tokenize_stats_kernel`` (same sid memo, same lexsort group
-    order, same reduceat order — bit-identical L_d to the encoded path);
+    ``_fused_tokenize_stats_kernel`` (same _StemMemo ids, same lexsort group
+    order, same _doc_l2 sum — bit-identical L_d to the encoded path);
     positions additionally sort ascending inside each group, which is the
     order the route-shuffle sort used to impose.
 
@@ -212,27 +242,11 @@ def _fused_tokenize_group_kernel(text_col: str, id_col: str):
         import numpy as np
         import pandas as pd
 
-        from searchengine_spark.text.porter2 import stem
-
-        type2sid: dict = {}
-        stem_ids: dict = {}
-        sid2stem: list = []
-
+        memo = _StemMemo()
         for pdf in inner(iterator):
             if not len(pdf):
                 continue
-            codes, uniques = pd.factorize(pdf["type"], sort=False)
-            sid_for_unique = np.empty(len(uniques), dtype=np.int64)
-            for i, t in enumerate(uniques):
-                sid = type2sid.get(t)
-                if sid is None:
-                    s = stem(t)
-                    sid = stem_ids.setdefault(s, len(stem_ids))
-                    if sid == len(sid2stem):
-                        sid2stem.append(s)
-                    type2sid[t] = sid
-                sid_for_unique[i] = sid
-            sids = sid_for_unique[codes]
+            sids = memo.sids(pdf["type"])
             docs_np = pdf[id_col].to_numpy(dtype=np.int64)
             pos_np = pdf["position"].to_numpy(dtype=np.int32)
             # primary doc, then stem, then position: groups are (doc, sid)
@@ -254,10 +268,9 @@ def _fused_tokenize_group_kernel(text_col: str, id_col: str):
             udoc = gdoc[dstarts]
             doc_len = np.add.reduceat(tf, dstarts)
             tf_f = tf.astype(np.float64)
-            w = np.square(1.0 + np.log(tf_f))
-            l2 = np.sqrt(np.add.reduceat(w, dstarts))
+            l2 = _doc_l2(np.square(1.0 + np.log(tf_f)), gdoc, dstarts)
             gdi = np.searchsorted(udoc, gdoc)  # group -> its doc's stats
-            gstem = np.asarray(sid2stem, dtype=object)[gsid]
+            gstem = np.asarray(memo.stems, dtype=object)[gsid]
             keep = gstem != ""
             kept = np.flatnonzero(keep)
             pos_groups = np.split(p_s, starts[1:])
@@ -460,10 +473,7 @@ def build_encoded_dist(builder, docs: DataFrame, n_docs: int, resume: bool = Fal
 
     routed_cache = None
     seg_kernel = None
-    postings_partitions = max(
-        getattr(builder, "_sp_build", builder.n_partitions),
-        -(-n_docs // B.DOCS_PER_POSTINGS_PARTITION) if n_docs else 1,
-    )
+    postings_partitions = builder._sp_build  # pass_width, as IndexBuilder.build set it
     if not builder._stage_done("postings") or not resume:
         # -- plan: one map-side-combined aggregation over the posting rows
         # (vocab-sized output — rows already carry final stems, no UDF),
@@ -477,9 +487,7 @@ def build_encoded_dist(builder, docs: DataFrame, n_docs: int, resume: bool = Fal
         ).collect()[0]
         n_terms = int(vrow["n_terms"] or 0)
         total_route_tokens = int(vrow["tok_total"] or 0)
-        dict_width = max(
-            builder.n_partitions, -(-n_terms // TERMS_PER_DICT_PARTITION) if n_terms else 1
-        )
+        dict_width = B.pass_width(spark, builder.n_partitions, n_terms, TERMS_PER_DICT_PARTITION)
         # route-shuffle sizing: same data law as the in-memory paths
         target_tokens = max(1, -(-total_route_tokens // postings_partitions))
         plan, ranged = _assign_plan(terms, target_tokens, dict_width)
@@ -567,7 +575,7 @@ def build_encoded_dist(builder, docs: DataFrame, n_docs: int, resume: bool = Fal
         postings_partitions=postings_partitions,
         set_desc=set_desc,
         resume=resume,
-        types_cache=grouped,
+        fused_cache=grouped,
         packed_cache=routed_cache,
         seg_kernel=seg_kernel,
     )

@@ -196,16 +196,6 @@ class StreamingIndexer:
         os.replace(tmp, self.manifest_path)
 
     # -- micro-batch sink --------------------------------------------------
-    def _epoch_width(self, n_docs: int = 0) -> int:
-        """Partitions of an epoch's passes: one wave over the cluster's
-        cores (at most n_partitions) — a small epoch gives each task little
-        work, while every task still pays its scheduling, its Arrow round
-        trip through a Python worker and its own shuffle files, so a second
-        wave of tiny tasks only adds latency — or more once the epoch fills
-        DOCS_PER_POSTINGS_PARTITION-sized partitions."""
-        one_wave = min(self.n_partitions, self.spark.sparkContext.defaultParallelism)
-        return max(one_wave, -(-n_docs // B.DOCS_PER_POSTINGS_PARTITION))
-
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """foreachBatch body — also callable directly (tests / backfills).
         Pinned build shuffle config: an ingest-plus-serve session has AQE
@@ -230,15 +220,20 @@ class StreamingIndexer:
         # the epoch's kernels run on its own 0-based doc ids, so the packed
         # shuffle key stays epoch-sized however large the index grows; base
         # is added where rows leave for the delta files
-        assigned = assign_doc_ids(batch_df, n_partitions=self._epoch_width())
+        # every pass of the epoch is one wave wide (B.pass_width), the route
+        # plan data-sized once the epoch fills DOCS_PER_POSTINGS_PARTITION
+        assigned = assign_doc_ids(
+            batch_df,
+            n_partitions=B.pass_width(spark, self.n_partitions, 0, B.DOCS_PER_POSTINGS_PARTITION),
+        )
         n_new = assigned._n_docs
         docs = assigned.withColumn("title", F.concat_ws(":", "conv_id", "turn_idx"))
         clock.lap("doc_ids")
 
         fused = B._fused_tokenize(docs)
-        types = B._fused_types(fused)
-        set_desc("phase:vocab — tokenize pass + per-type count collect")
-        vocab = B._collect_vocab(types)
+        terms = B._fused_terms(fused)
+        set_desc("phase:vocab — tokenize pass + per-term count collect")
+        vocab = B._collect_vocab(terms)
         clock.lap("vocab_collect")
         raw = id2term_bc = None
         if vocab is not None:
@@ -248,8 +243,9 @@ class StreamingIndexer:
             max_dl = int(stats_pdf["doc_len"].max()) if len(stats_pdf) else 0
             pack_bits = B._pack_bits(len(vocab.id2term), n_new, max_dl)
             if pack_bits is not None:
-                plan = B._route_plan(vocab.term_tokens, self._epoch_width(n_new))
-                stream = B._planned_token_stream(spark, types, vocab, plan, pack_bits)
+                width = B.pass_width(spark, self.n_partitions, n_new, B.DOCS_PER_POSTINGS_PARTITION)
+                plan = B._route_plan(vocab.term_tokens, width)
+                stream = B._planned_token_stream(spark, terms, vocab, plan, pack_bits)
                 id2term_bc = spark.sparkContext.broadcast(vocab.id2term)
                 kernel = B._postings_kernel_packed(None, None, id2term_bc, *pack_bits, doc_base=base)
                 raw = stream.mapInArrow(kernel, schema=B.RAW_POSTINGS_SCHEMA)

@@ -8,9 +8,14 @@ from-scratch implementation of that algorithm; the single-node oracle and the
 Spark pipeline both import it, so rank-identity between them is exact by
 construction.
 
-Pure Python, no dependencies.  In the Spark pipeline it is applied only to the
-*distinct-token dictionary* (then broadcast-joined back), never per posting
-row, so its speed is not on the hot path.
+Pure Python, no dependencies.  In the index build it runs inside the fused
+tokenize kernels on the executors (indexing/build_dist.py), once per distinct
+type of each partition through a cross-batch memo, never per token or
+posting row; the driver stems nothing but query terms.  Its speed is
+therefore on the build's tokenize pass, though a partition's distinct types
+are a small share of its tokens.  The Spark tokenize expression
+(text/spark_tokenize.py) applies it as a UDF over the distinct-type
+dictionary.
 """
 
 from __future__ import annotations

@@ -118,6 +118,10 @@ def test_fused_segments_byte_identical_to_two_pass(spark, tricky_docs, tmp_path,
 # metrics phases of the fused sink run none, and its tail does not open
 # the postings artifact)
 BUILD_JOBS_MAX = 16
+# ... and their tasks: every pass one wave wide (build.pass_width, 4
+# partitions on local[4]), as measured: 66.  Sized by the session's 8
+# shuffle partitions instead, the same build ran 105 tasks in two waves.
+BUILD_TASKS_MAX = 66
 
 
 def test_build_job_count_stays_bounded(spark, tmp_path):
@@ -133,8 +137,12 @@ def test_build_job_count_stays_bounded(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("one-build")
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup("one-build")
     assert 0 < len(jobs) <= BUILD_JOBS_MAX, len(jobs)
+    stages = {sid for jid in jobs for sid in tracker.getJobInfo(jid).stageIds}
+    tasks = sum(tracker.getStageInfo(sid).numCompletedTasks for sid in stages)
+    assert 0 < tasks <= BUILD_TASKS_MAX, tasks
 
 
 def test_tokenize_kernels_emit_no_warnings():
@@ -154,10 +162,90 @@ def test_tokenize_kernels_emit_no_warnings():
         stats_rows = pd.concat(_fused_tokenize_stats_kernel("text", "doc_id")(iter([pdf])))
         group_rows = pd.concat(_fused_tokenize_group_kernel("text", "doc_id")(iter([pdf])))
     pseudo = stats_rows[stats_rows["position"] < 0]
-    assert pseudo["type"].isna().all() and pseudo["doc_len"].notna().all()
+    assert pseudo["term"].isna().all() and pseudo["doc_len"].notna().all()
     tokens = stats_rows[stats_rows["position"] >= 0]
     assert tokens["doc_len"].isna().all() and tokens["l2_weight"].isna().all()
+    # the kernel emits stems, never an empty term
+    assert set(tokens["term"]) == set(group_rows["term"].dropna()) and "" not in set(tokens["term"])
+    assert {"run", "quick"} <= set(tokens["term"])
     assert (group_rows["term"].isna() == group_rows["positions"].isna()).all()
+
+
+def test_doc_l2_does_not_depend_on_the_batch_order():
+    """A doc's L_d is a sum over its terms' (1+ln tf)²; both tokenize
+    kernels must sum it in an order fixed by the doc alone.  Summed in the
+    batch's first-seen stem order, the same docs fed in reverse gave a
+    different l2_weight for many of them, so doc_stats and the tf-idf
+    weights changed with the partition count."""
+    from searchengine_spark.indexing.build_dist import (
+        _fused_tokenize_group_kernel,
+        _fused_tokenize_stats_kernel,
+    )
+
+    rng = np.random.default_rng(11)
+    words = [f"w{i}x" for i in range(400)]
+    zipf = 1.0 / np.arange(1, len(words) + 1)
+    texts = [
+        " ".join(rng.choice(words, rng.integers(20, 120), p=zipf / zipf.sum()))
+        for _ in range(400)
+    ]
+    pdf = pd.DataFrame({"doc_id": np.arange(len(texts), dtype=np.int64), "text": texts})
+    rev = pdf.iloc[::-1].reset_index(drop=True)
+
+    def l2_of(kernel, batch, pseudo, col):
+        out = pd.concat(kernel("text", "doc_id")(iter([batch])))
+        rows = out[pseudo(out)]
+        return dict(zip(rows["doc_id"].tolist(), rows[col].astype(float).tolist()))
+
+    stats = l2_of(_fused_tokenize_stats_kernel, pdf, lambda o: o["position"] < 0, "l2_weight")
+    group = l2_of(_fused_tokenize_group_kernel, pdf, lambda o: o["term"].isna(), "w")
+    assert len(stats) == len(texts)
+    assert stats == l2_of(_fused_tokenize_stats_kernel, rev, lambda o: o["position"] < 0, "l2_weight")
+    assert group == l2_of(_fused_tokenize_group_kernel, rev, lambda o: o["term"].isna(), "w")
+    assert stats == group  # dist-vs-encoded parity stays bit-exact
+
+
+def test_build_is_the_same_at_any_width(spark, tmp_path):
+    """One corpus numbered and built at 2 and at 4 partitions gives the
+    same doc_stats and postings rows, L_d and tf-idf weights included."""
+    rng = np.random.default_rng(5)
+    words = [f"w{i}x" for i in range(300)]
+    zipf = 1.0 / np.arange(1, len(words) + 1)
+    rows = [
+        (0, i, " ".join(rng.choice(words, rng.integers(10, 80), p=zipf / zipf.sum())))
+        for i in range(600)
+    ]
+    src = spark.createDataFrame(rows, "conv_id int, turn_idx int, text string")
+    got = []
+    for width in (2, 4):
+        out = str(tmp_path / f"w{width}")
+        bmod.build_index(spark, bmod.assign_doc_ids(src, n_partitions=width), out, n_partitions=width)
+        got.append(
+            [
+                sorted(tuple(r) for r in spark.read.parquet(os.path.join(out, name)).select(*cols).collect())
+                for name, cols in (
+                    ("doc_stats", ["doc_id", "doc_len", "l2_weight"]),
+                    ("postings", ["term", "doc_id", "tf", "wdt_bm25", "wdt_tfidf_norm"]),
+                )
+            ]
+        )
+    assert got[0][0] == got[1][0]
+    assert got[0][1] == got[1][1]
+
+
+def test_pass_width_is_one_wave_then_data_sized(spark):
+    cores = spark.sparkContext.defaultParallelism
+    for n_partitions in (1, cores, 2 * cores, 64):
+        for n_docs in (0, 1, 2_000, bmod.DOCS_PER_POSTINGS_PARTITION):
+            got = bmod.pass_width(spark, n_partitions, n_docs, bmod.DOCS_PER_POSTINGS_PARTITION)
+            assert got == min(n_partitions, cores), (n_partitions, n_docs)
+    per = bmod.DOCS_PER_DOC_PARTITION
+    big = 10 * cores * per + 1
+    assert bmod.pass_width(spark, 2 * cores, big, per) == 10 * cores + 1
+    # a 32-core cluster whose session width is its core count
+    many = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=32))
+    assert bmod.pass_width(many, 32, 2_000, per) == 32
+    assert bmod.pass_width(many, 32, 3_000_000, 60_000) == 50
 
 
 def test_wand_byte_gate_falls_through_to_selectivity_gate(spark, tmp_path):
@@ -238,7 +326,11 @@ def test_driver_dictionary_equals_spark_aggregation(spark, tmp_path, monkeypatch
     Spark aggregation and commit the same dictionary."""
     from pyspark.sql import functions as F
 
-    rows = [(i, f"alpha beta{i % 50} gamma{i % 7} " + "delta " * (i % 5)) for i in range(5000)]
+    # "alpha" twice per doc: a third of the tokens, so even a one-wave
+    # route plan (4 partitions on the test session) stripes it
+    rows = [
+        (i, f"alpha alpha beta{i % 50} gamma{i % 7} " + "delta " * (i % 5)) for i in range(5000)
+    ]
     out = str(tmp_path / "index")
     m = bmod.build_index(spark, spark.createDataFrame(rows, "doc_id long, text string"), out)
     assert "term_stats" in m["metrics"]["phase_seconds"]

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 import tempfile
 from contextlib import redirect_stdout
@@ -148,41 +149,32 @@ def _audit(stderr_file, orig_fd) -> None:
     )
 
     # 6c: the encoded build's routed token shuffle — map side must be pure
-    # JVM (tokenize kernel + two broadcast hash joins, NO ArrowEvalPython /
-    # second MapInPandas before the exchange), exactly ONE exchange, and the
-    # planned partition count must be honored (REPARTITION_BY_NUM)
-    import numpy as np
-
+    # JVM (the fused tokenize kernel, which emits stemmed terms, + two
+    # broadcast hash joins, NO ArrowEvalPython / second MapInPandas before
+    # the exchange), exactly ONE exchange, and the planned partition count
+    # must be honored (REPARTITION_BY_NUM)
     from searchengine_spark.indexing.build import (
-        _encoded_routed_tokens,
-        _invert_partition_hash,
-        _plan_term_routes,
-        _vocab_id_maps,
+        _collect_vocab,
+        _fused_terms,
+        _planned_token_stream,
+        _route_plan,
     )
-    from searchengine_spark.text.spark_tokenize import _types_kernel
+    from searchengine_spark.indexing.build_dist import (
+        WEIGHTED_TERMS_SCHEMA,
+        _fused_tokenize_stats_kernel,
+    )
 
     bd = spark.createDataFrame(
         [(i, f"alpha beta tok{i % 7} gamma the the") for i in range(300)],
         "doc_id long, text string",
     )
-    types = bd.select("doc_id", "text").mapInPandas(
-        _types_kernel("text", "doc_id"), schema="doc_id long, position int, type string"
+    terms = _fused_terms(
+        bd.mapInPandas(_fused_tokenize_stats_kernel("text", "doc_id"), schema=WEIGHTED_TERMS_SCHEMA)
     )
-    vr = types.groupBy("type").agg(F.count("*").alias("c")).collect()
-    tlist = [r["type"] for r in vr]
-    tid, _id2term, empty = _vocab_id_maps(tlist)
-    tt = np.zeros(len(_id2term), np.int64)
-    np.add.at(tt, tid.astype(np.int64), np.array([r["c"] for r in vr], np.int64))
-    base, ks, P = _plan_term_routes(tt, max(1, int(tt.sum()) // 8))
-    routed = (
-        _encoded_routed_tokens(
-            spark, types, tlist, tid, empty, base, ks, _invert_partition_hash(P),
-            pack_bits=(23, 12),
-        )
-        .repartition(P, F.col("_route"))
-        .select("packed")
-        .sortWithinPartitions("packed")
-    )
+    vocab = _collect_vocab(terms)
+    plan = _route_plan(vocab.term_tokens, 8)
+    P = plan[2]
+    routed = _planned_token_stream(spark, terms, vocab, plan, pack_bits=(23, 12))
     p6c = routed._jdf.queryExecution().executedPlan().toString()
     sections.append(("Routed encoded token shuffle (build map side)", p6c))
     checks.append(
@@ -192,11 +184,14 @@ def _audit(stderr_file, orig_fd) -> None:
             f"MapInPandas x{p6c.count('MapInPandas')} (tokenize only), no ArrowEvalPython",
         )
     )
+    widths = re.findall(r"Exchange hashpartitioning\(_route#\d+, (\d+)\)", p6c)
     checks.append(
         (
-            "one planned exchange, no sampling range partitioner",
-            p6c.count("Exchange hashpartitioning") == 1 and "rangepartitioning" not in p6c,
-            f"Exchange hashpartitioning(_route, {P}) x1",
+            "one planned exchange at the planned width, no sampling range partitioner",
+            p6c.count("Exchange hashpartitioning") == 1
+            and widths == [str(P)]
+            and "rangepartitioning" not in p6c,
+            f"Exchange hashpartitioning(_route, {'/'.join(widths) or '?'}) x1, planned {P}",
         )
     )
 
