@@ -16,8 +16,12 @@ Two postings producers; IndexBuilder.build picks one:
                        non-empty corpus of at most BROADCAST_WEIGHTS_MAX_DOCS
                        docs whose vocabulary, doc ids and packed key fit;
   build_encoded_dist   (build_dist module) distributed dictionary, doc_len
-                       on each posting row, no doc-id range assumed —
-                       everything else, the empty corpus included.
+                       and L_d on each posting row, no doc-id range assumed
+                       — everything else, the empty corpus included.
+Both hand their sorted rows to ONE sink (_write_postings_segments), which
+the streaming compactions share: it cuts postings and segments in one pass
+and side-writes per-partition term summaries (the fused sink), or, for
+Iceberg sinks and non-local masters, runs two passes over a persisted input.
 
 Artifacts (all parquet, under one index directory):
   postings/      term, doc_id, tf, positions, wdt_bm25, wdt_tfidf_norm
@@ -26,20 +30,23 @@ Artifacts (all parquet, under one index directory):
                  build time so the query hot path never joins doc_stats
                  (the reference recomputes wdt per posting per query,
                  rankedquery.py:18-25 — its slow path)
+  segments/      block-max blocks of the same postings (segments module),
+                 cut by the sink from the same sorted partitions
   doc_stats/     doc_id, title, doc_len, l2_weight (+ carried metadata cols)
   term_stats/    term, df, cf, weight maxima and per-term block-max meta
                  (broadcast at query time; plays the SQLite dictionary's
                  role, spimi.py:25-29) — merged on the driver from the
                  fused sink's per-partition block summaries, as the
                  reference records its dictionary in the pass that writes
-                 postings.bin (spimi.py:238-266); the two-pass shapes
-                 aggregate the segments in Spark instead
+                 postings.bin (spimi.py:238-266); the two-pass sink and
+                 resumed builds aggregate the segments in Spark instead
   corpus_stats/  n_docs, total_tokens, avgdl (1 row)
   manifest.json  per-stage lineage + build metrics (postings/sec, skew ratio)
 
 Resumability: each artifact write is idempotent and the manifest records
 completed stages; ``build_index(..., resume=True)`` skips stages whose
-artifact + manifest entry already exist.
+artifact + manifest entry already exist.  Postings and segments resume as
+one unit: the sink runs again unless both are done.
 """
 
 from __future__ import annotations
@@ -266,12 +273,12 @@ def term_stats_with_block_meta(segments_df: DataFrame, postings_df: DataFrame | 
     term split across range partitions still groups correctly), so the sums
     and maxima are identical by construction; the term_stats gate pins it.
 
-    A build or compaction whose fused sink ran merges the same dictionary
+    A build or compaction whose sink ran fused merges the same dictionary
     on the driver from per-partition block summaries instead
     (segments.block_summary, _merge_term_stats_tables) — no job.  This
-    aggregation serves every other shape: the two-pass sinks (Iceberg,
-    non-local masters), resumed builds, build_encoded_dist, dictionaries
-    over VOCAB_ENCODE_MAX, and the streaming tier merge.
+    aggregation serves every other shape: the two-pass sink (Iceberg,
+    non-local masters), resumed builds whose sink did not run,
+    dictionaries over VOCAB_ENCODE_MAX, and the streaming tier merge.
 
     ``postings_df`` is only consulted for LEGACY segment artifacts written
     before the per-block sum_tf column existed (a resumed pre-change build
@@ -443,18 +450,14 @@ def _whole_partition_packed(batches):
     return chunks[0] if len(chunks) == 1 else np.concatenate(chunks)
 
 
-def _postings_kernel_packed(
-    avgdl: float | None, weights_bc, id2term_bc, d_bits: int, p_bits: int, doc_base: int = 0
-):
-    """mapInArrow postings kernel over partitions sorted by a single
-    ``packed`` int64 (see _packed_postings for the key layout).  Sorting one
-    long instead of (term_id, doc_id, position) makes the external sort
-    compare 8-byte ints and shrinks shuffle rows to one field — the
-    width-4/8 levels are memory-stall-bound, and sorted bytes convert
-    directly into scaling headroom.  Batches stream: each emits its complete
-    (term, doc) groups and carries the trailing one, so memory is
-    O(batch + largest group).  ``avgdl=None`` emits RAW_POSTINGS_SCHEMA
-    rows (no weights, ``weights_bc`` unused); ``doc_base`` is added to the
+def _postings_kernel_packed(id2term_bc, d_bits: int, p_bits: int, doc_base: int = 0):
+    """mapInArrow RAW postings kernel (RAW_POSTINGS_SCHEMA, no weights: a
+    streaming epoch's delta) over partitions sorted by a single ``packed``
+    int64 (see _packed_postings for the key layout).  Sorting one long
+    instead of (term_id, doc_id, position) makes the external sort compare
+    8-byte ints and shrinks shuffle rows to one field.  Batches stream: each
+    emits its complete (term, doc) groups and carries the trailing one, so
+    memory is O(batch + largest group).  ``doc_base`` is added to the
     packed doc ids, so a streaming epoch packs its own 0-based ids."""
 
     @engine_kernel
@@ -463,12 +466,7 @@ def _postings_kernel_packed(
 
         def emit(packed):
             run_starts, run_terms, doc, *rest = _packed_postings(
-                packed,
-                avgdl,
-                None if weights_bc is None else weights_bc.value,
-                id2term_bc.value,
-                d_bits,
-                p_bits,
+                packed, None, None, id2term_bc.value, d_bits, p_bits
             )
             yield from _postings_batches(run_starts, run_terms, doc + doc_base, *rest)
 
@@ -524,7 +522,7 @@ def _partition_kernel(postings_of, seg_dir: str | None = None):
     With ``seg_dir`` it also side-writes the partition's segment rows there
     as one parquet part file via pyarrow — the fused sink: ONE pass cuts
     BOTH artifacts while the group/weight arrays are still hot, instead of
-    from a persisted cache in a second job (_segments_partition_kernel).
+    from a persisted input in a second job (_segments_partition_kernel).
     Measured alternatives at 900k/width 4: persist + second pass ≈ +13 s;
     persist + two CONCURRENT consumer jobs ≈ +17 s (DRAM contention on
     pinned cores).  Task retries are idempotent: the part file is named by
@@ -565,10 +563,10 @@ def _partition_kernel(postings_of, seg_dir: str | None = None):
 def _segments_partition_kernel(postings_of):
     """mapInArrow block-max segment kernel (SEGMENT_SCHEMA) over the same
     sorted partitions and ``postings_of`` source as _partition_kernel — the
-    second pass of the two-pass shape (Iceberg sinks, resumed builds,
-    non-local masters).  Block metadata come from segmented reductions and
-    every blob of the partition from one codec.encode_blocks pass
-    (segments.block_batch) — no per-block Python."""
+    second pass of the two-pass sink (Iceberg sinks, non-local masters).
+    Block metadata come from segmented reductions and every blob of the
+    partition from one codec.encode_blocks pass (segments.block_batch) — no
+    per-block Python."""
 
     @engine_kernel
     def fn(batches):
@@ -598,22 +596,38 @@ def _packed_partition(avgdl: float, weights_bc, id2term_bc, d_bits: int, p_bits:
     return postings_of
 
 
-def _segments_kernel_packed(avgdl: float, weights_bc, id2term_bc, d_bits: int, p_bits: int):
-    """Block-max segment encoder over the sorted packed-long partitions the
-    postings kernel consumes (the two-pass shape)."""
-    return _segments_partition_kernel(
-        _packed_partition(avgdl, weights_bc, id2term_bc, d_bits, p_bits)
-    )
+def _raw_partition(avgdl: float, weights_bc, lo: int):
+    """_partition_kernel source over rows (term, doc_id, tf, positions)
+    sorted by (term, doc_id) — the dist build's routed postings and a
+    compaction's raw deltas: one partition's postings arrays with the
+    document weights of ``avgdl``.  Doc weight inputs come from the dense
+    broadcast ``weights_bc`` = (doc_len, l2) arrays indexed by doc_id - lo,
+    or, when it is None, from ``doc_len``/``l2_weight`` columns on the rows."""
 
+    def postings_of(batches):
+        import numpy as np
+        import pyarrow as pa
 
-def _postings_segments_kernel_packed(
-    avgdl: float, weights_bc, id2term_bc, d_bits: int, p_bits: int, seg_dir: str
-):
-    """The fused sink over sorted packed-long partitions: postings rows out,
-    segment blocks side-written into ``seg_dir``."""
-    return _partition_kernel(
-        _packed_partition(avgdl, weights_bc, id2term_bc, d_bits, p_bits), seg_dir=seg_dir
-    )
+        from searchengine_spark.indexing.segments import term_runs
+
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
+            return None
+        t = pa.Table.from_batches(batches).combine_chunks()
+        doc = t.column("doc_id").to_numpy()
+        tf = t.column("tf").to_numpy()
+        if weights_bc is None:
+            dl = t.column("doc_len").to_numpy().astype(np.float64)
+            l2 = t.column("l2_weight").to_numpy()
+        else:
+            dl_arr, l2_arr = weights_bc.value
+            dl, l2 = dl_arr[doc - lo], l2_arr[doc - lo]
+        w_bm, w_ti = _doc_weights(tf, dl, l2, avgdl)
+        run_starts, run_terms = term_runs(t.column("term").chunk(0))
+        flat_pos = t.column("positions").chunk(0).flatten().to_numpy()
+        return run_starts, run_terms, doc, tf, flat_pos, w_bm, w_ti
+
+    return postings_of
 
 
 def _side_write_ok(spark: SparkSession, path: str) -> bool:
@@ -674,6 +688,65 @@ def _finalize_side_segments(
     with open(os.path.join(seg_dir, "_SUCCESS"), "w"):
         pass
     return summaries
+
+
+def _write_postings_segments(
+    spark: SparkSession,
+    sorted_rows: DataFrame,
+    postings_of,
+    out_dir: str,
+    write=None,
+    iceberg: bool = False,
+    max_terms: int | None = None,
+):
+    """The one postings+segments sink of every producer — the bulk encoded
+    and dist builds and both streaming compactions.  ``sorted_rows`` are
+    partitions sorted by (term, doc_id) (or by the packed key, which sorts
+    the same way) and ``postings_of`` turns one partition into its weighted
+    postings arrays (_packed_partition, _raw_partition).  Writes
+    ``out_dir/postings`` and ``out_dir/segments`` through ``write(df,
+    name)`` (default: a parquet overwrite of ``out_dir/name``).
+
+    Where executors share the driver's filesystem (_side_write_ok) and the
+    sink is not Iceberg, one pass cuts both artifacts (_partition_kernel
+    with a side-write); otherwise two passes run over the persisted input.
+    Either way block cuts follow whole partitions, so the two shapes write
+    the same segment rows.  Returns ``(n_postings, summaries)``: the
+    postings count from the parquet footers (None for an Iceberg sink) and
+    the fused kernels' term summaries — None after two passes, or when
+    they hold more than ``max_terms`` rows (_finalize_side_segments)."""
+    import shutil
+
+    from .segments import SEGMENT_SCHEMA
+
+    post_dir, seg_dir = os.path.join(out_dir, "postings"), os.path.join(out_dir, "segments")
+    if write is None:
+
+        def write(df: DataFrame, name: str) -> None:
+            df.write.mode("overwrite").parquet(os.path.join(out_dir, name))
+
+    set_desc = spark.sparkContext.setJobDescription
+    if not iceberg and _side_write_ok(spark, seg_dir):
+        # one sorted stream, touched once, nothing persisted (the measured
+        # alternatives are in _partition_kernel's docstring)
+        set_desc("phase:postings+segments — one pass, fused sinks")
+        shutil.rmtree(seg_dir, ignore_errors=True)
+        os.makedirs(seg_dir)
+        kernel = _partition_kernel(postings_of, seg_dir)
+        write(sorted_rows.mapInArrow(kernel, schema=POSTINGS_SCHEMA), "postings")
+        n_postings = sum(p["rows"] for p in _partition_lineage(post_dir))
+        return n_postings, _finalize_side_segments(spark, seg_dir, n_postings, max_terms)
+    set_desc("phase:postings+segments — two passes over a persisted input")
+    cached = sorted_rows.persist()
+    try:
+        write(cached.mapInArrow(_partition_kernel(postings_of), schema=POSTINGS_SCHEMA), "postings")
+        segments = cached.mapInArrow(_segments_partition_kernel(postings_of), schema=SEGMENT_SCHEMA)
+        write(segments, "segments")
+    finally:
+        cached.unpersist()
+    if iceberg:
+        return None, None
+    return sum(p["rows"] for p in _partition_lineage(post_dir)), None
 
 
 def _write_term_stats(table, path: str) -> None:
@@ -1163,6 +1236,27 @@ class IndexBuilder:
         finally:
             self.spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
+    def _sink_done(self, resume: bool) -> bool:
+        """Postings and segments resume as one unit: the sink runs again
+        unless both stages are done."""
+        return resume and self._stage_done("postings") and self._stage_done("segments")
+
+    def _postings_segments(self, sorted_rows: DataFrame, postings_of):
+        """Run the shared sink (_write_postings_segments) into this build's
+        stage targets and mark both stages.  Returns the fused kernels'
+        term summaries, or None (see the sink)."""
+        _, summaries = _write_postings_segments(
+            self.spark,
+            sorted_rows,
+            postings_of,
+            self.out_dir,
+            write=self._write_stage,
+            iceberg=self._iceberg_ok,
+        )
+        self._mark_stage("postings")
+        self._mark_stage("segments")
+        return summaries
+
     def _finish(
         self,
         clock: PhaseClock,
@@ -1170,66 +1264,24 @@ class IndexBuilder:
         n_docs,
         avgdl,
         total_tokens,
-        weights_bc,
-        postings_partitions,
         set_desc,
         resume,
         fused_cache=None,
-        packed_cache=None,
-        seg_kernel=None,
-        segments_done=False,
         summaries=None,
     ) -> dict:
-        """Shared build tail of both postings producers: segments,
-        dictionary, metrics, cache release.  The producer hands over its
-        sorted postings source as ``packed_cache`` with the ``seg_kernel``
-        that cuts segment blocks from it, or arrives with segments already
-        written (``segments_done``, the fused sink).  A resumed build with
-        neither re-sorts the postings artifact and encodes that.
+        """Shared build tail of both postings producers, after the sink
+        wrote postings and segments: dictionary, metrics, cache release.
 
-        The fused sink also hands over its per-partition term summaries
+        The fused sink hands over its per-partition term summaries
         (``summaries``, None when they exceed VOCAB_ENCODE_MAX rows): the
         dictionary and the metrics' df and block totals then come from one
-        driver-side merge (_merge_term_stats_tables) and run no job.  Every
-        other shape — the two-pass sinks, resumed builds,
-        build_encoded_dist — aggregates the segments in Spark
+        driver-side merge (_merge_term_stats_tables) and run no job.  The
+        two-pass sink and resumed builds aggregate the segments in Spark
         (term_stats_with_block_meta)."""
         lap = clock.lap
         # read where a shape needs it: opening the artifact infers its
         # schema with a Spark job, which the fused tail does not need
         postings_df = functools.partial(self._read_stage, "postings")
-
-        # S5/B4: compressed block-max segments (delta+varbyte blobs; the
-        # reference's postings.bin, spimi.py:145-187, plus the varbyte the
-        # north rule adds) — encoded from the producer's cached sorted
-        # source when the postings stage ran in this build, else from a
-        # re-sorted read-back.
-        # segments_done: the fused-sink postings pass already side-wrote and
-        # marked this build's segments — fresh builds ignore stage markers
-        # (they only gate resume), so the flag is the signal that the
-        # artifact is THIS build's output, not a stale leftover
-        if not segments_done and (not self._stage_done("segments") or not resume):
-            from .segments import SEGMENT_SCHEMA, encode_segments
-
-            set_desc("phase:segments — varbyte block encode + write")
-            if packed_cache is not None:
-                seg_df = packed_cache.mapInArrow(seg_kernel, schema=SEGMENT_SCHEMA)
-            else:
-                seg_df = encode_segments(
-                    postings_df().repartitionByRange(
-                        postings_partitions, "term", "doc_id"
-                    ).sortWithinPartitions("term", "doc_id")
-                )
-            self._write_stage(seg_df, "segments")
-            self._mark_stage("segments")
-            lap("segments")
-        if packed_cache is not None:
-            packed_cache.unpersist()
-        if weights_bc is not None:
-            # postings + segments both materialized above; free the worker-side
-            # weight arrays (they would otherwise pin ~16 bytes/doc per worker
-            # for the life of the session)
-            weights_bc.unpersist()
 
         # B7 + block-max metadata: the broadcastable dictionary.  Per-term
         # block-max tops ride along (top-32 block maxima, min block max,
@@ -1387,10 +1439,8 @@ class IndexBuilder:
             — no stem-dictionary subquery re-executed under every action;
           * ONE stats pseudo-row collect serving corpus stats AND the
             broadcast doc weight arrays — zero-shuffle doc stats;
-          * ONE driver-planned shuffle of packed int64 keys, then one pass
-            that cuts postings and segments (the fused sink) or a persisted
-            packed cache feeding two passes (Iceberg sinks, non-local
-            masters, resumed builds).
+          * ONE driver-planned shuffle of packed int64 keys into the shared
+            postings+segments sink (_write_postings_segments).
 
         Hands over to build_encoded_dist when the vocabulary exceeds
         VOCAB_ENCODE_MAX, a doc id lies outside the dense broadcast range,
@@ -1458,9 +1508,6 @@ class IndexBuilder:
         if weights is None or pack_bits is None:
             fused.unpersist()
             return build_encoded_dist(self, docs, n_docs, resume=resume)
-        d_bits, p_bits = pack_bits
-        id2term_bc = spark.sparkContext.broadcast(vocab.id2term)
-        weights_bc = spark.sparkContext.broadcast(weights)
         lap("stats_collect")
 
         writer: threading.Thread | None = None
@@ -1486,71 +1533,29 @@ class IndexBuilder:
             writer = threading.Thread(target=write_stats, daemon=True)
             writer.start()
 
-        # -- postings: driver-planned shuffle + kernel.  Weights + term
-        # strings ride broadcasts into the kernel; the shuffle carries one
-        # packed long per token; the partition ASSIGNMENT is computed on the
-        # driver from the exact per-term token totals (greedy contiguous
-        # packing, hot terms striped by doc_id % k) and routed through
-        # murmur3-representative values — no range-sampling pass over the
-        # token stream, no sampling error in the balance, skew defused
-        # deterministically.
-        plan = _route_plan(vocab.term_tokens, self._sp_build)
-        postings_partitions = plan[2]
-        packed_cache = None
-        seg_kernel = None
-        fused_segments_done = False
+        # -- postings+segments: driver-planned shuffle into the shared sink.
+        # Weights + term strings ride broadcasts into the kernel; the
+        # shuffle carries one packed long per token; the partition
+        # ASSIGNMENT is computed on the driver from the exact per-term token
+        # totals (greedy contiguous packing, hot terms striped by doc_id %
+        # k) and routed through murmur3-representative values — no
+        # range-sampling pass over the token stream, no sampling error in
+        # the balance, skew defused deterministically.
         summaries = None
-        if not self._stage_done("postings") or not resume:
-            stream = _planned_token_stream(spark, terms, vocab, plan, pack_bits)
-            seg_dir = self._stage_target("segments")
-            fuse_segments = (
-                not self._iceberg_ok
-                and _side_write_ok(spark, seg_dir)
-                and (not self._stage_done("segments") or not resume)
+        if not self._sink_done(resume):
+            sc = spark.sparkContext
+            id2term_bc, weights_bc = sc.broadcast(vocab.id2term), sc.broadcast(weights)
+            plan = _route_plan(vocab.term_tokens, self._sp_build)
+            summaries = self._postings_segments(
+                _planned_token_stream(spark, terms, vocab, plan, pack_bits),
+                _packed_partition(avgdl, weights_bc, id2term_bc, *pack_bits),
             )
-            if fuse_segments:
-                # ONE pass cuts BOTH artifacts: the kernel emits the
-                # postings rows (Spark's parquet sink) AND side-writes its
-                # partition's segment blocks as a parquet part file
-                # (pyarrow, tmp+rename so a task retry is idempotent; local
-                # masters only, see _side_write_ok).
-                # The alternatives both lose on this memory-bound stage: a
-                # persisted packed cache + second segments pass pays a cache
-                # store and a full decompress re-scan (~13 s/900k at width
-                # 4), and overlapping two cache consumers as concurrent jobs
-                # measured WORSE (145 s vs 120 s walls — two streaming
-                # kernels thrash the pinned cores' DRAM bandwidth).  One
-                # sorted stream, touched once, nothing persisted.  Iceberg
-                # sinks keep the two-pass shape (segments must go through
-                # the snapshot commit).
-                import shutil
-
-                shutil.rmtree(seg_dir, ignore_errors=True)
-                os.makedirs(seg_dir, exist_ok=True)
-                set_desc("phase:postings+segments — one packed pass, fused sinks")
-                kernel = _postings_segments_kernel_packed(
-                    avgdl, weights_bc, id2term_bc, d_bits, p_bits, seg_dir
-                )
-                self._write_stage(stream.mapInArrow(kernel, schema=POSTINGS_SCHEMA), "postings")
-                self._mark_stage("postings")
-                summaries = _finalize_side_segments(
-                    spark,
-                    seg_dir,
-                    sum(p["rows"] for p in self.manifest["stages"]["postings"]["partitions"]),
-                )
-                self._mark_stage("segments")
-                fused_segments_done = True
-                lap("postings_segments")
-            else:
-                set_desc("phase:postings — planned packed-long shuffle + kernel + parquet write")
-                packed_cache = stream.persist()
-                kernel = _postings_kernel_packed(avgdl, weights_bc, id2term_bc, d_bits, p_bits)
-                self._write_stage(
-                    packed_cache.mapInArrow(kernel, schema=POSTINGS_SCHEMA), "postings"
-                )
-                seg_kernel = _segments_kernel_packed(avgdl, weights_bc, id2term_bc, d_bits, p_bits)
-                self._mark_stage("postings")
-                lap("postings")
+            # both artifacts are written: free the worker-side term strings
+            # and weight arrays (they would otherwise stay pinned for the
+            # life of the session)
+            id2term_bc.unpersist()
+            weights_bc.unpersist()
+            lap("postings_segments")
 
         if writer is not None:
             writer.join()
@@ -1566,14 +1571,9 @@ class IndexBuilder:
             n_docs=n_docs,
             avgdl=avgdl,
             total_tokens=total_tokens,
-            weights_bc=weights_bc,
-            postings_partitions=postings_partitions,
             set_desc=set_desc,
             resume=resume,
             fused_cache=fused,
-            packed_cache=packed_cache,
-            seg_kernel=seg_kernel,
-            segments_done=fused_segments_done,
             summaries=summaries,
         )
 

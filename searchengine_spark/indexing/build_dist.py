@@ -14,10 +14,9 @@ kernel therefore emits FINISHED postings map-side, and the whole build
 shuffles per-POSTING rows instead of per-token rows:
 
   * doc weights: never broadcast, never joined, never duplicated per token —
-    L_d and doc_len reduce locally inside the tokenize kernel, the
-    tfidf weight w_dt = (1+ln tf)/L_d (which needs no global input) is
-    FINALIZED map-side, and only doc_len (for BM25, which needs the global
-    avgdl) rides each posting row;
+    L_d and doc_len reduce locally inside the tokenize kernel and ride each
+    posting row, so the sink computes both weights per partition with the
+    encoded path's own formula (build._doc_weights, _raw_partition);
   * stemming: folded into the same kernel over each partition's DISTINCT
     types (a cross-batch memo — O(partition vocab), not O(tokens)), so the
     rows already carry final term strings and the dictionary phase needs no
@@ -38,16 +37,18 @@ shuffles per-POSTING rows instead of per-token rows:
   * ONE planned route shuffle of finished posting rows, routed through
     murmur3-representative values (exact driver-planned partitioner, no
     range-sampling job), sorted (term, doc_id) within partitions;
-  * the postings write is a PURE JVM projection over the routed cache —
-    w_dt(tfidf) arrived finished, and BM25's w_dt is log-free arithmetic on
-    (tf, doc_len, avgdl-literal), so the widest write of the build runs
-    entirely inside whole-stage codegen with no Python in the loop.
+  * the same postings+segments sink as the encoded build
+    (build._write_postings_segments): one pass over the routed partitions
+    writes postings and side-writes segments plus per-partition term
+    summaries, which the driver merges into the dictionary below
+    VOCAB_ENCODE_MAX terms.
 
 Shuffle inventory over the corpus: ONE map-side-combined aggregation
 (vocab-sized output), ONE shuffle join for the cold plan tail only, ONE
 planned route shuffle of per-posting rows (~half the rows of a token
-shuffle, no per-token weight duplication).  Everything else is vocab-sized
-or smaller.
+shuffle, no per-token weight duplication), consumed once by the fused sink
+(the two-pass sink persists it for a second pass).  Everything else is
+vocab-sized or smaller.
 
 Reference parity: artifacts and semantics identical to build.py's paths
 (engine/indexing/spimi.py:56-298 for the SPIMI contract); gates and
@@ -61,7 +62,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..worker import engine_kernel
-from .logical import BM25_B, BM25_K1
 
 # term rows carry (doc_id, position, term); stats pseudo-rows use
 # position = -1 (one per doc, filtered apart by consumers).  Used by the
@@ -70,10 +70,10 @@ WEIGHTED_TERMS_SCHEMA = (
     "doc_id long, position int, term string, doc_len int, l2_weight double"
 )
 # the dist path's cache rows: finished postings (term != null) + one stats
-# pseudo-row per doc (term null, tf 0).  ``w`` is w_dt(tfidf) on posting
-# rows and L_d on stats rows — the only per-doc scalar each consumer needs.
+# pseudo-row per doc (term null, tf 0), each with its doc's doc_len and L_d
+# — the doc weight inputs the sink reads off the rows (_raw_partition)
 GROUPED_SCHEMA = (
-    "doc_id long, term string, tf int, positions array<int>, doc_len int, w double"
+    "doc_id long, term string, tf int, positions array<int>, doc_len int, l2_weight double"
 )
 DICT_SCHEMA = "term string, tokens long, base int, ksplit int"
 
@@ -216,13 +216,12 @@ def _fused_tokenize_stats_kernel(text_col: str, id_col: str):
 
 def _fused_tokenize_group_kernel(text_col: str, id_col: str):
     """(doc_id, text) batches -> FINISHED posting rows (term, doc_id, tf,
-    sorted positions, doc_len, w_dt(tfidf)) plus one stats pseudo-row
-    (term = null, tf = 0, doc_len, L_d) per non-empty doc.
+    sorted positions, doc_len, L_d) plus one stats pseudo-row (term = null,
+    tf = 0, doc_len, L_d) per non-empty doc.
 
     The map-side SPIMI step (module docstring): each doc is one input row,
     so (stem, doc) groups complete inside the batch — tf, positions,
-    doc_len, and L_d all reduce locally, and w_dt(tfidf) = (1+ln tf)/L_d
-    needs nothing global.  Grouping/stats identical to
+    doc_len, and L_d all reduce locally.  Grouping/stats identical to
     ``_fused_tokenize_stats_kernel`` (same _StemMemo ids, same lexsort group
     order, same _doc_l2 sum — bit-identical L_d to the encoded path);
     positions additionally sort ascending inside each group, which is the
@@ -267,8 +266,7 @@ def _fused_tokenize_group_kernel(text_col: str, id_col: str):
             dstarts = np.flatnonzero(dchange)
             udoc = gdoc[dstarts]
             doc_len = np.add.reduceat(tf, dstarts)
-            tf_f = tf.astype(np.float64)
-            l2 = _doc_l2(np.square(1.0 + np.log(tf_f)), gdoc, dstarts)
+            l2 = _doc_l2(np.square(1.0 + np.log(tf.astype(np.float64))), gdoc, dstarts)
             gdi = np.searchsorted(udoc, gdoc)  # group -> its doc's stats
             gstem = np.asarray(memo.stems, dtype=object)[gsid]
             keep = gstem != ""
@@ -287,7 +285,7 @@ def _fused_tokenize_group_kernel(text_col: str, id_col: str):
                     ),
                     "positions": [pos_groups[i] for i in kept] + [None] * n_doc,
                     "doc_len": np.concatenate([doc_len[gdi[keep]], doc_len]).astype(np.int32),
-                    "w": np.concatenate([(1.0 + np.log(tf_f[keep])) / l2[gdi[keep]], l2]),
+                    "l2_weight": np.concatenate([l2[gdi[keep]], l2]),
                 }
             )
 
@@ -353,54 +351,11 @@ def _assign_plan(terms: DataFrame, target: int, width: int):
     return plan, ranged
 
 
-def _segments_kernel_dist(avgdl: float):
-    """mapInArrow block-max segment encoder over the sorted routed
-    partitions (see build._segments_kernel_packed for the layout contract):
-    rows arrive as finished postings sorted (term, doc_id), so the kernel
-    only cuts each term's run into BLOCK_SIZE blocks and encodes them in one
-    segments.block_batch pass — no regrouping, no per-block Python.  BM25
-    weights recomputed with the same expression shape as the postings
-    projection so block maxima match the postings values."""
-
-    @engine_kernel
-    def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from searchengine_spark.indexing.segments import block_batch, term_runs
-
-        batches = [b for b in batches if b.num_rows]
-        if not batches:
-            return
-
-        def col(name):
-            return pa.concat_arrays([b.column(name) for b in batches])
-
-        tf = col("tf").to_numpy().astype(np.int64)
-        tf_f = tf.astype(np.float64)
-        dl = col("doc_len").to_numpy().astype(np.float64)
-        w_bm = ((BM25_K1 + 1.0) * tf_f) / (
-            BM25_K1 * ((1.0 - BM25_B) + BM25_B * (dl / avgdl)) + tf_f
-        )
-        run_starts, run_terms = term_runs(col("term"))
-        yield block_batch(
-            run_starts,
-            run_terms,
-            col("doc_id").to_numpy(),
-            tf,
-            w_bm,
-            col("w").to_numpy(),
-            col("positions").flatten().to_numpy(),
-        )
-
-    return fn
-
-
 def build_encoded_dist(builder, docs: DataFrame, n_docs: int, resume: bool = False) -> dict:
     """Orchestrate the distributed map-side SPIMI build (module docstring).
-    ``builder`` is the IndexBuilder — manifest/resume/_finish are shared
-    with the in-memory paths so artifacts, metrics, and the
-    segments/term_stats tail are byte-for-byte the same machinery."""
+    ``builder`` is the IndexBuilder — manifest/resume, the postings+segments
+    sink and the _finish tail are shared with the encoded path, so
+    artifacts, metrics and the dictionary are the same machinery."""
     import threading
 
     from . import build as B
@@ -433,7 +388,7 @@ def build_encoded_dist(builder, docs: DataFrame, n_docs: int, resume: bool = Fal
         stats_df = grouped.filter(F.col("term").isNull()).select(
             "doc_id",
             F.col("doc_len").cast("long").alias("doc_len"),
-            F.col("w").alias("l2_weight"),
+            "l2_weight",
         )
     else:
         stats_df = (
@@ -471,10 +426,8 @@ def build_encoded_dist(builder, docs: DataFrame, n_docs: int, resume: bool = Fal
         writer = threading.Thread(target=write_stats, daemon=True)
         writer.start()
 
-    routed_cache = None
-    seg_kernel = None
-    postings_partitions = builder._sp_build  # pass_width, as IndexBuilder.build set it
-    if not builder._stage_done("postings") or not resume:
+    summaries = None
+    if not builder._sink_done(resume):
         # -- plan: one map-side-combined aggregation over the posting rows
         # (vocab-sized output — rows already carry final stems, no UDF),
         # then the distributed contiguous-range plan.
@@ -489,7 +442,8 @@ def build_encoded_dist(builder, docs: DataFrame, n_docs: int, resume: bool = Fal
         total_route_tokens = int(vrow["tok_total"] or 0)
         dict_width = B.pass_width(spark, builder.n_partitions, n_terms, TERMS_PER_DICT_PARTITION)
         # route-shuffle sizing: same data law as the in-memory paths
-        target_tokens = max(1, -(-total_route_tokens // postings_partitions))
+        # (pass_width, as IndexBuilder.build set it)
+        target_tokens = max(1, -(-total_route_tokens // builder._sp_build))
         plan, ranged = _assign_plan(terms, target_tokens, dict_width)
         prow = plan.agg(F.max(F.col("base") + F.col("ksplit")).alias("p")).collect()[0]
         n_parts = max(1, int(prow["p"] or 1))
@@ -500,8 +454,7 @@ def build_encoded_dist(builder, docs: DataFrame, n_docs: int, resume: bool = Fal
         # -- route: hot slice of the plan broadcast (map-side, carries the
         # skewed mass), cold tail via shuffle join (counts bounded by the
         # K-th hot count — skew-free), then ONE planned exchange of
-        # finished posting rows.
-        set_desc("phase:postings — hot/cold plan join + planned route shuffle")
+        # finished posting rows into the shared sink.
         hot_plan = plan.orderBy(F.desc("tokens")).limit(HOT_TERMS_K).select(
             "term", "base", "ksplit"
         )
@@ -519,43 +472,27 @@ def build_encoded_dist(builder, docs: DataFrame, n_docs: int, resume: bool = Fal
             "part int, _route int",
         )
         part = (F.col("base") + F.pmod(F.col("doc_id"), F.col("ksplit"))).cast("int")
-        routed_cache = (
+        routed = (
             enc.withColumn("part", part)
             .join(F.broadcast(route_df), "part")
-            .select("term", "doc_id", "tf", "positions", "doc_len", "w", "_route")
+            .select("term", "doc_id", "tf", "positions", "doc_len", "l2_weight", "_route")
             .repartition(n_parts, F.col("_route"))
             .drop("_route")
             .sortWithinPartitions("term", "doc_id")
-            .persist()
-        )
-        # postings write: pure JVM projection (module docstring) — BM25 is
-        # log-free arithmetic with avgdl as a literal; the expression shape
-        # matches the segment kernel's numpy recompute term-for-term.
-        # (Running this write concurrently with the segments kernel was
-        # measured WORSE on pinned cores — two streaming consumers thrash
-        # DRAM bandwidth — so the tail stays serial here.)
-        tf_d = F.col("tf").cast("double")
-        wdt_bm25 = ((BM25_K1 + 1.0) * tf_d) / (
-            BM25_K1
-            * ((1.0 - BM25_B) + BM25_B * (F.col("doc_len").cast("double") / F.lit(avgdl)))
-            + tf_d
-        )
-        builder._write_stage(
-            routed_cache.select(
+            # the raw postings types, after the shuffle: the sink's postings
+            # rows take tf and positions as they arrive
+            .select(
                 "term",
                 "doc_id",
                 F.col("tf").cast("long").alias("tf"),
                 F.col("positions").cast("array<long>").alias("positions"),
-                wdt_bm25.alias("wdt_bm25"),
-                F.col("w").alias("wdt_tfidf_norm"),
-            ),
-            "postings",
+                "doc_len",
+                "l2_weight",
+            )
         )
-        builder._mark_stage("postings")
+        summaries = builder._postings_segments(routed, B._raw_partition(avgdl, None, 0))
         plan.unpersist()
-        lap("postings")
-        seg_kernel = _segments_kernel_dist(avgdl)
-        postings_partitions = n_parts
+        lap("postings_segments")
 
     if writer is not None:
         writer.join()
@@ -571,11 +508,8 @@ def build_encoded_dist(builder, docs: DataFrame, n_docs: int, resume: bool = Fal
         n_docs=n_docs,
         avgdl=avgdl,
         total_tokens=total_tokens,
-        weights_bc=None,
-        postings_partitions=postings_partitions,
         set_desc=set_desc,
         resume=resume,
         fused_cache=grouped,
-        packed_cache=routed_cache,
-        seg_kernel=seg_kernel,
+        summaries=summaries,
     )

@@ -107,7 +107,7 @@ class SparkIndex:
 
     @property
     def segments(self) -> DataFrame:
-        """Compressed block-max segments (built by segments.encode_segments)."""
+        """Compressed block-max segments (cut by the build's postings+segments sink)."""
         if not hasattr(self, "_segments"):
             self._segments = self.spark.read.parquet(os.path.join(self.index_dir, "segments"))
         return self._segments

@@ -40,9 +40,9 @@ SEGMENT_SCHEMA = T.StructType(
         T.StructField("max_wdt_tfidf_norm", T.DoubleType()),
         # per-block Σtf: the dictionary's cf.  The fused sink reduces these
         # block rows to per-term summaries in the kernel (block_summary) and
-        # the driver merges them; the two-pass shapes aggregate the same
-        # ~n_postings/BLOCK_SIZE rows in Spark (term_stats_with_block_meta)
-        # — neither re-scans the full postings table
+        # the driver merges them; the two-pass sink, resumed builds and the
+        # tier merge aggregate the same ~n_postings/BLOCK_SIZE rows in Spark
+        # (term_stats_with_block_meta) — none re-scans the postings table
         T.StructField("sum_tf", T.LongType()),
         T.StructField("postings_bin", T.BinaryType()),
     ]

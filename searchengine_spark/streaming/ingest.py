@@ -64,40 +64,6 @@ def _swap_dir(new: str, final: str, prev: str) -> None:
     os.replace(new, final)
 
 
-def _raw_partition(avgdl: float, weights_bc, lo: int):
-    """_partition_kernel source over sorted raw delta rows (term, doc_id,
-    tf, positions): one partition's postings arrays with the document
-    weights of the pinned ``avgdl``.  Doc weight inputs come from the dense
-    broadcast ``weights_bc`` = (doc_len, l2) arrays indexed by doc_id - lo,
-    or, when it is None, from ``doc_len``/``l2_weight`` columns on the rows."""
-
-    def postings_of(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from searchengine_spark.indexing.build import _doc_weights
-        from searchengine_spark.indexing.segments import term_runs
-
-        batches = [b for b in batches if b.num_rows]
-        if not batches:
-            return None
-        t = pa.Table.from_batches(batches).combine_chunks()
-        doc = t.column("doc_id").to_numpy()
-        tf = t.column("tf").to_numpy()
-        if weights_bc is None:
-            dl = t.column("doc_len").to_numpy().astype(np.float64)
-            l2 = t.column("l2_weight").to_numpy()
-        else:
-            dl_arr, l2_arr = weights_bc.value
-            dl, l2 = dl_arr[doc - lo], l2_arr[doc - lo]
-        w_bm, w_ti = _doc_weights(tf, dl, l2, avgdl)
-        run_starts, run_terms = term_runs(t.column("term").chunk(0))
-        flat_pos = t.column("positions").chunk(0).flatten().to_numpy()
-        return run_starts, run_terms, doc, tf, flat_pos, w_bm, w_ti
-
-    return postings_of
-
-
 def _merge_term_stats(old: DataFrame, delta: DataFrame) -> DataFrame:
     """Merge two term_stats tables (B7 + block-max metadata) — a vocab-sized
     full-outer join, NOT a re-aggregation over the postings: df/cf add,
@@ -105,10 +71,10 @@ def _merge_term_stats(old: DataFrame, delta: DataFrame) -> DataFrame:
     min block maxima take the min, block counts add.  Every combiner is
     associative, so repeated incremental compactions compose exactly.
 
-    An incremental compaction whose fused side-write ran merges on the
-    driver instead (segments._merge_term_stats_tables, the same combiners);
-    this Spark merge serves the two-pass shape and dictionaries over
-    VOCAB_ENCODE_MAX."""
+    An incremental compaction whose sink ran fused merges on the driver
+    instead (segments._merge_term_stats_tables, the same combiners); this
+    Spark merge serves the two-pass sink (non-local masters) and
+    dictionaries over VOCAB_ENCODE_MAX."""
     # a pre-postings_bytes dictionary artifact has an UNKNOWN footprint, not
     # a zero one: it merges as null, so a term it holds keeps a null total
     # and WAND falls back to its block-count gate for that term (the column
@@ -247,7 +213,7 @@ class StreamingIndexer:
                 plan = B._route_plan(vocab.term_tokens, width)
                 stream = B._planned_token_stream(spark, terms, vocab, plan, pack_bits)
                 id2term_bc = spark.sparkContext.broadcast(vocab.id2term)
-                kernel = B._postings_kernel_packed(None, None, id2term_bc, *pack_bits, doc_base=base)
+                kernel = B._postings_kernel_packed(id2term_bc, *pack_bits, doc_base=base)
                 raw = stream.mapInArrow(kernel, schema=B.RAW_POSTINGS_SCHEMA)
         grouped = None
         if raw is None:
@@ -306,7 +272,7 @@ class StreamingIndexer:
         )
         stats_pdf = (
             grouped.filter(F.col("term").isNull())
-            .select("doc_id", F.col("doc_len").cast("long").alias("doc_len"), F.col("w").alias("l2_weight"))
+            .select("doc_id", F.col("doc_len").cast("long").alias("doc_len"), "l2_weight")
             .toPandas()
         )
         raw = (
@@ -618,40 +584,6 @@ class StreamingIndexer:
             .sortWithinPartitions("term", "doc_id")
         )
 
-    def _cut_postings_segments(
-        self, sorted_raw: DataFrame, avgdl: float, weights_bc, lo: int, out: str, max_terms: int
-    ):
-        """Weight sorted raw postings and write out/postings and
-        out/segments from them — the fused side-write when _side_write_ok
-        holds, else two passes over a persisted input.  Returns the number
-        of postings written (from the parquet footers, no count job) and
-        the fused kernels' term summaries — None after two passes, or when
-        they hold more than ``max_terms`` rows (_finalize_side_segments)."""
-        from ..indexing.segments import SEGMENT_SCHEMA
-
-        spark = self.spark
-        post_dir, seg_dir = os.path.join(out, "postings"), os.path.join(out, "segments")
-        source = _raw_partition(avgdl, weights_bc, lo)
-        if B._side_write_ok(spark, seg_dir):
-            spark.sparkContext.setJobDescription("phase:postings+segments — one pass, fused sinks")
-            shutil.rmtree(seg_dir, ignore_errors=True)
-            os.makedirs(seg_dir)
-            sorted_raw.mapInArrow(
-                B._partition_kernel(source, seg_dir=seg_dir), schema=B.POSTINGS_SCHEMA
-            ).write.mode("overwrite").parquet(post_dir)
-            n_postings = sum(p["rows"] for p in B._partition_lineage(post_dir))
-            return n_postings, B._finalize_side_segments(spark, seg_dir, n_postings, max_terms)
-        spark.sparkContext.setJobDescription("phase:postings+segments — two passes")
-        cached = sorted_raw.persist()
-        cached.mapInArrow(B._partition_kernel(source), schema=B.POSTINGS_SCHEMA).write.mode(
-            "overwrite"
-        ).parquet(post_dir)
-        cached.mapInArrow(
-            B._segments_partition_kernel(source), schema=SEGMENT_SCHEMA
-        ).write.mode("overwrite").parquet(seg_dir)
-        cached.unpersist()
-        return sum(p["rows"] for p in B._partition_lineage(post_dir)), None
-
     def _write_corpus_stats(self, n_docs: int, total_tokens: int, avgdl: float) -> None:
         """The one-row corpus_stats artifact, written with pyarrow on the
         driver and swapped in whole."""
@@ -722,8 +654,12 @@ class StreamingIndexer:
             raw = raw.sortWithinPartitions("term", "doc_id")
         ts_dir = os.path.join(self.index_dir, "term_stats")
         old_terms = sum(p["rows"] for p in B._partition_lineage(ts_dir))
-        n_postings_delta, summaries = self._cut_postings_segments(
-            raw, avgdl_used, weights_bc, lo, stage, B.VOCAB_ENCODE_MAX - old_terms
+        n_postings_delta, summaries = B._write_postings_segments(
+            spark,
+            raw,
+            B._raw_partition(avgdl_used, weights_bc, lo),
+            stage,
+            max_terms=B.VOCAB_ENCODE_MAX - old_terms,
         )
         if weights_bc is not None:
             weights_bc.unpersist()
@@ -838,8 +774,8 @@ class StreamingIndexer:
         # weighted and cut in one pass
         raw = spark.read.parquet(*[os.path.join(self._epoch_dir(e), "postings_raw") for e in eids])
         merged = self._joined_ranged(raw, spark.read.parquet(doc_stats_dir), n_docs)
-        n_postings, summaries = self._cut_postings_segments(
-            merged, avgdl, None, 0, self.index_dir, B.VOCAB_ENCODE_MAX
+        n_postings, summaries = B._write_postings_segments(
+            spark, merged, B._raw_partition(avgdl, None, 0), self.index_dir
         )
         clock.lap("postings_segments")
         set_desc("phase:term_stats — dictionary + block-max meta")

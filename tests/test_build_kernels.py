@@ -46,8 +46,8 @@ def test_fused_side_write_survives_a_failed_attempt(spark, tmp_path, monkeypatch
     batches, weights, id2term = _packed_batches(np.random.default_rng(3))
     seg_dir = tmp_path / "segments"
     seg_dir.mkdir()
-    kernel = bmod._postings_segments_kernel_packed(
-        7.0, weights, id2term, D_BITS, P_BITS, str(seg_dir)
+    kernel = bmod._partition_kernel(
+        bmod._packed_partition(7.0, weights, id2term, D_BITS, P_BITS), seg_dir=str(seg_dir)
     )
     real_replace, real_getpid = os.replace, os.getpid
 
@@ -69,7 +69,11 @@ def test_fused_side_write_survives_a_failed_attempt(spark, tmp_path, monkeypatch
     row = seg.selectExpr("count(*) AS blocks", "sum(n_postings) AS n").collect()[0]
     assert row["n"] == postings.num_rows
     expect = pa.Table.from_batches(
-        list(bmod._segments_kernel_packed(7.0, weights, id2term, D_BITS, P_BITS)(iter(batches)))
+        list(
+            bmod._segments_partition_kernel(
+                bmod._packed_partition(7.0, weights, id2term, D_BITS, P_BITS)
+            )(iter(batches))
+        )
     )
     assert row["blocks"] == expect.num_rows
 
@@ -102,15 +106,55 @@ def _segment_rows(spark, path):
     )
 
 
-def test_fused_segments_byte_identical_to_two_pass(spark, tricky_docs, tmp_path, monkeypatch):  # noqa: F811
+# the dist producer forced the way test_dist_build does: a corpus over the
+# broadcast doc cutoff
+PRODUCERS = {"encoded": (), "dist": (("BROADCAST_WEIGHTS_MAX_DOCS", 10),)}
+
+
+@pytest.mark.parametrize("producer", sorted(PRODUCERS))
+def test_fused_segments_byte_identical_to_two_pass(spark, tricky_docs, tmp_path, monkeypatch, producer):  # noqa: F811
+    for name, value in PRODUCERS[producer]:
+        monkeypatch.setattr(bmod, name, value)
     fused = str(tmp_path / "fused")
     m = bmod.IndexBuilder(spark, fused).build(tricky_docs)
     assert "postings_segments" in m["metrics"]["phase_seconds"]
+    assert ("dict_assign" in m["metrics"]["phase_seconds"]) == (producer == "dist")
+    # the fused sink's summaries: the driver wrote the dictionary
+    assert [p["file"] for p in m["stages"]["term_stats"]["partitions"]] == ["part-00000.parquet"]
     monkeypatch.setattr(bmod, "_side_write_ok", lambda *_a: False)
     two_pass = str(tmp_path / "two_pass")
     m = bmod.IndexBuilder(spark, two_pass).build(tricky_docs)
-    assert "segments" in m["metrics"]["phase_seconds"]
+    assert "postings_segments" in m["metrics"]["phase_seconds"]
+    # two passes, no summaries: Spark aggregated the dictionary
+    assert [p["file"] for p in m["stages"]["term_stats"]["partitions"]] != ["part-00000.parquet"]
     assert _segment_rows(spark, fused) == _segment_rows(spark, two_pass)
+
+
+def test_build_releases_every_broadcast(spark, tmp_path, monkeypatch):
+    """Every SparkContext.broadcast a bulk build makes (the term strings and
+    the doc weight arrays) is unpersisted before it returns, so a build
+    leaves nothing pinned on the workers for the rest of the session."""
+    from pyspark import SparkContext
+    from pyspark.broadcast import Broadcast
+
+    made, released = [], set()
+    real_broadcast, real_unpersist = SparkContext.broadcast, Broadcast.unpersist
+
+    def broadcast(self, value):
+        made.append(real_broadcast(self, value))
+        return made[-1]
+
+    def unpersist(self, blocking=False):
+        released.add(id(self))
+        return real_unpersist(self, blocking)
+
+    monkeypatch.setattr(SparkContext, "broadcast", broadcast)
+    monkeypatch.setattr(Broadcast, "unpersist", unpersist)
+    rows = [(i, f"alpha beta{i % 9} gamma") for i in range(200)]
+    m = bmod.build_index(spark, spark.createDataFrame(rows, "doc_id long, text string"), str(tmp_path / "index"))
+    assert "vocab_collect" in m["metrics"]["phase_seconds"], "encoded path not taken"
+    assert len(made) >= 2
+    assert [id(b) in released for b in made] == [True] * len(made)
 
 
 # Spark jobs of one build_index over a small corpus on the test session
@@ -122,27 +166,41 @@ BUILD_JOBS_MAX = 16
 # partitions on local[4]), as measured: 66.  Sized by the session's 8
 # shuffle partitions instead, the same build ran 105 tasks in two waves.
 BUILD_TASKS_MAX = 66
+# ... and the same build forced onto the dist producer (distributed
+# dictionary and partition plan, then the same sink), as measured: 29 jobs
+# and 114 tasks
+DIST_BUILD_JOBS_MAX = 29
+DIST_BUILD_TASKS_MAX = 114
 
 
-def test_build_job_count_stays_bounded(spark, tmp_path):
+def test_build_job_count_stays_bounded(spark, tmp_path, monkeypatch):
     from test_streaming import _mk_turns
 
     from searchengine_spark.indexing import prepare_transcripts
 
-    df = _mk_turns(spark, 0, 30)
     sc = spark.sparkContext
-    sc.setJobGroup("one-build", "build_index")
-    try:
-        bmod.build_index(spark, prepare_transcripts(df), str(tmp_path / "index"))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
     tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup("one-build")
-    assert 0 < len(jobs) <= BUILD_JOBS_MAX, len(jobs)
-    stages = {sid for jid in jobs for sid in tracker.getJobInfo(jid).stageIds}
-    tasks = sum(tracker.getStageInfo(sid).numCompletedTasks for sid in stages)
+
+    def jobs_and_tasks(group):
+        sc.setJobGroup(group, "build_index")
+        try:
+            m = bmod.build_index(spark, prepare_transcripts(_mk_turns(spark, 0, 30)), str(tmp_path / group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = tracker.getJobIdsForGroup(group)
+        stages = {sid for jid in jobs for sid in tracker.getJobInfo(jid).stageIds}
+        return m, len(jobs), sum(tracker.getStageInfo(sid).numCompletedTasks for sid in stages)
+
+    _, jobs, tasks = jobs_and_tasks("one-build")
+    assert 0 < jobs <= BUILD_JOBS_MAX, jobs
     assert 0 < tasks <= BUILD_TASKS_MAX, tasks
+
+    monkeypatch.setattr(bmod, "BROADCAST_WEIGHTS_MAX_DOCS", 10)
+    m, jobs, tasks = jobs_and_tasks("one-dist-build")
+    assert "dict_assign" in m["metrics"]["phase_seconds"], "dist path not taken"
+    assert 0 < jobs <= DIST_BUILD_JOBS_MAX, jobs
+    assert 0 < tasks <= DIST_BUILD_TASKS_MAX, tasks
 
 
 def test_tokenize_kernels_emit_no_warnings():
@@ -198,10 +256,10 @@ def test_doc_l2_does_not_depend_on_the_batch_order():
         return dict(zip(rows["doc_id"].tolist(), rows[col].astype(float).tolist()))
 
     stats = l2_of(_fused_tokenize_stats_kernel, pdf, lambda o: o["position"] < 0, "l2_weight")
-    group = l2_of(_fused_tokenize_group_kernel, pdf, lambda o: o["term"].isna(), "w")
+    group = l2_of(_fused_tokenize_group_kernel, pdf, lambda o: o["term"].isna(), "l2_weight")
     assert len(stats) == len(texts)
     assert stats == l2_of(_fused_tokenize_stats_kernel, rev, lambda o: o["position"] < 0, "l2_weight")
-    assert group == l2_of(_fused_tokenize_group_kernel, rev, lambda o: o["term"].isna(), "w")
+    assert group == l2_of(_fused_tokenize_group_kernel, rev, lambda o: o["term"].isna(), "l2_weight")
     assert stats == group  # dist-vs-encoded parity stays bit-exact
 
 

@@ -186,4 +186,5 @@ def test_dist_resume_skips_stages(spark, tricky_docs, tmp_path):  # noqa: F811
         bmod.BROADCAST_WEIGHTS_MAX_DOCS = orig
     # postings phase skipped -> no dict/postings laps recorded this run
     assert "postings" not in m2["metrics"]["phase_seconds"]
+    assert "postings_segments" not in m2["metrics"]["phase_seconds"]
     assert m2["metrics"]["n_postings"] > 0

@@ -205,3 +205,4 @@ def test_builder_iceberg_commits_record_snapshot_ids(spark, tmp_path, monkeypatc
     b2 = IndexBuilder(spark, out, iceberg_prefix="lake.db.idx")
     m2 = b2.build(docs, resume=True)
     assert "postings" not in m2["metrics"]["phase_seconds"]
+    assert "postings_segments" not in m2["metrics"]["phase_seconds"]

@@ -22,6 +22,7 @@ from __future__ import annotations
 import io
 import os
 import re
+import shutil
 import sys
 import tempfile
 from contextlib import redirect_stdout
@@ -54,24 +55,35 @@ def main() -> None:
 
 
 def _audit(stderr_file, orig_fd) -> None:
-    from pyspark.sql import functions as F
-
+    """Audit the index named on the command line, or a small one built in a
+    temp dir that is removed afterwards (a given dir is left alone)."""
     from searchengine_spark.data.transcripts import generate_turns, spark_schema, turns_as_rows
     from searchengine_spark.indexing.build import build_index, prepare_transcripts
-    from searchengine_spark.indexing.index import SparkIndex
-    from searchengine_spark.querying.boolean import boolean_search
-    from searchengine_spark.querying.ranked import ranked_search
     from searchengine_spark.session import get_spark
 
     spark = get_spark("explain_audit", cpus=4, shuffle_partitions=8)
 
-    if len(sys.argv) > 1:
-        index_dir = sys.argv[1]
-    else:
-        index_dir = tempfile.mkdtemp(prefix="audit_index_")
-        rows = turns_as_rows(generate_turns(120, seed=42))
-        docs = prepare_transcripts(spark.createDataFrame(rows, spark_schema()))
-        build_index(spark, docs, index_dir)
+    made_dir = None
+    try:
+        if len(sys.argv) > 1:
+            index_dir = sys.argv[1]
+        else:
+            index_dir = made_dir = tempfile.mkdtemp(prefix="audit_index_")
+            rows = turns_as_rows(generate_turns(120, seed=42))
+            docs = prepare_transcripts(spark.createDataFrame(rows, spark_schema()))
+            build_index(spark, docs, index_dir)
+        _check_plans(spark, index_dir, stderr_file, orig_fd)
+    finally:
+        if made_dir is not None:
+            shutil.rmtree(made_dir, ignore_errors=True)
+
+
+def _check_plans(spark, index_dir: str, stderr_file, orig_fd) -> None:
+    from pyspark.sql import functions as F
+
+    from searchengine_spark.indexing.index import SparkIndex
+    from searchengine_spark.querying.boolean import boolean_search
+    from searchengine_spark.querying.ranked import ranked_search
 
     index = SparkIndex(spark, index_dir)
     checks: list[tuple[str, bool, str]] = []
