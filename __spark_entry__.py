@@ -105,12 +105,12 @@ def _build_index(spark: SparkSession, sf_dir: str, out: str):
 def _build_index_dist(spark: SparkSession, sf_dir: str, out: str):
     from searchengine_spark.indexing import build as bmod
 
-    orig = bmod.BROADCAST_WEIGHTS_MAX_DOCS
-    bmod.BROADCAST_WEIGHTS_MAX_DOCS = 1  # force the dist dispatch
+    orig = bmod.VOCAB_ENCODE_MAX
+    bmod.VOCAB_ENCODE_MAX = 1  # force the distributed route plan
     try:
         return _build_index(spark, sf_dir, out)
     finally:
-        bmod.BROADCAST_WEIGHTS_MAX_DOCS = orig
+        bmod.VOCAB_ENCODE_MAX = orig
 
 
 def _build_embedding_index(spark: SparkSession, sf_dir: str, out: str):
@@ -122,22 +122,24 @@ def _build_embedding_index(spark: SparkSession, sf_dir: str, out: str):
 
 def _persisted_index(spark: SparkSession, sf_dir: str):
     """The index every index gate queries: the production build path with
-    no doc ids assigned (documents carry doc_id) — build_index's encoded
-    path (fused tokenize -> driver dictionary -> planned packed-key shuffle
-    -> postings + varbyte segments kernel -> parquet artifacts), read back
-    as a SparkIndex.  So the gates check the pipeline a build runs, against
-    the DuckDB oracle."""
+    no doc ids assigned (documents carry doc_id) — build_index's one
+    producer (fused tokenize+group kernel -> one token-total collect ->
+    driver route plan -> planned route shuffle of posting rows -> postings
+    + varbyte segments sink -> parquet artifacts), read back as a
+    SparkIndex.  So the gates check the pipeline a build runs, against the
+    DuckDB oracle."""
     return _gate_index(spark, sf_dir, "index", _build_index)
 
 
 def _persisted_index_dist(spark: SparkSession, sf_dir: str):
-    """Index built through the fully DISTRIBUTED dictionary path
-    (indexing/build_dist.py — map-side SPIMI grouping, distributed sorted
-    term_id assignment, no driver vocab collect).  In production this path
-    engages above BROADCAST_WEIGHTS_MAX_DOCS (4M docs); the gate corpora are
-    tiny, so the cutoff is lowered around the build — the same forcing the
-    parity tests use (tests/test_dist_build.py) — making the over-cutoff
-    plan's artifacts oracle-checked by the driver, not just pytest-checked."""
+    """Index built through the DISTRIBUTED route plan
+    (indexing/build_dist.py _dist_plan — per-term totals kept in Spark,
+    distributed contiguous-range plan, hot slice broadcast and cold tail
+    joined, no driver vocabulary).  In production it engages above
+    VOCAB_ENCODE_MAX (1.5M terms); the gate corpora are tiny, so the cutoff
+    is lowered around the build — the same forcing the parity tests use
+    (tests/test_dist_build.py) — making the over-cutoff plan's artifacts
+    oracle-checked by the driver, not just pytest-checked."""
     return _gate_index(spark, sf_dir, "dindex", _build_index_dist)
 
 
@@ -326,15 +328,15 @@ def q_ranked_bm25_wand(spark, sf_dir):
 
 
 def q_ranked_bm25_persisted(spark, sf_dir):
-    # the production build path (encoded build + parquet read-back); kept
+    # the production build path (the build + parquet read-back); kept
     # as its own gate key, though ranked_bm25 now queries the same index
     return ranked_search(_persisted_index(spark, sf_dir), RANKED_Q, mode="bm25", k=10, round_scores=4)
 
 
 def q_postings_dist(spark, sf_dir):
-    # B1-B4 through the DISTRIBUTED dictionary build (build_dist.py): the
+    # B1-B4 through the DISTRIBUTED route plan (build_dist.py): the
     # over-cutoff plan's postings artifact must hash-match the same DuckDB
-    # oracle as the encoded build's postings
+    # oracle as the driver-planned build's postings
     return _persisted_index_dist(spark, sf_dir).postings.select(
         "term",
         "doc_id",

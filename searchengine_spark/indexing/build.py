@@ -10,18 +10,15 @@ bigger than one partition is striped across several by doc_id % k — a
 stopword's postings spread instead of hot-spotting one partition (the same
 effect as salting).
 
-Two postings producers; IndexBuilder.build picks one:
-  _build_encoded       driver dictionary, broadcast doc weights, and one
-                       packed int64 key per token in the shuffle — a
-                       non-empty corpus of at most BROADCAST_WEIGHTS_MAX_DOCS
-                       docs whose vocabulary, doc ids and packed key fit;
-  build_encoded_dist   (build_dist module) distributed dictionary, doc_len
-                       and L_d on each posting row, no doc-id range assumed
-                       — everything else, the empty corpus included.
-Both hand their sorted rows to ONE sink (_write_postings_segments), which
-the streaming compactions share: it cuts postings and segments in one pass
-and side-writes per-partition term summaries (the fused sink), or, for
-Iceberg sinks and non-local masters, runs two passes over a persisted input.
+One postings producer, build_grouped (build_dist module), which the
+streaming epoch shares: a fused tokenize kernel emits finished posting rows
+with each doc's doc_len and L_d, one collect returns every term's token
+total, and one planned route shuffle moves the rows — planned on the driver
+below VOCAB_ENCODE_MAX terms, distributively above.  It hands its sorted
+rows to ONE sink (_write_postings_segments), which the streaming
+compactions share: it cuts postings and segments in one pass and
+side-writes per-partition term summaries (the fused sink), or, for Iceberg
+sinks and non-local masters, runs two passes over a persisted input.
 
 Artifacts (all parquet, under one index directory):
   postings/      term, doc_id, tf, positions, wdt_bm25, wdt_tfidf_norm
@@ -57,7 +54,6 @@ import json
 import math
 import os
 import time
-from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -93,33 +89,38 @@ class PhaseClock:
 
 
 @contextlib.contextmanager
-def pinned_build_conf(spark: SparkSession):
-    """Pin BUILD shuffle config for the duration of a build/compaction and
-    restore the session's previous values after.
+def pinned_conf(spark: SparkSession, settings: dict[str, str]):
+    """Set session config ``settings`` for the duration of the block and
+    restore the session's previous values after."""
+    prev = {}
+    for k, v in settings.items():
+        try:
+            prev[k] = spark.conf.get(k)
+        except Exception:
+            prev[k] = None
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
-    The build's shuffles (token-stream aggregations, the range shuffle) are
+
+def pinned_build_conf(spark: SparkSession):
+    """Pin BUILD shuffle config for the duration of a build/compaction
+    (pinned_conf).
+
+    The build's shuffles (token-stream aggregations, the route shuffle) are
     CPU-heavy relative to their bytes, so AQE's byte-based partition
     coalescing would squeeze them onto a handful of tasks and serialize the
     build.  Serving wants the opposite (SparkIndex.warm() turns coalescing
     ON so tiny per-query reduce stages do not run at build width), and one
     session may interleave both — streaming ingest plus queries — so each
     phase pins its own sizing instead of fighting over the session default."""
-    keys = ("spark.sql.adaptive.coalescePartitions.enabled",)
-    prev = {}
-    for k in keys:
-        try:
-            prev[k] = spark.conf.get(k)
-        except Exception:
-            prev[k] = None
-    spark.conf.set(keys[0], "false")
-    try:
-        yield
-    finally:
-        for k in keys:
-            if prev[k] is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, prev[k])
+    return pinned_conf(spark, {"spark.sql.adaptive.coalescePartitions.enabled": "false"})
 
 
 _DOCID_CACHES: list[DataFrame] = []
@@ -332,23 +333,16 @@ def term_stats_with_block_meta(segments_df: DataFrame, postings_df: DataFrame | 
     )
 
 
-# --- dictionary-encoded build path -------------------------------------------
-# The build's dominant data movement is the token shuffle + external sort,
-# and shuffle-heavy stages on wide executors are DRAM-bandwidth-bound
-# (BENCH.md: this host streams at ~0.43 scaling efficiency 8->32 vs ~0.7 for
-# compute).  Below VOCAB_ENCODE_MAX distinct terms, the build therefore
-# collects the term vocabulary ONCE (the tokenize kernel already stemmed
-# each partition's distinct types), assigns dense int32 term_ids in
-# SORTED-TERM order on the driver, and shuffles one packed int64
-# (term_id | doc_id | position) per token — a fixed 8-byte sort key instead of variable-length strings, and no stem-dictionary subquery
-# re-executed per downstream action.  Because ids follow sorted-term order,
-# sorting by the packed key is sorting by (term, doc_id, position): parquet
-# min/max pruning and segment block order follow.  Above the cutoff the
-# dictionary itself is built distributively (build_dist module: sorted ids
-# via a vocab-sized shuffle, doc_len riding each posting row).
+# --- the route plan's cutoff -------------------------------------------------
+# Every route shuffle (the bulk build, a streaming epoch, the full
+# compaction) first collects each term's token total in one limit-guarded
+# collect (build_dist._collect_vocab).  Up to VOCAB_ENCODE_MAX distinct
+# terms the driver plans the route from it (_route_plan) and the rows join
+# the plan as a broadcast (term, base, ksplit) frame; above it the
+# vocabulary is neither collected nor broadcast, and the plan is assigned
+# distributively (build_dist._assign_plan).  The same bound decides whether
+# the fused sink's term summaries are merged on the driver.
 VOCAB_ENCODE_MAX = 1_500_000
-
-DOC_STATS_SMALL_SCHEMA = "doc_id long, doc_len long, l2_weight double"
 
 
 def _doc_weights(tf, doc_len, l2, avgdl: float):
@@ -365,56 +359,19 @@ def _doc_weights(tf, doc_len, l2, avgdl: float):
     return w_bm, (1.0 + np.log(tf_f)) / l2
 
 
-def _packed_postings(packed, avgdl: float | None, weights, id2term, d_bits: int, p_bits: int):
-    """Sorted packed longs (term_id << (d_bits+p_bits) | doc_id << p_bits |
-    position) -> the partition's postings as arrays: (run_starts,
-    run_terms, doc, tf, positions_flat, wdt_bm25, wdt_tfidf_norm), where
-    run_starts are the posting indices where a term begins and run_terms an
-    Arrow string array with each run's term (only the partition's own terms
-    are converted).  Sorting the long IS sorting (term_id, doc_id,
-    position), so a (term, doc) group is a run of equal ``packed >> p_bits``
-    and positions come out already flat and in order.  ``avgdl=None`` is
-    the RAW form (the streaming delta): both weight arrays are None."""
-    import numpy as np
-    import pyarrow as pa
-
-    n = len(packed)
-    group = packed >> p_bits
-    change = np.empty(n, dtype=bool)
-    change[0] = True
-    change[1:] = group[1:] != group[:-1]
-    starts = np.flatnonzero(change)
-    tf = np.diff(np.append(starts, n))
-    gkey = group[starts]
-    doc = gkey & ((1 << d_bits) - 1)
-    tid = gkey >> d_bits
-    w_bm = w_ti = None
-    if avgdl is not None:
-        dl_arr, l2_arr = weights
-        w_bm, w_ti = _doc_weights(tf, dl_arr[doc], l2_arr[doc], avgdl)
-    tchange = np.empty(len(tid), dtype=bool)
-    tchange[0] = True
-    tchange[1:] = tid[1:] != tid[:-1]
-    run_starts = np.flatnonzero(tchange)
-    run_terms = pa.array(id2term[tid[run_starts]], type=pa.string())
-    return run_starts, run_terms, doc, tf, packed & ((1 << p_bits) - 1), w_bm, w_ti
-
-
 POSTINGS_FIELDS = ("term", "doc_id", "tf", "positions", "wdt_bm25", "wdt_tfidf_norm")
 # postings rows per yielded Arrow batch (bounded kernel output memory)
 _POSTINGS_CHUNK = 1 << 18
 
 
 def _postings_batches(run_starts, run_terms, doc, tf, flat_pos, w_bm, w_ti):
-    """Per-posting arrays -> POSTINGS_SCHEMA Arrow batches (RAW_POSTINGS_SCHEMA
-    when the weights are None): the term column is a take() over the run
-    terms, positions a ListArray over offsets into the flat array — no
-    per-posting Python objects."""
+    """Per-posting arrays -> POSTINGS_SCHEMA Arrow batches: the term column
+    is a take() over the run terms, positions a ListArray over offsets into
+    the flat array — no per-posting Python objects."""
     import numpy as np
     import pyarrow as pa
 
     n = len(doc)
-    fields = list(POSTINGS_FIELDS) if w_bm is not None else list(POSTINGS_FIELDS[:4])
     run_of = np.repeat(
         np.arange(len(run_starts), dtype=np.int64), np.diff(np.append(run_starts, n))
     )
@@ -432,62 +389,10 @@ def _postings_batches(run_starts, run_terms, doc, tf, flat_pos, w_bm, w_ti):
             pa.array(doc[c0:c1]),
             pa.array(tf[c0:c1]),
             positions,
+            pa.array(w_bm[c0:c1]),
+            pa.array(w_ti[c0:c1]),
         ]
-        if w_bm is not None:
-            cols += [pa.array(w_bm[c0:c1]), pa.array(w_ti[c0:c1])]
-        yield pa.RecordBatch.from_arrays(cols, names=fields)
-
-
-def _whole_partition_packed(batches):
-    """Concatenate a partition's ``packed`` column (block cuts must not
-    depend on Arrow batch boundaries, so segment encoders see the whole
-    sorted partition at once — one planned partition is tens of MB)."""
-    import numpy as np
-
-    chunks = [b.column("packed").to_numpy() for b in batches if b.num_rows]
-    if not chunks:
-        return None
-    return chunks[0] if len(chunks) == 1 else np.concatenate(chunks)
-
-
-def _postings_kernel_packed(id2term_bc, d_bits: int, p_bits: int, doc_base: int = 0):
-    """mapInArrow RAW postings kernel (RAW_POSTINGS_SCHEMA, no weights: a
-    streaming epoch's delta) over partitions sorted by a single ``packed``
-    int64 (see _packed_postings for the key layout).  Sorting one long
-    instead of (term_id, doc_id, position) makes the external sort compare
-    8-byte ints and shrinks shuffle rows to one field.  Batches stream: each
-    emits its complete (term, doc) groups and carries the trailing one, so
-    memory is O(batch + largest group).  ``doc_base`` is added to the
-    packed doc ids, so a streaming epoch packs its own 0-based ids."""
-
-    @engine_kernel
-    def fn(batches):
-        import numpy as np
-
-        def emit(packed):
-            run_starts, run_terms, doc, *rest = _packed_postings(
-                packed, None, None, id2term_bc.value, d_bits, p_bits
-            )
-            yield from _postings_batches(run_starts, run_terms, doc + doc_base, *rest)
-
-        carry = None
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            packed = batch.column("packed").to_numpy()
-            if carry is not None:
-                packed = np.concatenate([carry, packed])
-            # rows of the trailing (term, doc) group may continue in the
-            # next batch: hold them back
-            group = packed >> p_bits
-            split_at = int(np.searchsorted(group, group[-1], side="left"))
-            carry = packed[split_at:]
-            if split_at:
-                yield from emit(packed[:split_at])
-        if carry is not None and len(carry):
-            yield from emit(carry)
-
-    return fn
+        yield pa.RecordBatch.from_arrays(cols, names=list(POSTINGS_FIELDS))
 
 
 # side-written segment tmp files start with "." (Spark's file listing skips
@@ -580,29 +485,15 @@ def _segments_partition_kernel(postings_of):
     return fn
 
 
-def _packed_partition(avgdl: float, weights_bc, id2term_bc, d_bits: int, p_bits: int):
-    """_partition_kernel source over sorted packed-long partitions: group
-    detection and weights are _packed_postings' vectorized shift/compare
-    ops, and positions are already a flat contiguous array."""
-
-    def postings_of(batches):
-        packed = _whole_partition_packed(batches)
-        if packed is None:
-            return None
-        return _packed_postings(
-            packed, avgdl, weights_bc.value, id2term_bc.value, d_bits, p_bits
-        )
-
-    return postings_of
-
-
 def _raw_partition(avgdl: float, weights_bc, lo: int):
     """_partition_kernel source over rows (term, doc_id, tf, positions)
-    sorted by (term, doc_id) — the dist build's routed postings and a
+    sorted by (term, doc_id) — the build's routed posting rows and a
     compaction's raw deltas: one partition's postings arrays with the
-    document weights of ``avgdl``.  Doc weight inputs come from the dense
-    broadcast ``weights_bc`` = (doc_len, l2) arrays indexed by doc_id - lo,
-    or, when it is None, from ``doc_len``/``l2_weight`` columns on the rows."""
+    document weights of ``avgdl``.  The whole partition is read at once, so
+    block cuts do not depend on Arrow batch boundaries.  Doc weight inputs
+    come from ``doc_len``/``l2_weight`` columns on the rows, or, for an
+    incremental compaction, from the dense broadcast ``weights_bc`` =
+    (doc_len, l2) arrays indexed by doc_id - lo (dense_doc_weights)."""
 
     def postings_of(batches):
         import numpy as np
@@ -699,11 +590,10 @@ def _write_postings_segments(
     iceberg: bool = False,
     max_terms: int | None = None,
 ):
-    """The one postings+segments sink of every producer — the bulk encoded
-    and dist builds and both streaming compactions.  ``sorted_rows`` are
-    partitions sorted by (term, doc_id) (or by the packed key, which sorts
-    the same way) and ``postings_of`` turns one partition into its weighted
-    postings arrays (_packed_partition, _raw_partition).  Writes
+    """The one postings+segments sink — of the bulk build and both
+    streaming compactions.  ``sorted_rows`` are partitions sorted by (term,
+    doc_id) and ``postings_of`` turns one partition into its weighted
+    postings arrays (_raw_partition).  Writes
     ``out_dir/postings`` and ``out_dir/segments`` through ``write(df,
     name)`` (default: a parquet overwrite of ``out_dir/name``).
 
@@ -844,131 +734,6 @@ def _plan_term_routes(term_tokens, target_tokens: int):
     return base, ksplit, max(1, n_partitions)
 
 
-def _encoded_routed_tokens(
-    spark: SparkSession,
-    terms: DataFrame,
-    id2term,
-    base_part,
-    ksplit,
-    vmap,
-    pack_bits: tuple[int, int],
-) -> DataFrame:
-    """(doc_id, position, term) -> (packed, _route) entirely JVM-side: a
-    broadcast hash join against the (term -> term_id, base, ksplit)
-    dictionary plus a tiny (part -> _route) join — whole-stage
-    codegen end to end, no Python on the map side of the build's dominant
-    shuffle (an Arrow-kernel variant of this encode measured ~25 s/900k
-    turns of extra map-side CPU at width 2: the cache scan left and
-    re-entered Python for a lookup the JVM join does in the same pass).
-    Hot terms stripe across their planned partitions by doc_id % ksplit;
-    ``_route`` carries the murmur3-representative value so
-    ``repartition(P, "_route")`` places every row on its exact planned
-    partition."""
-    import numpy as np
-    import pandas as pd
-
-    map_pdf = pd.DataFrame(
-        {
-            "term": id2term,
-            "term_id": np.arange(len(id2term), dtype=np.int32),
-            "base": base_part.astype("int32"),
-            "ksplit": ksplit.astype("int32"),
-        }
-    )
-    map_df = spark.createDataFrame(map_pdf, "term string, term_id int, base int, ksplit int")
-    route_pdf = pd.DataFrame(
-        {"part": range(len(vmap)), "_route": vmap.astype("int32")}
-    )
-    route_df = spark.createDataFrame(route_pdf, "part int, _route int")
-    routed = (
-        terms.join(F.broadcast(map_df), "term")
-        .withColumn(
-            "part", (F.col("base") + F.pmod(F.col("doc_id"), F.col("ksplit"))).cast("int")
-        )
-        .join(F.broadcast(route_df), "part")
-    )
-    # single-long key: term_id << (d+p) | doc_id << p | position — the
-    # shuffle then carries 2 fields and the sort compares one int64
-    # (see _postings_kernel_packed)
-    d_bits, p_bits = pack_bits
-    packed = (
-        F.shiftleft(F.col("term_id").cast("long"), d_bits + p_bits)
-        .bitwiseOR(F.shiftleft(F.col("doc_id"), p_bits))
-        .bitwiseOR(F.col("position").cast("long"))
-    )
-    return routed.select(packed.alias("packed"), "_route")
-
-
-class EncodedVocab(NamedTuple):
-    """The driver dictionary of the encoded path: the terms in sorted
-    order (a term's index is its dense term id) and each term's token total
-    (the route planner's input)."""
-
-    id2term: Any
-    term_tokens: Any
-
-
-def _fused_tokenize(docs: DataFrame) -> DataFrame:
-    """(doc_id, text) -> the persisted fused tokenize+stats frame: term rows
-    (position >= 0) plus one stats pseudo-row (position = -1) per non-empty
-    doc.  Doc stats ride the tokenize kernel, so the stats phase costs a
-    cache-projection read instead of a second full Python-kernel scan of the
-    token stream (the old _doc_stats_types_kernel pass: measured 19.6 s of a
-    142 s width-4 900k-turn build).  Weight columns stay null on term rows
-    (they reach the postings kernel by broadcast) — the columnar cache
-    RLE-compresses them away."""
-    from .build_dist import WEIGHTED_TERMS_SCHEMA, _fused_tokenize_stats_kernel
-
-    return (
-        docs.select("doc_id", "text")
-        .mapInPandas(_fused_tokenize_stats_kernel("text", "doc_id"), schema=WEIGHTED_TERMS_SCHEMA)
-        .persist()
-    )
-
-
-def _fused_terms(fused: DataFrame) -> DataFrame:
-    return fused.filter(F.col("position") >= 0).select("doc_id", "position", "term")
-
-
-def _collect_vocab(terms: DataFrame) -> EncodedVocab | None:
-    """One per-term count collect -> the driver dictionary, or None when
-    the vocabulary exceeds VOCAB_ENCODE_MAX terms.  The tokenize kernel
-    already stemmed each partition's distinct types, so the driver only
-    sorts the collected terms: their sorted order assigns the term ids.
-    The collect is limit-guarded: the aggregation's map side scans every
-    terms partition (materializing the fused cache) regardless of the
-    limit, while the limit caps what can reach the driver — an over-cutoff
-    vocabulary is never collected.  (An earlier shape ran
-    approx_count_distinct first as the guard: a full extra pass over the
-    token stream per build, ~8 s/900k turns at width 8, pure fixed cost.)"""
-    import numpy as np
-
-    vocab_pdf = (
-        terms.groupBy("term")
-        .agg(F.count("*").alias("c"))
-        .limit(VOCAB_ENCODE_MAX + 1)
-        .toPandas()  # Arrow transfer — Row conversion is slow at 10^6 terms
-    )
-    if len(vocab_pdf) > VOCAB_ENCODE_MAX:
-        return None
-    id2term = vocab_pdf["term"].to_numpy(dtype=object)
-    order = np.argsort(id2term, kind="stable")
-    # exact per-term token totals (the driver-side partition plan's input)
-    # fall out of the same collect
-    return EncodedVocab(id2term[order], vocab_pdf["c"].to_numpy(dtype=np.int64)[order])
-
-
-def _stats_rows(fused: DataFrame):
-    """The fused pass's stats pseudo-rows as pandas (doc_id, doc_len,
-    l2_weight): ONE cache-projection collect serves corpus stats and the
-    kernel weight arrays.  Docs without tokens have no row."""
-    return (
-        fused.filter(F.col("position") < 0)
-        .select("doc_id", F.col("doc_len").cast("long").alias("doc_len"), "l2_weight")
-        .toPandas()
-    )
-
-
 def _route_plan(term_tokens, width_floor: int):
     """_plan_term_routes with a per-partition token target that spreads the
     stream over about ``width_floor`` partitions."""
@@ -976,64 +741,28 @@ def _route_plan(term_tokens, width_floor: int):
     return _plan_term_routes(term_tokens, max(1, -(-total // width_floor)))
 
 
-def _pack_bits(n_terms: int, n_doc_slots: int, max_dl: int) -> tuple[int, int] | None:
-    """(d_bits, p_bits) of the packed token key (see _packed_postings) for
-    a dictionary of ``n_terms``, doc ids in [0, n_doc_slots) and positions
-    up to ``max_dl``, or None when term_id | doc_id | position exceeds 63
-    bits.  Under the encode cutoffs the term and doc ids take up to 21 + 23
-    bits, which leaves 19 for positions: a long enough doc does not fit."""
-    t_bits = max(1, int(n_terms).bit_length())
-    d_bits = max(1, int(n_doc_slots).bit_length())
-    p_bits = max(1, int(max_dl + 1).bit_length())
-    return (d_bits, p_bits) if t_bits + d_bits + p_bits <= 63 else None
-
-
-def _planned_token_stream(
-    spark: SparkSession, terms: DataFrame, vocab: EncodedVocab, plan, pack_bits: tuple[int, int]
-) -> DataFrame:
-    """The encoded path's ONE token shuffle: a single ``packed`` long column
-    (_pack_bits layout) routed through the driver's partition plan
-    (_route_plan — no range-sampling job) and sorted within partitions."""
-    base_part, ksplit, n_parts = plan
-    enc = _encoded_routed_tokens(
-        spark,
-        terms,
-        vocab.id2term,
-        base_part,
-        ksplit,
-        _invert_partition_hash(n_parts),
-        pack_bits=pack_bits,
-    )
-    return enc.repartition(n_parts, F.col("_route")).select("packed").sortWithinPartitions("packed")
-
-
-def _doc_stats_frame(spark: SparkSession, docs: DataFrame, stats_pdf, meta_cols) -> DataFrame:
-    """The doc_stats artifact: every doc's metadata joined to its collected
-    stats row (docs without tokens get doc_len 0 and a null l2_weight)."""
-    stats_small_df = spark.createDataFrame(stats_pdf, schema=DOC_STATS_SMALL_SCHEMA)
-    return (
-        docs.select("doc_id", *meta_cols)
-        .join(stats_small_df, "doc_id", "left")
-        .fillna({"doc_len": 0})
-    )
-
-
-BROADCAST_WEIGHTS_MAX_DOCS = 4_000_000  # ~100 MB of (doc_id, doc_len, l2)
+# An incremental compaction weights its delta's postings from dense
+# (doc_len, l2) arrays broadcast to the kernels (dense_doc_weights) when the
+# delta holds at most this many docs (~100 MB of arrays); a larger delta
+# joins the weights onto its rows and routes them.  Nothing else broadcasts
+# doc weights: the build's posting rows carry them.
+BROADCAST_WEIGHTS_MAX_DOCS = 4_000_000
 # One postings reduce partition ≈ this many docs (~2M token rows, a
-# ~100-200 MB sorted working set).  Both producers plan their postings
-# shuffle for about pass_width(n_partitions, n_docs, this) partitions:
-# one wave for a small corpus, ceil(n_docs / this) for a large one.
+# ~100-200 MB sorted working set).  The build and the epoch plan their
+# route shuffle for about pass_width(n_partitions, n_docs, this)
+# partitions: one wave for a small corpus, ceil(n_docs / this) for a large
+# one.
 DOCS_PER_POSTINGS_PARTITION = 60_000
 
 
 def dense_doc_weights(ids, doc_len, l2_weight, lo: int, size: int):
     """Dense (doc_len, l2_weight) float64 arrays over doc ids [lo, lo +
-    size), slot ``doc_id - lo`` — the kernels' broadcast weight lookup.
-    Slots of absent ids hold (0, 1).  Returns ``None`` when an id falls
-    outside the range: without this guard a negative slot would silently
-    index from the array end and produce wrong BM25/tf-idf weights, so the
-    caller takes an id-agnostic plan instead (build_encoded_dist for a bulk
-    build, the per-row weight join for a compaction)."""
+    size), slot ``doc_id - lo`` — the incremental compaction's broadcast
+    weight lookup (_raw_partition).  Slots of absent ids hold (0, 1).
+    Returns ``None`` when an id falls outside the range: without this guard
+    a negative slot would silently index from the array end and produce
+    wrong BM25/tf-idf weights, so the compaction joins the weights onto the
+    rows instead."""
     import numpy as np
 
     slots = np.asarray(ids, dtype=np.int64) - lo
@@ -1205,18 +934,15 @@ class IndexBuilder:
         280 s with every shuffle at ~31 — the postings shuffle alone being
         data-sized recovered less than half the loss).  The corpus size is
         free at this point: assign_doc_ids attaches its counting-pass total
-        as ``_n_docs``; without the hint one narrow count() pays for both
-        the shuffle sizing and the encoded-path eligibility decision.
+        as ``_n_docs``; without the hint one narrow count() pays for the
+        shuffle sizing.
 
-        Path selection: a non-empty corpus of at most
-        BROADCAST_WEIGHTS_MAX_DOCS docs takes the dictionary-encoded path
-        (_build_encoded — driver dictionary, broadcast doc weights, packed
-        int64 shuffle), which itself hands over to build_encoded_dist when
-        the vocabulary exceeds VOCAB_ENCODE_MAX, a doc id falls outside the
-        dense broadcast range, or the packed key would exceed 63 bits.
-        Everything else — the empty corpus and corpora over the doc cutoff —
-        takes build_encoded_dist (build_dist module), whose distributed
-        dictionary and per-row doc_len assume no size or id range."""
+        Path selection: there is one producer, build_grouped (build_dist
+        module): the fused group kernel's posting rows carry doc_len and
+        L_d, so no doc weight is broadcast and no doc-id range is assumed.
+        Only its route plan depends on the corpus: planned on the driver
+        from the one token-total collect up to VOCAB_ENCODE_MAX terms,
+        assigned distributively above (build_dist.plan_route)."""
         n_docs_hint = getattr(docs, "_n_docs", None)
         if n_docs_hint is None:
             n_docs_hint = docs.count()
@@ -1228,11 +954,9 @@ class IndexBuilder:
         self._sp_build = sp_build
         try:
             with pinned_build_conf(self.spark):
-                if 0 < n_docs_hint <= BROADCAST_WEIGHTS_MAX_DOCS:
-                    return self._build_encoded(docs, int(n_docs_hint), resume=resume)
-                from .build_dist import build_encoded_dist
+                from .build_dist import build_grouped
 
-                return build_encoded_dist(self, docs, int(n_docs_hint), resume=resume)
+                return build_grouped(self, docs, int(n_docs_hint), resume=resume)
         finally:
             self.spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
@@ -1269,8 +993,8 @@ class IndexBuilder:
         fused_cache=None,
         summaries=None,
     ) -> dict:
-        """Shared build tail of both postings producers, after the sink
-        wrote postings and segments: dictionary, metrics, cache release.
+        """The build tail, after the sink wrote postings and segments:
+        dictionary, metrics, cache release.
 
         The fused sink hands over its per-partition term summaries
         (``summaries``, None when they exceed VOCAB_ENCODE_MAX rows): the
@@ -1304,15 +1028,15 @@ class IndexBuilder:
             # — one segments scan total instead of the three full-table
             # passes the unfused tail paid (term_stats derive, term_stats
             # read-back for df stats, segments re-scan for byte totals)
+            # the aggregation reads the blocks range-partitioned by term, so
+            # its output is the term-ranged dictionary without a second
+            # exchange
+            segments = self._read_stage("segments")
             term_stats_cache = term_stats_with_block_meta(
-                self._read_stage("segments"), postings_df()
+                segments.repartitionByRange(max(1, self.n_partitions // 4), "term"),
+                postings_df() if "sum_tf" not in segments.columns else None,
             ).persist()
-            self._write_stage(
-                term_stats_cache.repartitionByRange(
-                    max(1, self.n_partitions // 4), "term"
-                ),
-                "term_stats",
-            )
+            self._write_stage(term_stats_cache, "term_stats")
             self._mark_stage("term_stats")
             lap("term_stats")
 
@@ -1431,151 +1155,6 @@ class IndexBuilder:
             release_docid_caches()
         set_desc(None)
         return self.manifest
-
-
-    def _build_encoded(self, docs: DataFrame, n_docs: int, resume: bool = False) -> dict:
-        """Dictionary-encoded build (see VOCAB_ENCODE_MAX comment):
-          * ONE fused tokenize+stats pass and ONE driver-side vocab collect
-            — no stem-dictionary subquery re-executed under every action;
-          * ONE stats pseudo-row collect serving corpus stats AND the
-            broadcast doc weight arrays — zero-shuffle doc stats;
-          * ONE driver-planned shuffle of packed int64 keys into the shared
-            postings+segments sink (_write_postings_segments).
-
-        Hands over to build_encoded_dist when the vocabulary exceeds
-        VOCAB_ENCODE_MAX, a doc id lies outside the dense broadcast range,
-        or the packed key exceeds 63 bits (_pack_bits)."""
-        import threading
-
-        import numpy as np
-
-        from .build_dist import build_encoded_dist
-
-        clock = PhaseClock()
-        lap = clock.lap
-
-        if resume:
-            self._load_manifest()
-        spark = self.spark
-        meta_cols = [c for c in ("title", *META_COLS) if c in docs.columns]
-        set_desc = spark.sparkContext.setJobDescription
-
-        docs = docs.persist()
-        # fused tokenize+stats pass (round-5): doc stats ride the tokenize
-        # kernel as position=-1 pseudo-rows (see _fused_tokenize)
-        fused = _fused_tokenize(docs)
-        terms = _fused_terms(fused)
-
-        # -- vocab: one tokenize pass materializes the caches; the distinct
-        # collect then reads them (limit-guarded, see _collect_vocab)
-        set_desc("phase:vocab — tokenize pass + per-term count collect")
-        vocab = _collect_vocab(terms)
-        if vocab is None:
-            fused.unpersist()
-            return build_encoded_dist(self, docs, n_docs, resume=resume)
-        lap("vocab_collect")
-
-        # -- stats: already computed by the fused tokenize pass (pseudo
-        # rows) — ONE cache-projection collect serves corpus stats AND the
-        # kernel weight arrays; parquet writes overlap the postings phase
-        # in a background thread.
-        stats_done = self._stage_done("doc_stats") and self._stage_done("corpus_stats")
-        fresh_stats = not stats_done or not resume
-        set_desc("phase:stats — fused-pass pseudo-row collect")
-        if fresh_stats:
-            stats_pdf = _stats_rows(fused)
-        else:
-            stats_pdf = (
-                self._read_stage("doc_stats")
-                .select("doc_id", "doc_len", "l2_weight")
-                .toPandas()
-            )
-            stats_pdf = stats_pdf[stats_pdf["doc_len"] > 0]
-        total_tokens = int(stats_pdf["doc_len"].sum())
-        avgdl = (total_tokens / n_docs) if n_docs else 0.0
-
-        ids = stats_pdf["doc_id"].to_numpy(dtype=np.int64)
-        arr_size = max(n_docs, int(ids.max()) + 1) if len(ids) else n_docs
-        weights = dense_doc_weights(
-            ids,
-            stats_pdf["doc_len"].to_numpy(dtype=np.float64),
-            stats_pdf["l2_weight"].to_numpy(dtype=np.float64),
-            0,
-            min(arr_size, 2 * BROADCAST_WEIGHTS_MAX_DOCS),
-        )
-        max_dl = int(stats_pdf["doc_len"].max()) if len(stats_pdf) else 0
-        pack_bits = _pack_bits(len(vocab.id2term), arr_size, max_dl)
-        if weights is None or pack_bits is None:
-            fused.unpersist()
-            return build_encoded_dist(self, docs, n_docs, resume=resume)
-        lap("stats_collect")
-
-        writer: threading.Thread | None = None
-        writer_err: list[BaseException] = []
-        if fresh_stats:
-
-            def write_stats() -> None:
-                try:
-                    set_desc("phase:stats-write (background) — doc_stats + corpus_stats parquet")
-                    # pandas -> JVM upload happens on THIS thread: it is part
-                    # of the overlapped write, not the critical path
-                    self._write_stage(
-                        _doc_stats_frame(spark, docs, stats_pdf, meta_cols), "doc_stats"
-                    )
-                    corpus_df = spark.createDataFrame(
-                        [(n_docs, total_tokens, float(avgdl))],
-                        "n_docs bigint, total_tokens bigint, avgdl double",
-                    )
-                    self._write_stage(corpus_df, "corpus_stats")
-                except BaseException as e:  # surfaced after join()
-                    writer_err.append(e)
-
-            writer = threading.Thread(target=write_stats, daemon=True)
-            writer.start()
-
-        # -- postings+segments: driver-planned shuffle into the shared sink.
-        # Weights + term strings ride broadcasts into the kernel; the
-        # shuffle carries one packed long per token; the partition
-        # ASSIGNMENT is computed on the driver from the exact per-term token
-        # totals (greedy contiguous packing, hot terms striped by doc_id %
-        # k) and routed through murmur3-representative values — no
-        # range-sampling pass over the token stream, no sampling error in
-        # the balance, skew defused deterministically.
-        summaries = None
-        if not self._sink_done(resume):
-            sc = spark.sparkContext
-            id2term_bc, weights_bc = sc.broadcast(vocab.id2term), sc.broadcast(weights)
-            plan = _route_plan(vocab.term_tokens, self._sp_build)
-            summaries = self._postings_segments(
-                _planned_token_stream(spark, terms, vocab, plan, pack_bits),
-                _packed_partition(avgdl, weights_bc, id2term_bc, *pack_bits),
-            )
-            # both artifacts are written: free the worker-side term strings
-            # and weight arrays (they would otherwise stay pinned for the
-            # life of the session)
-            id2term_bc.unpersist()
-            weights_bc.unpersist()
-            lap("postings_segments")
-
-        if writer is not None:
-            writer.join()
-            if writer_err:
-                raise writer_err[0]
-            self._mark_stage("doc_stats")
-            self._mark_stage("corpus_stats")
-            lap("stats_write_join")
-
-        return self._finish(
-            clock=clock,
-            docs=docs,
-            n_docs=n_docs,
-            avgdl=avgdl,
-            total_tokens=total_tokens,
-            set_desc=set_desc,
-            resume=resume,
-            fused_cache=fused,
-            summaries=summaries,
-        )
 
 
 def build_index(

@@ -1,75 +1,71 @@
-"""Over-cutoff dictionary-encoded build: map-side SPIMI at web scale.
+"""The postings producer: map-side SPIMI for bulk builds and streaming epochs.
 
-``_build_encoded`` (build.py) collects the type vocabulary to the driver and
-broadcasts dense term_ids + doc-weight arrays into the kernels — the right
-plan below VOCAB_ENCODE_MAX types / BROADCAST_WEIGHTS_MAX_DOCS docs, and a
-non-plan above them (a 10^9-type vocabulary is neither collectable nor
-broadcastable).  This module is the over-cutoff path with every driver-side
-structure replaced by a distributed equivalent (round-4 verdict, top item),
-built around one observation the reference's SPIMI also exploits
+Built around one observation the reference's SPIMI also exploits
 (engine/indexing/spimi.py:56-187): **every document is a single input row,
 so a document's complete (term, doc) posting groups — tf, sorted positions,
-doc_len, L_d — are partition-local to the tokenize pass.**  The fused
-kernel therefore emits FINISHED postings map-side, and the whole build
-shuffles per-POSTING rows instead of per-token rows:
+doc_len, L_d — are partition-local to the tokenize pass.**  The one
+tokenize kernel (_fused_tokenize_group_kernel) therefore emits FINISHED
+postings map-side, and every build and epoch shuffles per-POSTING rows
+instead of per-token rows:
 
   * doc weights: never broadcast, never joined, never duplicated per token —
     L_d and doc_len reduce locally inside the tokenize kernel and ride each
-    posting row, so the sink computes both weights per partition with the
-    encoded path's own formula (build._doc_weights, _raw_partition);
+    posting row, so the sink computes both weights per partition
+    (build._doc_weights via build._raw_partition);
   * stemming: folded into the same kernel over each partition's DISTINCT
     types (a cross-batch memo — O(partition vocab), not O(tokens)), so the
-    rows already carry final term strings and the dictionary phase needs no
-    stem UDF and no type->term join;
-  * partition plan: contiguous ~equal-token term ranges from the
-    dictionary's global token cumsum (base = cum_before // target), hot
+    rows already carry final term strings;
+  * ONE collect (_collect_vocab): each term's token total, limit-guarded at
+    VOCAB_ENCODE_MAX terms.  Its null-term group sums the stats rows'
+    doc_len, which is the corpus total;
+  * partition plan (plan_route): contiguous ~equal-token term ranges, hot
     terms striped across ceil(tokens/target) partitions by doc_id % ksplit
-    — the explicit skew defusal — assigned distributively: vocab-sized
-    map-side-combined groupBy, range-partition + sort, per-partition token
-    offsets (one tiny collect of 1 long/partition), zero-shuffle
-    enumeration (the assign_doc_ids trick applied to the dictionary);
-  * the plan join: posting mass is Zipfian — the top HOT_TERMS_K terms
-    carry most postings — so the HOT slice of the plan (term, base, ksplit)
-    broadcasts and joins map-side while only the bounded cold tail (every
-    cold term's count <= the K-th hot count) pays a shuffle join: the skew
-    that would hot-spot a hash(term) shuffle is exactly the mass that never
-    enters it;
-  * ONE planned route shuffle of finished posting rows, routed through
-    murmur3-representative values (exact driver-planned partitioner, no
+    — the explicit skew defusal.  Up to VOCAB_ENCODE_MAX terms the driver
+    plans it from the collect (build._route_plan) and the rows join it as a
+    broadcast (term, base, ksplit) frame.  Above, the plan is assigned
+    distributively: a vocab-sized map-side-combined groupBy, range-partition
+    + sort, per-partition token offsets (one tiny collect of 1
+    long/partition), zero-shuffle enumeration (the assign_doc_ids trick
+    applied to the dictionary).  Posting mass is Zipfian, so the HOT slice
+    of that plan (the top HOT_TERMS_K terms) broadcasts and joins map-side
+    while only the bounded cold tail (every cold term's count <= the K-th
+    hot count) pays a shuffle join;
+  * ONE planned route shuffle (route_rows), routed through
+    murmur3-representative values (an exact driver-planned partitioner, no
     range-sampling job), sorted (term, doc_id) within partitions;
-  * the same postings+segments sink as the encoded build
-    (build._write_postings_segments): one pass over the routed partitions
-    writes postings and side-writes segments plus per-partition term
-    summaries, which the driver merges into the dictionary below
-    VOCAB_ENCODE_MAX terms.
+  * the shared postings+segments sink (build._write_postings_segments): one
+    pass over the routed partitions writes postings and side-writes
+    segments plus per-partition term summaries, which the driver merges
+    into the dictionary below VOCAB_ENCODE_MAX terms.
+
+The streaming epoch runs the same kernel, collect and route and writes the
+routed rows as its raw delta; the full compaction routes its raw deltas
+through a plan of the same kind, so its block cuts depend only on the
+epochs.
 
 Shuffle inventory over the corpus: ONE map-side-combined aggregation
-(vocab-sized output), ONE shuffle join for the cold plan tail only, ONE
-planned route shuffle of per-posting rows (~half the rows of a token
-shuffle, no per-token weight duplication), consumed once by the fused sink
-(the two-pass sink persists it for a second pass).  Everything else is
-vocab-sized or smaller.
+(vocab-sized output), ONE planned route shuffle of per-posting rows (~half
+the rows of a token shuffle, no per-token weight duplication), consumed
+once by the fused sink (the two-pass sink persists it for a second pass);
+above the cutoff also the plan's vocab-sized shuffles and the cold-tail
+join.
 
-Reference parity: artifacts and semantics identical to build.py's paths
-(engine/indexing/spimi.py:56-298 for the SPIMI contract); gates and
-tests/test_dist_build.py pin it (content-identical index, rank-identical
-queries).
+Reference parity: the gates and tests/test_dist_build.py pin the
+artifacts and semantics (engine/indexing/spimi.py:56-298 for the SPIMI
+contract), under both plans.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable, NamedTuple
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..worker import engine_kernel
+from . import build as B
 
-# term rows carry (doc_id, position, term); stats pseudo-rows use
-# position = -1 (one per doc, filtered apart by consumers).  Used by the
-# ENCODED path (build.py) so its doc stats ride the tokenize pass too.
-WEIGHTED_TERMS_SCHEMA = (
-    "doc_id long, position int, term string, doc_len int, l2_weight double"
-)
-# the dist path's cache rows: finished postings (term != null) + one stats
+# the tokenize kernel's rows: finished postings (term != null) + one stats
 # pseudo-row per doc (term null, tf 0), each with its doc's doc_len and L_d
 # — the doc weight inputs the sink reads off the rows (_raw_partition)
 GROUPED_SCHEMA = (
@@ -77,10 +73,10 @@ GROUPED_SCHEMA = (
 )
 DICT_SCHEMA = "term string, tokens long, base int, ksplit int"
 
-# hot slice of the partition plan that joins map-side (broadcast): ~64k
-# terms of a Zipfian vocabulary carry the large majority of postings, and
-# every COLD term's posting count is bounded by the K-th hot count — the
-# shuffle join that remains is skew-free by construction
+# hot slice of the distributed partition plan that joins map-side
+# (broadcast): ~64k terms of a Zipfian vocabulary carry the large majority
+# of postings, and every COLD term's posting count is bounded by the K-th
+# hot count — the shuffle join that remains is skew-free by construction
 HOT_TERMS_K = 65_536
 # dictionary-shuffle sizing: one reduce partition per ~2M distinct terms
 TERMS_PER_DICT_PARTITION = 2_000_000
@@ -130,107 +126,24 @@ def _doc_l2(w, gdoc, dstarts):
     return np.sqrt(np.add.reduceat(w[np.lexsort((w, gdoc))], dstarts))
 
 
-def _fused_tokenize_stats_kernel(text_col: str, id_col: str):
-    """(doc_id, text) batches -> term rows (doc_id, position, term) plus one
-    stats pseudo-row (position = -1) per non-empty doc — the ENCODED path's
-    tokenize pass, where weights reach the kernels by broadcast and doc
-    stats ride the tokenize scan for free (they removed a separate
-    stats-kernel pass: measured 19.6 s of a 142 s width-4 900k-turn build).
-
-    Composes the T1-T3 Arrow kernel (spark_tokenize._types_kernel — exact
-    split/hyphen/cleaning semantics, asserted against the expression twin)
-    with partition-local doc stats: each doc is one input row, so its full
-    type multiset is present in one output batch and doc_len / L_d
-    (spimi.py:74-123 — the empty term counts toward both) reduce locally.
-    Stemming (T4) runs here, over the partition's DISTINCT types
-    (_StemMemo), and the rows carry the stem, so the driver dictionary only sorts the collected
-    terms and nothing downstream stems again.
-
-    Terms that are empty (an empty type, or a type whose stem is empty)
-    contribute to the stats and are then DROPPED from the output (the index
-    excludes them, spimi.py:137) — they never reach the encode map."""
-
-    from ..text.spark_tokenize import _types_kernel
-
-    inner = _types_kernel(text_col, id_col)
-
-    @engine_kernel
-    def fn(iterator):
-        import numpy as np
-        import pandas as pd
-
-        memo = _StemMemo()
-        for pdf in inner(iterator):
-            if not len(pdf):
-                continue
-            sids = memo.sids(pdf["type"])
-            docs_np = pdf[id_col].to_numpy(dtype=np.int64)
-            # hyphen expansion groups variants, so rows are NOT doc-sorted:
-            # lexsort per batch (docs are complete within a batch)
-            order = np.lexsort((sids, docs_np))
-            d_s, s_s = docs_np[order], sids[order]
-            n = len(d_s)
-            change = np.empty(n, dtype=bool)
-            change[0] = True
-            change[1:] = (d_s[1:] != d_s[:-1]) | (s_s[1:] != s_s[:-1])
-            starts = np.flatnonzero(change)
-            tf = np.diff(np.append(starts, n)).astype(np.int64)
-            gdoc = d_s[starts]
-            dchange = np.empty(len(gdoc), dtype=bool)
-            dchange[0] = True
-            dchange[1:] = gdoc[1:] != gdoc[:-1]
-            dstarts = np.flatnonzero(dchange)
-            udoc = gdoc[dstarts]
-            doc_len = np.add.reduceat(tf, dstarts)
-            l2 = _doc_l2(np.square(1.0 + np.log(tf.astype(np.float64))), gdoc, dstarts)
-            terms = np.asarray(memo.stems, dtype=object)[sids]
-            keep = terms != ""
-            # term rows, then the stats rows; each column is built typed
-            # (nullable where the other half is null) — a pd.concat of
-            # all-null frame columns is deprecated dtype inference
-            n_tok, n_doc = int(keep.sum()), len(udoc)
-            tok_null = np.ones(n_tok + n_doc, dtype=bool)
-            tok_null[n_tok:] = False
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.concatenate([docs_np[keep], udoc]),
-                    "position": np.concatenate(
-                        [
-                            pdf["position"].to_numpy(dtype=np.int32)[keep],
-                            np.full(n_doc, -1, dtype=np.int32),
-                        ]
-                    ),
-                    "term": np.concatenate([terms[keep], np.full(n_doc, None, dtype=object)]),
-                    "doc_len": pd.arrays.IntegerArray(
-                        np.concatenate([np.zeros(n_tok, np.int32), doc_len.astype(np.int32)]),
-                        tok_null,
-                    ),
-                    "l2_weight": pd.arrays.FloatingArray(
-                        np.concatenate([np.zeros(n_tok), l2]), tok_null
-                    ),
-                }
-            )
-
-    return fn
-
-
 def _fused_tokenize_group_kernel(text_col: str, id_col: str):
     """(doc_id, text) batches -> FINISHED posting rows (term, doc_id, tf,
     sorted positions, doc_len, L_d) plus one stats pseudo-row (term = null,
     tf = 0, doc_len, L_d) per non-empty doc.
 
-    The map-side SPIMI step (module docstring): each doc is one input row,
-    so (stem, doc) groups complete inside the batch — tf, positions,
-    doc_len, and L_d all reduce locally.  Grouping/stats identical to
-    ``_fused_tokenize_stats_kernel`` (same _StemMemo ids, same lexsort group
-    order, same _doc_l2 sum — bit-identical L_d to the encoded path);
-    positions additionally sort ascending inside each group, which is the
-    order the route-shuffle sort used to impose.
+    The map-side SPIMI step (module docstring) and the only tokenize
+    kernel.  It composes the T1-T3 Arrow kernel (spark_tokenize._types_kernel
+    — exact split/hyphen/cleaning semantics, asserted against the
+    expression twin) with partition-local grouping: each doc is one input
+    row, so (stem, doc) groups complete inside the batch — tf, positions,
+    doc_len and L_d (spimi.py:74-123; the empty term counts toward both)
+    all reduce locally, and positions sort ascending inside each group.
+    Stemming (T4) runs here, over the partition's DISTINCT types
+    (_StemMemo), so nothing downstream stems again.
 
     Empty types count toward doc_len/L_d and are then dropped (their stem
     is the empty string, spimi.py:137); types whose STEM is empty drop the
-    same way — exactly the term != '' dictionary filter of the other
-    paths."""
+    same way — the index excludes the empty term."""
 
     from ..text.spark_tokenize import _types_kernel
 
@@ -330,8 +243,12 @@ def _dict_enum_kernel(tok_offsets: dict, target: int):
 
 
 def _assign_plan(terms: DataFrame, target: int, width: int):
-    """Distributed partition plan over the sorted vocabulary.  Returns the
-    plan DataFrame (term, tokens, base, ksplit), persisted."""
+    """Distributed partition plan over the sorted vocabulary ``terms``
+    (term, tokens) for a per-partition token ``target``.  Returns the plan
+    DataFrame (term, tokens, base, ksplit), persisted but not yet computed;
+    the persisted range-partitioned vocabulary it is computed from (keep it
+    until the plan is computed: its offsets hold only for this range cut);
+    and the plan's width, max(base + ksplit)."""
     k = max(1, width)
     ranged = (
         terms.repartitionByRange(k, "term")
@@ -339,26 +256,203 @@ def _assign_plan(terms: DataFrame, target: int, width: int):
         .withColumn("_pid", F.spark_partition_id())
         .persist()
     )
-    pstats = ranged.groupBy("_pid").agg(F.sum("tokens").alias("t")).collect()
+    pstats = sorted(
+        ranged.groupBy("_pid")
+        .agg(F.sum("tokens").alias("t"), F.max_by("tokens", "term").alias("last"))
+        .collect(),
+        key=lambda r: r["_pid"],
+    )
     tok_offsets: dict[int, int] = {}
     acc_tok = 0
-    for row in sorted(pstats, key=lambda r: r["_pid"]):
+    for row in pstats:
         tok_offsets[row["_pid"]] = acc_tok
         acc_tok += int(row["t"])
     plan = ranged.mapInPandas(
         _dict_enum_kernel(tok_offsets, target), schema=DICT_SCHEMA
     ).persist()
-    return plan, ranged
+    # base + ksplit never decreases along the sorted terms (a term's
+    # floor(C/T) + ceil(c/T) is at most floor((C + c)/T) + 1, the next
+    # term's base plus its ksplit of at least 1), so the width is the last
+    # term's: from the total and the last term's own tokens
+    last = int(pstats[-1]["last"]) if pstats else 0
+    n_parts = (acc_tok - last) // target + -(-last // target)
+    return plan, ranged, max(1, n_parts)
 
 
-def build_encoded_dist(builder, docs: DataFrame, n_docs: int, resume: bool = False) -> dict:
-    """Orchestrate the distributed map-side SPIMI build (module docstring).
-    ``builder`` is the IndexBuilder — manifest/resume, the postings+segments
-    sink and the _finish tail are shared with the encoded path, so
-    artifacts, metrics and the dictionary are the same machinery."""
+def grouped_rows(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) -> the tokenize kernel's rows (GROUPED_SCHEMA),
+    persisted: the token-total collect, the stats rows and the route
+    shuffle all read this one pass."""
+    return (
+        docs.select("doc_id", "text")
+        .mapInPandas(_fused_tokenize_group_kernel("text", "doc_id"), schema=GROUPED_SCHEMA)
+        .persist()
+    )
+
+
+def grouped_tokens() -> Column:
+    """A grouped row's share of its term's token total: tf for a posting
+    row, doc_len for a stats row, so the null-term group sums to the corpus
+    total."""
+    return F.when(F.col("term").isNull(), F.col("doc_len")).otherwise(F.col("tf"))
+
+
+def doc_stats_frame(docs: DataFrame, grouped: DataFrame, meta_cols) -> DataFrame:
+    """The doc_stats rows: every doc's metadata joined to its stats row
+    (docs without tokens get doc_len 0 and a null l2_weight)."""
+    stats = grouped.filter(F.col("term").isNull()).select(
+        "doc_id", F.col("doc_len").cast("long").alias("doc_len"), "l2_weight"
+    )
+    return docs.select("doc_id", *meta_cols).join(stats, "doc_id", "left").fillna({"doc_len": 0})
+
+
+def _collect_vocab(totals: DataFrame):
+    """THE collect of the route plan: the per-term token ``totals`` (the
+    null-term group included) as pandas (term, tokens), or None when there
+    are more than VOCAB_ENCODE_MAX terms.  The collect is limit-guarded:
+    the aggregation's map side scans every partition (materializing a
+    persisted input) regardless of the limit, while the limit caps what can
+    reach the driver — an over-cutoff vocabulary is never collected.  (An
+    earlier shape ran approx_count_distinct first as the guard: a full
+    extra pass over the token stream per build, ~8 s/900k turns at width
+    8, pure fixed cost.)"""
+    vocab = totals.limit(B.VOCAB_ENCODE_MAX + 2).toPandas()  # Arrow transfer
+    if int(vocab["term"].notna().sum()) > B.VOCAB_ENCODE_MAX:
+        return None
+    return vocab
+
+
+class RoutePlan(NamedTuple):
+    """The partition plan of one route shuffle.  ``join(rows)`` adds each
+    row's term plan (base, ksplit), ``n_parts`` is the planned width and
+    ``null_tokens`` the token total of the null-term group.  ``release()``
+    frees the persisted plan frames."""
+
+    join: Callable[[DataFrame], DataFrame]
+    n_parts: int
+    null_tokens: int
+    release: Callable[[], None]
+
+
+def plan_route(
+    spark: SparkSession, rows: DataFrame, tokens: Column, width: int, n_partitions: int, lap=None
+) -> RoutePlan:
+    """Plan the route shuffle of ``rows`` over about ``width`` partitions
+    from each term's token total (the ``tokens`` summed per term,
+    _collect_vocab).  Up to VOCAB_ENCODE_MAX terms the driver plans it
+    (build._route_plan) and the rows join it as a broadcast frame; above,
+    _dist_plan assigns it in Spark (``n_partitions`` is the session width
+    its dictionary pass is sized from).  ``lap`` records the
+    ``vocab_collect`` phase, and ``dict_assign`` when the distributed plan
+    runs."""
+    import numpy as np
+    import pandas as pd
+
+    # the plan's actions are vocab-sized aggregations and collects, where
+    # AQE has nothing to re-plan (coalescing is pinned off, and the plan
+    # joins nothing) but runs every shuffle stage as a job of its own
+    # (measured on a 90-turn build: the vocabulary collect 4 jobs with AQE
+    # and 1 without, the distributed plan's collects 12 and 4)
+    with B.pinned_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        # persisted: an over-cutoff plan aggregates the same totals
+        totals = rows.groupBy("term").agg(F.sum(tokens).alias("tokens")).persist()
+        vocab = _collect_vocab(totals)
+        if lap is not None:
+            lap("vocab_collect")
+        if vocab is None:
+            plan = _dist_plan(spark, totals, width, n_partitions)
+            if lap is not None:
+                lap("dict_assign")
+            return plan
+    totals.unpersist()
+    named = vocab["term"].notna().to_numpy()
+    terms = vocab["term"].to_numpy(dtype=object)[named]
+    counts = vocab["tokens"].to_numpy(dtype=np.int64)
+    order = np.argsort(terms, kind="stable")
+    base, ksplit, n_parts = B._route_plan(counts[named][order], width)
+    plan_df = spark.createDataFrame(
+        pd.DataFrame({"term": terms[order], "base": base, "ksplit": ksplit}),
+        "term string, base int, ksplit int",
+    )
+    return RoutePlan(
+        lambda r: r.join(F.broadcast(plan_df), "term"), n_parts, int(counts[~named].sum()), lambda: None
+    )
+
+
+def _dist_plan(spark: SparkSession, totals: DataFrame, width: int, n_partitions: int) -> RoutePlan:
+    """The over-cutoff plan from the persisted per-term token ``totals``
+    (released here): a 1-row collect of their count and sums, the
+    distributed contiguous-range plan (_assign_plan) and a collect of its
+    hot slice.  Rows join the hot slice as a broadcast and the cold tail by
+    a shuffle join."""
+    named = F.col("term").isNotNull()
+    sizes = totals.agg(
+        F.count("term").alias("n_terms"),
+        F.sum(F.when(named, F.col("tokens"))).alias("route_tokens"),
+        F.sum(F.when(~named, F.col("tokens"))).alias("null_tokens"),
+    ).collect()[0]
+    dict_width = B.pass_width(spark, n_partitions, int(sizes["n_terms"]), TERMS_PER_DICT_PARTITION)
+    target = max(1, -(-int(sizes["route_tokens"] or 0) // width))
+    plan, ranged, n_parts = _assign_plan(totals.filter(named), target, dict_width)
+    # the hot slice reaches the driver (computing the plan, under the
+    # caller's AQE-off scope), so both joins broadcast a local frame
+    hot = spark.createDataFrame(
+        plan.orderBy(F.desc("tokens")).limit(HOT_TERMS_K).select("term", "base", "ksplit").toPandas(),
+        "term string, base int, ksplit int",
+    )
+    ranged.unpersist()
+    totals.unpersist()
+
+    def join(r: DataFrame) -> DataFrame:
+        cold = r.join(F.broadcast(hot), "term", "left_anti")
+        return r.join(F.broadcast(hot), "term").unionByName(
+            cold.join(plan.select("term", "base", "ksplit"), "term")
+        )
+
+    return RoutePlan(join, n_parts, int(sizes["null_tokens"] or 0), plan.unpersist)
+
+
+def route_rows(spark: SparkSession, plan: RoutePlan, rows: DataFrame, carry=()) -> DataFrame:
+    """The one route shuffle — of the bulk build, the streaming epoch and a
+    compaction whose weights ride the rows: rows (term, doc_id, tf,
+    positions, *carry) join their term plan, take partition base + doc_id %
+    ksplit, and reach it through its murmur3-representative ``_route``
+    value, so ``repartition(n_parts, _route)`` places every row on its
+    exact planned partition; each partition is then sorted by (term,
+    doc_id).  tf and positions leave with the raw postings types
+    (RAW_POSTINGS_SCHEMA)."""
+    import pandas as pd
+
+    vmap = B._invert_partition_hash(plan.n_parts)
+    route_df = spark.createDataFrame(
+        pd.DataFrame({"part": range(plan.n_parts), "_route": vmap.astype("int32")}),
+        "part int, _route int",
+    )
+    part = (F.col("base") + F.pmod(F.col("doc_id"), F.col("ksplit"))).cast("int")
+    return (
+        plan.join(rows)
+        .withColumn("part", part)
+        .join(F.broadcast(route_df), "part")
+        .select("term", "doc_id", "tf", "positions", *carry, "_route")
+        .repartition(plan.n_parts, F.col("_route"))
+        .drop("_route")
+        .sortWithinPartitions("term", "doc_id")
+        .select(
+            "term",
+            "doc_id",
+            F.col("tf").cast("long").alias("tf"),
+            F.col("positions").cast("array<long>").alias("positions"),
+            *carry,
+        )
+    )
+
+
+def build_grouped(builder, docs: DataFrame, n_docs: int, resume: bool = False) -> dict:
+    """The bulk build (module docstring).  ``builder`` is the IndexBuilder —
+    manifest/resume, the postings+segments sink and the _finish tail.  The
+    posting rows carry their docs' weight inputs into the sink, so the
+    build broadcasts nothing."""
     import threading
-
-    from . import build as B
 
     clock = B.PhaseClock()
     lap = clock.lap
@@ -370,129 +464,47 @@ def build_encoded_dist(builder, docs: DataFrame, n_docs: int, resume: bool = Fal
     set_desc = spark.sparkContext.setJobDescription
 
     docs = docs.persist()
-    grouped = (
-        docs.select("doc_id", "text")
-        .mapInPandas(
-            _fused_tokenize_group_kernel("text", "doc_id"), schema=GROUPED_SCHEMA
-        )
-        .persist()
-    )
-    postings_rows = grouped.filter(F.col("term").isNotNull())
+    grouped = grouped_rows(docs)
 
-    # -- stats: pseudo-rows from the fused kernel (zero shuffle), ONE 1-row
-    # collect for corpus stats + avgdl; artifact writes overlap the
-    # dictionary/postings phases in a background thread.
-    stats_done = builder._stage_done("doc_stats") and builder._stage_done("corpus_stats")
-    fresh_stats = not stats_done or not resume
-    if fresh_stats:
-        stats_df = grouped.filter(F.col("term").isNull()).select(
-            "doc_id",
-            F.col("doc_len").cast("long").alias("doc_len"),
-            "l2_weight",
-        )
-    else:
-        stats_df = (
-            builder._read_stage("doc_stats")
-            .select("doc_id", "doc_len", "l2_weight")
-            .filter(F.col("doc_len") > 0)
-        )
-    set_desc("phase:stats — fused-kernel materialize + 1-row corpus collect")
-    srow = stats_df.agg(F.sum("doc_len").alias("total")).collect()[0]
-    total_tokens = int(srow["total"] or 0)
+    # -- the one collect: every term's token total, and from the null-term
+    # group the corpus total — it also materializes the grouped cache
+    set_desc("phase:vocab — tokenize pass + per-term token total collect")
+    plan = plan_route(spark, grouped, grouped_tokens(), builder._sp_build, builder.n_partitions, lap)
+    total_tokens = plan.null_tokens
     avgdl = (total_tokens / n_docs) if n_docs else 0.0
-    lap("stats_collect")
 
+    # -- stats: the kernel's stats rows joined to the docs' metadata; the
+    # artifact writes overlap the postings phase in a background thread
     writer: threading.Thread | None = None
     writer_err: list[BaseException] = []
-    if fresh_stats:
+    if not resume or not (builder._stage_done("doc_stats") and builder._stage_done("corpus_stats")):
 
         def write_stats() -> None:
             try:
                 set_desc("phase:stats-write (background) — doc_stats + corpus_stats parquet")
-                full = (
-                    docs.select("doc_id", *meta_cols)
-                    .join(stats_df, "doc_id", "left")
-                    .fillna({"doc_len": 0})
-                )
-                builder._write_stage(full, "doc_stats")
+                builder._write_stage(doc_stats_frame(docs, grouped, meta_cols), "doc_stats")
                 corpus_df = spark.createDataFrame(
                     [(n_docs, total_tokens, float(avgdl))],
                     "n_docs bigint, total_tokens bigint, avgdl double",
-                )
+                ).coalesce(1)  # one row: one task, not one per core
                 builder._write_stage(corpus_df, "corpus_stats")
             except BaseException as e:  # surfaced after join()
                 writer_err.append(e)
 
         writer = threading.Thread(target=write_stats, daemon=True)
         writer.start()
+    lap("stats_collect")
 
+    # -- postings+segments: ONE planned exchange of finished posting rows
+    # into the shared sink
     summaries = None
     if not builder._sink_done(resume):
-        # -- plan: one map-side-combined aggregation over the posting rows
-        # (vocab-sized output — rows already carry final stems, no UDF),
-        # then the distributed contiguous-range plan.
-        set_desc("phase:dict — vocab aggregation + distributed partition plan")
-        terms = (
-            postings_rows.groupBy("term").agg(F.sum("tf").alias("tokens")).persist()
-        )
-        vrow = terms.agg(
-            F.count("*").alias("n_terms"), F.sum("tokens").alias("tok_total")
-        ).collect()[0]
-        n_terms = int(vrow["n_terms"] or 0)
-        total_route_tokens = int(vrow["tok_total"] or 0)
-        dict_width = B.pass_width(spark, builder.n_partitions, n_terms, TERMS_PER_DICT_PARTITION)
-        # route-shuffle sizing: same data law as the in-memory paths
-        # (pass_width, as IndexBuilder.build set it)
-        target_tokens = max(1, -(-total_route_tokens // builder._sp_build))
-        plan, ranged = _assign_plan(terms, target_tokens, dict_width)
-        prow = plan.agg(F.max(F.col("base") + F.col("ksplit")).alias("p")).collect()[0]
-        n_parts = max(1, int(prow["p"] or 1))
-        ranged.unpersist()
-        terms.unpersist()
-        lap("dict_assign")
-
-        # -- route: hot slice of the plan broadcast (map-side, carries the
-        # skewed mass), cold tail via shuffle join (counts bounded by the
-        # K-th hot count — skew-free), then ONE planned exchange of
-        # finished posting rows into the shared sink.
-        hot_plan = plan.orderBy(F.desc("tokens")).limit(HOT_TERMS_K).select(
-            "term", "base", "ksplit"
-        )
-        routed_hot = postings_rows.join(F.broadcast(hot_plan), "term")
-        routed_cold = postings_rows.join(
-            F.broadcast(hot_plan.select("term")), "term", "left_anti"
-        ).join(plan.select("term", "base", "ksplit"), "term")
-        enc = routed_hot.unionByName(routed_cold)
-
-        import pandas as pd
-
-        vmap = B._invert_partition_hash(n_parts)
-        route_df = spark.createDataFrame(
-            pd.DataFrame({"part": range(n_parts), "_route": vmap.astype("int32")}),
-            "part int, _route int",
-        )
-        part = (F.col("base") + F.pmod(F.col("doc_id"), F.col("ksplit"))).cast("int")
-        routed = (
-            enc.withColumn("part", part)
-            .join(F.broadcast(route_df), "part")
-            .select("term", "doc_id", "tf", "positions", "doc_len", "l2_weight", "_route")
-            .repartition(n_parts, F.col("_route"))
-            .drop("_route")
-            .sortWithinPartitions("term", "doc_id")
-            # the raw postings types, after the shuffle: the sink's postings
-            # rows take tf and positions as they arrive
-            .select(
-                "term",
-                "doc_id",
-                F.col("tf").cast("long").alias("tf"),
-                F.col("positions").cast("array<long>").alias("positions"),
-                "doc_len",
-                "l2_weight",
-            )
+        routed = route_rows(
+            spark, plan, grouped.filter(F.col("term").isNotNull()), ("doc_len", "l2_weight")
         )
         summaries = builder._postings_segments(routed, B._raw_partition(avgdl, None, 0))
-        plan.unpersist()
         lap("postings_segments")
+    plan.release()
 
     if writer is not None:
         writer.join()

@@ -66,13 +66,8 @@ def get_spark(
             "spark.executor.memory",
             executor_memory or os.environ.get("SPARK_EXECUTOR_MEMORY", "16g"),
         )
-        # UI off by default (driver-memory + port noise); SPARK_GRAFT_UI=1
-        # turns it on so tools/stage_profile.py can scrape per-stage
-        # metrics from the REST API
-        .config(
-            "spark.ui.enabled",
-            "true" if os.environ.get("SPARK_GRAFT_UI", "").lower() in ("1", "true", "yes") else "false",
-        )
+        # UI off (driver-memory + port noise)
+        .config("spark.ui.enabled", "false")
         # progress bars write \r-heavy noise to stderr; with bench.py's fd-2
         # capture the megabytes of bars drowned the result JSON in round 3
         .config("spark.ui.showConsoleProgress", "false")

@@ -6,16 +6,17 @@ supports Lucene-style *segment deltas*:
 
   readStream(transcripts) -> foreachBatch (process_batch):
       assign doc_ids (dense, continuing from the running high-water mark)
-      the encoded build's kernels over the epoch: one fused tokenize+stats
-      pass, the driver dictionary and route plan, one planned packed-long
-      shuffle and the Arrow postings kernel in raw mode
+      the bulk build's producer over the epoch (build_dist): the fused
+      tokenize kernel's posting rows, one token-total collect, the route
+      plan and one planned route shuffle, projected to the raw delta
         -> raw postings delta (term, doc_id, tf, positions), written
            term-ranged and sorted
-      doc_stats delta from the stats pseudo-rows + epoch manifest entry
+      doc_stats delta from the kernel's stats rows + epoch manifest entry
       (n_docs, total_tokens, phase_seconds)
   compact():
-      first: merge every delta (one range shuffle) and cut weighted
-      postings + block-max segments in one pass -> a standard SparkIndex
+      first: merge every delta (one planned route shuffle, planned from the
+      deltas' per-term totals) and cut weighted postings + block-max
+      segments in one pass -> a standard SparkIndex
       later: weight and cut ONLY the new deltas (no shuffle — they are
       already sorted) and append them; merge the dictionary (on the
       driver, from the cut's per-partition term summaries)
@@ -49,6 +50,7 @@ from pyspark.sql import functions as F
 
 from ..data.transcripts import spark_schema
 from ..indexing import build as B
+from ..indexing import build_dist as D
 from ..indexing.build import IndexBuilder, assign_doc_ids
 from ..indexing.segments import _merge_term_stats_tables
 
@@ -183,11 +185,11 @@ class StreamingIndexer:
         clock = B.PhaseClock()
 
         set_desc("phase:doc_ids — range + number the epoch's turns")
-        # the epoch's kernels run on its own 0-based doc ids, so the packed
-        # shuffle key stays epoch-sized however large the index grows; base
-        # is added where rows leave for the delta files
-        # every pass of the epoch is one wave wide (B.pass_width), the route
-        # plan data-sized once the epoch fills DOCS_PER_POSTINGS_PARTITION
+        # the epoch's kernels run on its own 0-based doc ids (the route
+        # stripes hot terms by them); base is added where rows leave for the
+        # delta files.  Every pass of the epoch is one wave wide
+        # (B.pass_width), the route plan data-sized once the epoch fills
+        # DOCS_PER_POSTINGS_PARTITION
         assigned = assign_doc_ids(
             batch_df,
             n_partitions=B.pass_width(spark, self.n_partitions, 0, B.DOCS_PER_POSTINGS_PARTITION),
@@ -196,45 +198,26 @@ class StreamingIndexer:
         docs = assigned.withColumn("title", F.concat_ws(":", "conv_id", "turn_idx"))
         clock.lap("doc_ids")
 
-        fused = B._fused_tokenize(docs)
-        terms = B._fused_terms(fused)
-        set_desc("phase:vocab — tokenize pass + per-term count collect")
-        vocab = B._collect_vocab(terms)
-        clock.lap("vocab_collect")
-        raw = id2term_bc = None
-        if vocab is not None:
-            set_desc("phase:stats — fused-pass pseudo-row collect")
-            stats_pdf = B._stats_rows(fused)
-            clock.lap("stats_collect")
-            max_dl = int(stats_pdf["doc_len"].max()) if len(stats_pdf) else 0
-            pack_bits = B._pack_bits(len(vocab.id2term), n_new, max_dl)
-            if pack_bits is not None:
-                width = B.pass_width(spark, self.n_partitions, n_new, B.DOCS_PER_POSTINGS_PARTITION)
-                plan = B._route_plan(vocab.term_tokens, width)
-                stream = B._planned_token_stream(spark, terms, vocab, plan, pack_bits)
-                id2term_bc = spark.sparkContext.broadcast(vocab.id2term)
-                kernel = B._postings_kernel_packed(id2term_bc, *pack_bits, doc_base=base)
-                raw = stream.mapInArrow(kernel, schema=B.RAW_POSTINGS_SCHEMA)
-        grouped = None
-        if raw is None:
-            # over-cutoff epoch (vocabulary or packed key too large for the
-            # driver dictionary): the dist build's map-side grouping kernel
-            # emits finished raw postings and the stats rows, and one range
-            # shuffle orders the postings
-            raw, stats_pdf, grouped = self._grouped_delta(docs, base)
-            clock.lap("stats_collect")
+        # the bulk build's kernel, collect and route (build_dist module)
+        grouped = D.grouped_rows(docs)
+        set_desc("phase:vocab — tokenize pass + per-term token total collect")
+        width = B.pass_width(spark, self.n_partitions, n_new, B.DOCS_PER_POSTINGS_PARTITION)
+        plan = D.plan_route(spark, grouped, D.grouped_tokens(), width, self.n_partitions, clock.lap)
+        total_tokens = plan.null_tokens
+        clock.lap("stats_collect")
 
         epoch_dir = os.path.join(self.deltas_dir, f"epoch={epoch_id}")
-        set_desc("phase:postings_raw — planned packed shuffle + raw kernel + parquet write")
-        raw.write.mode("overwrite").parquet(os.path.join(epoch_dir, "postings_raw"))
-        if id2term_bc is not None:
-            id2term_bc.unpersist()
+        set_desc("phase:postings_raw — planned route shuffle + parquet write")
+        D.route_rows(spark, plan, grouped.filter(F.col("term").isNotNull())).select(
+            "term", (F.col("doc_id") + F.lit(base)).alias("doc_id"), "tf", "positions"
+        ).write.mode("overwrite").parquet(os.path.join(epoch_dir, "postings_raw"))
+        plan.release()
         clock.lap("postings_raw")
 
         set_desc("phase:doc_stats — stats rows joined to the turn metadata")
         meta_cols = [c for c in ("title", *B.META_COLS) if c in docs.columns]
         # data-sized files: compaction copies them into the index as they are
-        B._doc_stats_frame(spark, docs, stats_pdf, meta_cols).withColumn(
+        D.doc_stats_frame(docs, grouped, meta_cols).withColumn(
             "doc_id", F.col("doc_id") + F.lit(base)
         ).coalesce(max(1, -(-n_new // B.DOCS_PER_DOC_PARTITION))).write.mode("overwrite").parquet(
             os.path.join(epoch_dir, "doc_stats")
@@ -244,49 +227,17 @@ class StreamingIndexer:
         m["epochs"][str(epoch_id)] = {
             "base_doc_id": base,
             "n_docs": n_new,
-            "total_tokens": int(stats_pdf["doc_len"].sum()),
+            "total_tokens": total_tokens,
             "completed_at": time.time(),
             "phase_seconds": clock.phases,
         }
         m["next_doc_id"] = base + n_new
         self._save(m)
-        fused.unpersist()
-        if grouped is not None:
-            grouped.unpersist()
+        grouped.unpersist()
         # same policy as IndexBuilder.build: scoped release, falling back to
         # the drain only in the unambiguous single-cache case
         if not B.release_docid_cache_of(assigned) and len(B._DOCID_CACHES) == 1:
             B.release_docid_caches()
-
-    def _grouped_delta(self, docs: DataFrame, base: int):
-        """Raw postings and stats rows of an epoch beyond the driver
-        dictionary's reach, from build_dist's fused tokenize+group kernel.
-        Returns (raw postings frame, stats pandas frame, the grouped cache)."""
-        from ..indexing.build_dist import GROUPED_SCHEMA, _fused_tokenize_group_kernel
-
-        self.spark.sparkContext.setJobDescription("phase:stats — grouped tokenize pass + stats rows")
-        grouped = (
-            docs.select("doc_id", "text")
-            .mapInPandas(_fused_tokenize_group_kernel("text", "doc_id"), schema=GROUPED_SCHEMA)
-            .persist()
-        )
-        stats_pdf = (
-            grouped.filter(F.col("term").isNull())
-            .select("doc_id", F.col("doc_len").cast("long").alias("doc_len"), "l2_weight")
-            .toPandas()
-        )
-        raw = (
-            grouped.filter(F.col("term").isNotNull())
-            .select(
-                "term",
-                (F.col("doc_id") + F.lit(base)).alias("doc_id"),
-                F.col("tf").cast("long").alias("tf"),
-                F.col("positions").cast("array<long>").alias("positions"),
-            )
-            .repartitionByRange(self.n_partitions, "term", "doc_id")
-            .sortWithinPartitions("term", "doc_id")
-        )
-        return raw, stats_pdf, grouped
 
     # -- driver ------------------------------------------------------------
     def start(self, source_path: str, checkpoint_dir: str, available_now: bool = True):
@@ -572,17 +523,20 @@ class StreamingIndexer:
             size,
         )
 
-    def _joined_ranged(self, raw: DataFrame, doc_stats: DataFrame, n_docs: int) -> DataFrame:
+    def _joined_routed(self, raw: DataFrame, doc_stats: DataFrame, n_docs: int):
         """Raw postings with their docs' (doc_len, l2_weight) joined onto
-        the rows, range-shuffled into data-sized (term, doc_id) partitions
-        (as the bulk build sizes them, DOCS_PER_POSTINGS_PARTITION) and
-        sorted — the id-agnostic weight source, bounded at any size."""
+        the rows, routed into data-sized partitions (as the bulk build sizes
+        them, DOCS_PER_POSTINGS_PARTITION) and sorted by (term, doc_id) —
+        the id-agnostic weight source, bounded at any size.  The route is
+        planned from the raw deltas' per-term totals (build_dist.plan_route),
+        so the partition cuts, and with them the segment blocks, depend only
+        on the deltas: a range partitioner's sample is seeded by the RDD id,
+        which differs with the session's history.  Returns (routed rows,
+        plan); the caller releases the plan after the sink ran."""
         width = max(self.n_partitions, -(-n_docs // B.DOCS_PER_POSTINGS_PARTITION))
-        return (
-            raw.join(doc_stats.select("doc_id", "doc_len", "l2_weight"), "doc_id")
-            .repartitionByRange(width, "term", "doc_id")
-            .sortWithinPartitions("term", "doc_id")
-        )
+        plan = D.plan_route(self.spark, raw, F.col("tf"), width, self.n_partitions)
+        rows = raw.join(doc_stats.select("doc_id", "doc_len", "l2_weight"), "doc_id")
+        return D.route_rows(self.spark, plan, rows, ("doc_len", "l2_weight")), plan
 
     def _write_corpus_stats(self, n_docs: int, total_tokens: int, avgdl: float) -> None:
         """The one-row corpus_stats artifact, written with pyarrow on the
@@ -640,15 +594,15 @@ class StreamingIndexer:
         raw = spark.read.parquet(
             *[os.path.join(self._epoch_dir(e), "postings_raw") for e in new_epochs]
         )
-        weights_bc = None
+        weights_bc = plan = None
         if weights is None:
             # a delta beyond the broadcast cutoff (or with ids outside its
             # epochs' range): weights joined onto the rows, which then need
-            # the range shuffle
+            # the route shuffle
             doc_stats = spark.read.parquet(
                 *[os.path.join(self._epoch_dir(e), "doc_stats") for e in new_epochs]
             )
-            raw = self._joined_ranged(raw, doc_stats, n_delta)
+            raw, plan = self._joined_routed(raw, doc_stats, n_delta)
         else:
             weights_bc = spark.sparkContext.broadcast(weights)
             raw = raw.sortWithinPartitions("term", "doc_id")
@@ -663,6 +617,8 @@ class StreamingIndexer:
         )
         if weights_bc is not None:
             weights_bc.unpersist()
+        if plan is not None:
+            plan.release()
         clock.lap("postings_segments")
 
         # vocab-sized merge of the dictionary (not an O(index)
@@ -769,14 +725,16 @@ class StreamingIndexer:
         self._write_corpus_stats(n_docs, total_tokens, float(avgdl))
         clock.lap("stats")
 
-        # the merge's ONE shuffle: every delta, with its docs' weight inputs
-        # joined on, range-partitioned by (term, doc_id) and sorted, then
-        # weighted and cut in one pass
+        # the merge's route shuffle: every delta, with its docs' weight
+        # inputs joined on, routed by a plan from the deltas' per-term
+        # totals and sorted, then weighted and cut in one pass
         raw = spark.read.parquet(*[os.path.join(self._epoch_dir(e), "postings_raw") for e in eids])
-        merged = self._joined_ranged(raw, spark.read.parquet(doc_stats_dir), n_docs)
+        set_desc("phase:vocab — per-term token totals of the deltas")
+        merged, plan = self._joined_routed(raw, spark.read.parquet(doc_stats_dir), n_docs)
         n_postings, summaries = B._write_postings_segments(
             spark, merged, B._raw_partition(avgdl, None, 0), self.index_dir
         )
+        plan.release()
         clock.lap("postings_segments")
         set_desc("phase:term_stats — dictionary + block-max meta")
         ts_dir = os.path.join(self.index_dir, "term_stats")

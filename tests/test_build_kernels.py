@@ -15,27 +15,26 @@ from test_encoded_build import tricky_docs  # noqa: F401  (fixture)
 import searchengine_spark.indexing.build as bmod
 from searchengine_spark.indexing.segments import TERM_STATS_FIELDS, TOP_BLOCK_MAX
 
-D_BITS, P_BITS = 12, 8
-
-
-def _packed_batches(rng, n_terms=40, n_docs=300):
-    """Sorted packed-long token batches plus the broadcasts the packed
-    kernels read (term strings, dense doc weights)."""
-    rows = []
-    for t in range(n_terms):
-        for d in np.sort(rng.choice(n_docs, rng.integers(1, 200), replace=False)):
-            for p in np.sort(rng.choice(200, rng.integers(1, 4), replace=False)):
-                rows.append((t << (D_BITS + P_BITS)) | (int(d) << P_BITS) | int(p))
-    packed = np.array(rows, dtype=np.int64)
-    batches = [
-        pa.RecordBatch.from_arrays([pa.array(c)], names=["packed"])
-        for c in np.array_split(packed, 5)
+def _raw_batches(rng, n_terms=40, n_docs=300):
+    """Posting rows sorted by (term, doc_id), as the route shuffle leaves
+    them: raw postings with their docs' doc_len and L_d, in 5 batches."""
+    doc_len, l2 = rng.integers(1, 50, n_docs), rng.uniform(0.5, 3, n_docs)
+    rows = [
+        (f"t{t:03d}", int(d), np.sort(rng.choice(200, rng.integers(1, 4), replace=False)))
+        for t in range(n_terms)
+        for d in np.sort(rng.choice(n_docs, rng.integers(1, 200), replace=False))
     ]
-    weights = SimpleNamespace(
-        value=(rng.uniform(1, 50, n_docs + 1), rng.uniform(0.5, 3, n_docs + 1))
+    table = pa.table(
+        {
+            "term": [r[0] for r in rows],
+            "doc_id": pa.array([r[1] for r in rows], pa.int64()),
+            "tf": pa.array([len(r[2]) for r in rows], pa.int64()),
+            "positions": pa.array([r[2].tolist() for r in rows], pa.list_(pa.int64())),
+            "doc_len": pa.array([int(doc_len[r[1]]) for r in rows], pa.int32()),
+            "l2_weight": [float(l2[r[1]]) for r in rows],
+        }
     )
-    id2term = SimpleNamespace(value=np.array([f"t{i:03d}" for i in range(n_terms)], dtype=object))
-    return batches, weights, id2term
+    return table.to_batches(max_chunksize=-(-table.num_rows // 5))
 
 
 def test_fused_side_write_survives_a_failed_attempt(spark, tmp_path, monkeypatch):
@@ -43,12 +42,10 @@ def test_fused_side_write_survives_a_failed_attempt(spark, tmp_path, monkeypatch
     (here: os.replace raising in another worker process) must leave nothing
     Spark reads as data, so the retried attempt's part file is the only copy
     of the partition's blocks."""
-    batches, weights, id2term = _packed_batches(np.random.default_rng(3))
+    batches = _raw_batches(np.random.default_rng(3))
     seg_dir = tmp_path / "segments"
     seg_dir.mkdir()
-    kernel = bmod._partition_kernel(
-        bmod._packed_partition(7.0, weights, id2term, D_BITS, P_BITS), seg_dir=str(seg_dir)
-    )
+    kernel = bmod._partition_kernel(bmod._raw_partition(7.0, None, 0), seg_dir=str(seg_dir))
     real_replace, real_getpid = os.replace, os.getpid
 
     def dying_replace(src, dst):
@@ -70,9 +67,7 @@ def test_fused_side_write_survives_a_failed_attempt(spark, tmp_path, monkeypatch
     assert row["n"] == postings.num_rows
     expect = pa.Table.from_batches(
         list(
-            bmod._segments_partition_kernel(
-                bmod._packed_partition(7.0, weights, id2term, D_BITS, P_BITS)
-            )(iter(batches))
+            bmod._segments_partition_kernel(bmod._raw_partition(7.0, None, 0))(iter(batches))
         )
     )
     assert row["blocks"] == expect.num_rows
@@ -106,9 +101,9 @@ def _segment_rows(spark, path):
     )
 
 
-# the dist producer forced the way test_dist_build does: a corpus over the
-# broadcast doc cutoff
-PRODUCERS = {"encoded": (), "dist": (("BROADCAST_WEIGHTS_MAX_DOCS", 10),)}
+# the route planned on the driver ("encoded") and the distributed plan
+# ("dist"), forced the way test_dist_build does: a vocabulary over the cutoff
+PRODUCERS = {"encoded": (), "dist": (("VOCAB_ENCODE_MAX", 3),)}
 
 
 @pytest.mark.parametrize("producer", sorted(PRODUCERS))
@@ -119,8 +114,10 @@ def test_fused_segments_byte_identical_to_two_pass(spark, tricky_docs, tmp_path,
     m = bmod.IndexBuilder(spark, fused).build(tricky_docs)
     assert "postings_segments" in m["metrics"]["phase_seconds"]
     assert ("dict_assign" in m["metrics"]["phase_seconds"]) == (producer == "dist")
-    # the fused sink's summaries: the driver wrote the dictionary
-    assert [p["file"] for p in m["stages"]["term_stats"]["partitions"]] == ["part-00000.parquet"]
+    # the fused sink's summaries: the driver wrote the dictionary, unless
+    # they hold more rows than the (forced) cutoff
+    driver_merged = [p["file"] for p in m["stages"]["term_stats"]["partitions"]] == ["part-00000.parquet"]
+    assert driver_merged == (producer == "encoded")
     monkeypatch.setattr(bmod, "_side_write_ok", lambda *_a: False)
     two_pass = str(tmp_path / "two_pass")
     m = bmod.IndexBuilder(spark, two_pass).build(tricky_docs)
@@ -131,11 +128,16 @@ def test_fused_segments_byte_identical_to_two_pass(spark, tricky_docs, tmp_path,
 
 
 def test_build_releases_every_broadcast(spark, tmp_path, monkeypatch):
-    """Every SparkContext.broadcast a bulk build makes (the term strings and
-    the doc weight arrays) is unpersisted before it returns, so a build
-    leaves nothing pinned on the workers for the rest of the session."""
+    """A bulk build makes no SparkContext.broadcast (its posting rows carry
+    the doc weight inputs), and every broadcast a streaming epoch's
+    incremental compaction makes (the delta's dense doc weight arrays) is
+    unpersisted before it returns, so nothing stays pinned on the workers
+    for the rest of the session."""
     from pyspark import SparkContext
     from pyspark.broadcast import Broadcast
+    from test_streaming import _mk_turns
+
+    from searchengine_spark.streaming.ingest import StreamingIndexer
 
     made, released = [], set()
     real_broadcast, real_unpersist = SparkContext.broadcast, Broadcast.unpersist
@@ -153,7 +155,15 @@ def test_build_releases_every_broadcast(spark, tmp_path, monkeypatch):
     rows = [(i, f"alpha beta{i % 9} gamma") for i in range(200)]
     m = bmod.build_index(spark, spark.createDataFrame(rows, "doc_id long, text string"), str(tmp_path / "index"))
     assert "vocab_collect" in m["metrics"]["phase_seconds"], "encoded path not taken"
-    assert len(made) >= 2
+    assert made == []
+
+    indexer = StreamingIndexer(spark, str(tmp_path / "stream"), n_partitions=4)
+    indexer.process_batch(_mk_turns(spark, 0, 10), epoch_id=0)
+    indexer.compact()
+    indexer.process_batch(_mk_turns(spark, 10, 5), epoch_id=1)
+    m = indexer.compact()
+    assert "weights" in m["metrics"]["phase_seconds"], "incremental compaction not taken"
+    assert len(made) >= 1
     assert [id(b) in released for b in made] == [True] * len(made)
 
 
@@ -196,7 +206,7 @@ def test_build_job_count_stays_bounded(spark, tmp_path, monkeypatch):
     assert 0 < jobs <= BUILD_JOBS_MAX, jobs
     assert 0 < tasks <= BUILD_TASKS_MAX, tasks
 
-    monkeypatch.setattr(bmod, "BROADCAST_WEIGHTS_MAX_DOCS", 10)
+    monkeypatch.setattr(bmod, "VOCAB_ENCODE_MAX", 3)
     m, jobs, tasks = jobs_and_tasks("one-dist-build")
     assert "dict_assign" in m["metrics"]["phase_seconds"], "dist path not taken"
     assert 0 < jobs <= DIST_BUILD_JOBS_MAX, jobs
@@ -204,10 +214,7 @@ def test_build_job_count_stays_bounded(spark, tmp_path, monkeypatch):
 
 
 def test_tokenize_kernels_emit_no_warnings():
-    from searchengine_spark.indexing.build_dist import (
-        _fused_tokenize_group_kernel,
-        _fused_tokenize_stats_kernel,
-    )
+    from searchengine_spark.indexing.build_dist import _fused_tokenize_group_kernel
 
     pdf = pd.DataFrame(
         {
@@ -217,28 +224,23 @@ def test_tokenize_kernels_emit_no_warnings():
     )
     with warnings.catch_warnings():
         warnings.simplefilter("error")
-        stats_rows = pd.concat(_fused_tokenize_stats_kernel("text", "doc_id")(iter([pdf])))
         group_rows = pd.concat(_fused_tokenize_group_kernel("text", "doc_id")(iter([pdf])))
-    pseudo = stats_rows[stats_rows["position"] < 0]
-    assert pseudo["term"].isna().all() and pseudo["doc_len"].notna().all()
-    tokens = stats_rows[stats_rows["position"] >= 0]
-    assert tokens["doc_len"].isna().all() and tokens["l2_weight"].isna().all()
+    pseudo = group_rows[group_rows["term"].isna()]
+    assert pseudo["doc_len"].notna().all() and (pseudo["tf"] == 0).all()
+    terms = set(group_rows["term"].dropna())
     # the kernel emits stems, never an empty term
-    assert set(tokens["term"]) == set(group_rows["term"].dropna()) and "" not in set(tokens["term"])
-    assert {"run", "quick"} <= set(tokens["term"])
+    assert "" not in terms
+    assert {"run", "quick"} <= terms
     assert (group_rows["term"].isna() == group_rows["positions"].isna()).all()
 
 
 def test_doc_l2_does_not_depend_on_the_batch_order():
-    """A doc's L_d is a sum over its terms' (1+ln tf)²; both tokenize
-    kernels must sum it in an order fixed by the doc alone.  Summed in the
+    """A doc's L_d is a sum over its terms' (1+ln tf)²; the tokenize
+    kernel must sum it in an order fixed by the doc alone.  Summed in the
     batch's first-seen stem order, the same docs fed in reverse gave a
     different l2_weight for many of them, so doc_stats and the tf-idf
     weights changed with the partition count."""
-    from searchengine_spark.indexing.build_dist import (
-        _fused_tokenize_group_kernel,
-        _fused_tokenize_stats_kernel,
-    )
+    from searchengine_spark.indexing.build_dist import _fused_tokenize_group_kernel
 
     rng = np.random.default_rng(11)
     words = [f"w{i}x" for i in range(400)]
@@ -250,17 +252,14 @@ def test_doc_l2_does_not_depend_on_the_batch_order():
     pdf = pd.DataFrame({"doc_id": np.arange(len(texts), dtype=np.int64), "text": texts})
     rev = pdf.iloc[::-1].reset_index(drop=True)
 
-    def l2_of(kernel, batch, pseudo, col):
-        out = pd.concat(kernel("text", "doc_id")(iter([batch])))
-        rows = out[pseudo(out)]
-        return dict(zip(rows["doc_id"].tolist(), rows[col].astype(float).tolist()))
+    def l2_of(batch):
+        out = pd.concat(_fused_tokenize_group_kernel("text", "doc_id")(iter([batch])))
+        rows = out[out["term"].isna()]
+        return dict(zip(rows["doc_id"].tolist(), rows["l2_weight"].astype(float).tolist()))
 
-    stats = l2_of(_fused_tokenize_stats_kernel, pdf, lambda o: o["position"] < 0, "l2_weight")
-    group = l2_of(_fused_tokenize_group_kernel, pdf, lambda o: o["term"].isna(), "l2_weight")
-    assert len(stats) == len(texts)
-    assert stats == l2_of(_fused_tokenize_stats_kernel, rev, lambda o: o["position"] < 0, "l2_weight")
-    assert group == l2_of(_fused_tokenize_group_kernel, rev, lambda o: o["term"].isna(), "l2_weight")
-    assert stats == group  # dist-vs-encoded parity stays bit-exact
+    group = l2_of(pdf)
+    assert len(group) == len(texts)
+    assert group == l2_of(rev)
 
 
 def test_build_is_the_same_at_any_width(spark, tmp_path):

@@ -1,8 +1,8 @@
-"""Dictionary-encoded build path (round 4): sorted postings, the driver
-route planner and its murmur3 router.  ``tricky_docs`` (hyphen variants,
-stem collisions, unicode, empties, hot terms) and ``_artifacts`` also serve
-tests/test_dist_build.py, which pins the encoded path's index content
-against the independent build_dist producer."""
+"""The build's driver-planned route (round 4): sorted postings, the route
+planner and its murmur3 router.  ``tricky_docs`` (hyphen variants, stem
+collisions, unicode, empties, hot terms) and ``_artifacts`` also serve
+tests/test_dist_build.py, which pins the distributed route plan's index
+content against the driver plan's."""
 
 import os
 

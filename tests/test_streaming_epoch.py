@@ -1,7 +1,8 @@
-"""A streaming epoch on the encoded build's kernels: the delta rows equal the
+"""A streaming epoch on the bulk build's producer: the delta rows equal the
 token-stream plan's, several epochs compacted at once equal a batch build,
 a crashed incremental compaction is rolled back instead of appended twice,
-and one epoch's Spark job count stays bounded."""
+a full compaction is the same whatever ran before it, and one epoch's Spark
+job count stays bounded."""
 
 import datetime
 import json
@@ -74,7 +75,7 @@ def _postings_rows(df):
     )
 
 
-def _stats_rows(df):
+def _doc_stats_rows(df):
     cols = ["doc_id", "title", "conv_id", "turn_idx", "role", "tool", "doc_len", "l2_weight"]
     return sorted(tuple(r) for r in df.select(*cols).collect())
 
@@ -84,7 +85,8 @@ def test_epoch_delta_equals_token_stream_plan(tmp_path, spark, monkeypatch, over
     from pyspark.sql import functions as F
 
     if over_cutoff:
-        # every epoch takes the over-cutoff path (build_dist's grouping kernel)
+        # every epoch takes the over-cutoff path (build_dist's distributed
+        # route plan)
         monkeypatch.setattr(bmod, "VOCAB_ENCODE_MAX", 1)
     out = str(tmp_path / "index")
     indexer = ingest.StreamingIndexer(spark, out, n_partitions=4)
@@ -100,7 +102,7 @@ def test_epoch_delta_equals_token_stream_plan(tmp_path, spark, monkeypatch, over
         ref_raw, ref_stats = _reference_delta(spark, df, entry["base_doc_id"], 4)
         assert raw.schema == ref_raw.schema
         assert _postings_rows(raw) == _postings_rows(ref_raw)
-        got, want = _stats_rows(stats), _stats_rows(ref_stats)
+        got, want = _doc_stats_rows(stats), _doc_stats_rows(ref_stats)
         assert [g[:-1] for g in got] == [w[:-1] for w in want]
         for g, w in zip(got, want):
             assert (g[-1] is None) == (w[-1] is None) and (g[-1] is None or abs(g[-1] - w[-1]) < 1e-12)
@@ -109,8 +111,7 @@ def test_epoch_delta_equals_token_stream_plan(tmp_path, spark, monkeypatch, over
         assert {"doc_ids", "vocab_collect", "stats_collect", "postings_raw", "doc_stats"} <= set(
             entry["phase_seconds"]
         )
-        # the route plan stripes the hot term over several files (the
-        # grouped path range-partitions instead)
+        # the driver's route plan stripes the hot term over several files
         files = raw.filter(F.col("term") == "alpha").select(F.input_file_name()).distinct().count()
         assert files >= (1 if over_cutoff else 2)
 
@@ -231,6 +232,29 @@ def test_crashed_incremental_compaction_does_not_append_twice(tmp_path, spark, m
     batch = SparkIndex(spark, batch_out)
     assert _dictionary(idx) == _dictionary(batch)
     assert not [f for f in os.listdir(out) if f.startswith(("_compact_", "term_stats_", "corpus_stats_"))]
+
+
+def test_full_compaction_is_the_same_in_any_session_history(tmp_path, spark):
+    """The full compaction's route is planned from the deltas' per-term
+    token totals, so compacting the same epochs twice in one session, with
+    unrelated jobs in between, writes byte-identical segments.  A range
+    partitioner's sample is seeded by the RDD id, which grows with the
+    session's history, so its partition cuts, and the blocks cut from them,
+    moved between the two compactions."""
+    out = str(tmp_path / "index")
+    indexer = ingest.StreamingIndexer(spark, out, n_partitions=4)
+    for e in range(3):
+        indexer.process_batch(_mk_turns(spark, 40 * e, 40), epoch_id=e)
+    seg_dir = os.path.join(out, "segments")
+    compacted = []
+    for _ in range(2):
+        indexer._compact_full(indexer._manifest())
+        files = sorted(f for f in os.listdir(seg_dir) if f.endswith(".parquet"))
+        compacted.append({f: open(os.path.join(seg_dir, f), "rb").read() for f in files})
+        for n in (10, 1000):  # unrelated jobs
+            spark.range(n).repartition(3).selectExpr("sum(id)").collect()
+    assert len(compacted[0]) >= 2
+    assert compacted[0] == compacted[1]
 
 
 # Spark jobs of one small epoch (process_batch + incremental compact()) on

@@ -105,7 +105,7 @@ def test_every_engine_kernel_releases_zip_finders(spark, tricky_docs, tmp_path, 
     m = bmod.IndexBuilder(spark, bulk).build(tricky_docs)
     assert "vocab_collect" in m["metrics"]["phase_seconds"], "encoded path not taken"
     with monkeypatch.context() as patch:
-        patch.setattr(bmod, "BROADCAST_WEIGHTS_MAX_DOCS", 10)
+        patch.setattr(bmod, "VOCAB_ENCODE_MAX", 3)
         m = bmod.IndexBuilder(spark, str(tmp_path / "dist")).build(tricky_docs)
     assert "dict_assign" in m["metrics"]["phase_seconds"], "dist path not taken"
 

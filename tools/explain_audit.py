@@ -160,40 +160,36 @@ def _check_plans(spark, index_dir: str, stderr_file, orig_fd) -> None:
         )
     )
 
-    # 6c: the encoded build's routed token shuffle — map side must be pure
-    # JVM (the fused tokenize kernel, which emits stemmed terms, + two
-    # broadcast hash joins, NO ArrowEvalPython / second MapInPandas before
-    # the exchange), exactly ONE exchange, and the planned partition count
-    # must be honored (REPARTITION_BY_NUM)
-    from searchengine_spark.indexing.build import (
-        _collect_vocab,
-        _fused_terms,
-        _planned_token_stream,
-        _route_plan,
-    )
+    # 6c: the build's route shuffle — after the tokenize kernel (ONE
+    # MapInPandas, which emits finished, stemmed posting rows) the map side
+    # must be pure JVM (the broadcast plan and route joins, NO
+    # ArrowEvalPython), with exactly ONE exchange at the planned width
+    # (REPARTITION_BY_NUM) and no sampling range partitioner
     from searchengine_spark.indexing.build_dist import (
-        WEIGHTED_TERMS_SCHEMA,
-        _fused_tokenize_stats_kernel,
+        GROUPED_SCHEMA,
+        _fused_tokenize_group_kernel,
+        grouped_tokens,
+        plan_route,
+        route_rows,
     )
 
     bd = spark.createDataFrame(
         [(i, f"alpha beta tok{i % 7} gamma the the") for i in range(300)],
         "doc_id long, text string",
     )
-    terms = _fused_terms(
-        bd.mapInPandas(_fused_tokenize_stats_kernel("text", "doc_id"), schema=WEIGHTED_TERMS_SCHEMA)
+    grouped = bd.mapInPandas(_fused_tokenize_group_kernel("text", "doc_id"), schema=GROUPED_SCHEMA)
+    route = plan_route(spark, grouped, grouped_tokens(), 8, 8)
+    P = route.n_parts
+    routed = route_rows(
+        spark, route, grouped.filter(F.col("term").isNotNull()), ("doc_len", "l2_weight")
     )
-    vocab = _collect_vocab(terms)
-    plan = _route_plan(vocab.term_tokens, 8)
-    P = plan[2]
-    routed = _planned_token_stream(spark, terms, vocab, plan, pack_bits=(23, 12))
     p6c = routed._jdf.queryExecution().executedPlan().toString()
-    sections.append(("Routed encoded token shuffle (build map side)", p6c))
+    sections.append(("Routed posting rows (build map side)", p6c))
     checks.append(
         (
-            "encoded build map side is JVM-only",
+            "build map side is JVM after the tokenize kernel",
             p6c.count("MapInPandas") == 1 and "ArrowEvalPython" not in p6c,
-            f"MapInPandas x{p6c.count('MapInPandas')} (tokenize only), no ArrowEvalPython",
+            f"MapInPandas x{p6c.count('MapInPandas')} (the group kernel only), no ArrowEvalPython",
         )
     )
     widths = re.findall(r"Exchange hashpartitioning\(_route#\d+, (\d+)\)", p6c)
